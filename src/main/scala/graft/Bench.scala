@@ -202,8 +202,8 @@ object Bench {
     // spread = max - min the dispersion of that query's three runs,
     // load the MAX 1-min loadavg sampled at its runs' starts — a
     // query whose spread is large under load>cpus indicts the box,
-    // not the code. Printed to stdout too, so the driver's truncated
-    // round artifact carries the stats alongside the headline.
+    // not the code. Written to stderr and to BENCH_FULL.json (below),
+    // never to stdout.
     val stats = results.map { case (k, ts) =>
       val med = ts.sorted.apply(ts.size / 2)
       val spread = ts.max - ts.min

@@ -12,8 +12,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   *   1. STAGE — for each table, run the full normal commit machinery
   *      (constraints, schema evolution, stats harvest, optimistic slot
-  *      retries) but write the manifest with a v5 `pending:<uri>`
-  *      header. A pending manifest OCCUPIES its version slot (so
+  *      retries) but write the manifest with a `pending:<uri>`
+  *      header line. A pending manifest OCCUPIES its version slot (so
   *      racing single-table writers resolve against it normally) but
   *      is NOT a version: readers resolve the latest DECIDED manifest
   *      and skip it.

@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType, Str
   *     _graft_log/
   *       v00000.manifest           // full file list of version 0
   *       v00001.manifest           // full file list of version 1
-  *       s-<uuid>.segment          // shared entry lists (v7 layout —
-  *                                 // large tables; see HeaderV7)
+  *       s-<uuid>.segment          // shared entry lists (segmented
+  *                                 // layout — large tables)
   *       _checkpoint               // latest-version pointer + txn index
   * }}}
   *
@@ -86,25 +86,27 @@ import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType, Str
   * plans a range scan from the manifest alone, the Delta `stats` /
   * Iceberg-manifest design, composing time travel with
   * [[ZoneMapIndex]]-style file skipping without a separately
-  * refreshed sidecar. Since v4 each manifest also records the
+  * refreshed sidecar. Each manifest also records the
   * committed SCHEMA, giving appends a checked evolution contract
   * (added columns back-fill null in older files; a changed type
   * refuses loudly) and time-travel reads the exact shape of their
   * version.
   *
-  * LOG COST IS FLAT IN HISTORY LENGTH. The v4 manifest header carries
-  * everything version resolution needs (mode, txn id, stats columns,
-  * file count, schema), so [[versions]] reads six lines per manifest,
-  * never the file list; and `_graft_log/_checkpoint` (the
-  * `_last_checkpoint` analog) indexes `version → txnId` up to its
-  * watermark so the idempotence probe reads ONE small file plus at
-  * most [[CheckpointInterval]] manifest headers — a commit's log work
+  * LOG COST IS FLAT IN HISTORY LENGTH. The manifest header (one
+  * format, [[Header]], with a `features:` line naming the reader
+  * features the version uses) carries everything version resolution
+  * needs (mode, txn id, stats columns, file count, schema), so
+  * [[versions]] reads nine lines per manifest, never the file list;
+  * and `_graft_log/_checkpoint` (the `_last_checkpoint` analog)
+  * indexes `version → txnId` up to its watermark so the idempotence
+  * probe reads ONE small file plus at most [[CheckpointInterval]]
+  * manifest headers — a commit's log work
   * does not grow with the number of historical versions (the probe:
   * `ScaleProbe vtlog`). What a commit does pay is one full read of
   * the PREVIOUS manifest (the carried snapshot) — cached per
   * immutable segment past [[segmentThreshold]] — and, for the WRITE,
-  * O(delta): past the threshold manifests switch to the SEGMENTED v7
-  * layout ([[HeaderV7]]), where entry lists live in immutable
+  * O(delta): past the threshold manifests switch to the SEGMENTED
+  * layout (feature `segments`), where entry lists live in immutable
   * `_graft_log/s-<uuid>.segment` files and each version's manifest
   * just references them. An append carries every previous segment by
   * reference and writes one delta-sized segment; a delete rewrites
@@ -131,79 +133,49 @@ object VersionedTable {
     org.slf4j.LoggerFactory.getLogger("graft.operators.VersionedTable")
 
   private val LogDir = "_graft_log"
-  private val Header = "graft-vt-v4"
-  private val HeaderV5 = "graft-vt-v5" // v4 + a `pending:<decision-uri>` line
-  /** v5 layout (the `pending:` line always present, `-` when none),
-    * written INSTEAD of v4/v5 whenever the version carries a reader-
-    * affecting table feature: a deletion-vector entry, or a schema
-    * with column mapping / retired names. The bits themselves are
-    * additive — a pre-feature reader would parse them cleanly and
-    * answer WRONG (resurrect DV-deleted rows; scan logical names over
-    * physical files and return nulls) — so the header bump exists
-    * purely to make such readers refuse loudly (the Delta reader-
-    * protocol-version posture). Feature-free versions keep committing
-    * v4/v5: old readers stay compatible with tables that never used
-    * the features, and a compact/overwrite that materializes them
-    * away DOWNGRADES the table back to v4. */
-  private val HeaderV6 = "graft-vt-v6"
-  /** SEGMENTED manifest (v5 layout header, then `seg:<name>:<n>`
-    * reference lines instead of inline entry lines). Written whenever
-    * a version's live-file count reaches [[segmentThreshold]] — the
-    * point where rewriting the full entry list per commit stops being
-    * metadata noise and starts being the dominant commit cost (a
-    * 100 TB table is ~800k files ≈ hundreds of MB of manifest; a
-    * minute-cadence streaming sink would rewrite that EVERY batch).
-    * Entries live in immutable `_graft_log/s-<uuid>.segment` files
-    * (same entry-line codec, own `stats:` line); a commit reuses every
-    * previous segment whose entries are carried byte-identically and
-    * writes only the changed/new entries as one fresh segment — the
-    * Iceberg manifest-list posture, so append metadata cost is
-    * O(delta), not O(live files). Reads resolve refs through a
-    * process-wide immutable-segment cache, so a hot table's planning
-    * re-reads only the segments it has never seen. Segment count is
-    * bounded by [[MaxSegments]]: past it the commit rewrites all
-    * entries into fresh [[SegmentMaxEntries]]-sized segments (the
-    * amortized-O(delta) compaction beat). A version whose entry count
-    * falls back below the threshold downgrades to the inline v4/v5/v6
-    * layout automatically. v7 is a protocol bump like v6: pre-segment
-    * readers refuse loudly on the unknown header. */
-  private val HeaderV7 = "graft-vt-v7"
-  private val SegHeader = "graft-vt-seg-v1"
-  /** v6 layout + NEW-ALPHABET span values: entry lines may carry the
-    * `T<micros>` timestamp encoding (r16's unit normalization) and
-    * the `C<decimal>` encoding (r17's decimal spans). The tags are a
-    * new span-field alphabet, not a new line — a pre-tag reader
-    * would crash mid-parse ("bad span field") on any query, even one
-    * not touching the tagged column. Like v6/v7, the bump exists
-    * purely so such readers refuse at the HEADER with a protocol
-    * error instead; tag-free versions keep writing the older
-    * headers, and a compact that drops the tagged stats column
-    * downgrades automatically. Segmented manifests keep the v7
-    * header (their body is `seg:` refs — the tags live in segment
-    * files, gated by [[SegHeaderV2]]). */
-  private val HeaderV8 = "graft-vt-v8"
-  /** Segment-file header when (and only when) the segment's entry
-    * lines carry `T`/`C`-tagged span values — the per-segment analog
-    * of [[HeaderV8]]: pre-tag readers fail the header check up front
-    * instead of crashing inside span decode. */
-  private val SegHeaderV2 = "graft-vt-seg-v2"
-  private val HeaderV3 = "graft-vt-v3"
-  private val HeaderV2 = "graft-vt-v2"
+  /** The one manifest format. Lines 0–8 are a fixed header, then the
+    * body:
+    * {{{
+    *   graft-vt-v9
+    *   <mode>                      append | overwrite | delete | …
+    *   txn:<id>|-
+    *   stats:<col,…>|-
+    *   nfiles:<live entries>
+    *   schema:<url-encoded schema record>
+    *   ts:<commit epoch ms>
+    *   pending:<url-encoded txn decision uri>|-
+    *   features:<feature,…>|-
+    *   <entry line>… | seg:<name>:<n>…
+    * }}}
+    * `features:` names the reader features the version uses (the
+    * Delta table-features posture): a reader refuses a manifest naming
+    * a feature it does not know, by name, instead of parsing bits it
+    * would answer WRONG from (resurrected DV-deleted rows, logical
+    * names scanned over physical files, span tags it cannot decode).
+    * Only `segments` changes how the body parses — `seg:` refs
+    * instead of entry lines. */
+  private val Header = "graft-vt-v9"
+  private val SegHeader = "graft-vt-seg-v9"
+  private val FDeletionVectors = "deletionVectors"
+  private val FColumnMapping = "columnMapping"
+  private val FTaggedSpans = "taggedSpans"
+  private val FSegments = "segments"
+  private val KnownFeatures =
+    Set(FDeletionVectors, FColumnMapping, FTaggedSpans, FSegments)
+  /** Body start: the header lines above. */
+  private val HeaderLines = 9
 
-  /** Does any recorded span of `e` carry a NEW-ALPHABET value — a
-    * unit-tagged timestamp (`T…`) or a decimal (`C…`)? Drives the
-    * [[HeaderV8]]/[[SegHeaderV2]] protocol gate: pre-v8 readers would
-    * crash decoding either tag, so such entries only ever land under
-    * the bumped headers. */
+  /** Does any recorded span of `e` carry a unit-tagged timestamp
+    * (`T…`) or a decimal (`C…`) — the `taggedSpans` feature? */
   private def hasTaggedSpan(e: FileEntry): Boolean =
     e.stats.valuesIterator.exists(_.exists(s =>
       s._1.isInstanceOf[TsMicros] || s._2.isInstanceOf[TsMicros] ||
         s._1.isInstanceOf[java.math.BigDecimal] ||
         s._2.isInstanceOf[java.math.BigDecimal]))
 
-  /** Entry count at which commits switch to the segmented (v7)
-    * manifest layout. Default keeps small tables on the inline
-    * single-file manifest (simplest to read and debug); deployments
+  /** Entry count at which commits switch to the segmented manifest
+    * layout. Default keeps small tables on the inline single-file
+    * manifest (simplest to read and debug); deployments
     * with large tables lower it or simply let growth cross it.
     * Process-wide, settable once at startup (and by specs). */
   @volatile private var segmentThresholdVar: Int = 4096
@@ -213,7 +185,7 @@ object VersionedTable {
   }
   def segmentThreshold: Int = segmentThresholdVar
 
-  /** Max `seg:` refs a v7 manifest may carry before the commit
+  /** Max `seg:` refs a segmented manifest may carry before the commit
     * rewrites all entries into fresh segments: bounds both read fan-in
     * and the one-entry-segment accretion of a per-commit DML pattern
     * (full metadata rewrite once per ~[[MaxSegments]] commits keeps
@@ -236,10 +208,10 @@ object VersionedTable {
   private val segmentCacheEntries = new java.util.concurrent.atomic.AtomicLong(0)
   private val segmentCacheHitsVar = new java.util.concurrent.atomic.AtomicLong(0)
   private val SegmentCacheMaxEntries = 8L * 1000 * 1000
-  /** Segment-count threshold past which [[readEntries]] fetches a v7
-    * manifest's segments with bounded parallel IO (16 threads) instead
-    * of a sequential loop. Var only so specs can force the parallel
-    * path on small fixtures. */
+  /** Segment-count threshold past which [[readEntries]] fetches a
+    * segmented manifest's segments with bounded parallel IO (16
+    * threads) instead of a sequential loop. Var only so specs can
+    * force the parallel path on small fixtures. */
   private[graft] var parallelSegmentThreshold: Int = 16
 
   /** Process-wide bounded pool for parallel segment fetches — daemon
@@ -355,8 +327,8 @@ object VersionedTable {
   final class TxnInDoubtException(msg: String)
     extends IllegalStateException(msg)
 
-  /** One manifest line: file name, row count (−1 when unknown — files
-    * carried from a pre-v3 manifest), and per-stats-column span.
+  /** One manifest line: file name, row count, and per-stats-column
+    * span.
     * `stats` key absent → stats were never collected for that column
     * (the file can never be pruned on it); `None` → collected and the
     * column is entirely null in the file (provably excluded from any
@@ -380,8 +352,7 @@ object VersionedTable {
       dsets: Map[String, Set[Any]] = Map.empty,
       ndvs: Map[String, Seq[Long]] = Map.empty) {
     /** Rows a reader actually sees from this file. */
-    def liveRows: Long = if (nRows < 0) nRows
-      else nRows - dv.map(_._2).getOrElse(0L)
+    def liveRows: Long = nRows - dv.map(_._2).getOrElse(0L)
     /** The file's HLL++ NDV sketch for `col` (register words at the
       * write-time precision — the word count identifies the register
       * layout), harvested by the in-write tracker with the exact hash
@@ -525,7 +496,7 @@ object VersionedTable {
     if (!overwrite)
       resolveSchema(df.schema, prevHeader0, overwrite, path): Unit
     val stageSchema =
-      if (overwrite) None else prevHeader0.flatMap(_.schemaJson)
+      if (overwrite) None else prevHeader0.map(_.schemaJson)
     val staged0 = stageAndPublish(df, fs, root, v0, cols0, stageSchema)
     val published = staged0.names
 
@@ -563,7 +534,7 @@ object VersionedTable {
             (staged0.entries.nonEmpty || staged0.names.isEmpty))
           staged0.entries
         else harvestEntries(spark, fs, conf, root, published, cols,
-          if (overwrite) None else prevHeader.flatMap(_.schemaJson))
+          if (overwrite) None else prevHeader.map(_.schemaJson))
       val carried =
         if (overwrite) Seq.empty
         else if (cached.nonEmpty) cached
@@ -571,7 +542,7 @@ object VersionedTable {
       onBeforeManifestCommit()
       if (tryWriteManifest(fs, root, v,
           if (overwrite) "overwrite" else "append", txnId, cols,
-          Some(schemaJson), carried ++ fresh, onBeforePromote,
+          schemaJson, carried ++ fresh, onBeforePromote,
           pendingTxn = pendingTxn)) {
         // a pending manifest is not (yet) a committed version — the
         // checkpoint indexes it after its txn decides (watermark logic)
@@ -689,10 +660,10 @@ object VersionedTable {
           // slot from the SAME listing as the base (latestVisibleIn
           // doc): holes between them are decided-aborted, never revive
           val st = stageAndPublish(survivors, fs, root, v2, cols,
-            header.schemaJson)
+            Some(header.schemaJson))
           val pub = st.names
           val newEntries = entriesOf(st, spark, fs, conf, root,
-            header.schemaJson)
+            Some(header.schemaJson))
           if (tryWriteManifest(fs, root, v2, "delete", txnId, cols,
               header.schemaJson, carried ++ newEntries,
               pendingTxn = pendingTxn)) {
@@ -758,8 +729,8 @@ object VersionedTable {
       val entries = readEntries(spark, path, v)
       if (entries.isEmpty) return v
       val header = readHeader(fs, root, v)
-      val tableCols = schemaOf(spark, path, v).map(_.fieldNames.toSeq)
-        .getOrElse(read(spark, path, Some(v)).columns.toSeq)
+      val tableSchema = decodeSchema(header.schemaJson)
+      val tableCols = tableSchema.fieldNames.toSeq
       val missing = set.keys.filterNot(tableCols.contains)
       require(missing.isEmpty,
         s"updateWhere: SET targets non-existent column(s) " +
@@ -782,15 +753,13 @@ object VersionedTable {
         // satisfies the predicate, so SET applies unconditionally)
         val post = hits.select(tableCols.map(c =>
           set.get(c).fold(col(c))(e => e.as(c))): _*)
-        header.schemaJson.map(decodeSchema).foreach { ts =>
-          val got = post.schema.fields.map(f => f.name -> f.dataType).toMap
-          ts.fields.filter(f => set.contains(f.name)).foreach { f =>
-            require(got(f.name) == f.dataType,
-              s"updateWhere: SET changes ${f.name}'s type " +
-                s"${f.dataType.simpleString} -> " +
-                s"${got(f.name).simpleString} — refuse (evolution goes " +
-                "through commit())")
-          }
+        val got = post.schema.fields.map(f => f.name -> f.dataType).toMap
+        tableSchema.fields.filter(f => set.contains(f.name)).foreach { f =>
+          require(got(f.name) == f.dataType,
+            s"updateWhere: SET changes ${f.name}'s type " +
+              s"${f.dataType.simpleString} -> " +
+              s"${got(f.name).simpleString} — refuse (evolution goes " +
+              "through commit())")
         }
         enforceConstraints(post, constraintsOf(fs, root),
           s"updateWhere post-image at $path")
@@ -801,10 +770,10 @@ object VersionedTable {
           hits.select(col(probeFileC).as("file"), col(probePosC).as("pos")),
           perFile, v2)
         val st = stageAndPublish(clusterOut(post, clusterBy, 1),
-          fs, root, v2, cols, header.schemaJson)
+          fs, root, v2, cols, Some(header.schemaJson))
         val pub = st.names
         val newEntries = entriesOf(st, spark, fs, conf, root,
-          header.schemaJson)
+          Some(header.schemaJson))
         if (tryWriteManifest(fs, root, v2, "update", txnId, cols,
             header.schemaJson, masked ++ newEntries,
             pendingTxn = pendingTxn)) {
@@ -843,15 +812,13 @@ object VersionedTable {
         } :+ p.as(touchedFlag): _*)
       val updated = projected.select(tableCols.map(col): _*)
       // type contract: the post-image must keep every column's type
-      header.schemaJson.map(decodeSchema).foreach { ts =>
-        val got = updated.schema.fields.map(f => f.name -> f.dataType).toMap
-        ts.fields.filter(f => set.contains(f.name)).foreach { f =>
-          require(got(f.name) == f.dataType,
-            s"updateWhere: SET changes ${f.name}'s type " +
-              s"${f.dataType.simpleString} -> " +
-              s"${got(f.name).simpleString} — refuse (evolution goes " +
-              "through commit())")
-        }
+      val got = updated.schema.fields.map(f => f.name -> f.dataType).toMap
+      tableSchema.fields.filter(f => set.contains(f.name)).foreach { f =>
+        require(got(f.name) == f.dataType,
+          s"updateWhere: SET changes ${f.name}'s type " +
+            s"${f.dataType.simpleString} -> " +
+            s"${got(f.name).simpleString} — refuse (evolution goes " +
+            "through commit())")
       }
       // CHECK gate on the PRE-IMAGE touched flag: re-evaluating the
       // predicate on the post-image would skip a row whose update moves
@@ -867,10 +834,10 @@ object VersionedTable {
       val out = clusterOut(updated, clusterBy,
         math.max(1, rewrite.size))
       val st = stageAndPublish(out, fs, root, v2, cols,
-        header.schemaJson)
+        Some(header.schemaJson))
       val published = st.names
       val newEntries = entriesOf(st, spark, fs, conf, root,
-        header.schemaJson)
+        Some(header.schemaJson))
       if (tryWriteManifest(fs, root, v2, "update", txnId, cols,
           header.schemaJson, carried ++ newEntries,
           pendingTxn = pendingTxn)) {
@@ -1033,11 +1000,7 @@ object VersionedTable {
       val header = readHeader(fs, root, v)
       val entries = readEntries(spark, path, v)
       val srcDataCols = src.columns.filterNot(tombstoneCol.contains)
-      val tableSchema = header.schemaJson.map(decodeSchema)
-        .orElse(entries.headOption.map(e =>
-          schemaRead(spark, None, Seq(s"$path/${e.name}")).schema))
-        .getOrElse(StructType(src.schema.filter(f =>
-          srcDataCols.contains(f.name)))) // empty pre-v4 table: insert
+      val tableSchema = decodeSchema(header.schemaJson)
       require(srcDataCols.sorted.sameElements(tableSchema.fieldNames.sorted),
         s"mergeInto: source columns ${srcDataCols.sorted.mkString(",")} " +
           s"!= table columns ${tableSchema.fieldNames.sorted.mkString(",")}")
@@ -1087,7 +1050,7 @@ object VersionedTable {
             case (cand, (kc, i)) =>
               if (cand.isEmpty) cand
               else bloomPrune(spark, path, cand,
-                physicalOf(header.schemaJson).getOrElse(kc, kc),
+                physicalOf(Some(header.schemaJson)).getOrElse(kc, kc),
                 g.map(_.get(i)).distinct.toSeq)
           }
         case _ => candidates
@@ -1124,10 +1087,10 @@ object VersionedTable {
           else applyDvPositions(spark, fs, root, path, entries,
             matchedPos.get, perFile, v2)
         val st = stageAndPublish(clusterOut(ordered, clusterBy, 1),
-          fs, root, v2, cols, header.schemaJson)
+          fs, root, v2, cols, Some(header.schemaJson))
         val pub = st.names
         val newEntries = entriesOf(st, spark, fs, conf, root,
-          header.schemaJson)
+          Some(header.schemaJson))
         if (tryWriteManifest(fs, root, v2, "merge", txnId, cols,
             header.schemaJson, masked ++ newEntries,
             pendingTxn = pendingTxn)) {
@@ -1163,10 +1126,10 @@ object VersionedTable {
       // the layout-preserving output target (insert-only: one file)
       val st = stageAndPublish(
         clusterOut(newData, clusterBy, math.max(1, rewrite.size)),
-        fs, root, v2, cols, header.schemaJson)
+        fs, root, v2, cols, Some(header.schemaJson))
       val published = st.names
       val newEntries = entriesOf(st, spark, fs, conf, root,
-        header.schemaJson)
+        Some(header.schemaJson))
       if (tryWriteManifest(fs, root, v2, "merge", txnId, cols,
           header.schemaJson, carried ++ newEntries,
           pendingTxn = pendingTxn)) {
@@ -1324,9 +1287,8 @@ object VersionedTable {
     *
     * Refuses when a CHECK constraint references the old name (the
     * constraint would silently stop analyzing — drop or re-add it
-    * first), when `to` already exists, or on a pre-v4 table (no
-    * recorded schema to alter). The `graft-vt` relation / SQL catalog
-    * scan surfaces refuse mapped versions (a plain file scan cannot
+    * first) or when `to` already exists. The `graft-vt` relation /
+    * SQL catalog scan surfaces refuse mapped versions (a plain file scan cannot
     * alias) — `commit(read(spark, path), path, overwrite = true)`
     * materializes the mapping away. */
   def renameColumn(spark: SparkSession, path: String, from: String,
@@ -1502,11 +1464,7 @@ object VersionedTable {
         .getOrElse(throw new IllegalStateException(
           s"no committed versions at $path"))
       val header = readHeader(fs, root, v)
-      val json = header.schemaJson.getOrElse(
-        throw new IllegalStateException(
-          s"column DDL ($what) needs a recorded schema — $path has a " +
-            "pre-v4 manifest; commit once to upgrade it"))
-      val (st, retired) = decodeSchemaFull(json)
+      val (st, retired) = decodeSchemaFull(header.schemaJson)
       val (st2, retired2, cols2, rekey) = xform(st, retired,
         header.statsCols)
       // CHECK constraints are SQL text over logical names: one that no
@@ -1532,7 +1490,7 @@ object VersionedTable {
           ndvs = rekeyMap(rekey, e.ndvs)))
       val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
       if (tryWriteManifest(fs, root, v2, "alter", None, cols2,
-          Some(encodeSchemaFull(st2, retired2)), entries)) {
+          encodeSchemaFull(st2, retired2), entries)) {
         maybeCheckpoint(fs, root, v2)
         return v2
       }
@@ -1600,10 +1558,7 @@ object VersionedTable {
           throw new IllegalStateException(s"no committed versions at $path"))
       val header = readHeader(fs, root, v)
       val entries = readEntries(spark, path, v)
-      val tableSchema = header.schemaJson.map(decodeSchema)
-        .orElse(entries.headOption.map(e =>
-          schemaRead(spark, None, Seq(s"$path/${e.name}")).schema))
-        .getOrElse(src.schema) // empty pre-v4 table: src defines shape
+      val tableSchema = decodeSchema(header.schemaJson)
       require(src.columns.sorted
           .sameElements(tableSchema.fieldNames.sorted),
         s"replaceWhere: data columns ${src.columns.sorted.mkString(",")}" +
@@ -1644,10 +1599,10 @@ object VersionedTable {
       val cols = resolveStatsCols(Some(header), Seq.empty)
       val st = stageAndPublish(
         clusterOut(survivors, clusterBy, math.max(1, rewrite.size)),
-        fs, root, v2, cols, header.schemaJson)
+        fs, root, v2, cols, Some(header.schemaJson))
       val published = st.names
       val newEntries = entriesOf(st, spark, fs, conf, root,
-        header.schemaJson)
+        Some(header.schemaJson))
       if (tryWriteManifest(fs, root, v2, "replace", txnId, cols,
           header.schemaJson, carried ++ newEntries)) {
         maybeCheckpoint(fs, root, v2)
@@ -1664,12 +1619,9 @@ object VersionedTable {
 
   /** Metadata-only COUNT(*) (Delta's metadata-only query path): the
     * manifest records per-file row counts, so the answer is ONE small
-    * manifest read — zero data files opened at any table size.
-    * Conservative by construction: `None` when any entry predates
-    * row-count recording (a pre-v3 carried file) — the caller falls
-    * back to a scan, never gets a wrong number. */
+    * manifest read — zero data files opened at any table size. */
   def countRows(spark: SparkSession, path: String,
-      asOfVersion: Option[Int] = None): Option[Long] = {
+      asOfVersion: Option[Int] = None): Long = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val v = asOfVersion.orElse(latestVisible(fs, root, forWrite = false))
@@ -1683,9 +1635,8 @@ object VersionedTable {
 
   /** [[countRows]] from pre-read entries (one manifest read can serve
     * several metadata answers — [[graft.plans.VtMetadataAgg]]). */
-  private[graft] def countRowsOf(entries: Seq[FileEntry]): Option[Long] =
-    if (entries.exists(_.nRows < 0)) None
-    else Some(entries.map(_.liveRows).sum)
+  private[graft] def countRowsOf(entries: Seq[FileEntry]): Long =
+    entries.map(_.liveRows).sum
 
   /** Metadata-only MIN/MAX of a stats column, folded from the manifest
     * spans — zero data files opened. Two-level result keeps "don't
@@ -1916,7 +1867,6 @@ object VersionedTable {
   private[graft] def nonNullRowsOf(e: FileEntry,
       col: String): Option[Long] =
     if (e.nRows == 0) Some(0L)
-    else if (e.nRows < 0) None
     else e.nulls.get(col) match {
       case Some(0L) => Some(e.liveRows)
       case Some(n) =>
@@ -1941,7 +1891,7 @@ object VersionedTable {
     entries.foreach { e =>
       val verdicts = preds.map(classifyEntry(e, _))
       if (verdicts.contains(Some(false))) () // provably out
-      else if (verdicts.forall(_.contains(true)) && e.nRows >= 0) {
+      else if (verdicts.forall(_.contains(true))) {
         metaSum += e.liveRows
         allIn += e
       } else boundary += e.name
@@ -2094,7 +2044,7 @@ object VersionedTable {
 
   /** Read a version (default: latest). Fails loudly on a version that
     * was never committed — an uncommitted crash leaves no manifest.
-    * Reads plan with the manifest's RECORDED schema (v4+): files
+    * Reads plan with the manifest's RECORDED schema: files
     * committed before a column was added back-fill it with null, and
     * a time-travel read returns exactly its version's shape. */
   def read(spark: SparkSession, path: String,
@@ -2107,11 +2057,8 @@ object VersionedTable {
     val header = readHeader(fs, root, v)
     requireVisible(fs, path, v, header)
     val entries = readEntries(spark, path, v)
-    if (entries.isEmpty) header.schemaJson match {
-      case Some(j) => spark.createDataFrame(
-        new java.util.ArrayList[Row](), decodeSchema(j))
-      case None => spark.emptyDataFrame
-    }
+    if (entries.isEmpty) spark.createDataFrame(
+      new java.util.ArrayList[Row](), decodeSchema(header.schemaJson))
     else maskedRead(spark, header.schemaJson, path, entries)
   }
 
@@ -2136,13 +2083,12 @@ object VersionedTable {
     else maskedRead(spark, header.schemaJson, path, slice)
   }
 
-  /** The recorded schema of a committed version (None for pre-v4
-    * manifests, which predate schema tracking). */
+  /** The recorded schema of a committed version. */
   def schemaOf(spark: SparkSession, path: String,
-      version: Int): Option[StructType] = {
+      version: Int): StructType = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    readHeader(fs, root, version).schemaJson.map(decodeSchema)
+    decodeSchema(readHeader(fs, root, version).schemaJson)
   }
 
   /** Range scan planned from the MANIFEST alone: resolve the version's
@@ -2185,7 +2131,7 @@ object VersionedTable {
     // manifest spans are keyed LOGICAL; footer blooms live under the
     // PHYSICAL chunk name (column mapping)
     val keep = bloomPrune(spark, path, spanKeep,
-      physicalOf(header.schemaJson).getOrElse(column, column), values)
+      physicalOf(Some(header.schemaJson)).getOrElse(column, column), values)
     val pred = col(column).isin(values: _*)
     if (keep.isEmpty) read(spark, path, Some(v)).where(pred).limit(0)
     else maskedRead(spark, header.schemaJson, path, keep).where(pred)
@@ -2557,13 +2503,12 @@ object VersionedTable {
   }
 
   final case class VersionInfo(version: Int, mode: String,
-      txnId: Option[String], nFiles: Int, timestampMs: Long = -1L)
+      txnId: Option[String], nFiles: Int, timestampMs: Long)
 
   /** All committed versions, ascending, with mode, transaction id,
     * file count and commit timestamp — the audit listing (`DESCRIBE
-    * HISTORY` analog; `timestampMs` is −1 for pre-v4 manifests). Reads
-    * ONLY manifest headers (seven lines each since v4) — never the
-    * file lists — so the listing stays cheap over a long history. */
+    * HISTORY` analog). Reads ONLY manifest headers — never the file
+    * lists — so the listing stays cheap over a long history. */
   def versions(spark: SparkSession, path: String): Seq[VersionInfo] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -2593,7 +2538,7 @@ object VersionedTable {
     if (nums.isEmpty)
       throw new IllegalStateException(s"no committed versions at $path")
     // scan NEWEST-first: time-travel targets are usually recent, and
-    // each probe is a seven-line header read
+    // each probe is a header-only read
     nums.reverseIterator
       .find { v =>
         val h = readHeader(fs, root, v)
@@ -2624,8 +2569,7 @@ object VersionedTable {
   /** TTL retention ([[expire]] by AGE): drop every version whose
     * commit timestamp is older than `ttlMs`, always keeping at least
     * the last `keepLast` regardless of age (the latest version never
-    * expires). Pre-v4 manifests carry no timestamp and are treated as
-    * infinitely old — they expire with the tail. The policy any
+    * expires). The policy any
     * "retain 7 days of history" deployment actually runs. */
   def expireOlderThan(spark: SparkSession, path: String, ttlMs: Long,
       keepLast: Int = 1): Unit = {
@@ -2663,7 +2607,7 @@ object VersionedTable {
     val dead = drop.flatMap(v =>
       artifactNames(readEntries(spark, path, v))).toSet -- retained
     dead.foreach(n => fs.delete(new Path(root, n), false))
-    // segment files live exactly as long as a retained v7 manifest
+    // segment files live exactly as long as a retained manifest
     // references them (reuse chains a segment across many versions)
     val retainedSegs = keep.flatMap(v => segmentRefsOf(fs, root, v)).toSet
     val deadSegs = drop.flatMap(v =>
@@ -2722,10 +2666,10 @@ object VersionedTable {
     val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
     val cols = resolveStatsCols(Some(header), Seq.empty)
     val st = stageAndPublish(clustered, fs, root, v2, cols,
-      header.schemaJson)
+      Some(header.schemaJson))
     val published = st.names
     val newEntries = entriesOf(st, spark, fs, conf, root,
-      header.schemaJson)
+      Some(header.schemaJson))
     if (tryWriteManifest(fs, root, v2, "optimize", None, cols,
         header.schemaJson, newEntries)) {
       maybeCheckpoint(fs, root, v2)
@@ -2773,10 +2717,10 @@ object VersionedTable {
     val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
     val cols = resolveStatsCols(Some(header), Seq.empty)
     val st = stageAndPublish(packed, fs, root, v2, cols,
-      header.schemaJson)
+      Some(header.schemaJson))
     val published = st.names
     val newEntries = entriesOf(st, spark, fs, conf, root,
-      header.schemaJson)
+      Some(header.schemaJson))
     if (tryWriteManifest(fs, root, v2, "optimize", None, cols,
         header.schemaJson, big.map(_._1) ++ newEntries)) {
       maybeCheckpoint(fs, root, v2)
@@ -2837,10 +2781,10 @@ object VersionedTable {
     val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
     val cols = resolveStatsCols(Some(header), Seq.empty)
     val st = stageAndPublish(clustered, fs, root, v2, cols,
-      header.schemaJson)
+      Some(header.schemaJson))
     val published = st.names
     val newEntries = entriesOf(st, spark, fs, conf, root,
-      header.schemaJson)
+      Some(header.schemaJson))
     if (tryWriteManifest(fs, root, v2, "optimize", None, cols,
         header.schemaJson, carried ++ newEntries)) {
       maybeCheckpoint(fs, root, v2)
@@ -2933,7 +2877,7 @@ object VersionedTable {
 
   /** One row of operational metadata for [[describeDetail]] — what a
     * maintenance operator sizes vacuum/optimize/decay decisions on. */
-  final case class TableDetail(nFiles: Int, liveRows: Option[Long],
+  final case class TableDetail(nFiles: Int, liveRows: Long,
       totalBytes: Long, dvFiles: Int, maskedRows: Long,
       columnMapping: Boolean, retiredColumns: Int,
       statsCols: Seq[String], timestampMs: Long)
@@ -2941,8 +2885,7 @@ object VersionedTable {
   /** DESCRIBE DETAIL of one committed version: file/row/byte totals
     * and the deletion-vector / column-mapping feature state, read from
     * the manifest alone (byte totals fall back to one file-status
-    * sweep only for entries predating the size field). `liveRows` is
-    * None when any file predates row-count recording. */
+    * sweep only for entries predating the size field). */
   def describeDetail(spark: SparkSession, path: String,
       version: Int): TableDetail = {
     val root = new Path(path)
@@ -2950,20 +2893,16 @@ object VersionedTable {
     val header = readHeader(fs, root, version)
     requireVisible(fs, path, version, header)
     val entries = readEntries(spark, path, version)
-    val (_, retired) = header.schemaJson.map(decodeSchemaFull)
-      .getOrElse((new StructType(), Seq.empty[String]))
+    val (st, retired) = decodeSchemaFull(header.schemaJson)
     TableDetail(
       nFiles = entries.size,
-      liveRows =
-        if (entries.exists(_.nRows < 0)) None
-        else Some(entries.map(_.liveRows).sum),
+      liveRows = countRowsOf(entries),
       totalBytes = entries.map(e =>
         if (e.size >= 0) e.size
         else fs.getFileStatus(new Path(root, e.name)).getLen).sum,
       dvFiles = entries.count(_.dv.nonEmpty),
       maskedRows = entries.flatMap(_.dv.map(_._2)).sum,
-      columnMapping = header.schemaJson.exists(j =>
-        schemaHasMapping(decodeSchema(j))),
+      columnMapping = schemaHasMapping(st),
       retiredColumns = retired.size,
       statsCols = header.statsCols,
       timestampMs = header.timestampMs)
@@ -2983,9 +2922,7 @@ object VersionedTable {
     * `optimize` commit. Returns `Some(newVersion)` when it rewrote,
     * `None` when every mask is under the bound (or a concurrent
     * commit won the slot — advisory maintenance never retry-loops
-    * against live writers). Files with unknown row counts (pre-v3
-    * manifests) never carry vectors, so the fraction is always
-    * decidable. */
+    * against live writers). */
   def materializeDvAbove(spark: SparkSession, path: String,
       maxMaskedFraction: Double = 0.3,
       targetFileBytes: Long = 128L * 1024 * 1024,
@@ -3031,10 +2968,10 @@ object VersionedTable {
     val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
     val cols = resolveStatsCols(Some(header), Seq.empty)
     val st = stageAndPublish(packed, fs, root, v2, cols,
-      header.schemaJson)
+      Some(header.schemaJson))
     val published = st.names
     val newEntries = entriesOf(st, spark, fs, conf, root,
-      header.schemaJson)
+      Some(header.schemaJson))
     if (tryWriteManifest(fs, root, v2, "optimize", None, cols,
         header.schemaJson, carried ++ newEntries)) {
       maybeCheckpoint(fs, root, v2)
@@ -3306,9 +3243,7 @@ object VersionedTable {
         // masked under each side's own vectors
         val oldOnly = beforeE.filterNot(e => afterM.contains(e.name))
         val newOnly = afterE.filterNot(e => beforeM.contains(e.name))
-        val cols = schemaOf(spark, path, version)
-          .map(_.fieldNames.toSeq)
-          .getOrElse(cur.columns.toSeq)
+        val cols = decodeSchema(header.schemaJson).fieldNames.toSeq
         def rd(es: Seq[FileEntry]) =
           if (es.isEmpty) cur.limit(0).select(cols.map(col): _*)
           else maskedRead(spark, header.schemaJson, path, es)
@@ -3501,8 +3436,7 @@ object VersionedTable {
   }
 
   /** The file entries (names + row counts + stats spans) of a
-    * committed version. Pre-v3 manifests yield entries with unknown
-    * row counts and no stats — readable, never prunable. */
+    * committed version. */
   def readEntries(spark: SparkSession, path: String,
       version: Int): Seq[FileEntry] = {
     val root = new Path(path)
@@ -3544,119 +3478,121 @@ object VersionedTable {
   private def readEntriesUncached(fs: FileSystem, root: Path,
       mf: Path): Seq[FileEntry] = {
     val lines = readLines(fs, mf)
-    lines.headOption match {
-      case Some(Header) =>
-        val cols = statsColsOf(lines(3))
-        lines.drop(7).map(parseEntry(_, cols))
-      case Some(HeaderV5) | Some(HeaderV6) | Some(HeaderV8) =>
-        val cols = statsColsOf(lines(3))
-        lines.drop(8).map(parseEntry(_, cols))
-      case Some(HeaderV7) =>
-        val cols = statsColsOf(lines(3))
-        val refs = lines.drop(8).map(parseSegRef)
-        // segments are independent immutable files: past a handful,
-        // fetch them with BOUNDED PARALLEL IO instead of a sequential
-        // driver loop — on an object store each read is latency-bound
-        // (~10-100 ms), so a 128-segment manifest (a ~1M-file table)
-        // opens in ~one round-trip instead of ~128. Order preserved;
-        // the segment cache is concurrent (putIfAbsent) so racers are
-        // benign.
-        val fetched: Seq[(SegRef, Seq[FileEntry])] =
-          if (refs.size < parallelSegmentThreshold)
-            refs.map(r => r -> readSegmentCached(fs, root, r.name, cols))
-          else {
-            import scala.jdk.CollectionConverters._
-            // shared daemon pool: a fresh pool per cold read would
-            // leak non-daemon threads into every manifest open, and
-            // invokeAll wraps a segment failure in ExecutionException
-            // — unwrap so the corrupt-segment require surfaces with
-            // the same message the sequential path throws
-            segmentFetchPool.invokeAll(refs.map { r =>
-              new java.util.concurrent.Callable[(SegRef, Seq[FileEntry])] {
-                override def call() =
-                  r -> readSegmentCached(fs, root, r.name, cols)
-              }
-            }.asJava).asScala.toSeq.map { f =>
-              try f.get()
-              catch {
-                case e: java.util.concurrent.ExecutionException =>
-                  throw Option(e.getCause).getOrElse(e)
-              }
+    val h = parseHeader(mf, lines)
+    val cols = h.statsCols
+    val body = lines.drop(HeaderLines)
+    if (!h.segmented) body.map(parseEntry(_, cols))
+    else {
+      val refs = body.map(parseSegRef)
+      // segments are independent immutable files: past a handful,
+      // fetch them with BOUNDED PARALLEL IO instead of a sequential
+      // driver loop — on an object store each read is latency-bound
+      // (~10-100 ms), so a 128-segment manifest (a ~1M-file table)
+      // opens in ~one round-trip instead of ~128. Order preserved;
+      // the segment cache is concurrent (putIfAbsent) so racers are
+      // benign.
+      val fetched: Seq[(SegRef, Seq[FileEntry])] =
+        if (refs.size < parallelSegmentThreshold)
+          refs.map(r => r -> readSegmentCached(fs, root, r.name, cols))
+        else {
+          import scala.jdk.CollectionConverters._
+          // shared daemon pool: a fresh pool per cold read would
+          // leak non-daemon threads into every manifest open, and
+          // invokeAll wraps a segment failure in ExecutionException
+          // — unwrap so the corrupt-segment require surfaces with
+          // the same message the sequential path throws
+          segmentFetchPool.invokeAll(refs.map { r =>
+            new java.util.concurrent.Callable[(SegRef, Seq[FileEntry])] {
+              override def call() =
+                r -> readSegmentCached(fs, root, r.name, cols)
+            }
+          }.asJava).asScala.toSeq.map { f =>
+            try f.get()
+            catch {
+              case e: java.util.concurrent.ExecutionException =>
+                throw Option(e.getCause).getOrElse(e)
             }
           }
-        val out = fetched.flatMap { case (ref, seg) =>
-          require(seg.size == ref.n,
-            s"segment ${ref.name} of $mf holds ${seg.size} entries, " +
-              s"manifest recorded ${ref.n}")
-          seg
         }
-        // a file must appear in exactly one segment of a version —
-        // a duplicate would double-count rows and double-read data
-        val dup = out.groupBy(_.name).collectFirst {
-          case (n, es) if es.size > 1 => n }
-        require(dup.isEmpty,
-          s"file ${dup.get} appears in two segments of $mf")
-        out
-      case Some(HeaderV3) =>
-        val cols = statsColsOf(lines(3))
-        lines.drop(4).map(parseEntry(_, cols))
-      case Some(HeaderV2) =>
-        lines.drop(3).map(FileEntry(_, -1L, Map.empty))
-      case _ => throw new IllegalStateException(s"bad manifest $mf")
+      val out = fetched.flatMap { case (ref, seg) =>
+        require(seg.size == ref.n,
+          s"segment ${ref.name} of $mf holds ${seg.size} entries, " +
+            s"manifest recorded ${ref.n}")
+        seg
+      }
+      // a file must appear in exactly one segment of a version —
+      // a duplicate would double-count rows and double-read data
+      val dup = out.groupBy(_.name).collectFirst {
+        case (n, es) if es.size > 1 => n }
+      require(dup.isEmpty,
+        s"file ${dup.get} appears in two segments of $mf")
+      out
     }
   }
 
   // ---- commit internals ----------------------------------------------
 
   /** Parsed manifest HEADER — everything version resolution needs,
-    * without the file list. v4 headers are seven lines; pre-v4 headers
-    * lack `nFiles`/`schema`/`ts` (nFiles falls back to a full line
-    * count — the legacy-compat path only). */
+    * without the file list. */
   private[graft] final case class ManifestHeader(mode: String,
       txnId: Option[String], statsCols: Seq[String], nFiles: Int,
-      schemaJson: Option[String], timestampMs: Long,
-      pendingTxn: Option[String] = None)
+      schemaJson: String, timestampMs: Long, pendingTxn: Option[String],
+      features: Seq[String]) {
+    def segmented: Boolean = features.contains(FSegments)
+  }
 
-  private def statsColsOf(line: String): Seq[String] =
-    line.stripPrefix("stats:") match {
-      case "-" => Seq.empty
-      case s => s.split(',').toSeq
+  /** A `,`-list header value; `-` is the empty list. */
+  private def listOf(value: String): Seq[String] =
+    if (value == "-") Seq.empty else value.split(',').toSeq
+
+  private def listValue(xs: Seq[String]): String =
+    if (xs.isEmpty) "-" else xs.mkString(",")
+
+  /** Parse the fixed header lines of manifest `mf` (extra lines are
+    * ignored), refusing any other header string, a missing schema, or
+    * a reader feature this version does not know — by name. */
+  private def parseHeader(mf: Path, lines: Seq[String]): ManifestHeader = {
+    val head = lines.headOption.getOrElse("<empty>")
+    if (head != Header)
+      throw new IllegalStateException(s"manifest $mf carries unsupported " +
+        s"header $head (this reader reads $Header only)")
+    require(lines.size >= HeaderLines, s"manifest $mf is truncated")
+    def field(i: Int, key: String): String = {
+      require(lines(i).startsWith(key),
+        s"manifest $mf: line $i should start with $key: ${lines(i)}")
+      lines(i).stripPrefix(key)
     }
+    def decoded(s: String): Option[String] =
+      Option(s).filter(_ != "-").map(java.net.URLDecoder.decode(_, "UTF-8"))
+    val features = listOf(field(8, "features:"))
+    val unknown = features.filterNot(KnownFeatures)
+    if (unknown.nonEmpty)
+      throw new IllegalStateException(
+        s"manifest $mf uses unknown reader feature(s) " +
+          s"${unknown.mkString(",")} — written by a newer graft version; " +
+          "refusing rather than misreading it")
+    ManifestHeader(lines(1),
+      Option(field(2, "txn:")).filter(_ != "-"),
+      listOf(field(3, "stats:")),
+      field(4, "nfiles:").toInt,
+      decoded(field(5, "schema:")).getOrElse(throw new IllegalStateException(
+        s"manifest $mf records no table schema (schema:-)")),
+      field(6, "ts:").toLong,
+      decoded(field(7, "pending:")),
+      features)
+  }
 
-  /** Header-only manifest read: v4 reads exactly seven lines and stops
-    * — the file list is never materialized. */
+  /** Header-only manifest read: reads the [[HeaderLines]] header lines
+    * and stops — the file list is never materialized. */
+  private def readHeaderAt(fs: FileSystem, mf: Path): ManifestHeader =
+    parseHeader(mf, readHeadLines(fs, mf, HeaderLines))
+
   private[graft] def readHeader(fs: FileSystem, root: Path,
       version: Int): ManifestHeader = {
     val mf = new Path(root, f"$LogDir/v$version%05d.manifest")
     require(fs.exists(mf),
       s"version $version was never committed (or expired) at $root")
-    val head = readHeadLines(fs, mf, 8)
-    head.headOption match {
-      case Some(Header) | Some(HeaderV5) | Some(HeaderV6)
-           | Some(HeaderV7) | Some(HeaderV8) =>
-        ManifestHeader(head(1),
-          Option(head(2).stripPrefix("txn:")).filter(_ != "-"),
-          statsColsOf(head(3)),
-          head(4).stripPrefix("nfiles:").toInt,
-          Option(head(5).stripPrefix("schema:")).filter(_ != "-")
-            .map(s => java.net.URLDecoder.decode(s, "UTF-8")),
-          head(6).stripPrefix("ts:").toLong,
-          pendingTxn =
-            if (!head.headOption.contains(Header))
-              Option(head(7).stripPrefix("pending:")).filter(_ != "-")
-                .map(s => java.net.URLDecoder.decode(s, "UTF-8"))
-            else None)
-      case Some(HeaderV3) =>
-        ManifestHeader(head(1),
-          Option(head(2).stripPrefix("txn:")).filter(_ != "-"),
-          statsColsOf(head(3)),
-          readLines(fs, mf).size - 4, None, -1L)
-      case Some(HeaderV2) =>
-        ManifestHeader(head(1),
-          Option(head(2).stripPrefix("txn:")).filter(_ != "-"),
-          Seq.empty, readLines(fs, mf).size - 3, None, -1L)
-      case _ => throw new IllegalStateException(s"bad manifest $mf")
-    }
+    readHeaderAt(fs, mf)
   }
 
   /** DROP tombstone: present in `_graft_log` from the moment a DROP
@@ -4181,7 +4117,7 @@ object VersionedTable {
             .withMetadata(f.metadata).remove(PhysicalKey).build())))
     // an overwrite replaces the table: mapping and retired names reset
     if (overwrite) return incoming.json
-    prev.flatMap(_.schemaJson).map(decodeSchemaFull) match {
+    prev.map(h => decodeSchemaFull(h.schemaJson)) match {
       case None => incoming.json
       case Some((old, retired)) =>
         val conflicts = incoming.flatMap(f =>
@@ -4265,20 +4201,18 @@ object VersionedTable {
     decodeSchemaFull(json)._1
 
   /** PHYSICAL parquet scan of `paths` planned with the manifest's
-    * recorded schema when present: files predating a column addition
+    * recorded schema: files predating a column addition
     * back-fill it with null (the mergeSchema result, without footer
     * merging). Columns come back under their PHYSICAL names — the
     * masking/position machinery needs the raw relation (metadata
     * columns don't survive a projection); [[logicalize]] restores the
     * logical shape on top. */
-  private def physicalScan(spark: SparkSession, schemaJson: Option[String],
-      paths: Seq[String]): DataFrame = schemaJson match {
-    case Some(j) =>
-      val st = decodeSchema(j)
-      val phys = if (!schemaHasMapping(st)) st
-        else StructType(st.fields.map(f => f.copy(name = physicalNameOf(f))))
-      spark.read.schema(phys).parquet(paths: _*)
-    case None => spark.read.parquet(paths: _*)
+  private def physicalScan(spark: SparkSession, schemaJson: String,
+      paths: Seq[String]): DataFrame = {
+    val st = decodeSchema(schemaJson)
+    val phys = if (!schemaHasMapping(st)) st
+      else StructType(st.fields.map(f => f.copy(name = physicalNameOf(f))))
+    spark.read.schema(phys).parquet(paths: _*)
   }
 
   /** The logical projection over a physical frame: alias every mapped
@@ -4286,23 +4220,23 @@ object VersionedTable {
     * returns `df` unchanged, plan-identical to the pre-mapping path).
     * Extra non-schema columns (the DV file/pos identities) survive
     * only via `keep`. */
-  private def logicalize(df: DataFrame, schemaJson: Option[String],
-      keep: Seq[String] = Seq.empty): DataFrame =
-    schemaJson.map(decodeSchema).filter(schemaHasMapping) match {
-      case None => df
-      case Some(st) => df.select(
-        st.fields.map(f => col(physicalNameOf(f)).as(f.name)).toSeq ++
-          keep.map(col): _*)
-    }
+  private def logicalize(df: DataFrame, schemaJson: String,
+      keep: Seq[String] = Seq.empty): DataFrame = {
+    val st = decodeSchema(schemaJson)
+    if (!schemaHasMapping(st)) df
+    else df.select(
+      st.fields.map(f => col(physicalNameOf(f)).as(f.name)).toSeq ++
+        keep.map(col): _*)
+  }
 
   /** Parquet scan of `paths` in the schema's LOGICAL shape. */
-  private def schemaRead(spark: SparkSession, schemaJson: Option[String],
+  private def schemaRead(spark: SparkSession, schemaJson: String,
       paths: Seq[String]): DataFrame =
     logicalize(physicalScan(spark, schemaJson, paths), schemaJson)
 
   /** [[schemaRead]] through a manifest-backed
     * [[graft.sources.VtFileIndex]] when the entries allow it (no DVs
-    * in this subset, no column mapping, schema recorded): Spark's
+    * in this subset, no column mapping): Spark's
     * FileSourceStrategy then hands pushed data filters to the index,
     * and files whose recorded spans provably exclude the predicate
     * are never planned — `read(...).where(...)` auto-prunes like the
@@ -4310,21 +4244,20 @@ object VersionedTable {
     * [[prunedReadWhere]] call. At 100 TB this is the difference
     * between planning two span-matching files and planning the
     * version's 800k. Falls back to the plain path-list scan otherwise
-    * (mapped schemas scan physical names the filters would not match;
-    * pre-v4 manifests recorded no schema). */
-  private def indexedRead(spark: SparkSession, schemaJson: Option[String],
+    * (mapped schemas scan physical names the filters would not match). */
+  private def indexedRead(spark: SparkSession, schemaJson: String,
       path: String, entries: Seq[FileEntry]): DataFrame = {
-    val schema = schemaJson.map(decodeSchema)
-    if (entries.isEmpty || schema.isEmpty ||
-        schemaHasMapping(schema.get) || entries.exists(_.dv.nonEmpty))
+    val schema = decodeSchema(schemaJson)
+    if (entries.isEmpty ||
+        schemaHasMapping(schema) || entries.exists(_.dv.nonEmpty))
       schemaRead(spark, schemaJson, entries.map(e => s"$path/${e.name}"))
     else {
       val rel = org.apache.spark.sql.execution.datasources
         .HadoopFsRelation(
           new graft.sources.VtFileIndex(spark, path, -1, entries,
-            schema.get),
+            schema),
           partitionSchema = StructType(Nil),
-          dataSchema = schema.get,
+          dataSchema = schema,
           bucketSpec = None,
           fileFormat = new org.apache.spark.sql.execution.datasources
             .parquet.ParquetFileFormat,
@@ -4463,7 +4396,7 @@ object VersionedTable {
     * change feed, compaction, and every rewrite base observe DV
     * deletes exactly. */
   private[graft] def maskedRead(spark: SparkSession,
-      schemaJson: Option[String], path: String,
+      schemaJson: String, path: String,
       entries: Seq[FileEntry]): DataFrame = {
     if (entries.forall(_.dv.isEmpty))
       return indexedRead(spark, schemaJson, path, entries)
@@ -4478,8 +4411,7 @@ object VersionedTable {
           .select(physCols.map(col): _*)
       else {
         val Seq(fileC, posC) = freshCols(
-          physCols ++ schemaJson.map(decodeSchema(_).fieldNames.toSeq)
-            .getOrElse(Seq.empty),
+          physCols ++ decodeSchema(schemaJson).fieldNames,
           Seq("__graft_dv_file", "__graft_dv_pos"))
         base0
           .withColumn(fileC,
@@ -4502,13 +4434,12 @@ object VersionedTable {
     * can never disagree on what a position means, and a row already
     * masked by an earlier vector can never be "discovered" again. */
   private def maskedReadWithPos(spark: SparkSession,
-      schemaJson: Option[String], path: String, entries: Seq[FileEntry])
+      schemaJson: String, path: String, entries: Seq[FileEntry])
       : (DataFrame, String, String) = {
     val base0 = physicalScan(spark, schemaJson,
       entries.map(e => s"$path/${e.name}"))
     val Seq(fileC, posC) = freshCols(
-      base0.columns.toSeq ++ schemaJson
-        .map(decodeSchema(_).fieldNames.toSeq).getOrElse(Seq.empty),
+      base0.columns.toSeq ++ decodeSchema(schemaJson).fieldNames,
       Seq("__graft_dv_file", "__graft_dv_pos"))
     val dved = entries.filter(_.dv.nonEmpty)
     val totalDeleted = dved.map(e => math.max(e.dv.get._2, 0L)).sum
@@ -4575,7 +4506,7 @@ object VersionedTable {
         case Some(n) =>
           val total = exactTotals.getOrElse(e.name,
             e.dv.map(_._2).getOrElse(0L) + n)
-          if (e.nRows >= 0 && total >= e.nRows) None // fully dead
+          if (total >= e.nRows) None // fully dead
           else Some(e.copy(dv = Some((sidecar, total))))
       }
     }
@@ -4962,14 +4893,14 @@ object VersionedTable {
     case _ => throw new IllegalStateException(s"bad span field: $s")
   }
 
-  /** v3+/v4 entry line: `name TAB nRows TAB min1 TAB max1 ...` — two
+  /** Entry line: `name TAB nRows TAB min1 TAB max1 ...` — two
     * fields per stats column; `- -` = not collected, `N N` = all-null
     * column. TRAILING TAGGED FIELDS follow the span fields, each
     * self-identified by its first character so parsers skip what they
-    * do not know: `z<bytes>` (v5+) the file's byte length,
+    * do not know: `z<bytes>` the file's byte length,
     * `d<nDeleted>:<url-encoded-sidecar>` a deletion vector. Positioned
-    * AFTER all span fields so pre-v5 parsers (which index by
-    * stats-column count) simply never look at them. `u<n1>,<n2>,...`
+    * AFTER all span fields so parsers (which index by
+    * stats-column count) never look at them. `u<n1>,<n2>,...`
     * records per-stats-column NULL COUNTS, aligned with the cols
     * order (`-` = unknown) — what lets [[graft.plans.VtMetadataAgg]]
     * prove a file ALL-IN for a null-rejecting predicate; entries
@@ -4995,8 +4926,9 @@ object VersionedTable {
     // `m<s1>,<s2>,...` — per-stats-column EXACT SUMS (plain decimal
     // strings; `-` = unknown, `N` = no non-null rows), aligned with
     // the cols order like `u`. A trailing tagged field: pre-sum
-    // parsers skip it, so no protocol bump — unlike the `T` span tag,
-    // which rides inside fields old parsers must decode.
+    // parsers skip it, so no reader feature — unlike the `T` span
+    // tag, which rides inside fields parsers must decode
+    // (`taggedSpans`).
     val sm =
       if (cols.isEmpty || cols.forall(c => !e.sums.contains(c))) Seq.empty
       else Seq("m" + cols.map(c =>
@@ -5010,7 +4942,7 @@ object VersionedTable {
     // for determinism). Values within a set use `,`, columns `;` —
     // both safe: numeric encodings carry neither, strings are
     // URL-encoded. A trailing tagged field like `u`/`m`: pre-dset
-    // parsers skip it, no protocol bump.
+    // parsers skip it, no reader feature.
     val qs =
       if (cols.isEmpty || cols.forall(c => !e.dsets.contains(c)))
         Seq.empty
@@ -5024,7 +4956,7 @@ object VersionedTable {
     // with the cols order like `q`. The word count (recoverable from
     // the byte length) identifies the register layout, so a fold only
     // merges sketches whose precision matches the query's. A trailing
-    // tagged field: pre-sketch parsers skip it, no protocol bump.
+    // tagged field: pre-sketch parsers skip it, no reader feature.
     val hs =
       if (cols.isEmpty || cols.forall(c => !e.ndvs.contains(c)))
         Seq.empty
@@ -5099,13 +5031,16 @@ object VersionedTable {
           case (c, p) if p != "-" && p.nonEmpty => c -> decodeWords(p)
         }.toMap
       }.getOrElse(Map.empty[String, Seq[Long]])
-    FileEntry(f(0), f(1).toLong, stats, size, dv, nulls, sums, dsets,
-      ndvs)
+    val nRows = f(1).toLong
+    require(nRows >= 0, s"manifest entry ${f(0)} records a negative " +
+      s"row count ($nRows)")
+    FileEntry(f(0), nRows, stats, size, dv, nulls, sums, dsets, ndvs)
   }
 
-  // ---- segmented (v7) manifest internals ------------------------------
+  // ---- segmented manifest internals -----------------------------------
 
-  /** One `seg:<name>:<nEntries>` reference line of a v7 manifest. */
+  /** One `seg:<name>:<nEntries>` reference line of a segmented
+    * manifest. */
   private final case class SegRef(name: String, n: Int)
 
   private def parseSegRef(line: String): SegRef = {
@@ -5124,12 +5059,11 @@ object VersionedTable {
       cols: Seq[String]): Seq[FileEntry] = {
     val p = new Path(root, s"$LogDir/$name")
     val lines = readLines(fs, p)
-    require(lines.headOption.contains(SegHeader) ||
-        lines.headOption.contains(SegHeaderV2),
+    require(lines.headOption.contains(SegHeader),
       s"segment $p carries unknown header ${lines.headOption.orNull} " +
         "— written by a newer graft version (or corrupt); refusing " +
         "rather than misreading its entries")
-    require(statsColsOf(lines(1)) == cols,
+    require(listOf(lines(1).stripPrefix("stats:")) == cols,
       s"segment $p was written with stats columns ${lines(1)} but the " +
         s"manifest declares ${if (cols.isEmpty) "-" else cols.mkString(",")}")
     lines.drop(2).map(parseEntry(_, cols))
@@ -5165,12 +5099,7 @@ object VersionedTable {
       cols: Seq[String], entries: Seq[FileEntry]): SegRef = {
     val name = s"s-${java.util.UUID.randomUUID}.segment"
     val out = fs.create(new Path(root, s"$LogDir/$name"), false)
-    // protocol gate ([[SegHeaderV2]]): `T`-tagged spans bump the
-    // segment header so a pre-tag reader refuses up front
-    val segHeader =
-      if (entries.exists(hasTaggedSpan)) SegHeaderV2 else SegHeader
-    try out.write((Seq(segHeader,
-      s"stats:${if (cols.isEmpty) "-" else cols.mkString(",")}")
+    try out.write((Seq(SegHeader, s"stats:${listValue(cols)}")
       ++ entries.map(formatEntry(_, cols)))
       .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
@@ -5184,9 +5113,8 @@ object VersionedTable {
   private[graft] def segmentRefsOf(fs: FileSystem, root: Path,
       version: Int): Seq[String] = {
     val mf = new Path(root, f"$LogDir/v$version%05d.manifest")
-    val head = readHeadLines(fs, mf, 9)
-    if (!head.headOption.contains(HeaderV7)) Seq.empty
-    else readLines(fs, mf).drop(8).map(parseSegRef(_).name)
+    if (!readHeaderAt(fs, mf).segmented) Seq.empty
+    else readLines(fs, mf).drop(HeaderLines).map(parseSegRef(_).name)
   }
 
   /** Spec/entry observability: the segment names version `version`
@@ -5198,8 +5126,8 @@ object VersionedTable {
     segmentRefsOf(fs, root, version)
   }
 
-  /** Build the v7 body: reuse every previous-version segment whose
-    * entries are ALL carried into `entries` formatted-identically
+  /** Build the segmented body: reuse every previous-version segment
+    * whose entries are ALL carried into `entries` formatted-identically
     * (same codec bytes under the same stats cols ⇒ a reader of the
     * reused segment parses exactly what an inline manifest would have
     * given it), write the rest as fresh [[SegmentMaxEntries]]-sized
@@ -5213,10 +5141,9 @@ object VersionedTable {
         val pm = new Path(root, f"$LogDir/v${v - 1}%05d.manifest")
         if (!fs.exists(pm)) Seq.empty
         else {
-          val head = readHeadLines(fs, pm, 8)
-          if (head.headOption.contains(HeaderV7) &&
-              statsColsOf(head(3)) == cols)
-            readLines(fs, pm).drop(8).map(parseSegRef).map(r =>
+          val h = readHeaderAt(fs, pm)
+          if (h.segmented && h.statsCols == cols)
+            readLines(fs, pm).drop(HeaderLines).map(parseSegRef).map(r =>
               r -> readSegmentCached(fs, root, r.name, cols))
           else Seq.empty
         }
@@ -5263,38 +5190,18 @@ object VersionedTable {
     * no-overwrite rename contract on HDFS. */
   private def tryWriteManifest(fs: FileSystem, root: Path, v: Int,
       mode: String, txnId: Option[String], cols: Seq[String],
-      schemaJson: Option[String], entries: Seq[FileEntry],
+      schemaJson: String, entries: Seq[FileEntry],
       onBeforePromote: () => Unit = () => (),
       pendingTxn: Option[String] = None): Boolean = {
     val dest = new Path(root, f"$LogDir/v$v%05d.manifest")
     if (fs.exists(dest)) return false // fast-path; the promote re-checks
-    // reader-affecting features force the v6 header so pre-feature
-    // readers refuse loudly instead of silently resurrecting
-    // DV-deleted rows or scanning logical names over physical files
-    val features = entries.exists(_.dv.nonEmpty) ||
-      schemaJson.exists { j =>
-        val (st, retired) = decodeSchemaFull(j)
-        retired.nonEmpty || schemaHasMapping(st)
-      }
     val segmented = entries.size >= segmentThresholdVar
-    // unit-tagged (`T`) span values are a new span-field alphabet:
-    // inline manifests carrying one bump to v8 so pre-tag readers
-    // refuse at the header instead of crashing in span decode
-    // (segmented bodies hold only `seg:` refs — the gate moves to the
-    // segment files' own header, see writeSegment)
-    val tsTagged = !segmented && entries.exists(hasTaggedSpan)
-    val header =
-      if (segmented) Seq(HeaderV7, mode)
-      else if (tsTagged) Seq(HeaderV8, mode)
-      else if (features) Seq(HeaderV6, mode)
-      else if (pendingTxn.isEmpty) Seq(Header, mode)
-      else Seq(HeaderV5, mode)
-    val tail =
-      if (segmented || features || tsTagged)
-        Seq("pending:" + pendingTxn.map(u =>
-          java.net.URLEncoder.encode(u, "UTF-8")).getOrElse("-"))
-      else pendingTxn.toSeq.map(u =>
-        s"pending:${java.net.URLEncoder.encode(u, "UTF-8")}")
+    val (st, retired) = decodeSchemaFull(schemaJson)
+    val features = Seq(
+      FDeletionVectors -> entries.exists(_.dv.nonEmpty),
+      FColumnMapping -> (retired.nonEmpty || schemaHasMapping(st)),
+      FTaggedSpans -> entries.exists(hasTaggedSpan),
+      FSegments -> segmented).collect { case (f, true) => f }
     // segmented bodies list `seg:` refs — the reused ones verbatim
     // from v-1, the delta as fresh immutable segment files written
     // here (before the promote: a lost race or crash strands only
@@ -5305,13 +5212,15 @@ object VersionedTable {
     val tmp = new Path(root,
       f"$LogDir/.v$v%05d.manifest.${java.util.UUID.randomUUID}.tmp")
     val out = fs.create(tmp, true)
-    try out.write((header ++ Seq(s"txn:${txnId.getOrElse("-")}",
-      s"stats:${if (cols.isEmpty) "-" else cols.mkString(",")}",
+    try out.write((Seq(Header, mode, s"txn:${txnId.getOrElse("-")}",
+      s"stats:${listValue(cols)}",
       s"nfiles:${entries.size}",
-      s"schema:${schemaJson.map(j =>
-        java.net.URLEncoder.encode(j, "UTF-8")).getOrElse("-")}",
-      s"ts:${System.currentTimeMillis()}")
-      ++ tail ++ body)
+      s"schema:${java.net.URLEncoder.encode(schemaJson, "UTF-8")}",
+      s"ts:${System.currentTimeMillis()}",
+      "pending:" + pendingTxn.map(u =>
+        java.net.URLEncoder.encode(u, "UTF-8")).getOrElse("-"),
+      s"features:${listValue(features)}")
+      ++ body)
       .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     onBeforePromote()
@@ -5370,7 +5279,7 @@ object VersionedTable {
   }
 
   /** First `n` lines of a file, reading no further — the header-only
-    * manifest path (a 100k-file manifest's header costs six lines, not
+    * manifest path (a 100k-file manifest's header costs nine lines, not
     * the list). */
   private def readHeadLines(fs: FileSystem, p: Path, n: Int): Seq[String] = {
     val in = fs.open(p)

@@ -334,7 +334,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         VersionedTable.readEntries(SparkSession.active, t.vtPath,
           t.vtVersion)
       } catch { case scala.util.control.NonFatal(_) => return None }
-    lazy val count: Option[Long] = VersionedTable.countRowsOf(entries)
+    lazy val count: Long = VersionedTable.countRowsOf(entries)
     val spanCache = scala.collection.mutable.Map
       .empty[String, Option[Option[(Any, Any)]]]
     def span(col: String): Option[Option[(Any, Any)]] =
@@ -385,7 +385,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       }
     }
     val values = shapes.map {
-      case Some(CountAll) => count.map(n => n: Any)
+      case Some(CountAll) => Some(count: Any)
       case Some(CountCol(a)) =>
         val parts = entries.map(VersionedTable.nonNullRowsOf(_, a.name))
         if (parts.exists(_.isEmpty)) None
@@ -690,7 +690,6 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           case _ => return false
         })
         boundary.toSeq.flatMap(entryByName.get).foreach { e =>
-          if (e.nRows < 0) return false
           n += e.nRows // every physical row may be a non-null match
           e.stats.get(c) match {
             case Some(Some((lo: Long, hi: Long))) =>
@@ -1308,7 +1307,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         var ok = true
         val ebn = entries.iterator.map(e => e.name -> e).toMap
         boundary.toSeq.flatMap(ebn.get).foreach { e =>
-          if (e.nRows < 0) ok = false else bRows += e.nRows
+          bRows += e.nRows
           avgGAttrs.foreach { a =>
             e.stats.get(a.name) match {
               case Some(Some((lo: Long, hi: Long))) =>
@@ -1768,18 +1767,15 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     * to NULL and the combine would treat it as zero (whole-table) or
     * the outer re-sum would skip it (grouped) — a wrong NON-NULL
     * answer where the scan, which checks overflow only on the
-    * combined total, still answers; ANSI would throw spuriously.
-    * Unknown row counts decline. */
+    * combined total, still answers; ANSI would throw spuriously. */
   private def decimalBoundarySafe(
       entries: Seq[graft.operators.VersionedTable.FileEntry],
       inPrec: Int): Boolean = {
     var rows = java.math.BigDecimal.ZERO
     entries.forall { e =>
-      e.nRows >= 0 && {
-        rows = rows.add(java.math.BigDecimal.valueOf(e.nRows))
-        rows.multiply(java.math.BigDecimal.TEN.pow(inPrec))
-          .compareTo(Ten38BD) <= 0
-      }
+      rows = rows.add(java.math.BigDecimal.valueOf(e.nRows))
+      rows.multiply(java.math.BigDecimal.TEN.pow(inPrec))
+        .compareTo(Ten38BD) <= 0
     }
   }
 
@@ -1828,7 +1824,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       col: String): Boolean = {
     var acc = java.math.BigDecimal.ZERO
     entries.forall { e =>
-      if (e.nRows <= 0) e.nRows == 0
+      if (e.nRows == 0) true
       else e.stats.get(col) match {
         case Some(None) => true // provably all-null
         case Some(Some((lo: Long, hi: Long))) =>
@@ -1935,12 +1931,9 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       inPrec: Int): Boolean = {
     var rows = java.math.BigDecimal.ZERO
     entries.forall { e =>
-      if (e.nRows < 0) false
-      else {
-        rows = rows.add(java.math.BigDecimal.valueOf(e.nRows))
-        rows.multiply(java.math.BigDecimal.TEN.pow(inPrec))
-          .compareTo(TwoP63) < 0
-      }
+      rows = rows.add(java.math.BigDecimal.valueOf(e.nRows))
+      rows.multiply(java.math.BigDecimal.TEN.pow(inPrec))
+        .compareTo(TwoP63) < 0
     }
   }
 

@@ -189,7 +189,7 @@ object VtTopKRewrite extends Rule[LogicalPlan] {
     // guaranteed LIVE non-null rows (a DV might mask any of them)
     def nonNullLB(e: VersionedTable.FileEntry): Long =
       e.nulls.get(col) match {
-        case Some(n) if e.nRows >= 0 && guaranteeFrom(e.name) =>
+        case Some(n) if guaranteeFrom(e.name) =>
           math.max(0L, e.nRows - n - dvc(e))
         case _ => 0L
       }
@@ -216,7 +216,7 @@ object VtTopKRewrite extends Rule[LogicalPlan] {
     // files with a recorded span, ordered by the guarantee bound
     // (min for DESC — every non-null row sits at or above it; max for
     // ASC). Any incomparable pair (mixed legacy units) declines.
-    val ranked = entries.filter(e => span(e).isDefined && e.nRows >= 0)
+    val ranked = entries.filter(e => span(e).isDefined)
     var bad = false
     val sorted = ranked.sortWith { (x, y) =>
       val (vx, vy) =

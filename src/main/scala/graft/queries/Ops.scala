@@ -615,7 +615,7 @@ object Ops {
           s"data $dataBytes")
       // metadata-only count is still exact over the mask
       val live = VersionedTable.countRows(s, t)
-      require(live.contains(VersionedTable.read(s, t).count()),
+      require(live == VersionedTable.read(s, t).count(),
         s"countRows must subtract the mask: $live")
       require(VersionedTable.read(s, t, Some(0)).count() == docs.count(),
         "the pre-delete version must stay whole")
@@ -1472,8 +1472,8 @@ object Ops {
         .subsetOf(VersionedTable.files(s, t, v2).toSet),
         "a DV merge must keep every data file")
       // metadata COUNT stays exact over stacked masks
-      require(VersionedTable.countRows(s, t)
-        .contains(VersionedTable.read(s, t).count()),
+      require(VersionedTable.countRows(s, t) ==
+        VersionedTable.read(s, t).count(),
         "countRows must subtract stacked masks exactly")
     }
     VersionedTable.read(s, t)
@@ -1795,8 +1795,7 @@ object Ops {
     if (!mx.isNullAt(0)) // rewritten files must re-harvest exactly
       VersionedTable.deleteWhere(s, t,
         col("l_orderkey") > mx.getLong(0) * 4 / 5)
-    val n = VersionedTable.countRows(s, t).getOrElse(
-      throw new IllegalStateException("manifest must carry row counts"))
+    val n = VersionedTable.countRows(s, t)
     val span = VersionedTable.statsSpan(s, t, "l_orderkey").getOrElse(
       throw new IllegalStateException("manifest must carry spans"))
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1878,8 +1877,8 @@ object Ops {
     require(VersionedTable.read(s, t, Some(0)).columns.toSeq ==
       Seq("doc_id", "text"),
       "time travel to v0 must keep the pre-evolution shape")
-    require(VersionedTable.schemaOf(s, t, 1).exists(
-      _.fieldNames.toSeq == Seq("doc_id", "text", "source")),
+    require(VersionedTable.schemaOf(s, t, 1).fieldNames.toSeq ==
+      Seq("doc_id", "text", "source"),
       "the append manifest must record the merged schema")
     VersionedTable.read(s, t)
       .select(col("doc_id"),
@@ -2596,7 +2595,7 @@ object Ops {
     // zero-row input: spans are provably NULL (Some(None)) rather
     // than undecidable — the conservative-until-rewrite gate assumes
     // row-bearing files
-    val vtEmpty = VersionedTable.countRows(s, t).contains(0L)
+    val vtEmpty = VersionedTable.countRows(s, t) == 0L
     require(vtEmpty ||
       VersionedTable.statsSpan(s, t, "l_quantity").isEmpty,
       "files predating the declaration must stay conservative")
@@ -2604,7 +2603,7 @@ object Ops {
     require(vtEmpty ||
       VersionedTable.statsSpan(s, t, "l_quantity").exists(_.nonEmpty),
       "after the rewrite the new index answers exact metadata spans")
-    require(VersionedTable.countRows(s, t).nonEmpty &&
+    require(
       VersionedTable.countRows(s, t) == VersionedTable.countRows(s, t, Some(0)),
       "the whole walk is content-invisible")
     VersionedTable.read(s, t)
@@ -2633,7 +2632,7 @@ object Ops {
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id")),
       t, overwrite = true, statsCols = Seq("doc_id"))
-    if (VersionedTable.countRows(s, t).contains(0L))
+    if (VersionedTable.countRows(s, t) == 0L)
       // empty input: nothing to delete/restore — the walk's gates
       // assume data; return the schema-shaped empty result
       s.sql(s"SELECT doc_id, h, source FROM graft.`$t`")

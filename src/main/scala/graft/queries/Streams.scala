@@ -890,7 +890,7 @@ object Streams {
           "must carry untouched files by reference")
     }
     val lastV = hist.map(_.version).max
-    if (!VersionedTable.countRows(s, table, Some(0)).contains(0L))
+    if (VersionedTable.countRows(s, table, Some(0)) != 0L)
       require(VersionedTable.readEntries(s, table, lastV)
         .exists(_.dv.nonEmpty),
         "the CDC masking must have produced deletion vectors")

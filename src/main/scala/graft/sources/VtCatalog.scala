@@ -95,7 +95,6 @@ final class VtCatalog extends TableCatalog
     VersionedTable.requireVisibleVersion(spark, path, version)
     val entries = VersionedTable.readEntries(spark, path, version)
     val schema = VersionedTable.schemaOf(spark, path, version)
-      .getOrElse(VersionedTable.read(spark, path, Some(version)).schema)
     // the PLAIN SQL scan is a bare file list — it can neither mask
     // deletion vectors nor alias mapped columns. Such versions hand
     // back a table carrying `vtScanRefusal`, and the registered
@@ -537,7 +536,7 @@ final class VtCatalog extends TableCatalog
       case d: TableChange.DeleteColumn =>
         val name = d.fieldNames()(0)
         val absent = !VersionedTable.latestVersion(spark, path)
-          .flatMap(v => VersionedTable.schemaOf(spark, path, v))
+          .map(v => VersionedTable.schemaOf(spark, path, v))
           .exists(_.fieldNames.contains(name))
         if (absent && java.lang.Boolean.TRUE == d.ifExists()) None
         else Some(VersionedTable.ColumnChange.Drop(name))
@@ -565,15 +564,14 @@ final class VtCatalog extends TableCatalog
     val path = pathOf(ident)
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    def sweep(): Option[(Int, Option[Long])] =
+    def sweep(): Option[(Int, Long)] =
       VersionedTable.versions(spark, path).iterator.map(v =>
         (v.version, VersionedTable.countRows(spark, path,
-          Some(v.version)))).find(!_._2.contains(0L))
-    def refuse(v: Int, rows: Option[Long]): Nothing =
+          Some(v.version)))).find(_._2 != 0L)
+    def refuse(v: Int, rows: Long): Nothing =
       throw new UnsupportedOperationException(
         s"$catalogName: DROP TABLE refuses — version $v of $path " +
-          s"holds ${rows.map(_.toString)
-            .getOrElse("an unknown number of")} rows and dropping " +
+          s"holds $rows rows and dropping " +
           "deletes every version's data; use DROP TABLE ... PURGE to " +
           "force, or expire()/vacuum for retention")
     sweep().foreach((refuse _).tupled)
@@ -601,10 +599,10 @@ final class VtCatalog extends TableCatalog
                     s"$path belongs to an UNDECIDED multi-table txn " +
                     "that could still commit; decide it first")
               case _: VersionedTable.TxnAbortedSlotException =>
-                Some(0L) // aborted pending: no committed data in it
+                0L // aborted pending: no committed data in it
             }
           (v, rows)
-        }.find(!_._2.contains(0L))
+        }.find(_._2 != 0L)
       catch {
         case t: Throwable =>
           VersionedTable.unmarkDropped(fs, root)

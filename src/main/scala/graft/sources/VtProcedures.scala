@@ -227,7 +227,7 @@ private[sources] object VtProcedures {
       val d = VersionedTable.describeDetail(spk, path, v)
       result(outSchema, Seq(new GenericInternalRow(Array[Any](
         v, d.nFiles,
-        d.liveRows.map(java.lang.Long.valueOf).orNull,
+        java.lang.Long.valueOf(d.liveRows),
         d.totalBytes, d.dvFiles, d.maskedRows, d.columnMapping,
         d.retiredColumns, UTF8String.fromString(
           d.statsCols.mkString(",")), d.timestampMs))))

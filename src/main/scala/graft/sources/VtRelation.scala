@@ -26,10 +26,10 @@ import graft.operators.VersionedTable.{FileEntry, GePred, InPred, IsNullPred, Le
   * codegen) stays the stock parquet path.
   *
   * ZERO directory listings at plan time: entry byte lengths ride in
-  * the manifest (v5+), so the `FileStatus`es Spark plans splits from
-  * are synthesized straight from the commit log — at 100 TB the
-  * planning cost is one manifest read, not a 100k-file `LIST` against
-  * an object store. Entries from pre-v5 manifests (no recorded size)
+  * the manifest (the `z` entry field), so the `FileStatus`es Spark
+  * plans splits from are synthesized straight from the commit log —
+  * at 100 TB the planning cost is one manifest read, not a 100k-file
+  * `LIST` against an object store. Entries without a recorded size
   * fall back to one `getFileStatus` each, still O(version's files),
   * never O(directory). `sizeInBytes` is the manifest's true byte sum,
   * so joins against a small versioned table auto-broadcast on
@@ -191,7 +191,7 @@ object VtPushdown {
         Some(VersionedTable.TsMicros(v.asInstanceOf[Number].longValue))
       case _: DecimalType =>
         // manifests record decimal spans as BigDecimal at the
-        // column's fixed scale (r17, `C` tag under the v8 header)
+        // column's fixed scale (r17, `C` tag — feature `taggedSpans`)
         Some(v.asInstanceOf[org.apache.spark.sql.types.Decimal]
           .toJavaBigDecimal)
       case _ => None

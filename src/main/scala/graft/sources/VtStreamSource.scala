@@ -112,7 +112,6 @@ final class VtStreamSource extends StreamSourceProvider
         s"graft-vt: no committed versions at $path"))
     val entries = VersionedTable.readEntries(spark, path, v)
     val dataSchema = VersionedTable.schemaOf(spark, path, v)
-      .getOrElse(VersionedTable.read(spark, path, Some(v)).schema)
     org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       new VtFileIndex(spark, path, v, entries, dataSchema),
       partitionSchema = StructType(Nil),
@@ -304,12 +303,9 @@ final class VtStreamSource extends StreamSourceProvider
       "skipChangeCommits and readChangeFeed are mutually exclusive " +
         "postures (ignore change commits vs emit their row changes)")
     val spark = sqlContext.sparkSession
-    val table = schema.orElse {
-      VersionedTable.latestVersion(spark, path).map { v =>
-        VersionedTable.schemaOf(spark, path, v)
-          .getOrElse(VersionedTable.read(spark, path, Some(v)).schema)
-      }
-    }.getOrElse(throw new IllegalStateException(
+    val table = schema.orElse(VersionedTable.latestVersion(spark, path)
+      .map(VersionedTable.schemaOf(spark, path, _)))
+      .getOrElse(throw new IllegalStateException(
       s"graft-vt source at $path: no committed versions and no " +
         "user-provided schema — commit version 0 first or pass .schema()"))
     val resolved =

@@ -97,12 +97,16 @@ class VersionedTableSpec extends AnyFunSuite {
     // another writer committed version 1 between our reads: the next
     // commit must allocate 2, leaving the foreign manifest untouched
     val log = new java.io.File(t, "_graft_log")
+    val schemaLine = java.nio.file.Files.readAllLines(
+      new java.io.File(log, "v00000.manifest").toPath).get(5)
+    val foreign = Seq("graft-vt-v9", "overwrite", "txn:-", "stats:-",
+      "nfiles:0", schemaLine, s"ts:${System.currentTimeMillis()}",
+      "pending:-", "features:-").mkString("", "\n", "\n")
     val racing = new java.io.File(log, "v00001.manifest")
-    java.nio.file.Files.write(racing.toPath,
-      "graft-vt-v2\noverwrite\ntxn:-\n".getBytes)
+    java.nio.file.Files.write(racing.toPath, foreign.getBytes)
     assert(VersionedTable.commit(df(5 until 9), t, overwrite = false) == 2)
     assert(new String(java.nio.file.Files.readAllBytes(racing.toPath))
-      == "graft-vt-v2\noverwrite\ntxn:-\n")
+      == foreign)
     // the append at v2 carried v1's (empty) file list + its own files
     assert(VersionedTable.read(spark, t, Some(2)).count() == 4)
   }
@@ -319,7 +323,7 @@ class VersionedTableSpec extends AnyFunSuite {
       VersionedTable.readEntries(spark, t2, 0), "id", 999, 999).nonEmpty)
   }
 
-  test("manifest stats: inherited across append/compact; v2 compat") {
+  test("manifest stats: inherited across append/compact") {
     val t = tmpTable()
     VersionedTable.commit(df(0 until 50), t, overwrite = true,
       statsCols = Seq("id"))
@@ -331,17 +335,6 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.readEntries(spark, t, 2)
       .forall(_.stats.get("id").exists(_.isDefined)),
       "compaction re-harvests stats for its rewritten files")
-    // a pre-v3 manifest is readable; its files are never prunable
-    val log = new java.io.File(t, "_graft_log")
-    val mf = new java.io.File(log, "v00003.manifest")
-    java.nio.file.Files.write(mf.toPath,
-      ("graft-vt-v2\noverwrite\ntxn:-\n" +
-        VersionedTable.files(spark, t, 2).mkString("\n") + "\n").getBytes)
-    val e3 = VersionedTable.readEntries(spark, t, 3)
-    assert(e3.forall(e => e.nRows == -1L && e.stats.isEmpty))
-    assert(VersionedTable.pruneEntries(e3, "id", -999, -999) == e3,
-      "files without stats are conservatively kept")
-    assert(VersionedTable.read(spark, t, Some(3)).count() == 100)
   }
 
   test("deleteWhere: a new version, carried files, intact history") {
@@ -893,7 +886,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // time travel to v0 returns the PRE-evolution shape
     assert(VersionedTable.read(spark, t, Some(0)).columns.toSeq ==
       Seq("id", "s"))
-    assert(VersionedTable.schemaOf(spark, t, 0).get.fieldNames.toSeq ==
+    assert(VersionedTable.schemaOf(spark, t, 0).fieldNames.toSeq ==
       Seq("id", "s"))
     // a batch MISSING an old column still reads whole (nulls)
     VersionedTable.commit(
@@ -916,7 +909,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, t, Some(ov))
       .schema("s").dataType.typeName == "double")
     // deletes and merges carry the evolved schema forward
-    assert(VersionedTable.schemaOf(spark, t, 2).get.fieldNames.length == 3)
+    assert(VersionedTable.schemaOf(spark, t, 2).fieldNames.length == 3)
     // the change feed crosses the evolution point: per-version feeds
     // align by name, pre-evolution rows null-fill the added column
     val feed = VersionedTable.readChangesRange(spark, t, -1, Some(2))
@@ -1429,14 +1422,14 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.commit(df(0 until 50).repartition(4), t,
       overwrite = true, statsCols = Seq("id"))
     VersionedTable.commit(df(50 until 60), t, overwrite = false)
-    assert(VersionedTable.countRows(spark, t) == Some(60L))
+    assert(VersionedTable.countRows(spark, t) == 60L)
     assert(VersionedTable.statsSpan(spark, t, "id") ==
       Some(Some((0L, 59L))))
     // time travel reads the older manifest
-    assert(VersionedTable.countRows(spark, t, Some(0)) == Some(50L))
+    assert(VersionedTable.countRows(spark, t, Some(0)) == 50L)
     // a delete re-harvests the rewritten files: still exact
     VersionedTable.deleteWhere(spark, t, col("id") < 10)
-    assert(VersionedTable.countRows(spark, t) == Some(50L))
+    assert(VersionedTable.countRows(spark, t) == 50L)
     assert(VersionedTable.statsSpan(spark, t, "id") ==
       Some(Some((10L, 59L))))
     // a column stats were never collected for: outer None (rescan),
@@ -1459,7 +1452,7 @@ class VersionedTableSpec extends AnyFunSuite {
     val t3 = tmpTable()
     VersionedTable.commit(df(0 until 0), t3, overwrite = true,
       statsCols = Seq("id"))
-    assert(VersionedTable.countRows(spark, t3) == Some(0L))
+    assert(VersionedTable.countRows(spark, t3) == 0L)
     assert(VersionedTable.statsSpan(spark, t3, "id") == Some(None))
   }
 
@@ -1801,7 +1794,7 @@ class VersionedTableSpec extends AnyFunSuite {
       VersionedTable.cloneTo(spark, t, s"$d/leak2", asOfVersion = Some(1))
     }
     // the latest-version paths still answer from v0
-    assert(VersionedTable.countRows(spark, t).contains(1L))
+    assert(VersionedTable.countRows(spark, t) == 1L)
     assert(VersionedTable.statsSpan(spark, t, "x") == Some(Some((2L, 2L))))
   }
 
@@ -1831,8 +1824,8 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(ids == (0L until 400L).filter(_ % 3 != 0))
     assert(VersionedTable.read(spark, t, Some(0)).count() == 400)
     // metadata-only count stays exact; spans turn conservative
-    assert(VersionedTable.countRows(spark, t).contains(
-      (0L until 400L).count(_ % 3 != 0).toLong))
+    assert(VersionedTable.countRows(spark, t) ==
+      (0L until 400L).count(_ % 3 != 0).toLong)
     assert(VersionedTable.statsSpan(spark, t, "id").isEmpty,
       "a DV'd version must not answer exact extrema from stale spans")
     // replay no-ops; a SECOND DV delete unions into the mask
@@ -2268,56 +2261,56 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.materializeDvAbove(spark, t, 0.3).isEmpty)
   }
 
-  test("manifest protocol: feature-bearing versions commit the v6 header") {
+  /** Line `i` of table `t`'s version-`v` manifest. */
+  private def manifestLine(t: String, v: Int, i: Int): String = {
+    val src = scala.io.Source.fromFile(f"$t/_graft_log/v$v%05d.manifest")
+    try src.getLines().drop(i).next() finally src.close()
+  }
+
+  /** The reader features version `v` declares (its `features:` line). */
+  private def featuresOf(t: String, v: Int): Set[String] =
+    manifestLine(t, v, 8).stripPrefix("features:") match {
+      case "-" => Set.empty
+      case f => f.split(',').toSet
+    }
+
+  test("manifest features: every version names the reader features " +
+      "it uses under the one header") {
     import spark.implicits._
     val t = tmpTable()
-    def headerLine(v: Int): String = {
-      val src = scala.io.Source.fromFile(
-        f"$t/_graft_log/v$v%05d.manifest")
-      try src.getLines().next() finally src.close()
-    }
     VersionedTable.commit(
       (0L until 40L).map(i => (i, s"r$i")).toDF("id", "s"),
       t, overwrite = true, statsCols = Seq("id"))
-    assert(headerLine(0) == "graft-vt-v4",
-      "feature-free versions keep the pre-feature header")
-    // a deletion-vector entry is reader-affecting: a pre-DV reader
-    // would parse the manifest cleanly and resurrect the deleted rows
-    // — the header bump makes it refuse loudly instead
+    assert(featuresOf(t, 0).isEmpty, "a feature-free version names none")
+    // a deletion-vector entry is reader-affecting: a reader without DV
+    // support would parse the entries cleanly and resurrect the
+    // deleted rows — the feature name makes it refuse instead
     VersionedTable.deleteWhere(spark, t, col("id") === 3L,
       deletionVectors = true)
-    assert(headerLine(1) == "graft-vt-v6",
-      "a DV version must bump the reader protocol")
+    assert(featuresOf(t, 1) == Set("deletionVectors"))
     // column mapping likewise (logical names over physical files)
     VersionedTable.renameColumn(spark, t, "s", "txt")
-    assert(headerLine(2) == "graft-vt-v6",
-      "a mapped schema must bump the reader protocol")
-    // current readers parse v6 everywhere
+    assert(featuresOf(t, 2) == Set("deletionVectors", "columnMapping"))
     assert(VersionedTable.read(spark, t).count() == 39)
     assert(VersionedTable.versions(spark, t).size == 3)
     // compaction materializes the vectors but the mapping persists
     val cv = VersionedTable.compact(spark, t)
-    assert(headerLine(cv) == "graft-vt-v6")
-    // an overwrite resets schema and vectors: the table DOWNGRADES
-    // back to v4 and pre-feature readers regain it
+    assert(featuresOf(t, cv) == Set("columnMapping"))
+    // an overwrite resets schema and vectors: no features again
     VersionedTable.commit((0L to 5L).toDF("id"), t, overwrite = true)
-    assert(headerLine(cv + 1) == "graft-vt-v4",
-      "feature-free versions downgrade to the widely-readable header")
+    assert(featuresOf(t, cv + 1).isEmpty)
+    assert((0 to cv + 1).map(manifestLine(t, _, 0)).distinct ==
+      Seq("graft-vt-v9"), "every version writes the one header")
   }
 
-  test("unit-tagged timestamp spans bump the manifest/segment " +
-      "protocol headers") {
+  test("unit-tagged timestamp spans are named by the taggedSpans " +
+      "feature") {
     import spark.implicits._
     val t = tmpTable()
-    def headerLine(v: Int): String = {
-      val src = scala.io.Source.fromFile(
-        f"$t/_graft_log/v$v%05d.manifest")
-      try src.getLines().next() finally src.close()
-    }
     // a timestamp stats column records `T`-tagged span values — a
-    // NEW span-field alphabet a pre-tag reader would crash decoding
-    // ("bad span field") on ANY query; the v8 header makes it refuse
-    // up front instead
+    // span-field alphabet a reader without tag support would crash
+    // decoding ("bad span field") on ANY query; the feature name makes
+    // it refuse up front instead
     // INT96 (the parquet default) carries no harvestable span — write
     // int64 micros so the ts column actually records tagged spans
     val prevTs = spark.conf.getOption(
@@ -2330,17 +2323,14 @@ class VersionedTableSpec extends AnyFunSuite {
     try {
     VersionedTable.commit(rows.toDF("id", "ts"), t,
       overwrite = true, statsCols = Seq("id", "ts"))
-    assert(headerLine(0) == "graft-vt-v8",
-      "tagged timestamp spans must bump the manifest protocol")
-    // current readers parse v8 (and the tagged spans fold/prune)
+    assert(featuresOf(t, 0) == Set("taggedSpans"))
+    // current readers parse the tagged spans (and fold/prune on them)
     assert(VersionedTable.read(spark, t).count() == 40)
-    // a tag-free table keeps the widely-readable pre-tag header
     VersionedTable.commit(rows.map(_._1).toDF("id"), t,
       overwrite = true, statsCols = Seq("id"))
-    assert(headerLine(1) == "graft-vt-v4",
-      "tag-free versions downgrade automatically")
-    // segmented layout: the manifest stays v7 (its body is seg refs —
-    // no tags), the tag gate moves to the SEGMENT file header
+    assert(featuresOf(t, 1).isEmpty, "a tag-free version names none")
+    // segmented layout: the manifest's features cover the entries its
+    // segments hold
     val t2 = tmpTable()
     val prev = VersionedTable.segmentThreshold
     VersionedTable.setSegmentThreshold(2)
@@ -2348,18 +2338,8 @@ class VersionedTableSpec extends AnyFunSuite {
       VersionedTable.commit(
         rows.toDF("id", "ts").repartitionByRange(3, col("id")),
         t2, overwrite = true, statsCols = Seq("id", "ts"))
-      val src = scala.io.Source.fromFile(
-        s"$t2/_graft_log/v00000.manifest")
-      val head = try src.getLines().next() finally src.close()
-      assert(head == "graft-vt-v7")
-      val segs = VersionedTable.segmentNames(spark, t2, 0)
-      assert(segs.nonEmpty)
-      segs.foreach { n =>
-        val s2 = scala.io.Source.fromFile(s"$t2/_graft_log/$n")
-        val h2 = try s2.getLines().next() finally s2.close()
-        assert(h2 == "graft-vt-seg-v2",
-          "tag-bearing segments must bump the segment protocol")
-      }
+      assert(featuresOf(t2, 0) == Set("taggedSpans", "segments"))
+      assert(VersionedTable.segmentNames(spark, t2, 0).nonEmpty)
       assert(VersionedTable.read(spark, t2).count() == 40)
     } finally VersionedTable.setSegmentThreshold(prev)
     } finally prevTs match {
@@ -2367,6 +2347,53 @@ class VersionedTableSpec extends AnyFunSuite {
         spark.conf.set("spark.sql.parquet.outputTimestampType", v)
       case None =>
         spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    }
+  }
+
+  test("manifest reader refuses an unknown feature, a retired header, " +
+      "a missing schema and a negative row count, by name") {
+    import scala.jdk.CollectionConverters._
+    // (case, v1 manifest from v0's lines, offender the refusal must
+    // name, whether the fault sits in the header)
+    val cases: Seq[(String, Vector[String] => Vector[String],
+        Vector[String] => String, Boolean)] = Seq(
+      ("unknown feature", _.updated(8, "features:fancyFeature"),
+        _ => "fancyFeature", true),
+      ("retired v2 header", m => Vector("graft-vt-v2", "overwrite",
+        "txn:-") ++ m.drop(9).map(_.split('\t')(0)),
+        _ => "graft-vt-v2", true),
+      // the v4 layout: seven header lines, no pending:/features:
+      ("retired v4 header", _.updated(0, "graft-vt-v4").patch(7, Nil, 2),
+        _ => "graft-vt-v4", true),
+      ("retired v7 header", _.updated(0, "graft-vt-v7").patch(8, Nil, 1),
+        _ => "graft-vt-v7", true),
+      ("missing schema", _.updated(5, "schema:-"), _ => "schema:-", true),
+      ("negative row count",
+        m => m.updated(9, m(9).split('\t').updated(1, "-1").mkString("\t")),
+        m => m(9).split('\t')(0), false))
+    cases.foreach { case (name, corrupt, offenderOf, inHeader) =>
+      val t = tmpTable()
+      VersionedTable.commit(df(0 until 10), t, overwrite = true,
+        statsCols = Seq("id"))
+      val log = new java.io.File(t, "_graft_log")
+      val good = java.nio.file.Files.readAllLines(
+        new java.io.File(log, "v00000.manifest").toPath).asScala.toVector
+      val offender = offenderOf(good)
+      java.nio.file.Files.write(
+        new java.io.File(log, "v00001.manifest").toPath,
+        corrupt(good).mkString("", "\n", "\n").getBytes("UTF-8"))
+      def refuses(verb: String)(body: => Any): Unit = {
+        val e = intercept[Exception](body)
+        assert(e.getMessage.contains(offender),
+          s"$name: $verb must refuse naming $offender: ${e.getMessage}")
+      }
+      refuses("read")(VersionedTable.read(spark, t))
+      // `versions` reads headers only: an entry-line fault is the
+      // body's, refused by every verb that reads the entries
+      if (inHeader) refuses("versions")(VersionedTable.versions(spark, t))
+      else assert(VersionedTable.versions(spark, t).size == 2)
+      refuses("commit")(
+        VersionedTable.commit(df(10 until 12), t, overwrite = false))
     }
   }
 

@@ -862,11 +862,12 @@ class VtMetadataAggSpec extends AnyFunSuite {
     VersionedTable.commit(
       df.repartitionByRange(4, col("id")).sortWithinPartitions("id"),
       t, overwrite = true, statsCols = Seq("id", "price"))
-    // `C` decimal spans are a new field alphabet: the v8 header gate
+    // `C` decimal spans are a new field alphabet: a reader feature
     val src = scala.io.Source.fromFile(s"$t/_graft_log/v00000.manifest")
-    val head = try src.getLines().next() finally src.close()
-    assert(head == "graft-vt-v8",
-      "decimal spans must ride the bumped reader protocol")
+    val feats = try src.getLines().find(_.startsWith("features:")).get
+      finally src.close()
+    assert(feats == "features:taggedSpans",
+      "decimal spans must be named as a reader feature")
     val trusted = VersionedTable.read(spark, t)
     val q = s"SELECT min(price) AS lo, max(price) AS hi, " +
       s"sum(price) AS sp FROM graft.`$t`"
