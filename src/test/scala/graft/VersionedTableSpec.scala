@@ -2274,8 +2274,11 @@ class VersionedTableSpec extends AnyFunSuite {
       case f => f.split(',').toSet
     }
 
-  test("manifest features: every version names the reader features " +
-      "it uses under the one header") {
+  // The name is kept from the retired `graft-vt-v6` header, which once
+  // marked the two reader features checked here (deletion vectors and
+  // column mapping); the mark is now the `features:` line under the one
+  // header, and a hand-written v6 manifest is refused outright.
+  test("manifest protocol: feature-bearing versions commit the v6 header") {
     import spark.implicits._
     val t = tmpTable()
     VersionedTable.commit(
@@ -2301,6 +2304,17 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(featuresOf(t, cv + 1).isEmpty)
     assert((0 to cv + 1).map(manifestLine(t, _, 0)).distinct ==
       Seq("graft-vt-v9"), "every version writes the one header")
+    // the DV version re-tagged in the retired v6 layout (no features:
+    // line) is refused by name rather than read as feature-free
+    val dv = java.nio.file.Paths.get(f"$t/_graft_log/v00001.manifest")
+    val lines = java.nio.file.Files.readAllLines(dv)
+    lines.set(0, "graft-vt-v6")
+    lines.remove(8)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(f"$t/_graft_log/v${cv + 2}%05d.manifest"),
+      lines)
+    val e = intercept[Exception](VersionedTable.versions(spark, t))
+    assert(e.getMessage.contains("graft-vt-v6"), e.getMessage)
   }
 
   test("unit-tagged timestamp spans are named by the taggedSpans " +
