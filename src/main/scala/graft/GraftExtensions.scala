@@ -5,10 +5,12 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{ArrayDot, ArrayNorm}
 
-/** Session extension registering graft's native expressions for SQL use:
+/** The graft engine as a session extension — the one way a session
+  * gets graft's SQL functions, parser, DML strategy and optimizer
+  * rules. [[GraftSession]] sets it; any other session opts in with
   *
-  *   spark = SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")...
+  *   spark.sql.extensions=graft.GraftExtensions
+  *   spark.sql.catalog.graft=graft.sources.VtCatalog
   *
   * then `SELECT array_dot(a, b)`, `array_norm(v)`, `array_cosine(a, b)`
   * work from plain SQL text, and the expressions participate in codegen
@@ -75,35 +77,6 @@ object GraftExtensions {
       ArrayDot(a, b),
       org.apache.spark.sql.catalyst.expressions.Multiply(
         ArrayNorm(a), ArrayNorm(b)))
-  }
-
-  /** Runtime registration into an already-built session (extensions
-    * config only applies at construction; notebooks/tests use this). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.registerFunction(spark, "array_dot",
-      cs => ArrayDot(cs(0), cs(1)))
-    Bridge.registerFunction(spark, "array_norm", cs => ArrayNorm(cs.head))
-    Bridge.registerFunction(spark, "array_cosine", cosineBuilder)
-    registerTextSql(spark)
-    graft.plans.VtDml.ensureRegistered(spark)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
-    // prepends itself, so it stays ahead of the masked rewrite
-    graft.plans.VtJoinPrune.ensureRegistered(spark)
-    // prepends itself, so it stays ahead of the masked rewrite
-    graft.plans.VtTopKRewrite.ensureRegistered(spark)
-    // prepends itself, so it stays ahead of both
-    graft.plans.VtMetadataAgg.ensureRegistered(spark)
-    // Runtime twin of injectOptimizerRule: the experimental batch runs
-    // at the end of logical optimization — single-distinct aggregates
-    // are still un-rewritten there (their planning happens physical-
-    // side), so the approx rewrite sees them. Idempotent.
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.ApproxDistinctRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.ApproxDistinctRewrite
-    }
   }
 
   /** SQL names for the compiled text kernels, for SQL-first users:

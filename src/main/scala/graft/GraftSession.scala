@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * Defaults are chosen for the 100 TB mandate but sized for local[N]
   * testing:
   *   - AQE on (runtime re-plan, skew-join splitting, partition coalesce)
-  *   - shuffle.partitions = cores in local mode (cluster: leave to AQE)
+  *   - shuffle.partitions = the master's thread count in local mode
+  *     (cluster: 200, left to AQE to coalesce)
   *   - maxPartitionBytes 128m (the reference's 8 MB hint is tuned for
   *     Python-worker overhead, which does not exist on the JVM; 128m is
   *     the right scan granularity for executor-sized JVM tasks — ref
@@ -25,6 +26,18 @@ object GraftSession {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
+  /** `spark.sql.shuffle.partitions` for a resolved master: `local[N]`
+    * runs N threads, `local`/`local[*]` get `cores`, a cluster 200. */
+  def shufflePartitionsFor(master: String, cores: Int): Int = {
+    val LocalN = """local\[(\d+)(?:,\d+)?\]""".r
+    val LocalAll = """local(?:\[\*(?:,\d+)?\])?""".r
+    master match {
+      case LocalN(n) => n.toInt
+      case LocalAll() => cores
+      case _ => 200
+    }
+  }
+
   def builder(
       appName: String = "graft",
       master: Option[String] = None,
@@ -32,15 +45,14 @@ object GraftSession {
     val m = master
       .orElse(sys.env.get("SPARK_MASTER"))
       .getOrElse(s"local[$defaultLocalCores]")
-    val shufflePartitions =
-      if (m.startsWith("local")) defaultLocalCores.toString else "200"
+    val shufflePartitions = shufflePartitionsFor(m, defaultLocalCores)
     // Local mode reads small single-file tables: split scans finely so
     // stage-1 parallelizes (cluster default 128m stands elsewhere).
     val maxPartitionBytes = if (m.startsWith("local")) "4m" else "128m"
     val b = SparkSession.builder()
       .appName(appName)
       .master(m)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -55,14 +67,20 @@ object GraftSession {
       // TIMESTAMP(NANOS) parquet columns read as raw longs (the events
       // fixture needs it; setting it per read invalidates plan caches).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // graft's SQL functions (array_dot/norm/cosine) + the advisory
-      // ScaleLint runtime-optimizer rule, wired at construction.
+      // graft's SQL functions, parser, planner strategy and optimizer
+      // rules, wired at construction — the only way a session gets them.
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      // versioned tables by path from SQL: SELECT * FROM graft.`/t`
+      .config("spark.sql.catalog.graft",
+        classOf[graft.sources.VtCatalog].getName)
     extraConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
   }
 
-  def getOrCreate(appName: String = "graft"): SparkSession = {
-    val spark = builder(appName).getOrCreate()
+  def getOrCreate(
+      appName: String = "graft",
+      master: Option[String] = None,
+      extraConf: Map[String, String] = Map.empty): SparkSession = {
+    val spark = builder(appName, master, extraConf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // UDF-backed text kernels can't ride spark.sql.extensions (they are
     // session-level registrations, not expression builders) — register

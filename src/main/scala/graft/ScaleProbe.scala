@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Opt-in scale probe: synthesizes a larger corpus from the sf0.1
@@ -29,25 +28,24 @@ object ScaleProbe {
       else Set("lsh", "pipeline", "pack", "rank", "winnow", "range",
         "contam", "bm25", "profile", "quant", "surprisal", "curriculum",
         "asofskew", "ivfups", "bpe", "zorder", "tdelete", "asofnative", "fuzzy", "vtstats", "vtlog", "vtmerge", "dv", "vtseg", "vtmeta", "vtanalyze", "dfp", "topk", "ndv")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    val n = docs.count()
+    val spark = GraftSession.getOrCreate("graft-scaleprobe")
+    // The corpus is built on first use: manifest-only stages read no
+    // documents at all.
+    lazy val docs =
+      spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    lazy val n = docs.count()
     // copy c: ids shifted by c*1e6; texts prefixed with a copy marker so
     // copies are near-dups of their original (high jaccard) rather than
     // exact dups — the worst case for the pair join.
-    val big = (0 until copies).map { c =>
-      docs.select(
-        (col("doc_id") + c * 1000000L).as("doc_id"),
-        concat(lit(s"copymark$c "), col("text")).as("text"))
-    }.reduce(_ union _).localCheckpoint()
-    println(s"[probe] corpus: ${big.count()} docs (${n} x $copies)")
+    lazy val big = {
+      val b = (0 until copies).map { c =>
+        docs.select(
+          (col("doc_id") + c * 1000000L).as("doc_id"),
+          concat(lit(s"copymark$c "), col("text")).as("text"))
+      }.reduce(_ union _).localCheckpoint()
+      println(s"[probe] corpus: ${b.count()} docs (${n} x $copies)")
+      b
+    }
     // Replace the entry lines of table `t`'s inline v0 manifest with
     // synthetic `entries` (real codec), keeping the committed header —
     // the manifest format itself stays VersionedTable's alone.
@@ -89,7 +87,7 @@ object ScaleProbe {
 
     // Prefix-sum family at the same 10x corpus: one range exchange, no
     // window (SCALE.md GlobalRank row).
-    val withTokens = big.select(col("doc_id"),
+    lazy val withTokens = big.select(col("doc_id"),
       graft.ext.TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"))
       .localCheckpoint()
     if (stages("pack")) time("TokenPacker (concat-and-chunk, 2048)")(
@@ -701,7 +699,6 @@ object ScaleProbe {
           (col("l_orderkey") * 1000 + c).as("k"))
       }.reduce(_ union _).localCheckpoint()
       println(s"[probe] approxdistinct rows: ${bigLi.count()}")
-      graft.GraftExtensions.register(spark)
       def q() = bigLi.groupBy(col("l_returnflag"))
         .agg(count_distinct(col("k")).as("nd"))
       val exact = time("exact count(DISTINCT) (shuffle = data)")(
@@ -1005,8 +1002,6 @@ object ScaleProbe {
       VersionedTable.commit(rows, t, overwrite = true,
         statsCols = Seq("id"))
       rows.write.mode("overwrite").parquet(twin)
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-      graft.plans.VtMetadataAgg.ensureRegistered(spark)
       // steady-state min-of-2 (first run pays per-query codegen)
       def ms[A](body: => A): (A, Double) = {
         val t0 = System.nanoTime(); val r0 = body
@@ -1126,9 +1121,6 @@ object ScaleProbe {
         java.nio.file.Files.createLink(java.nio.file.Paths.get(t,
           f"v00000-part-$i%05d-synthetic.parquet"), real)
       }
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-      graft.plans.VtMetadataAgg.ensureRegistered(spark)
-      graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
       def planMs(sql: String): Double = {
         val t0 = System.nanoTime()
         spark.sql(sql).queryExecution.optimizedPlan
@@ -1469,8 +1461,11 @@ object ScaleProbe {
         println(f"[probe] $lbl: $best%.3f s (min of 3)")
         r
       }
-      val entries = timeMin3(s"vtplan: readEntries ($nFiles entries)")(
-        VersionedTable.readEntries(spark, t, 0))
+      // uncached: every timed call parses the manifest
+      val entries = timeMin3(s"vtplan: readEntries ($nFiles entries)") {
+        VersionedTable.clearEntriesCache()
+        VersionedTable.readEntries(spark, t, 0)
+      }
       require(entries.size == nFiles)
       val kept = timeMin3("vtplan: pruneEntriesWhere (narrow range)")(
         VersionedTable.pruneEntries(entries, "id", 5000000L, 5100000L))
@@ -1520,10 +1515,6 @@ object ScaleProbe {
         .repartitionByRange(64, col("id")).sortWithinPartitions("id")
       VersionedTable.commit(rows, t, overwrite = true,
         statsCols = Seq("id"))
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-      graft.plans.VtJoinPrune.ensureRegistered(spark)
-      graft.plans.VtTopKRewrite.ensureRegistered(spark)
-      graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
       def minOf3[A](body: => A): (A, Double) = {
         var best = Double.MaxValue; var r: A = body
         for (_ <- 1 to 3) {
@@ -1554,7 +1545,6 @@ object ScaleProbe {
         require(f1 < f0, s"dfp must prune: $f1 vs $f0")
       }
       if (stages("ndv")) {
-        graft.plans.VtMetadataAgg.ensureRegistered(spark)
         val q = "SELECT approx_count_distinct(id) AS a " +
           s"FROM graft.`$t`"
         // the honest baseline: the engine's own versioned read (no

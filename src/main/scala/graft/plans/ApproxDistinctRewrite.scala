@@ -36,11 +36,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     non-null even when a field is, so the struct is nulled out
   *     whenever any argument is null (HLL++ skips null input exactly
   *     like count does).
-  *   - a FILTER clause is preserved if the rule sees it — but under the
-  *     runtime registration path (`experimental.extraOptimizations`,
-  *     which runs at the END of the optimizer) filtered distincts have
-  *     already been expanded by `RewriteDistinctAggregates` and thus
-  *     stay EXACT. Safe direction; pinned in ApproxRewriteSpec.
+  *   - a FILTER clause is preserved: the rule runs in the
+  *     operator-optimization batch, before `RewriteDistinctAggregates`
+  *     expands filtered distincts, so `count(DISTINCT x) FILTER (WHERE
+  *     p)` becomes a sketch over the filtered rows with the same error
+  *     contract (pinned in ApproxRewriteSpec).
   *
   * The rewrite is idempotent (`isDistinct=false` afterwards), so the
   * optimizer's fixed-point batches converge. Registered via

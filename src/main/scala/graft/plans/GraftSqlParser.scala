@@ -19,9 +19,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Everything else passes through verbatim — including
   * `DESCRIBE <table>` for tables that happen to be NAMED `history`
   * (the rewrites fire only on their full statement shapes). Injected
-  * construction-time via [[graft.GraftExtensions]]; parsers cannot be
-  * added to a live session (Spark builds the session parser once), so
-  * runtime `ensureRegistered` sessions keep the CALL spelling. */
+  * at session construction by [[graft.GraftExtensions]]
+  * (`injectParser`); a session built without the extension keeps the
+  * CALL spelling. */
 final class GraftSqlParser(delegate: ParserInterface)
     extends ParserInterface {
 

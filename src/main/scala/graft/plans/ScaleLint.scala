@@ -101,6 +101,10 @@ object ScaleLint extends Rule[LogicalPlan] {
           // the partition columns): both partitioning-transparent.
           case w: org.apache.spark.sql.execution.datasources.WriteFiles =>
             clustered(w.child)
+          // AQE's runtime optimizer sees a materialized shuffle as a
+          // query stage over the logical subtree it planned
+          case q: org.apache.spark.sql.execution.adaptive.LogicalQueryStage =>
+            clustered(q.logicalPlan)
           case _ => false // unknown/partitioning-changing: assume not
         }
         if (!clustered(cmd.query)) record("unclustered-partitioned-write",

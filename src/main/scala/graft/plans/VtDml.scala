@@ -49,20 +49,6 @@ import graft.sources.VtWritableTable
   * API; nothing is ever half-lowered. Time-travel relations never
   * carry [[VtWritableTable]], so `UPDATE ... VERSION AS OF` cannot
   * match here and fails with Spark's standard unsupported error. */
-object VtDml {
-
-  /** Idempotently add the DML strategy to a LIVE session (the runtime
-    * analog of `injectPlannerStrategy`; construction-time sessions get
-    * it via [[graft.GraftExtensions]]). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.experimental.extraStrategies.synchronized {
-      if (!spark.experimental.extraStrategies.exists(
-          _.isInstanceOf[VtDmlStrategy.type]))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ VtDmlStrategy
-    }
-}
-
 object VtDmlStrategy extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -150,29 +150,6 @@ object VtJoinPrune extends Rule[LogicalPlan] {
           Some((r, t, r.output.map(_.asInstanceOf[AttributeReference])))
         case _ => None
       }
-      case s: org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2ScanRelation =>
-        // post-pushdown shape (runtime extraOptimizations fire after
-        // V2 pushdown). Pushed DATA filters are fine here — parquet
-        // reports every data filter as post-scan, so the logical
-        // Filter above survives and re-applies them over the subset
-        // read; only partition filters (none on vt tables) would
-        // have been consumed.
-        val real = s.scan match {
-          case g: graft.sources.VtGuardedScan => g.vtUnderlying()
-          case other => other
-        }
-        val ok = real match {
-          case p: org.apache.spark.sql.execution.datasources.v2
-              .parquet.ParquetScan => p.partitionFilters.isEmpty
-          case _ => false
-        }
-        if (!ok) None
-        else s.relation.table match {
-          case t: VtTable => Some((s, t,
-            s.output.map(_.asInstanceOf[AttributeReference])))
-          case _ => None
-        }
       case _ => None
     }
 
@@ -266,11 +243,4 @@ object VtJoinPrune extends Rule[LogicalPlan] {
       case scala.util.control.NonFatal(_) => None
     } finally inFlight.set(false)
   }
-
-  /** Idempotently add to a LIVE session (runs with the other vt
-    * rewrites; needs the raw relation, so ahead of the masked scan). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        this +: spark.experimental.extraOptimizations
 }

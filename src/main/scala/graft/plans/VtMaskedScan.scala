@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, MergeIntoTable, Project, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.VersionedTable
@@ -17,8 +17,9 @@ import graft.sources.VtTable
   * answers exactly even while the table carries vectors or renamed
   * columns — no compaction required to read.
   *
-  * Placement: Spark's "User Provided Optimizers" batch runs BEFORE
-  * the appended V2 scan pushdown batch, so the rule sees the original
+  * Placement: [[graft.GraftExtensions]] injects the rule
+  * (`injectOptimizerRule`) into the operator-optimization batch, which
+  * runs BEFORE V2 scan pushdown, so the rule sees the original
   * `DataSourceV2Relation` and replaces it with [[VersionedTable.read]]'s
   * logical plan — a union of plain parquet scans, an anti-join against
   * the delta-sized mask, and physical→logical aliases. Everything
@@ -42,8 +43,8 @@ import graft.sources.VtTable
   * from the commit log's spans at plan time (the stock V2
   * ParquetTable scan plans every file of the version; at 100 TB a
   * selective SQL WHERE would open 800k files instead of its few
-  * span-matching ones). Sessions without this rule fall back to the
-  * exact-but-unpruned stock scan on clean versions and
+  * span-matching ones). Sessions built without GraftExtensions fall
+  * back to the exact-but-unpruned stock scan on clean versions and
   * [[graft.sources.VtScanGuard]]'s loud refusal on masked ones,
   * never a wrong answer. */
 object VtMaskedScanRewrite extends Rule[LogicalPlan] {
@@ -59,60 +60,17 @@ object VtMaskedScanRewrite extends Rule[LogicalPlan] {
       val src = apply(m.sourceTable)
       if (src eq m.sourceTable) m else m.copy(sourceTable = src)
     case _ =>
-      var rewrote = false
       // transformWithSubqueries: a DV'd/mapped relation inside a
       // subquery expression (IN/EXISTS/scalar) must rewrite too —
       // plain transform never descends into expression-held plans and
-      // the query would refuse at the guard instead of answering
-      val out = plan.transformWithSubqueries {
-        // pre-pushdown shape AND the post-pushdown ScanRelation (batch
-        // order differs across rule-injection points; handle both —
-        // the pruned ScanRelation output is a name-subset the masked
-        // plan always covers, and its pushed filters remain as the
-        // Filter node above, re-applied over the rewrite)
+      // the query would refuse at the guard instead of answering. The
+      // rule runs before V2 scan pushdown, so the catalog relation is
+      // still a DataSourceV2Relation; the batch's later iterations push
+      // the query's predicates into the replacement's parquet scans.
+      plan.transformWithSubqueries {
         case rel: DataSourceV2Relation if rewrites(rel.table) =>
-          rewrote = true
           remask(rel.table.asInstanceOf[VtTable], rel.output)
-        case s: DataSourceV2ScanRelation if rewrites(s.relation.table) =>
-          rewrote = true
-          remask(s.relation.table.asInstanceOf[VtTable], s.output)
       }
-      // the rewrite lands AFTER the main filter/pruning batches ran,
-      // so the query's predicates sit stranded above the masked
-      // union/anti-join — re-run the standard passes over the result
-      // (bounded fixed point) so they migrate into the fresh parquet
-      // scans and FileSourceStrategy pushes them into the footers.
-      // Only rewritten plans pay this; every other query is untouched.
-      if (!rewrote) out
-      else {
-        // subquery plans re-optimize too: a rewrite inside an
-        // IN/EXISTS/scalar subquery leaves that subquery's own
-        // predicates stranded above the masked union otherwise (the
-        // direct rule application below never descends into
-        // expression-held plans)
-        fixedPointPushdown(out).transformAllExpressionsWithSubqueries {
-          case sub: org.apache.spark.sql.catalyst.expressions
-              .SubqueryExpression =>
-            sub.withNewPlan(fixedPointPushdown(sub.plan))
-        }
-      }
-  }
-
-  /** Bounded fixed point of the standard pushdown/pruning passes —
-    * what the rewrite must re-run itself, because the "User Provided
-    * Optimizers" batch fires after Spark's own filter batches.
-    * Shared with [[VtMetadataAgg]]'s boundary-scan plans. */
-  private[plans] def fixedPointPushdown(plan: LogicalPlan): LogicalPlan = {
-    var p = plan
-    var prev: LogicalPlan = null
-    var i = 0
-    while (i < 10 && !p.fastEquals(prev)) {
-      prev = p
-      p = org.apache.spark.sql.catalyst.optimizer.ColumnPruning(
-        org.apache.spark.sql.catalyst.optimizer.PushDownPredicates(p))
-      i += 1
-    }
-    p
   }
 
   private def remask(t: VtTable,
@@ -144,11 +102,4 @@ object VtMaskedScanRewrite extends Rule[LogicalPlan] {
   private def rewrites(
       table: org.apache.spark.sql.connector.catalog.Table): Boolean =
     table.isInstanceOf[VtTable]
-
-  /** Idempotently add the rewrite to a LIVE session (construction-time
-    * sessions get it via [[graft.GraftExtensions]]). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

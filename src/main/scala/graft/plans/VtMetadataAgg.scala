@@ -138,8 +138,9 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
 
   /** `SELECT cast(sum(x) AS double), …` — CollapseProject merges
     * scalar WRAPPERS into the aggregate list, hiding the plain shapes
-    * the folds match (extraOptimizations run after the main batch, so
-    * the collapsed form is all this rule ever sees). Split them back
+    * the folds match (it runs ahead of this rule in the same
+    * operator-optimization batch, so the collapsed form is what this
+    * rule sees). Split them back
     * out: a plain [[Aggregate]] computing each distinct aggregate
     * under a fresh alias, and the wrappers re-anchored on those
     * aliases in a [[Project]] above — the exact inverse of the
@@ -198,56 +199,17 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     * attributes, so min/max folds can anchor their column by exprId
     * (a surviving Project may alias an arbitrary expression under a
     * stats column's NAME; folding by name alone would answer the
-    * wrong column's span). Handles both the pre-pushdown
-    * [[DataSourceV2Relation]] (construction-time rule injection) and
-    * the post-pushdown [[DataSourceV2ScanRelation]] (runtime
-    * `extraOptimizations` fire after V2 pushdown) — the latter ONLY
-    * when its parquet scan provably carries no pushed/partition/data
-    * filters (a pushed predicate would make the manifest count an
-    * over-count). */
+    * wrong column's span). The injected rule runs before V2 scan
+    * pushdown, so the relation is still a [[DataSourceV2Relation]]
+    * carrying every row. */
   private def stripToVt(p: LogicalPlan)
-      : Option[(VtTable, Seq[Attribute])] =
-    stripToVtImpl(p, allowPushedData = false)
-
-  /** `allowPushedData`: the filtered-count shape keeps the FULL
-    * predicate as the Filter node above (file sources report every
-    * data filter as post-scan — parquet row-group filtering is
-    * best-effort, so Spark never removes a conjunct it pushed), and
-    * the fold recomputes from the manifest + that Filter — whatever
-    * the scan would have skipped is irrelevant. The WHOLE-TABLE fold
-    * (no Filter above) must instead insist on a provably unfiltered
-    * scan: a pushed predicate there means the relation does not
-    * represent all rows. */
-  private def stripToVtImpl(p: LogicalPlan, allowPushedData: Boolean)
       : Option[(VtTable, Seq[Attribute])] = p match {
-    case Project(_, c) => stripToVtImpl(c, allowPushedData)
-    case SubqueryAlias(_, c) => stripToVtImpl(c, allowPushedData)
+    case Project(_, c) => stripToVt(c)
+    case SubqueryAlias(_, c) => stripToVt(c)
     case r: DataSourceV2Relation => r.table match {
       case t: VtTable => Some((t, r.output))
       case _ => None
     }
-    case s: org.apache.spark.sql.execution.datasources.v2
-        .DataSourceV2ScanRelation =>
-      // a guarded scan (DV'd/mapped version) proxies the real parquet
-      // scan — unwrap to read its pushed-filter state (folding a
-      // count from live-row metadata is exactly what the guard's
-      // refusal wants instead of a lying file scan)
-      val real = s.scan match {
-        case g: graft.sources.VtGuardedScan => g.vtUnderlying()
-        case other => other
-      }
-      val acceptable = real match {
-        case p: org.apache.spark.sql.execution.datasources.v2
-            .parquet.ParquetScan =>
-          p.partitionFilters.isEmpty && (allowPushedData ||
-            (p.pushedFilters.isEmpty && p.dataFilters.isEmpty))
-        case _ => false
-      }
-      if (!acceptable) None
-      else s.relation.table match {
-        case t: VtTable => Some((t, s.output))
-        case _ => None
-      }
     case _ => None
   }
 
@@ -446,8 +408,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     case Project(_, c) => stripToFilteredVt(c)
     case SubqueryAlias(_, c) => stripToFilteredVt(c)
     case Filter(cond, c) =>
-      stripToVtImpl(c, allowPushedData = true)
-        .map { case (t, out) => (cond, t, out) }
+      stripToVt(c).map { case (t, out) => (cond, t, out) }
     case _ => None
   }
 
@@ -884,7 +845,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         val (sigma, has) = metaSumVal(sp.a.name)
         val b = sumAggsB(sp.a.name).toAttribute
         // metadata partial in the accumulation domain (wrapped long /
-        // widened decimal / wrapped unscaled long); None = decline
+        // widened decimal); None = decline
         val partial = sumPartialValue(sp, sigma, has, longProof(sp))
           .getOrElse(return None)
         val combined: Expression =
@@ -918,7 +879,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       case (DistinctColAgg(_), _) =>
         return None // unreachable: declined above when boundary
     }
-    Some(VtMaskedScanRewrite.fixedPointPushdown(Project(outs, inner)))
+    Some(Project(outs, inner))
   }
 
   /** GROUPED metadata counts: `SELECT g1[, g2…], count(*)[,
@@ -1575,7 +1536,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         val aggE = AggregateExpression(Sum(uP(slot)), Complete,
           isDistinct = false)
         // the outer re-sum runs in the partial domain; the final
-        // conversion (Cast / MakeDecimal / identity) applies the one
+        // conversion (Cast / identity) applies the one
         // overflow check the scan's own buffer would
         Alias(sumFinalExpr(sp, aggE), o.name)(exprId = o.exprId)
       case (AvgGAgg(a), o) =>
@@ -1601,8 +1562,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         Alias(AggregateExpression(HllUnionEstimate(uP(slot), r),
           Complete, isDistinct = false), o.name)(exprId = o.exprId)
     }
-    Some(VtMaskedScanRewrite.fixedPointPushdown(
-      Aggregate(uG, outs, union)))
+    Some(Aggregate(uG, outs, union))
   }
 
   /** Translate a WHERE into exact file-level predicates — EVERY
@@ -1762,7 +1722,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     * can overflow the widened DECIMAL(38, s) partial domain: the
     * boundary files' total row count n bounds every subtotal (in any
     * grouping) by n·max|v| < n·10^(p−s), which fits (38, s) whenever
-    * n·10^p ≤ 10^38 — the decimal mirror of [[unscaledProof]].
+    * n·10^p ≤ 10^38.
     * Without it, a LEGACY boundary partial that overflows evaluates
     * to NULL and the combine would treat it as zero (whole-table) or
     * the outer re-sum would skip it (grouped) — a wrong NON-NULL
@@ -1845,34 +1805,21 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
   private def foldableSumMode(m: Enumeration#Value): Boolean =
     m == EvalMode.LEGACY || m == EvalMode.ANSI
 
-  /** How a query's `sum(col)` accumulates — the three shapes Spark
-    * plans, each reproduced exactly from the manifest's per-file Σ. */
+  /** How a query's `sum(col)` accumulates — the two shapes the rule
+    * sees (it runs before DecimalAggregates rewrites small-decimal sums
+    * into unscaled long sums), each reproduced exactly from the
+    * manifest's per-file Σ. */
   private sealed trait SumKind
   /** Integral input: LongType accumulation of the values. */
   private case object IntegralSum extends SumKind
   /** Wide decimal: Decimal accumulation, result `rt` = (p+10 ≤ 38, s)
     * checked once at final evaluation. */
   private final case class DecimalSum(rt: DecimalType) extends SumKind
-  /** Small decimal after Spark's DecimalAggregates rewrite:
-    * `MakeDecimal(sum(UnscaledValue(col)), outPrec, scale)` — a LONG
-    * accumulation of unscaled values, converted and precision-checked
-    * by MakeDecimal at the end. `inPrec` bounds each |unscaled| by
-    * 10^inPrec, the type-level ANSI proof ingredient. */
-  private final case class UnscaledDecimalSum(inPrec: Int, outPrec: Int,
-      scale: Int, nullOnOverflow: Boolean) extends SumKind
-  /** A BARE `sum(UnscaledValue(col))` (the MakeDecimal conversion
-    * lives in a Project above — the [[splitWrapped]] form): a plain
-    * LONG sum in the unscaled domain. */
-  private final case class UnscaledLongSum(inPrec: Int, scale: Int)
-    extends SumKind
-
   private final case class SumSpec(a: AttributeReference,
       mode: Enumeration#Value, kind: SumKind)
 
-  /** Recognize a foldable `sum(col)` output — both the plain
-    * [[Sum]] shape and the DecimalAggregates `MakeDecimal ∘ sum ∘
-    * UnscaledValue` rewrite (which runs in the main optimizer batch,
-    * BEFORE extraOptimizations ever see the plan). */
+  /** Recognize a foldable `sum(col)` output: the plain [[Sum]]
+    * shape over an integral or decimal column. */
   private def sumSpecOf(e: NamedExpression,
       relIds: Set[ExprId]): Option[SumSpec] = e match {
     case Alias(AggregateExpression(
@@ -1886,56 +1833,20 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
             DecimalType(math.min(38, d.precision + 10), d.scale))))
         case _ => None
       }
-    case Alias(org.apache.spark.sql.catalyst.expressions.MakeDecimal(
-        AggregateExpression(
-          Sum(org.apache.spark.sql.catalyst.expressions.UnscaledValue(
-            a: AttributeReference), ctx), Complete, false, None, _),
-        p, s, no), _)
-        if foldableSumMode(ctx.evalMode) && relIds.contains(a.exprId) =>
-      a.dataType match {
-        case d: DecimalType if d.scale == s =>
-          Some(SumSpec(a, ctx.evalMode, UnscaledDecimalSum(
-            d.precision, p, s, no)))
-        case _ => None
-      }
-    case Alias(AggregateExpression(
-        Sum(org.apache.spark.sql.catalyst.expressions.UnscaledValue(
-          a: AttributeReference), ctx), Complete, false, None, _), _)
-        if foldableSumMode(ctx.evalMode) && relIds.contains(a.exprId) =>
-      a.dataType match {
-        case d: DecimalType =>
-          Some(SumSpec(a, ctx.evalMode,
-            UnscaledLongSum(d.precision, d.scale)))
-        case _ => None
-      }
     case _ => None
   }
 
   /** ANSI no-partial-overflow proof for the spec's LONG-domain
     * accumulation over `entries`' rows: value-span-based for
-    * integral, type-level (rows × 10^inPrec) for unscaled decimals.
-    * Wide-decimal sums never throw mid-accumulation (the buffer
-    * checks once at final evaluation), so the proof is vacuous. */
+    * integral. Wide-decimal sums never throw mid-accumulation (the
+    * buffer checks once at final evaluation), so the proof is
+    * vacuous. */
   private def sumLongProof(spec: SumSpec,
       entries: Seq[graft.operators.VersionedTable.FileEntry]): Boolean =
     spec.kind match {
       case IntegralSum => ansiLongSumSafe(entries, spec.a.name)
-      case UnscaledDecimalSum(inPrec, _, _, _) =>
-        unscaledProof(entries, inPrec)
-      case UnscaledLongSum(inPrec, _) => unscaledProof(entries, inPrec)
       case DecimalSum(_) => true
     }
-
-  private def unscaledProof(
-      entries: Seq[graft.operators.VersionedTable.FileEntry],
-      inPrec: Int): Boolean = {
-    var rows = java.math.BigDecimal.ZERO
-    entries.forall { e =>
-      rows = rows.add(java.math.BigDecimal.valueOf(e.nRows))
-      rows.multiply(java.math.BigDecimal.TEN.pow(inPrec))
-        .compareTo(TwoP63) < 0
-    }
-  }
 
   /** Exact Σ (`has` = any non-null value contributed) → the value
     * Spark's `sum()` returns under `spec`, or None = decline:
@@ -1945,8 +1856,6 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     *     only under `longProofOk` (else the scan might throw);
     *   - wide decimal: the value when it fits `rt` (fit-at-the-end is
     *     Spark's own criterion); overflow → LEGACY NULL, ANSI decline;
-    *   - unscaled decimal: the wrapped unscaled-long Σ pushed through
-    *     MakeDecimal's precision check;
     *   - no non-null values: SQL NULL. */
   private def sumValueOf(spec: SumSpec, sigma: java.math.BigDecimal,
       has: Boolean, longProofOk: => Boolean): Option[Any] = {
@@ -1964,22 +1873,6 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           else if (!ansi) Some(null)
           else None
         }
-      case UnscaledDecimalSum(_, outPrec, s, _) =>
-        if (!has) Some(null)
-        else if (ansi && !longProofOk) None
-        else {
-          val wrapped = sigma.movePointRight(s).toBigInteger.longValue
-          val dec = org.apache.spark.sql.types.Decimal(
-            java.math.BigDecimal.valueOf(wrapped, s))
-          if (dec.changePrecision(outPrec, s)) Some(dec)
-          else if (!ansi) Some(null)
-          else None
-        }
-      case UnscaledLongSum(_, s) =>
-        if (!has) Some(null)
-        else if (ansi && !longProofOk) None
-        else Some(sigma.movePointRight(s).toBigInteger.longValue
-          : java.lang.Long)
     }
   }
 
@@ -2074,8 +1967,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     val outs = agg.output.map(o =>
       Alias(AggregateExpression(Count(Seq(u)), Complete,
         isDistinct = true), o.name)(exprId = o.exprId))
-    Some(VtMaskedScanRewrite.fixedPointPushdown(
-      Aggregate(Nil, outs, union)))
+    Some(Aggregate(Nil, outs, union))
   }
 
   /** The boundary scan's partial-Σ aggregate for `spec` — typed to
@@ -2089,17 +1981,11 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         // on the COMBINED value, never on a subtotal
         AggregateExpression(Sum(Cast(spec.a,
           DecimalType(38, rt.scale))), Complete, isDistinct = false)
-      case UnscaledDecimalSum(_, _, _, _) | UnscaledLongSum(_, _) =>
-        AggregateExpression(Sum(
-          org.apache.spark.sql.catalyst.expressions.UnscaledValue(
-            spec.a)), Complete, isDistinct = false)
     }
 
   private def sumPartialType(spec: SumSpec): DataType = spec.kind match {
     case IntegralSum => LongType
     case DecimalSum(rt) => DecimalType(38, rt.scale)
-    case UnscaledDecimalSum(_, _, _, _) | UnscaledLongSum(_, _) =>
-      LongType
   }
 
   /** Typed zero for the Coalesce in the combine (a null boundary
@@ -2134,30 +2020,16 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           // still answer) — decline instead
           if (dec.changePrecision(38, rt.scale)) Some(dec) else None
         }
-      case UnscaledDecimalSum(_, _, s, _) =>
-        if (ansi && !longProofOk) None
-        else if (!has) Some(null)
-        else Some(sigma.movePointRight(s).toBigInteger.longValue
-          : java.lang.Long)
-      case UnscaledLongSum(_, s) =>
-        if (ansi && !longProofOk) None
-        else if (!has) Some(null)
-        else Some(sigma.movePointRight(s).toBigInteger.longValue
-          : java.lang.Long)
     }
   }
 
   /** Final conversion of a combined/re-summed partial expression back
     * to the query's sum result — Cast for wide decimals (the one
-    * overflow check), MakeDecimal for unscaled, identity for longs. */
+    * overflow check), identity for longs. */
   private def sumFinalExpr(spec: SumSpec, combined: Expression)
       : Expression = spec.kind match {
     case IntegralSum => combined
     case DecimalSum(rt) => Cast(combined, rt)
-    case UnscaledDecimalSum(_, outPrec, s, no) =>
-      org.apache.spark.sql.catalyst.expressions.MakeDecimal(
-        combined, outPrec, s, no)
-    case UnscaledLongSum(_, _) => combined // the Project above converts
   }
 
   /** Span values are normalized to Long/Double/String in the
@@ -2220,12 +2092,4 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         Some(0.0d)
       case other => toCatalystSpan(other, a)
     }
-
-  /** Idempotently add the rewrite to a LIVE session, ahead of the
-    * masked-scan rewrite (construction-time sessions get the same
-    * order via [[graft.GraftExtensions]]). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        this +: spark.experimental.extraOptimizations
 }

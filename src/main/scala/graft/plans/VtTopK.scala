@@ -7,8 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending,
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit,
   LocalLimit, LogicalPlan, Project, Sort, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.v2.{
-  DataSourceV2Relation, DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.VersionedTable
@@ -68,11 +67,7 @@ object VtTopKRewrite extends Rule[LogicalPlan] {
     * in between declines. Filters are allowed because the caller
     * folds them into the guarantee: every conjunct must translate to
     * exact file-level predicates, all-out files prune outright,
-    * boundary files keep but guarantee nothing. A scan carrying
-    * pushed DATA filters is acceptable exactly when a Filter above
-    * was collected (parquet reports every data filter as post-scan,
-    * so the Filter above re-applies what the scan might skip);
-    * without one, the scan must be provably unfiltered. */
+    * boundary files keep but guarantee nothing. */
   private def vtUnder(p: LogicalPlan, cond: Option[
       org.apache.spark.sql.catalyst.expressions.Expression] = None)
       : Option[(LogicalPlan, VtTable, Seq[AttributeReference],
@@ -90,24 +85,6 @@ object VtTopKRewrite extends Rule[LogicalPlan] {
             r.output.map(_.asInstanceOf[AttributeReference]), cond))
         case _ => None
       }
-      case s: DataSourceV2ScanRelation =>
-        val real = s.scan match {
-          case g: graft.sources.VtGuardedScan => g.vtUnderlying()
-          case other => other
-        }
-        val clean = real match {
-          case p: org.apache.spark.sql.execution.datasources.v2
-              .parquet.ParquetScan =>
-            p.partitionFilters.isEmpty && (cond.isDefined ||
-              (p.pushedFilters.isEmpty && p.dataFilters.isEmpty))
-          case _ => false
-        }
-        if (!clean) None
-        else s.relation.table match {
-          case t: VtTable => Some((s, t,
-            s.output.map(_.asInstanceOf[AttributeReference]), cond))
-          case _ => None
-        }
       case _ => None
     }
 
@@ -169,9 +146,7 @@ object VtTopKRewrite extends Rule[LogicalPlan] {
     if (!relOut.forall(x => byName.contains(x.name))) return None
     val remap = Project(relOut.map(x =>
       Alias(byName(x.name), x.name)(exprId = x.exprId)), slice)
-    Some(VtMaskedScanRewrite.fixedPointPushdown(orig.transformUp {
-      case n if n eq relNode => remap
-    }))
+    Some(orig.transformUp { case n if n eq relNode => remap })
   }
 
   /** The provably-sufficient file subset for the top-k among
@@ -274,11 +249,4 @@ object VtTopKRewrite extends Rule[LogicalPlan] {
       }.map(_.name).toSet)
     }
   }
-
-  /** Idempotently add to a LIVE session, between [[VtMetadataAgg]]
-    * and [[VtMaskedScanRewrite]] (it needs the raw relation). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        this +: spark.experimental.extraOptimizations
 }

@@ -646,11 +646,6 @@ object Ops {
   // four values by full scan in DuckDB.
   val opVtMetaAgg: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtmeta_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "li").getAbsolutePath
@@ -695,10 +690,6 @@ object Ops {
   // count by full scan in DuckDB.
   val opVtCountWhere: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtcw_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "li").getAbsolutePath
@@ -746,10 +737,6 @@ object Ops {
   // of 8 clustered ones. The oracle recomputes in DuckDB.
   val opVtCountOr: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtor_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "li").getAbsolutePath
@@ -784,11 +771,6 @@ object Ops {
   // scan. The oracle replays both masks in DuckDB.
   val opVtDvMinmax: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtdvmm_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "li").getAbsolutePath
@@ -848,11 +830,6 @@ object Ops {
   // seven values by full scan in DuckDB.
   val opVtMetaDates: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtdate_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "ords").getAbsolutePath
@@ -913,11 +890,6 @@ object Ops {
   // GROUP BY by full scan in DuckDB.
   val opVtGroupMeta: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtgrp_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "li").getAbsolutePath
@@ -972,11 +944,6 @@ object Ops {
   // LocalRelation. The oracle replays the two-key GROUP BY in DuckDB.
   val opVtGroupMeta2: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtgrp2_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "li").getAbsolutePath
@@ -1024,11 +991,6 @@ object Ops {
   // replays all three in DuckDB by full scan.
   val opVtDistinctMeta: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtdst_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "li").getAbsolutePath
@@ -1097,11 +1059,6 @@ object Ops {
   // boolean, plus the exact count(DISTINCT) both engines share.
   val opVtApproxNdv: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtndv_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "ord").getAbsolutePath
@@ -1202,12 +1159,6 @@ object Ops {
   // so the limit is deterministic).
   val opVtTopkMeta: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtTopKRewrite.ensureRegistered(s)
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vttopk_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "ord").getAbsolutePath
@@ -1241,12 +1192,6 @@ object Ops {
   // opens fewer files than the table holds.
   val opVtDfp: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtJoinPrune.ensureRegistered(s)
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtdfp_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "fact").getAbsolutePath
@@ -1287,11 +1232,6 @@ object Ops {
   // The oracle recomputes every value by full scan in DuckDB.
   val opVtMetaSum: Q = (s, d) => {
     import graft.operators.VersionedTable
-    if (!s.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(s)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtsum_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "li").getAbsolutePath
@@ -2146,7 +2086,6 @@ object Ops {
   // anti join must therefore exclude them.
   val opVtSqlTravel: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
     val dir = Sources.fixtureDir(s, "graft_vtsql_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/docs"
@@ -2290,7 +2229,6 @@ object Ops {
   // replays the union — a double-applied or torn insert flips rows.
   val opVtSqlInsert: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
     val dir = Sources.fixtureDir(s, "graft_vtins_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/docs"
@@ -2315,7 +2253,6 @@ object Ops {
   // through spark.sql too. The oracle is the anti-filter.
   val opVtSqlDelete: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
     val dir = Sources.fixtureDir(s, "graft_vtdel_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/li"
@@ -2345,8 +2282,6 @@ object Ops {
   // op_vt_update_multiset: the two surfaces must be value-identical.
   val opVtSqlUpdate: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtDml.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtsqlu_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/li"
@@ -2380,8 +2315,6 @@ object Ops {
   // oracle replays the delete/update/insert split directly.
   val opVtSqlMerge: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtDml.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtsqlm_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/docs"
@@ -2431,8 +2364,6 @@ object Ops {
   // oracle is the anti-filter under the new column name.
   val opVtSqlDvSelect: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtdvsel_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/docs"
@@ -2466,8 +2397,6 @@ object Ops {
   // final names.
   val opVtSqlDdl: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vtddl_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/docs"
@@ -2496,30 +2425,24 @@ object Ops {
     require(s.sql(s"SELECT * FROM graft.`$t` VERSION AS OF $v4")
       .columns.toSeq == Seq("doc_id", "origin", "n_chars", "flag"),
       "the post-DDL version must carry the evolved shape")
-    // the standard audit forms: SHOW TBLPROPERTIES rides the live
-    // session (stock V2 surface); DESCRIBE HISTORY needs the injected
-    // parser — construction-time only, so a sibling session on the
-    // same context exercises it (SQL-only users get it by setting
-    // spark.sql.extensions=graft.GraftExtensions)
+    // the standard audit forms: SHOW TBLPROPERTIES is the stock V2
+    // surface; DESCRIBE HISTORY and the maintenance statements ride
+    // the parser GraftExtensions injects
     val tprops = s.sql(s"SHOW TBLPROPERTIES graft.`$t`").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     require(tprops.get("format").contains("graft-vt") &&
       tprops.get("version").contains(v4.toString), s"props: $tprops")
-    val s2 = org.apache.spark.sql.graftbridge.Bridge
-      .sessionWithExtensions(s.sparkContext,
-        new graft.GraftExtensions().apply)
-    s2.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    val hist = s2.sql(s"DESCRIBE HISTORY graft.`$t`")
+    val hist = s.sql(s"DESCRIBE HISTORY graft.`$t`")
       .select("version").collect().map(_.getInt(0)).toSeq
     require(hist == (v4 to 0 by -1),
       s"DESCRIBE HISTORY must list every commit newest-first: $hist")
-    require(s2.sql(s"DESCRIBE DETAIL graft.`$t`").count() == 1,
+    require(s.sql(s"DESCRIBE DETAIL graft.`$t`").count() == 1,
       "DESCRIBE DETAIL answers one metadata row")
     // maintenance statements lower onto the procedures; OPTIMIZE is
     // content-invisible (the oracle hash proves it)
-    require(s2.sql(s"OPTIMIZE graft.`$t`").count() == 1,
+    require(s.sql(s"OPTIMIZE graft.`$t`").count() == 1,
       "OPTIMIZE must report its bin-pack commit")
-    require(s2.sql(s"VACUUM graft.`$t` RETAIN 168 HOURS")
+    require(s.sql(s"VACUUM graft.`$t` RETAIN 168 HOURS")
       .columns.sameElements(Array("removed")), "VACUUM reports sweeps")
     s.sql(s"SELECT doc_id, origin, n_chars, flag FROM graft.`$t`")
   }
@@ -2576,7 +2499,6 @@ object Ops {
   // oracle.
   val opVtStatsRedeclare: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
     val dir = Sources.fixtureDir(s, "graft_vtsr_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/li"
@@ -2620,8 +2542,6 @@ object Ops {
   // the one real delete.
   val opVtHistoryWalk: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(s)
     val dir = Sources.fixtureDir(s, "graft_vthw_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/docs"
@@ -2697,7 +2617,6 @@ object Ops {
   // anti-filter replay.
   val opVtDvDecay: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
     val dir = Sources.fixtureDir(s, "graft_vtdvd_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/li"
@@ -2749,7 +2668,6 @@ object Ops {
   // must be value-invisible.
   val opVtSqlOptimize: Q = (s, d) => {
     import graft.operators.VersionedTable
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
     val dir = Sources.fixtureDir(s, "graft_vtsqlo_")
     Sources.registerCleanup(dir)
     val t = s"${dir.getAbsolutePath}/li"
@@ -2992,7 +2910,6 @@ object Ops {
   // is MATERIALIZED before the flag flips: DataFrames are lazy, and an
   // unexecuted "exact" plan would silently re-optimize into a sketch.
   val opApproxRewrite: Q = (s, d) => {
-    graft.GraftExtensions.register(s)
     val flag = graft.plans.ApproxDistinctRewrite.EnabledKey
     val exactRows = lineitem(s, d).groupBy(col("l_returnflag"))
       .agg(count_distinct(col("l_orderkey")).as("nd_exact"))
@@ -3037,7 +2954,6 @@ object Ops {
   // Oracled like op_approx_rewrite: exact values pinned, the estimate
   // pinned through its 3-sigma accuracy boolean.
   val opApproxRewriteMulti: Q = (s, d) => {
-    graft.GraftExtensions.register(s)
     val flag = graft.plans.ApproxDistinctRewrite.EnabledKey
     val exactRows = lineitem(s, d).groupBy(col("l_returnflag"))
       .agg(count_distinct(col("l_orderkey"), col("l_linenumber"))

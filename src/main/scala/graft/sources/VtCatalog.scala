@@ -14,7 +14,8 @@ import graft.operators.VersionedTable
   * types just works, with no Scala glue:
   *
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
+  *   // GraftSession's preset; elsewhere set at session construction
+  *   // spark.sql.catalog.graft=graft.sources.VtCatalog
   *   spark.sql("SELECT * FROM graft.`/data/events` VERSION AS OF 3")
   *   spark.sql("SELECT * FROM graft.`/data/events` " +
   *     "TIMESTAMP AS OF '2026-08-01 00:00:00'")
@@ -39,7 +40,7 @@ import graft.operators.VersionedTable
   * `DELETE FROM ... WHERE` → [[VersionedTable.deleteWhere]] (when the
   * predicate translates to pushed filters; otherwise Spark's standard
   * cannot-delete-by-filter error, never a guess); `UPDATE` / `MERGE
-  * INTO` → [[graft.plans.VtDml]]'s planner lowering onto
+  * INTO` → [[graft.plans.VtDmlStrategy]]'s planner lowering onto
   * `updateWhere`/`mergeInto`; `CREATE TABLE` / CTAS / `ALTER TABLE
   * ADD|RENAME|DROP COLUMN` / guarded `DROP TABLE` → the DDL overrides
   * below; maintenance → `CALL graft.optimize(...)` etc
@@ -97,7 +98,7 @@ final class VtCatalog extends TableCatalog
     val schema = VersionedTable.schemaOf(spark, path, version)
     // the PLAIN SQL scan is a bare file list — it can neither mask
     // deletion vectors nor alias mapped columns. Such versions hand
-    // back a table carrying `vtScanRefusal`, and the registered
+    // back a table carrying `vtScanRefusal`, and the injected
     // [[graft.plans.VtMaskedScanRewrite]] swaps a SELECT's relation
     // onto the masking/aliasing read plan (version-pinned) — the same
     // lane latest-version tables ride; a session WITHOUT the rule
@@ -108,13 +109,15 @@ final class VtCatalog extends TableCatalog
     val scanRefusal =
       if (entries.exists(_.dv.nonEmpty))
         Some(s"version $version of $path carries deletion vectors — " +
-          "the plain SQL scan cannot mask them; register " +
-          "GraftExtensions/VtMaskedScanRewrite, read via " +
+          "the plain SQL scan cannot mask them; set " +
+          "spark.sql.extensions=graft.GraftExtensions (as " +
+          "GraftSession does), read via " +
           "VersionedTable.read, or materialize with compact()")
       else if (VersionedTable.schemaHasMapping(schema))
         Some(s"version $version of $path maps renamed columns — the " +
-          "plain SQL scan cannot alias them; register " +
-          "GraftExtensions/VtMaskedScanRewrite, read via " +
+          "plain SQL scan cannot alias them; set " +
+          "spark.sql.extensions=graft.GraftExtensions (as " +
+          "GraftSession does), read via " +
           "VersionedTable.read, or rewrite with an overwrite commit")
       else None
     val files = entries.map(e => s"$path/${e.name}")

@@ -34,16 +34,12 @@ private[sources] object VtScanGuard {
   }
 
   private def proxyOf(target: AnyRef,
-      intercept: (Method, Array[AnyRef]) => Option[AnyRef],
-      extraInterfaces: Array[Class[_]] = Array.empty): AnyRef =
+      intercept: (Method, Array[AnyRef]) => Option[AnyRef]): AnyRef =
     Proxy.newProxyInstance(
-      // graft's own loader: it sees both the Spark interfaces (its
-      // parent) and the graft-defined ones (VtGuardedScan). The
-      // target's loader would be Spark's system classpath under a
-      // --jars deployment, which cannot load graft classes — the
-      // proxy construction itself would throw on every guarded scan.
-      classOf[VtGuardedScan].getClassLoader,
-      allInterfaces(target.getClass) ++ extraInterfaces,
+      // graft's own loader: its parent sees every Spark interface the
+      // target implements
+      getClass.getClassLoader,
+      allInterfaces(target.getClass),
       new InvocationHandler {
         override def invoke(p: AnyRef, method: Method,
             args: Array[AnyRef]): AnyRef =
@@ -68,17 +64,5 @@ private[sources] object VtScanGuard {
     proxyOf(scan, (m, _) =>
       if (materializers(m.getName))
         throw new IllegalArgumentException(refusal)
-      else if (m.getName == "vtUnderlying" && m.getParameterCount == 0)
-        Some(scan)
-      else None,
-      extraInterfaces = Array(classOf[VtGuardedScan]))
-}
-
-/** Marker every guarded scan proxy implements: plan-analysis code
-  * (e.g. [[graft.plans.VtMetadataAgg]], which must see the REAL
-  * parquet scan's pushed-filter state before folding an aggregate to
-  * manifest metadata) unwraps through it. The guard itself is
-  * untouched — materialization still refuses. */
-trait VtGuardedScan {
-  def vtUnderlying(): AnyRef
+      else None)
 }

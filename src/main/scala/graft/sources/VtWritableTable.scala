@@ -33,7 +33,7 @@ trait VtTable {
 }
 
 /** The WRITABLE refinement the SQL DML planner strategy
-  * ([[graft.plans.VtDml]]) keys on: mutations route through
+  * ([[graft.plans.VtDmlStrategy]]) keys on: mutations route through
   * [[graft.operators.VersionedTable]]'s transactional verbs at
   * `vtPath`. Implemented ONLY by [[VtCatalog]]'s latest-version table
   * — time-travel tables carry the read-only [[VtTable]] parent, so

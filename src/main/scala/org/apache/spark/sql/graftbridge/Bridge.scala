@@ -19,16 +19,6 @@ object Bridge {
   def asNullable(dt: org.apache.spark.sql.types.DataType):
       org.apache.spark.sql.types.DataType = dt.asNullable
 
-  /** Register a function builder into a LIVE session's registry (the
-    * runtime analog of SparkSessionExtensions.injectFunction, which only
-    * applies at session construction). */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
-
   /** A DataFrame's analyzed logical plan (Dataset.logicalPlan is
     * private[sql]) — the input side of custom-LogicalPlan composition. */
   def logicalPlan(df: org.apache.spark.sql.DataFrame):

@@ -8,7 +8,6 @@ class ApproxRewriteSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
 
   private def withFlag[T](rsd: Double = 0.05)(f: => T): T = {
-    GraftExtensions.register(spark) // runtime rule path (no extensions conf)
     spark.conf.set(EnabledKey, "true")
     spark.conf.set(RsdKey, rsd.toString)
     try f finally {
@@ -115,10 +114,10 @@ class ApproxRewriteSpec extends AnyFunSuite {
     }
   }
 
-  test("FILTER'd distinct stays EXACT (already grouped-rewritten)") {
-    // RewriteDistinctAggregates expands filtered distincts earlier in
-    // the optimizer than the experimental batch runs, so the rewrite
-    // never sees them - they stay exact, which is the safe direction.
+  test("FILTER'd distinct is sketched too, estimate in contract") {
+    // the rule runs in the operator-optimization batch, ahead of
+    // RewriteDistinctAggregates, so it sees the FILTER clause and keeps
+    // it on the sketch
     val exact = li.where(col("l_returnflag") === "R")
       .select("l_orderkey").distinct().count()
     withFlag() {
@@ -126,8 +125,12 @@ class ApproxRewriteSpec extends AnyFunSuite {
       val filtered = spark.sql(
         """SELECT count(DISTINCT l_orderkey)
           |  FILTER (WHERE l_returnflag = 'R') AS nd FROM ar_li2""".stripMargin)
-      assert(filtered.head.getLong(0) == exact,
-        "filtered distinct must remain exact")
+      val plan = filtered.queryExecution.optimizedPlan.toString
+      assert(plan.contains("approx_count_distinct"),
+        s"no sketch in plan:\n$plan")
+      val est = filtered.head.getLong(0).toDouble
+      assert(math.abs(est / exact - 1.0) <= 0.15, // 3 sigma
+        s"est $est vs exact $exact")
     }
   }
 }

@@ -19,14 +19,6 @@ class NdvLedgerSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   import spark.implicits._
 
-  private def ensureCatalog(): Unit = {
-    if (!spark.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(spark)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
-  }
-
   private def foldsToLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.collectLeaves()
       .forall(_.isInstanceOf[
@@ -41,7 +33,6 @@ class NdvLedgerSpec extends AnyFunSuite {
   }
 
   test("type matrix: folded estimate == scanned estimate, bit-exact") {
-    ensureCatalog()
     val tmp = Files.createTempDirectory("ndv_types").toString
     val path = s"$tmp/t"
     val df = spark.range(0, 5000).select(
@@ -69,11 +60,12 @@ class NdvLedgerSpec extends AnyFunSuite {
     // LTZ timestamps sketch only under an INT64 writer (INT96 written
     // values cannot be mirrored — no span, no sum, no sketch, same as
     // the footer harvest); pin micros like the production session does
+    val oldTs = spark.conf.get("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType",
       "TIMESTAMP_MICROS")
     try VersionedTable.commit(df, path, overwrite = true,
       statsCols = cols)
-    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    finally spark.conf.set("spark.sql.parquet.outputTimestampType", oldTs)
     val aggs = cols.map(c =>
       s"approx_count_distinct($c) AS a_$c").mkString(", ")
     val folded = spark.sql(s"SELECT $aggs FROM graft.`$path`")
@@ -87,7 +79,6 @@ class NdvLedgerSpec extends AnyFunSuite {
 
   test("deletion vector / foreign rsd / missing sketch all decline " +
       "to the scan and stay correct") {
-    ensureCatalog()
     val tmp = Files.createTempDirectory("ndv_decline").toString
     val path = s"$tmp/t"
     val df = spark.range(0, 2000).select($"id".as("k"),
@@ -139,7 +130,6 @@ class NdvLedgerSpec extends AnyFunSuite {
 
   test("footer-harvested files (kill-switch) have no sketch: fold " +
       "declines; sketch-off conf records nothing") {
-    ensureCatalog()
     val tmp = Files.createTempDirectory("ndv_off").toString
     val p1 = s"$tmp/t1"
     val df = spark.range(0, 500).select($"id".as("k"))
@@ -167,7 +157,6 @@ class NdvLedgerSpec extends AnyFunSuite {
 
   test("manifest text, entry checkpoint and rename all round-trip " +
       "the register words") {
-    ensureCatalog()
     val tmp = Files.createTempDirectory("ndv_rt").toString
     val path = s"$tmp/t"
     val df = spark.range(0, 300).select($"id".as("k"),
@@ -196,7 +185,6 @@ class NdvLedgerSpec extends AnyFunSuite {
 
   test("grouped approx_count_distinct folds per group from " +
       "whole-file-keyed sketches, bit-exact vs the scan") {
-    ensureCatalog()
     val tmp = Files.createTempDirectory("ndv_grouped").toString
     val path = s"$tmp/t"
     val df = spark.range(0, 6000).select(($"id" % 4).as("day"),
@@ -240,7 +228,6 @@ class NdvLedgerSpec extends AnyFunSuite {
 
   test("CALL graft.ndv(...) profiles per-column cardinality from the " +
       "manifest; a DV nulls it (exact-or-decline)") {
-    ensureCatalog()
     val tmp = Files.createTempDirectory("ndv_proc").toString
     val path = s"$tmp/t"
     val df = spark.range(0, 3000).select($"id".as("k"),
@@ -272,7 +259,6 @@ class NdvLedgerSpec extends AnyFunSuite {
 
   test("non-default write rsd: the matching query folds and " +
       "CALL graft.ndv infers the layout from the word count") {
-    ensureCatalog()
     val tmp = Files.createTempDirectory("ndv_rsd").toString
     val path = s"$tmp/t"
     val df = spark.range(0, 2000).select($"id".as("k"))
@@ -301,7 +287,6 @@ class NdvLedgerSpec extends AnyFunSuite {
   }
 
   test("empty table and all-null column fold to zero") {
-    ensureCatalog()
     val tmp = Files.createTempDirectory("ndv_empty").toString
     val path = s"$tmp/t"
     val df = spark.range(0, 100).select($"id".as("k"),
@@ -322,7 +307,6 @@ class NdvLedgerSpec extends AnyFunSuite {
 
   test("WHERE folds when files partition cleanly; a straddling " +
       "boundary opens one file via the seeded hybrid") {
-    ensureCatalog()
     val tmp = Files.createTempDirectory("ndv_where").toString
     val path = s"$tmp/t"
     val df = spark.range(0, 4000).select($"id".as("k"),

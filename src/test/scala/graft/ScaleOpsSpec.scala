@@ -28,11 +28,9 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(withNull(0).isNullAt(0))
   }
 
-  test("array expressions usable from SQL after runtime registration") {
-    // (spark.sql.extensions applies only at session CONSTRUCTION; the
-    // shared fixture is already built, so use the runtime path — the
-    // extension class itself reuses the same builders.)
-    GraftExtensions.register(spark)
+  test("array expressions and text kernels usable from SQL, no registration call") {
+    // the fixture is a GraftSession: GraftExtensions injects the array
+    // functions at construction and getOrCreate registers the text UDFs
     val r = spark.sql(
       "SELECT array_dot(array(1d,2d), array(3d,4d)) AS d, " +
         "array_norm(array(3d,4d)) AS n, " +

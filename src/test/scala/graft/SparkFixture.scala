@@ -3,18 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM (suites run in a
-  * forked JVM; SparkSession.builder.getOrCreate dedups across suites). */
+  * forked JVM; getOrCreate dedups across suites), built by the same
+  * preset users and the benchmark run. */
 object SparkFixture {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.getOrCreate("graft-test", Some("local[4]"))
   val sf0001 = "/root/testdata/sf0.001"
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.VersionedTable
@@ -13,11 +14,6 @@ class VtCatalogSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
   import spark.implicits._
 
-  private def ensureCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-
   private def tmpRoot(): java.io.File = {
     val d = java.nio.file.Files.createTempDirectory("graft_cat_").toFile
     d.deleteOnExit()
@@ -25,7 +21,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("VERSION AS OF and latest resolve through spark.sql only") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "t").getAbsolutePath
     VersionedTable.commit(
       (0L until 100L).map(i => (i, s"v0_$i")).toDF("id", "s"), t,
@@ -55,7 +50,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("TIMESTAMP AS OF resolves the commit wall clock") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "ts").getAbsolutePath
     VersionedTable.commit(Seq((1L, "a")).toDF("id", "s"), t,
       overwrite = true)
@@ -71,7 +65,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("relative names under root; SHOW TABLES; schema travels too") {
-    ensureCatalog()
     val root = tmpRoot()
     spark.conf.set("spark.sql.catalog.graftw", "graft.sources.VtCatalog")
     spark.conf.set("spark.sql.catalog.graftw.root", root.getAbsolutePath)
@@ -91,7 +84,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("INSERT INTO / OVERWRITE route through the transactional commit") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "ins").getAbsolutePath
     VersionedTable.commit((0L until 5L).map(i => (i, s"v$i"))
       .toDF("id", "s"), t, overwrite = true)
@@ -122,7 +114,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("DELETE FROM routes through the transactional touched-files delete") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "del").getAbsolutePath
     VersionedTable.commit(
       (0L until 200L).map(i => (i, s"v$i")).toDF("id", "s")
@@ -148,7 +139,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("VERSION AS OF a pending/aborted multi-table manifest refuses") {
-    ensureCatalog()
     val root = tmpRoot()
     val t = new java.io.File(root, "pend").getAbsolutePath
     VersionedTable.commit(Seq((1L, "a")).toDF("id", "s"), t,
@@ -180,8 +170,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("SQL UPDATE lowers onto updateWhere: pre-image, delta-sized") {
-    ensureCatalog()
-    graft.plans.VtDml.ensureRegistered(spark)
     val t = new java.io.File(tmpRoot(), "upd").getAbsolutePath
     VersionedTable.commit(
       (0L until 200L).map(i => (i, i * 10L, i * 100L)).toDF("id", "a", "b")
@@ -213,8 +201,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("SQL MERGE INTO lowers onto mergeInto: upsert and CDC tombstones") {
-    ensureCatalog()
-    graft.plans.VtDml.ensureRegistered(spark)
     val root = tmpRoot()
     val t = new java.io.File(root, "mrg").getAbsolutePath
     VersionedTable.commit(
@@ -262,19 +248,18 @@ class VtCatalogSpec extends AnyFunSuite {
     assert(e.getMessage.contains("graft SQL MERGE"), e.getMessage)
   }
 
-  test("SQL DML keeps working on a DV'd table; only the SCAN refuses") {
-    ensureCatalog()
-    graft.plans.VtDml.ensureRegistered(spark)
-    // this test pins the FALLBACK behavior (no masked-scan rewrite in
-    // the session): detach the rule for its duration
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == graft.plans.VtMaskedScanRewrite)
-    try dmlOnDvBody()
-    finally spark.experimental.extraOptimizations = saved
-  }
+  /** A sibling session on the fixture's context with only the DML
+    * strategy and the catalog conf, none of GraftExtensions' optimizer
+    * rules: the fallback posture of a session that never set
+    * `spark.sql.extensions`. */
+  private def sessionWithoutRules(): SparkSession =
+    org.apache.spark.sql.graftbridge.Bridge.sessionWithExtensions(
+      spark.sparkContext,
+      _.injectPlannerStrategy(_ => graft.plans.VtDmlStrategy))
 
-  private def dmlOnDvBody(): Unit = {
+  test("SQL DML keeps working on a DV'd table; only the SCAN refuses") {
+    // pins the FALLBACK behavior (no masked-scan rewrite in the session)
+    val bare = sessionWithoutRules()
     val t = new java.io.File(tmpRoot(), "dvdml").getAbsolutePath
     VersionedTable.commit(
       (0L until 100L).map(i => (i, i * 10L)).toDF("id", "a")
@@ -284,18 +269,18 @@ class VtCatalogSpec extends AnyFunSuite {
       deletionVectors = true)
     // the plain SELECT refuses (a file scan cannot mask)...
     val e = intercept[Exception] {
-      spark.sql(s"SELECT * FROM graft.`$t`").collect()
+      bare.sql(s"SELECT * FROM graft.`$t`").collect()
     }
     assert(e.getMessage.contains("deletion vectors") ||
       Option(e.getCause).exists(_.getMessage.contains("deletion vectors")),
       e.getMessage)
     // ...but every DML verb still lowers onto the masking Scala verbs
-    spark.sql(s"UPDATE graft.`$t` SET a = a + 1 WHERE id = 1")
-    spark.sql(s"DELETE FROM graft.`$t` WHERE id = 2")
-    spark.sql(s"INSERT INTO graft.`$t` VALUES (1000, 1)")
+    bare.sql(s"UPDATE graft.`$t` SET a = a + 1 WHERE id = 1")
+    bare.sql(s"DELETE FROM graft.`$t` WHERE id = 2")
+    bare.sql(s"INSERT INTO graft.`$t` VALUES (1000, 1)")
     // OPTIMIZE materializes the vectors; the scan comes back
-    spark.sql(s"CALL graft.optimize(table => '$t', full => true)")
-    val rows = spark.sql(s"SELECT id, a FROM graft.`$t`")
+    bare.sql(s"CALL graft.optimize(table => '$t', full => true)")
+    val rows = bare.sql(s"SELECT id, a FROM graft.`$t`")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(!rows.contains(5L) && !rows.contains(2L),
       "DV-masked and SQL-deleted rows stay gone")
@@ -306,21 +291,18 @@ class VtCatalogSpec extends AnyFunSuite {
     // refuses (cannot alias) but DML keeps flowing under logical names
     VersionedTable.renameColumn(spark, t, "a", "amount")
     val e2 = intercept[Exception] {
-      spark.sql(s"SELECT * FROM graft.`$t`").collect()
+      bare.sql(s"SELECT * FROM graft.`$t`").collect()
     }
     assert(e2.getMessage.contains("renamed columns") ||
       Option(e2.getCause).exists(_.getMessage.contains("renamed columns")),
       e2.getMessage)
-    spark.sql(s"UPDATE graft.`$t` SET amount = amount + 5 WHERE id = 1")
+    bare.sql(s"UPDATE graft.`$t` SET amount = amount + 5 WHERE id = 1")
     assert(VersionedTable.read(spark, t).where(col("id") === 1L)
       .select("amount").as[Long].collect().head == 16L,
       "SQL UPDATE must keep working on a mapped table")
   }
 
   test("masked-scan rewrite: SQL SELECT answers over DV'd+mapped tables") {
-    ensureCatalog()
-    graft.plans.VtDml.ensureRegistered(spark)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
     val t = new java.io.File(tmpRoot(), "dvsel").getAbsolutePath
     VersionedTable.commit(
       (0L until 100L).map(i => (i, i * 10L)).toDF("id", "a")
@@ -371,8 +353,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("SQL DDL: CREATE/CTAS/ALTER/DROP lower onto the metadata verbs") {
-    ensureCatalog()
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
     val dir = tmpRoot()
     val t = new java.io.File(dir, "ddl").getAbsolutePath
     // CREATE TABLE = the empty v0 overwrite, stats index declared once
@@ -461,8 +441,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("time travel over DV'd/mapped versions rides the masked rewrite") {
-    ensureCatalog()
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
     val t = new java.io.File(tmpRoot(), "dvtravel").getAbsolutePath
     VersionedTable.commit(
       (0L until 100L).map(i => (i, i * 10L)).toDF("id", "a")
@@ -494,21 +472,16 @@ class VtCatalogSpec extends AnyFunSuite {
       .collect()(0).getLong(0) == 100L)
     // without the rule the travel scan refuses at materialization —
     // loud, never a wrong answer
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == graft.plans.VtMaskedScanRewrite)
-    try {
-      val e = intercept[Exception] {
-        spark.sql(s"SELECT * FROM graft.`$t` VERSION AS OF 1").collect()
-      }
-      assert(e.getMessage.contains("deletion vectors") ||
-        Option(e.getCause).exists(
-          _.getMessage.contains("deletion vectors")), e.getMessage)
-    } finally spark.experimental.extraOptimizations = saved
+    val e = intercept[Exception] {
+      sessionWithoutRules()
+        .sql(s"SELECT * FROM graft.`$t` VERSION AS OF 1").collect()
+    }
+    assert(e.getMessage.contains("deletion vectors") ||
+      Option(e.getCause).exists(
+        _.getMessage.contains("deletion vectors")), e.getMessage)
   }
 
   test("CALL procedures: optimize / history / expire / vacuum via SQL") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "maint").getAbsolutePath
     // 5 small per-batch commits — the streaming-sink debris shape
     for (b <- 0 until 5)
@@ -572,7 +545,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("DROP tombstone blocks commits and reads; crashed drops finish") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "tomb").getAbsolutePath
     VersionedTable.commit(Seq((1L, "a")).toDF("id", "s"), t,
       overwrite = true)
@@ -609,7 +581,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("multi-change ALTER TABLE is one atomic commit") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "multi").getAbsolutePath
     VersionedTable.commit(Seq((1L, "a")).toDF("id", "s"), t,
       overwrite = true)
@@ -637,7 +608,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("CALL graft.detail reports the feature state from metadata") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "det").getAbsolutePath
     VersionedTable.commit(
       (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s")
@@ -667,7 +637,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("SET TBLPROPERTIES stats_cols re-declares the index, no rewrite") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "ssc").getAbsolutePath
     VersionedTable.commit(
       (0L until 100L).map(i => (i, i * 2L)).toDF("id", "v")
@@ -701,7 +670,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("out-of-surface verbs refuse; missing tables error cleanly") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "nope").getAbsolutePath
     val e = intercept[Exception] {
       spark.sql(s"SELECT * FROM graft.`$t`").collect()
@@ -726,7 +694,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("CREATE TABLE refuses stats_cols naming columns the schema lacks") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "typo").getAbsolutePath
     val e = intercept[Exception] {
       spark.sql(s"CREATE TABLE graft.`$t` (doc_id BIGINT, s STRING) " +
@@ -750,7 +717,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("DROP TABLE never leaks its tombstone over pending manifests") {
-    ensureCatalog()
     import graft.operators.MultiTableTxn
     val root = tmpRoot()
     val t = new java.io.File(root, "p").getAbsolutePath
@@ -783,9 +749,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("SQL scans prune files from the manifest spans") {
-    ensureCatalog()
-    graft.plans.VtMetadataAgg.ensureRegistered(spark)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
     val t = new java.io.File(tmpRoot(), "t").getAbsolutePath
     VersionedTable.commit(
       (0L until 4000L).map(i => (i, s"r$i")).toDF("id", "s")
@@ -817,7 +780,6 @@ class VtCatalogSpec extends AnyFunSuite {
   }
 
   test("DESCRIBE HISTORY/DETAIL and SHOW TBLPROPERTIES from plain SQL") {
-    ensureCatalog()
     val t = new java.io.File(tmpRoot(), "t").getAbsolutePath
     VersionedTable.commit(
       (0L until 50L).map(i => (i, s"r$i")).toDF("id", "s"), t,
@@ -832,57 +794,50 @@ class VtCatalogSpec extends AnyFunSuite {
     assert(props.get("format").contains("graft-vt"), props.toString)
     assert(props.get("version").contains("1"))
     assert(props.get("stats_cols").contains("id"))
-    // DESCRIBE HISTORY needs the injected parser — construction-time
-    // only, so exercise it on a sibling session sharing the context
-    val s2 = org.apache.spark.sql.graftbridge.Bridge
-      .sessionWithExtensions(spark.sparkContext,
-        new graft.GraftExtensions().apply)
-    s2.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    val hist = s2.sql(s"DESCRIBE HISTORY graft.`$t`")
+    // DESCRIBE HISTORY and the maintenance statements ride the parser
+    // GraftExtensions injects at construction
+    val hist = spark.sql(s"DESCRIBE HISTORY graft.`$t`")
       .select("version", "mode", "txn_id").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2)))
     assert(hist.toSeq == Seq((1, "append", "cat_hist_append"),
       (0, "overwrite", null)), hist.mkString(","))
-    val detail = s2.sql(s"DESC DETAIL graft.`$t`")
+    val detail = spark.sql(s"DESC DETAIL graft.`$t`")
     assert(detail.columns.contains("n_files"))
     assert(detail.count() == 1)
-    // pass-through: ordinary DESCRIBE forms keep working on s2
-    assert(s2.sql(s"DESCRIBE TABLE graft.`$t`").count() >= 2)
-    assert(s2.sql(s"SELECT count(*) AS n FROM graft.`$t`")
+    // pass-through: ordinary DESCRIBE forms keep working
+    assert(spark.sql(s"DESCRIBE TABLE graft.`$t`").count() >= 2)
+    assert(spark.sql(s"SELECT count(*) AS n FROM graft.`$t`")
       .collect()(0).getLong(0) == 60L)
     // maintenance statements lower onto the procedures
-    val opt = s2.sql(s"OPTIMIZE graft.`$t`").collect()
+    val opt = spark.sql(s"OPTIMIZE graft.`$t`").collect()
     assert(opt.length == 1 && opt(0).getInt(0) == 2,
       s"OPTIMIZE must bin-pack into a new version: ${opt.toSeq}")
-    assert(s2.sql(s"SELECT count(*) AS n FROM graft.`$t`")
+    assert(spark.sql(s"SELECT count(*) AS n FROM graft.`$t`")
       .collect()(0).getLong(0) == 60L)
-    val vac = s2.sql(s"VACUUM graft.`$t` RETAIN 168 HOURS")
+    val vac = spark.sql(s"VACUUM graft.`$t` RETAIN 168 HOURS")
     assert(vac.columns.toSeq == Seq("removed"))
     vac.collect()
-    val res = s2.sql(s"RESTORE graft.`$t` TO VERSION AS OF 1").collect()
+    val res = spark.sql(s"RESTORE graft.`$t` TO VERSION AS OF 1").collect()
     assert(res.length == 1)
-    assert(s2.sql(s"SELECT count(*) AS n FROM graft.`$t`")
+    assert(spark.sql(s"SELECT count(*) AS n FROM graft.`$t`")
       .collect()(0).getLong(0) == 60L,
       "the restore replays v1's content as a new commit")
   }
 
   test("SQL statements that match a rewrite regex but do not lower " +
       "fall through to the delegate parser") {
-    val s2 = org.apache.spark.sql.graftbridge.Bridge
-      .sessionWithExtensions(spark.sparkContext,
-        new graft.GraftExtensions().apply)
     // a ONE-PART target cannot name a graft table (<catalog>.<path>):
     // the statement must surface the DELEGATE's ParseException, not a
     // graft IllegalArgumentException thrown mid-rewrite
     import org.apache.spark.sql.catalyst.parser.ParseException
-    intercept[ParseException] { s2.sql("OPTIMIZE just_a_table") }
+    intercept[ParseException] { spark.sql("OPTIMIZE just_a_table") }
     // trailing junk swallowed into the lazy identifier group: same
     // pass-through (Spark has no VACUUM statement → its parse error)
-    intercept[ParseException] { s2.sql("VACUUM t DRY RUN") }
-    intercept[ParseException] { s2.sql("RESTORE t VERSION AS OF 1") }
+    intercept[ParseException] { spark.sql("VACUUM t DRY RUN") }
+    intercept[ParseException] { spark.sql("RESTORE t VERSION AS OF 1") }
     // DESCRIBE HISTORY <one-part> falls through to plain DESCRIBE
     // handling — an unresolved-table analysis error, never a graft IAE
-    val e = intercept[Exception] { s2.sql("DESCRIBE HISTORY no_such") }
+    val e = intercept[Exception] { spark.sql("DESCRIBE HISTORY no_such") }
     assert(!e.isInstanceOf[IllegalArgumentException], e.toString)
   }
 }

@@ -11,15 +11,6 @@ class VtJoinPruneSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
   import spark.implicits._
 
-  private def setup(): Unit = {
-    if (!spark.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtJoinPrune.ensureRegistered(spark)
-    graft.plans.VtMetadataAgg.ensureRegistered(spark)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
-  }
-
   private def tmpTable(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_vtdfp_").toFile
     d.deleteOnExit()
@@ -36,7 +27,6 @@ class VtJoinPruneSpec extends AnyFunSuite {
   }
 
   test("a selective dimension filter prunes fact files (IN-set path)") {
-    setup()
     val t = tmpTable("fact")
     mkFact(t, 4000L, 8)
     val n = VersionedTable.readEntries(spark, t, 0).size
@@ -55,7 +45,6 @@ class VtJoinPruneSpec extends AnyFunSuite {
   }
 
   test("range path beyond the IN-set cap still prunes") {
-    setup()
     spark.conf.set("spark.graft.dfp.inSetCap", "10")
     try {
       val t = tmpTable("fact2")
@@ -77,7 +66,6 @@ class VtJoinPruneSpec extends AnyFunSuite {
   }
 
   test("left semi prunes; outer joins and bare builds stay untouched") {
-    setup()
     val t = tmpTable("fact3")
     mkFact(t, 2000L, 8)
     val n = VersionedTable.readEntries(spark, t, 0).size
@@ -103,7 +91,6 @@ class VtJoinPruneSpec extends AnyFunSuite {
   }
 
   test("empty and all-null build sides give empty joins, not errors") {
-    setup()
     val t = tmpTable("fact4")
     mkFact(t, 1000L, 4)
     val dimE = Seq.empty[(Long, String)].toDF("dk", "dname")
@@ -121,7 +108,6 @@ class VtJoinPruneSpec extends AnyFunSuite {
   }
 
   test("nondeterministic builds decline (executed-twice hazard)") {
-    setup()
     val t = tmpTable("fact5")
     mkFact(t, 1000L, 4)
     val n = VersionedTable.readEntries(spark, t, 0).size

@@ -13,14 +13,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
   import spark.implicits._
 
-  private def setup(): Unit = {
-    if (!spark.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(spark)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
-  }
-
   private def tmpTable(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_vtmeta_").toFile
     d.deleteOnExit()
@@ -32,7 +24,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
       .collectLeaves().forall(_.isInstanceOf[LocalRelation])
 
   test("count/min/max fold from the manifest; filters block the fold") {
-    setup()
     val t = tmpTable("t")
     VersionedTable.commit(
       (0L until 1000L).map(i => (i, s"r$i")).toDF("id", "s")
@@ -51,7 +42,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("DV'd versions: count folds exactly, min/max refuse to fold") {
-    setup()
     val t = tmpTable("dv")
     VersionedTable.commit(
       (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s")
@@ -71,7 +61,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("un-indexed columns and empty tables stay exact") {
-    setup()
     val t = tmpTable("u")
     VersionedTable.commit(
       (0L until 50L).map(i => (i, i * 2L)).toDF("id", "v")
@@ -91,7 +80,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("VERSION AS OF folds the pinned version's metadata") {
-    setup()
     val t = tmpTable("tt")
     VersionedTable.commit((0L until 10L).map(i => (i, s"a$i"))
       .toDF("id", "s").coalesce(1), t, overwrite = true,
@@ -109,7 +97,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("count WHERE: all-in files fold, only boundary files scan") {
-    setup()
     val t = tmpTable("cw")
     // 4 range-clustered files over id 0..999: file spans ~[0,250)...
     VersionedTable.commit(
@@ -140,7 +127,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("count WHERE stays exact over nulls, DVs, and strings") {
-    setup()
     val t = tmpTable("cwn")
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -200,7 +186,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("differential: folded counts equal scan counts on hostile data") {
-    setup()
     val t = tmpTable("diff")
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -355,7 +340,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("sum/avg fold from the manifest; wraps, gates, hybrids exact") {
-    setup()
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val t = tmpTable("sum")
@@ -485,7 +469,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("count(NULL) and alias-shadowed columns never fold wrong") {
-    setup()
     val t = tmpTable("shadow")
     VersionedTable.commit(
       (0L until 50L).map(i => (i, i + 1000L)).toDF("id", "v")
@@ -505,7 +488,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("OR predicates and count(col) fold from metadata") {
-    setup()
     val t = tmpTable("or")
     // year-clustered files: each file holds one year, s null often
     VersionedTable.commit(
@@ -537,7 +519,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("DV'd min/max: rescan only files that can touch an extremum") {
-    setup()
     val t = tmpTable("dvmm")
     VersionedTable.commit(
       (0L until 1000L).map(i => (i, s"r$i")).toDF("id", "s")
@@ -565,7 +546,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("multi-row-group files: a NaN chunk poisons the whole span") {
-    setup()
     // parquet-mr omits float/double bounds for a NaN-bearing CHUNK
     // while still setting its numNulls (PARQUET-1222). A span reduced
     // from the file's OTHER chunks would hide the NaN chunk's values
@@ -614,7 +594,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("float literals classify through exact binary values") {
-    setup()
     val t = tmpTable("flit")
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -638,7 +617,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("collated string predicates never classify by byte order") {
-    setup()
     val t = tmpTable("coll")
     // UTF8_LCASE: 'abc' = 'ABC'; unsigned-byte classification would
     // prove a file spanning only uppercase all-out and under-count
@@ -660,7 +638,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("IS NULL folds from null counts; negations and dates classify") {
-    setup()
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val t = tmpTable("isn")
@@ -709,7 +686,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("LIKE prefix ranges classify and prune by byte order") {
-    setup()
     val t = tmpTable("pfx")
     VersionedTable.commit(
       (0 until 900).map(i => (i.toLong, f"k${i}%03d")).toDF("id", "s")
@@ -743,7 +719,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("timestamp folds are unit-safe under a millis-writing session") {
-    setup()
     // outputTimestampType=TIMESTAMP_MILLIS stores raw millis in the
     // footers; the harvest must unit-normalize to micros (tagged
     // TsMicros) or every classification would be off by 1000x —
@@ -753,6 +728,7 @@ class VtMetadataAggSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("ts", TimestampType)))
+    val oldTs = spark.conf.get("spark.sql.parquet.outputTimestampType")
     spark.conf.set("spark.sql.parquet.outputTimestampType",
       "TIMESTAMP_MILLIS")
     try {
@@ -765,7 +741,7 @@ class VtMetadataAggSpec extends AnyFunSuite {
           .sortWithinPartitions("ts"),
         t, overwrite = true, statsCols = Seq("ts"))
     } finally
-      spark.conf.unset("spark.sql.parquet.outputTimestampType")
+      spark.conf.set("spark.sql.parquet.outputTimestampType", oldTs)
     val trusted = VersionedTable.read(spark, t)
     val w = s"SELECT count(ts) AS n, min(ts) AS lo, max(ts) AS hi " +
       s"FROM graft.`$t`"
@@ -783,7 +759,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("GROUP BY a file-clustered key folds per group from metadata") {
-    setup()
     val t = tmpTable("grp")
     def batch(band: java.lang.Long, ids: Range) =
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](
@@ -854,7 +829,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("decimal spans: min/max/sum fold, WHERE classifies and prunes") {
-    setup()
     val t = tmpTable("dec")
     val df = (0L until 1000L).map(i => (i, i)).toDF("id", "raw")
       .withColumn("price", (col("raw") / 4).cast("decimal(12,2)"))
@@ -909,7 +883,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("multi-key GROUP BY and DISTINCT fold from metadata") {
-    setup()
     val t = tmpTable("g2")
     (0L to 3L).foreach { b =>
       VersionedTable.commit(
@@ -959,7 +932,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
 
   test("multi-valued files fold count(DISTINCT) via the value-set " +
       "ledger; wrapped aggregates stay exact") {
-    setup()
     val t = tmpTable("d")
     VersionedTable.commit(
       Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("id", "s").coalesce(1),
@@ -991,7 +963,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("grouped avg folds per group under the 2^53 proof") {
-    setup()
     val t = tmpTable("gavg")
     def batch(band: Long, ids: Range) =
       ids.map(i => (i.toLong, band,
@@ -1041,7 +1012,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
 
   test("avg hybrids: boundary Σ/n partials combine with metadata, " +
       "whole-table and per-group, bit-exact") {
-    setup()
     val t = tmpTable("avghyb")
     val df = spark.range(0, 4000).select($"id".as("k"),
       ($"id" * 3 - 5555).as("v"))
@@ -1080,7 +1050,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
   }
 
   test("count(DISTINCT) hybrids: boundary values union with metadata") {
-    setup()
     val t = tmpTable("dhybrid")
     // three point files inside the predicate + one straddling file
     // carrying overlapping AND new values
@@ -1119,7 +1088,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
 
   test("distinct-set ledger: multi-valued files fold count(DISTINCT) " +
       "pure; deletion vectors refuse the physical set") {
-    setup()
     val t = tmpTable("dsetfold")
     // two files, EACH multi-valued (no point spans anywhere) with
     // overlapping small value sets — only the write-time dset ledger
@@ -1167,7 +1135,6 @@ class VtMetadataAggSpec extends AnyFunSuite {
 
   test("near-38-precision decimal hybrids decline: a boundary " +
       "subtotal that overflows must never count as zero") {
-    setup()
     val t = tmpTable("decoverflow")
     def dec(s: String) = s"CAST('$s' AS DECIMAL(38,0))"
     // file A (all-in under k >= 0): one row of -9e37; g point-span 2

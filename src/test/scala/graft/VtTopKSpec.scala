@@ -12,15 +12,6 @@ class VtTopKSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
   import spark.implicits._
 
-  private def setup(): Unit = {
-    if (!spark.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtTopKRewrite.ensureRegistered(spark)
-    graft.plans.VtMetadataAgg.ensureRegistered(spark)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
-  }
-
   private def tmpTable(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory("graft_vttopk_").toFile
     d.deleteOnExit()
@@ -28,7 +19,6 @@ class VtTopKSpec extends AnyFunSuite {
   }
 
   test("ORDER BY LIMIT opens only the provable file subset") {
-    setup()
     val t = tmpTable("topk")
     val df = (0L until 4000L).map(i => (i, s"r$i")).toDF("ts", "s")
     VersionedTable.commit(
@@ -65,7 +55,6 @@ class VtTopKSpec extends AnyFunSuite {
   }
 
   test("ties at the k-th value, nulls, and NaN files stay exact") {
-    setup()
     val t = tmpTable("topk_hostile")
     // file 1: high band with TIES at the boundary value 100
     val f1 = Seq((100L, "a"), (100L, "b"), (99L, "c")).toDF("v", "s")
@@ -107,7 +96,6 @@ class VtTopKSpec extends AnyFunSuite {
   }
 
   test("DV'd files weaken the guarantee but never break exactness") {
-    setup()
     val t = tmpTable("topk_dv")
     val f1 = (0L until 100L).map(i => (i, s"x$i")).toDF("v", "s")
     val f2 = (100L until 200L).map(i => (i, s"y$i")).toDF("v", "s")
@@ -126,7 +114,6 @@ class VtTopKSpec extends AnyFunSuite {
 
   test("translatable WHEREs fold into the guarantee; opaque ones " +
       "and expression keys stay exact") {
-    setup()
     val t = tmpTable("topk_where")
     val df = (0L until 1000L).map(i => (i, s"s$i")).toDF("v", "s")
     VersionedTable.commit(

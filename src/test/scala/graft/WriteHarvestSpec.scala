@@ -169,11 +169,6 @@ class WriteHarvestSpec extends AnyFunSuite {
 
   test("distinct sets round-trip hostile strings (separators, tabs, " +
       "unicode) and fold count(DISTINCT) exactly") {
-    if (!spark.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(spark)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
     val tmp = Files.createTempDirectory("wh_dsethostile").toString
     val path = s"$tmp/t"
     // the q-field uses ',' inside a column's set and ';' between
@@ -196,11 +191,6 @@ class WriteHarvestSpec extends AnyFunSuite {
   }
 
   test("value-set pruning: sparse keys inside a wide span prune") {
-    if (!spark.conf.getOption("spark.sql.catalog.graft")
-        .contains("graft.sources.VtCatalog"))
-      spark.conf.set("spark.sql.catalog.graft", "graft.sources.VtCatalog")
-    graft.plans.VtMetadataAgg.ensureRegistered(spark)
-    graft.plans.VtMaskedScanRewrite.ensureRegistered(spark)
     val tmp = Files.createTempDirectory("wh_dprune").toString
     val path = s"$tmp/t"
     // f1 spans [1, 1000] but holds only {1, 1000}; f2 holds {500}
