@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
   * bench scale factor on local hardware.
   *
   * Usage: runMain graft.ScaleProbe [copies] [stages]
+  * (inputs from `SPARK_GRAFT_SF_DIR`, as for Bench; default sf0.1)
   * (stages: comma-separated from lsh,pipeline,pack,rank,winnow,range,
   * contam,bm25,profile,quant,surprisal,curriculum,asofskew,ivfups,
   * bpe,zorder,tdelete,asofnative,asofnativeskew,fuzzy,fuzzycap,
@@ -28,11 +29,12 @@ object ScaleProbe {
       else Set("lsh", "pipeline", "pack", "rank", "winnow", "range",
         "contam", "bm25", "profile", "quant", "surprisal", "curriculum",
         "asofskew", "ivfups", "bpe", "zorder", "tdelete", "asofnative", "fuzzy", "vtstats", "vtlog", "vtmerge", "dv", "vtseg", "vtmeta", "vtanalyze", "dfp", "topk", "ndv")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.getOrCreate("graft-scaleprobe")
     // The corpus is built on first use: manifest-only stages read no
     // documents at all.
     lazy val docs =
-      spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+      spark.read.parquet(s"$sfDir/documents.parquet")
     lazy val n = docs.count()
     // copy c: ids shifted by c*1e6; texts prefixed with a copy marker so
     // copies are near-dups of their original (high jaccard) rather than
@@ -174,7 +176,7 @@ object ScaleProbe {
     // Quantized ANN at copies×: candidates grow linearly; 20 broadcast
     // queries; integer dot products.
     if (stages("quant")) {
-      val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val bigEmb = (0 until copies).map { c =>
         emb.select((col("vec_id") + c * 1000000L).as("vec_id"),
           col("embedding"))
@@ -191,7 +193,7 @@ object ScaleProbe {
     // an upsert tracks the CHANGE SET (touched cells × cell size), not
     // the index — measured against the full rebuild on the same corpus.
     if (stages("ivfups")) {
-      val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val bigEmb = (0 until copies).map { c =>
         emb.select((col("vec_id") + c * 1000000L).as("vec_id"),
           col("embedding"))
@@ -233,7 +235,7 @@ object ScaleProbe {
     // a fraction of the row groups the unsorted layout must, in any
     // parquet reader, with identical results.
     if (stages("zorder")) {
-      val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
+      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val bigLi = (0 until copies).map { c =>
         li.withColumn("l_orderkey", col("l_orderkey") + c * 100000000L)
       }.reduce(_ union _).localCheckpoint()
@@ -287,7 +289,7 @@ object ScaleProbe {
     // unclustered fallback for POINT deletes: row groups that can't
     // contain a key skip at discovery time without any clustering.
     if (stages("tdelete")) {
-      val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
+      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val bigLi = (0 until copies).map { c =>
         li.withColumn("l_orderkey", col("l_orderkey") + c * 100000000L)
       }.reduce(_ union _)
@@ -346,7 +348,7 @@ object ScaleProbe {
 
     // Keyless interval join at 10x events (the BNLJ-killer case).
     if (stages("range")) {
-    val ev = graft.queries.Tables.events(spark, "/root/testdata/sf0.1")
+    val ev = graft.queries.Tables.events(spark, sfDir)
     val bigEv = (0 until copies).map { c =>
       ev.select((col("event_id") + c * 10000000L).as("event_id"), col("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -378,7 +380,7 @@ object ScaleProbe {
     // (key, slice) groups plus a boundary repair. Equal counts assert
     // the semantic identity; the timing gap is the SCALE.md number.
     if (stages("asofskew")) {
-      val ev0 = graft.queries.Tables.events(spark, "/root/testdata/sf0.1")
+      val ev0 = graft.queries.Tables.events(spark, sfDir)
       // Two skew regimes: "hot50" remaps half of all users onto one key
       // (a bot-dominated log); "hot100" remaps EVERYTHING onto one key
       // (the asymptote — the unsliced plan is then one serial sort with
@@ -524,7 +526,7 @@ object ScaleProbe {
     // is per-task memory (two retained rows vs the window's frame) and
     // the absence of the unioned null-padded frame.
     if (stages("asofnative")) {
-      val ev0 = graft.queries.Tables.events(spark, "/root/testdata/sf0.1")
+      val ev0 = graft.queries.Tables.events(spark, sfDir)
       val bigEv = (0 until copies).map { c =>
         ev0.select((col("event_id") + c * 10000000L).as("event_id"),
           col("ts"), (col("user_id") + c * 1000000L).as("user_id"),
@@ -564,7 +566,7 @@ object ScaleProbe {
     // lever (composite (key, slice) distribution + boundary repair)
     // must fan it out while staying checksum-identical.
     if (stages("asofnativeskew")) {
-      val ev0 = graft.queries.Tables.events(spark, "/root/testdata/sf0.1")
+      val ev0 = graft.queries.Tables.events(spark, sfDir)
       val hot = (0 until copies).map { c =>
         ev0.select((col("event_id") + c * 10000000L).as("event_id"),
           col("ts"), lit(7L).as("user_id"), col("event_type"), col("value"))
@@ -598,7 +600,7 @@ object ScaleProbe {
     // claim is scan-planning cost — candidate files vs total, and the
     // pruned read vs the full-dir read for a selective band.
     if (stages("zonemap")) {
-      val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
+      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val bigLi = (0 until copies).map { c =>
         li.select((col("l_orderkey") + c * 100000000L).as("k"),
           col("l_quantity").as("q"))
@@ -626,7 +628,7 @@ object ScaleProbe {
     // delta into state built from the rest vs recompute over history —
     // the claim is O(|state|+|delta|) per apply, flat as history grows.
     if (stages("incragg")) {
-      val ord = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
+      val ord = spark.read.parquet(s"$sfDir/orders.parquet")
       val bigOrd = (0 until copies).map { c =>
         ord.select(col("o_orderpriority"),
           date_format(col("o_orderdate"), "yyyy-MM").as("month"),
@@ -652,7 +654,7 @@ object ScaleProbe {
     // Triangle counting on the sf0.1 co-purchase graph (copies× via
     // disjoint graph copies — count scales linearly, wedge cost too).
     if (stages("triangles")) {
-      val li0 = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
+      val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
       val liBig = (0 until copies).map { c =>
@@ -693,7 +695,7 @@ object ScaleProbe {
     // key) per group vs the HLL++ rewrite — the claim is shuffle sized
     // by GROUPS (sketches) instead of DATA (distinct pairs).
     if (stages("approxdistinct")) {
-      val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
+      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val bigLi = (0 until copies).map { c =>
         li.select(col("l_returnflag"),
           (col("l_orderkey") * 1000 + c).as("k"))
@@ -744,7 +746,7 @@ object ScaleProbe {
     // flat as history grows — vs the rewrite a non-versioned "keep
     // history" table pays. Read resolves ONE manifest, no dir walk.
     if (stages("vtable")) {
-      val ord = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
+      val ord = spark.read.parquet(s"$sfDir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       val dir = java.nio.file.Files.createTempDirectory("probe_vt_")
       val table = s"$dir/t"
@@ -781,7 +783,7 @@ object ScaleProbe {
     // number that scales: at 100 TB it is the scan volume.
     if (stages("vtstats")) {
       import graft.operators.VersionedTable
-      val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
+      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_quantity")
       val bigLi = (0 until copies).map { c =>
         li.withColumn("l_orderkey", col("l_orderkey") + c * 100000000L)
@@ -1294,12 +1296,12 @@ object ScaleProbe {
       import graft.operators.{IncrementalJoinView, VersionedTable}
       val dir = java.nio.file.Files.createTempDirectory("probe_ivj_")
       val (l, r, v) = (s"$dir/l", s"$dir/r", s"$dir/v")
-      val ord = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
+      val ord = spark.read.parquet(s"$sfDir/orders.parquet")
       val bigL = (0 until copies).map { c =>
         ord.select((col("o_orderkey") + c * 10000000L).as("o_orderkey"),
           col("o_custkey"), col("o_totalprice"))
       }.reduce(_ union _)
-      val cust = spark.read.parquet("/root/testdata/sf0.1/customer.parquet")
+      val cust = spark.read.parquet(s"$sfDir/customer.parquet")
         .select(col("c_custkey"), col("c_name"))
       VersionedTable.commit(bigL.repartitionByRange(32, col("o_custkey"))
         .sortWithinPartitions("o_custkey"), l,
@@ -1348,12 +1350,12 @@ object ScaleProbe {
     // feed, and the full sync().
     if (stages("ivjoinprof")) {
       import graft.operators.{IncrementalJoinView, VersionedTable}
-      val ord = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
+      val ord = spark.read.parquet(s"$sfDir/orders.parquet")
       val bigL = (0 until copies).map { c =>
         ord.select((col("o_orderkey") + c * 10000000L).as("o_orderkey"),
           col("o_custkey"), col("o_totalprice"))
       }.reduce(_ union _).localCheckpoint()
-      val cust = spark.read.parquet("/root/testdata/sf0.1/customer.parquet")
+      val cust = spark.read.parquet(s"$sfDir/customer.parquet")
         .select(col("c_custkey"), col("c_name"))
       val cdcL = bigL.limit(1000).withColumn("o_totalprice",
         col("o_totalprice") * 2).localCheckpoint()

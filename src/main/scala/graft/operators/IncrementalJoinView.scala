@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Incremental maintenance of a MATERIALIZED EQUI-JOIN — the missing
   * half of the engine's IVM story ([[IncrementalAgg]] maintains
@@ -131,36 +132,39 @@ object IncrementalJoinView {
           }
           else (if (lt > lv) dl0.localCheckpoint() else dl0,
                 if (rt > rv) dr0.localCheckpoint() else dr0)
-        checkShapes(
-          dl.drop("_change_type", "_commit_version"),
-          dr.drop("_change_type", "_commit_version"),
-          on, leftPk, rightPk)
-        // a side whose version did not move contributes no lane at
-        // all — the other snapshot is never even planned
-        val lanes = Seq(
-          // lane 1: ΔL ⋈ R@new (right snapshot pruned by ΔL's keys)
-          if (lt > lv) Some(laneJoin(spark, dl, rightPath, rt,
-            on, deltaIsLeft = true).withColumn("_lane", lit(1)))
-          else None,
-          // lane 2: L@old ⋈ ΔR (left snapshot at the PREVIOUS sync)
-          if (rt > rv) Some(laneJoin(spark, dr, leftPath, lv,
-            on.map(_.swap), deltaIsLeft = false)
-            .withColumn("_lane", lit(0)))
-          else None).flatten
-        val pk = (leftPk ++ rightPk).map(col)
-        val w = Window.partitionBy(pk: _*).orderBy(
-          col("_lane").desc, col("_cv").desc,
-          when(col("_ct") === "insert", 1).otherwise(0).desc)
-        val actions = lanes.reduce(_.unionByName(_))
-          .withColumn("_rn", row_number().over(w))
-          .where(col("_rn") === 1)
-          .withColumn("_vt_del", col("_ct") === "delete")
-          .drop("_rn", "_lane", "_cv", "_ct")
-        VersionedTable.mergeInto(spark, viewPath, actions,
-          keys = leftPk ++ rightPk,
-          txnId = Some(s"vtjsync_${lt}_$rt"),
-          tombstoneCol = Some("_vt_del")): Unit
-        Some(((lv, lt), (rv, rt)))
+        try {
+          checkShapes(
+            dl.drop("_change_type", "_commit_version"),
+            dr.drop("_change_type", "_commit_version"),
+            on, leftPk, rightPk)
+          // a side whose version did not move contributes no lane at
+          // all — the other snapshot is never even planned
+          val lanes = Seq(
+            // lane 1: ΔL ⋈ R@new (right snapshot pruned by ΔL's keys)
+            if (lt > lv) Some(laneJoin(spark, dl, rightPath, rt,
+              on, deltaIsLeft = true).withColumn("_lane", lit(1)))
+            else None,
+            // lane 2: L@old ⋈ ΔR (left snapshot at the PREVIOUS sync)
+            if (rt > rv) Some(laneJoin(spark, dr, leftPath, lv,
+              on.map(_.swap), deltaIsLeft = false)
+              .withColumn("_lane", lit(0)))
+            else None).flatten
+          val pk = (leftPk ++ rightPk).map(col)
+          val w = Window.partitionBy(pk: _*).orderBy(
+            col("_lane").desc, col("_cv").desc,
+            when(col("_ct") === "insert", 1).otherwise(0).desc)
+          val actions = lanes.reduce(_.unionByName(_))
+            .withColumn("_rn", row_number().over(w))
+            .where(col("_rn") === 1)
+            .withColumn("_vt_del", col("_ct") === "delete")
+            .drop("_rn", "_lane", "_cv", "_ct")
+          VersionedTable.mergeInto(spark, viewPath, actions,
+            keys = leftPk ++ rightPk,
+            txnId = Some(s"vtjsync_${lt}_$rt"),
+            tombstoneCol = Some("_vt_del")): Unit
+          Some(((lv, lt), (rv, rt)))
+        // the merge has consumed the deltas: drop their blocks
+        } finally Seq(dl, dr).foreach(Bridge.releaseCheckpoint)
     }
   }
 

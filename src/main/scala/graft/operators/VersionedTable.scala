@@ -901,14 +901,25 @@ object VersionedTable {
       s"mergeInto: source lacks tombstone column $tombstoneCol")
     require(tombstoneCol.forall(c => !keys.contains(c)),
       s"mergeInto: tombstone column $tombstoneCol cannot be a key")
-    val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
     // One stable snapshot of the (delta-sized) source: it is consumed
     // by the uniqueness check, the span aggregate, the discovery join,
     // the rewrite, and possibly a retry — recomputing a non-
     // deterministic source per consumer would un-serialize the merge.
+    // Released once the merge has committed (or given up).
     val src = source.localCheckpoint()
+    try mergeSnapshot(spark, path, src, keys, txnId, maxRetries,
+      tombstoneCol, clusterBy, pendingTxn, deletionVectors)
+    finally org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(src)
+  }
+
+  /** [[mergeInto]] over its checkpointed source `src`. */
+  private def mergeSnapshot(spark: SparkSession, path: String,
+      src: DataFrame, keys: Seq[String], txnId: Option[String],
+      maxRetries: Int, tombstoneCol: Option[String], clusterBy: Seq[String],
+      pendingTxn: Option[String], deletionVectors: Boolean): Int = {
+    val root = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
     val nonNullKeys = keys.map(col(_).isNotNull).reduce(_ && _)
     // FUSED DELTA PROFILE — one bounded job where the unfused path ran
     // four (empty probe, uniqueness check, span aggregate, bloom-key
@@ -2057,8 +2068,7 @@ object VersionedTable {
     val header = readHeader(fs, root, v)
     requireVisible(fs, path, v, header)
     val entries = readEntries(spark, path, v)
-    if (entries.isEmpty) spark.createDataFrame(
-      new java.util.ArrayList[Row](), decodeSchema(header.schemaJson))
+    if (entries.isEmpty) emptyOf(spark, header.schemaJson)
     else maskedRead(spark, header.schemaJson, path, entries)
   }
 
@@ -3182,8 +3192,15 @@ object VersionedTable {
     * Cost is mode-aware and O(touched), never O(table) where the
     * commit itself wasn't:
     *   - append   → the added files, all 'insert' (no diff at all)
-    *   - delete/merge → `exceptAll` over rewritten-old vs replacement
-    *     files — the touched set the commit already bounded
+    *   - delete/merge → files only one side references are read as
+    *     that side's rows (an `exceptAll` only when a copy-on-write
+    *     rewrite put files on both sides); files whose deletion vector
+    *     changed are ONE masked scan: a row is a delete when the new
+    *     broadcast mask kills it and the old one did not, an insert
+    *     (a restore) the other way round — no shuffle, no join. Past
+    *     [[dvBroadcastMaxPositions]] the masks fall back to the
+    *     sidecar-frame diff (semi-joins at the `exceptAll`'d
+    *     positions), as [[maskedRead]] does
     *   - optimize → empty by invariant (content-invisible), zero I/O
     *   - overwrite → full delete(v−1) ∪ insert(v), the honest cost of
     *     asking "what changed" about a table replacement
@@ -3202,7 +3219,9 @@ object VersionedTable {
     def tagged(df: DataFrame, tpe: String): DataFrame =
       df.withColumn("_change_type", lit(tpe))
         .withColumn("_commit_version", lit(version))
-    val cur = read(spark, path, Some(version))
+    // shapes come from the recorded schema: the version's rows (and
+    // with them its masks) are read only where the feed IS its rows
+    val none = tagged(emptyOf(spark, header.schemaJson), "insert")
     // the diff base is the previous VISIBLE version (an aborted
     // multi-table pending is a hole, not a predecessor)
     val prevV = prevVisible(fs, root, live, version)
@@ -3212,7 +3231,8 @@ object VersionedTable {
       // live) the whole content IS the insert set; an EXPIRED earlier
       // history is the unrecoverable case (the log only loses a
       // prefix).
-      if (version == 0 || live.head == 0) return tagged(cur, "insert")
+      if (version == 0 || live.head == 0)
+        return tagged(read(spark, path, Some(version)), "insert")
       throw new VersionExpiredException(
         s"the visible predecessor of v$version at $path has been " +
           "expired — the change feed is unrecoverable; re-baseline")
@@ -3221,52 +3241,77 @@ object VersionedTable {
       case "append" =>
         val before = files(spark, path, prevV.get).toSet
         val added = files(spark, path, version).filterNot(before)
-        if (added.isEmpty) tagged(cur.limit(0), "insert")
+        if (added.isEmpty) none
         else tagged(schemaRead(spark, header.schemaJson,
           added.map(n => s"$path/$n")), "insert")
       case "optimize" | "alter" =>
         // content-invisible by construction: no row changed (a column
         // DDL reshapes the schema, not the rows — consumers pick the
         // new shape up from the version's recorded schema)
-        tagged(cur.limit(0), "insert")
+        none
       case "overwrite" =>
         // the replacement may have RESHAPED the schema: align by name,
         // null-filling columns either side lacks
         tagged(read(spark, path, Some(prevV.get)), "delete")
-          .unionByName(tagged(cur, "insert"), allowMissingColumns = true)
+          .unionByName(tagged(read(spark, path, Some(version)), "insert"),
+            allowMissingColumns = true)
       case _ => // delete / merge: diff ONLY the touched entries
         val beforeE = readEntries(spark, path, prevV.get)
         val afterE = readEntries(spark, path, version)
         val beforeM = beforeE.map(e => e.name -> e).toMap
         val afterM = afterE.map(e => e.name -> e).toMap
+        val cols = decodeSchema(header.schemaJson).fieldNames.toSeq
+        val parts = Seq.newBuilder[DataFrame]
         // name-level rewrites (file replaced or dropped outright),
-        // masked under each side's own vectors
+        // masked under each side's own vectors. A one-sided diff is
+        // that side (X ∖ ∅ = X): only a copy-on-write rewrite, with
+        // files on both sides, pays the multiset diff.
         val oldOnly = beforeE.filterNot(e => afterM.contains(e.name))
         val newOnly = afterE.filterNot(e => beforeM.contains(e.name))
-        val cols = decodeSchema(header.schemaJson).fieldNames.toSeq
         def rd(es: Seq[FileEntry]) =
-          if (es.isEmpty) cur.limit(0).select(cols.map(col): _*)
-          else maskedRead(spark, header.schemaJson, path, es)
+          maskedRead(spark, header.schemaJson, path, es)
             .select(cols.map(col): _*)
-        val removed = rd(oldOnly).exceptAll(rd(newOnly))
-        val added = rd(newOnly).exceptAll(rd(oldOnly))
+        if (newOnly.isEmpty) {
+          if (oldOnly.nonEmpty) parts += tagged(rd(oldOnly), "delete")
+        } else if (oldOnly.isEmpty) parts += tagged(rd(newOnly), "insert")
+        else {
+          parts += tagged(rd(oldOnly).exceptAll(rd(newOnly)), "delete")
+          parts += tagged(rd(newOnly).exceptAll(rd(oldOnly)), "insert")
+        }
         // DV transitions on files present in BOTH versions: positions
         // the new vector added are row deletes; positions it dropped
         // (a restore) are row inserts — read ONLY those rows, by
         // coordinate, never a content diff
         val dvChanged = afterE.filter(e =>
           beforeM.get(e.name).exists(b => b.dv != e.dv))
-        val (dvRemoved, dvAdded) =
-          if (dvChanged.isEmpty)
-            (rd(Seq.empty), rd(Seq.empty))
-          else {
-            // positions ride the raw PHYSICAL scan (metadata columns
-            // do not survive logicalize's projection over a
-            // column-mapped schema — the maskedReadWithPos discipline),
-            // then the frame is aliased back to logical names with the
-            // identity columns kept.
-            val base0 = physicalScan(spark, header.schemaJson,
-              dvChanged.map(e => s"$path/${e.name}"))
+        if (dvChanged.nonEmpty) {
+          val prevDv = dvChanged.map(e => beforeM(e.name))
+            .filter(_.dv.nonEmpty)
+          val curDv = dvChanged.filter(_.dv.nonEmpty)
+          def positions(es: Seq[FileEntry]) =
+            es.map(e => math.max(e.dv.get._2, 0L)).sum
+          // positions ride the raw PHYSICAL scan (metadata columns
+          // do not survive logicalize's projection over a
+          // column-mapped schema — the maskedReadWithPos discipline),
+          // then the frame is aliased back to logical names with the
+          // identity columns kept.
+          val base0 = physicalScan(spark, header.schemaJson,
+            dvChanged.map(e => s"$path/${e.name}"))
+          if (math.max(positions(prevDv), positions(curDv)) <=
+              dvBroadcastMaxPositions(spark)) {
+            // one scan: a row changed iff exactly one of the two
+            // cached broadcast masks kills it
+            def survives(es: Seq[FileEntry]) =
+              if (es.isEmpty) lit(true) else dvSurvivesCol(spark, path, es)
+            val (was, is) = (survives(prevDv), survives(curDv))
+            val Seq(typeC) = freshCols(base0.columns.toSeq ++ cols,
+              Seq("__graft_dv_change"))
+            parts += logicalize(base0.where(was =!= is)
+              .withColumn(typeC, when(is, "insert").otherwise("delete")),
+              header.schemaJson, keep = Seq(typeC))
+              .select(cols.map(col) :+ col(typeC).as("_change_type"): _*)
+              .withColumn("_commit_version", lit(version))
+          } else {
             val Seq(fileC, posC) = freshCols(
               base0.columns.toSeq ++ cols,
               Seq("__graft_dv_file", "__graft_dv_pos"))
@@ -3279,23 +3324,20 @@ object VersionedTable {
             // a pre-fix sidecar carrying a (file, pos) twice must not
             // make multiplicities diverge between the two masks and
             // re-emit long-dead rows as phantom CDC events.
-            def mask(es: Seq[FileEntry]) = {
-              val dved = es.filter(_.dv.nonEmpty)
+            def mask(dved: Seq[FileEntry]) =
               if (dved.isEmpty)
                 base.limit(0).select(col(fileC), col(posC))
               else dvMask(spark, path, dved, fileC, posC)
                 .dropDuplicates(fileC, posC)
-            }
-            val prevMask = mask(dvChanged.map(e => beforeM(e.name)))
-            val curMask = mask(dvChanged)
+            val (prevMask, curMask) = (mask(prevDv), mask(curDv))
             def at(pos: DataFrame) =
               base.join(pos, Seq(fileC, posC), "left_semi")
                 .select(cols.map(col): _*)
-            (at(curMask.exceptAll(prevMask)),
-              at(prevMask.exceptAll(curMask)))
+            parts += tagged(at(curMask.exceptAll(prevMask)), "delete")
+            parts += tagged(at(prevMask.exceptAll(curMask)), "insert")
           }
-        tagged(removed.unionByName(dvRemoved), "delete")
-          .unionByName(tagged(added.unionByName(dvAdded), "insert"))
+        }
+        parts.result().reduceOption(_.unionByName(_)).getOrElse(none)
     }
   }
 
@@ -3329,7 +3371,7 @@ object VersionedTable {
         // empty window: an up-to-date poller must get a schema-shaped
         // empty feed, never a probe of `to`'s (possibly expired)
         // predecessor
-        read(spark, path, Some(to)).limit(0)
+        emptyOf(spark, readHeader(fs, root, to).schemaJson)
           .withColumn("_change_type", lit(""))
           .withColumn("_commit_version", lit(to))
       }
@@ -4229,6 +4271,11 @@ object VersionedTable {
         keep.map(col): _*)
   }
 
+  /** The schema's LOGICAL shape with no rows — no scan, no job. */
+  private def emptyOf(spark: SparkSession, schemaJson: String): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](),
+      decodeSchema(schemaJson))
+
   /** Parquet scan of `paths` in the schema's LOGICAL shape. */
   private def schemaRead(spark: SparkSession, schemaJson: String,
       paths: Seq[String]): DataFrame =
@@ -4277,10 +4324,21 @@ object VersionedTable {
         .find(n => !existing.contains(n)).get
     }
 
+  /** The one schema every DV sidecar is written in. */
+  private val DvSidecarSchema = StructType(Seq(
+    StructField("file", StringType), StructField("pos", LongType)))
+
+  /** A sidecar read with [[DvSidecarSchema]]: no footer-inference job. */
+  private def readSidecar(spark: SparkSession, path: String,
+      sidecar: String): DataFrame =
+    spark.read.schema(DvSidecarSchema).parquet(s"$path/$sidecar")
+
   /** The deleted (file, pos) pairs of `dved`'s deletion vectors, as a
     * frame keyed by the caller's column names. Sidecars are ordinary
-    * delta-sized parquet — the anti-join below auto-broadcasts off
-    * their file-source size stats, and a pathologically large vector
+    * delta-sized parquet of `(file STRING, pos BIGINT)`, read with
+    * that fixed schema ([[readSidecar]]), never inferred per read — the
+    * anti-join below auto-broadcasts off their file-source size stats,
+    * and a pathologically large vector
     * (delete-most-of-the-table, which should have been a rewrite)
     * degrades to a shuffle join, never a wrong answer.
     *
@@ -4302,7 +4360,7 @@ object VersionedTable {
     import spark.implicits._
     dved.groupBy(_.dv.get._1).toSeq.sortBy(_._1).map {
       case (sidecar, es) =>
-        val base = spark.read.parquet(s"$path/$sidecar")
+        val base = readSidecar(spark, path, sidecar)
         if (es.size <= 1000)
           base.where(col("file").isin(es.map(_.name): _*))
         else
@@ -4328,8 +4386,8 @@ object VersionedTable {
 
   /** Driver-side mask for the broadcast lane: bare file name → sorted
     * deleted positions. Same per-referencing-entry sidecar restriction
-    * as [[dvMask]]; in-sidecar duplicates (pre-fix history) collapse
-    * via the distinct. */
+    * and fixed-schema read as [[dvMask]]; in-sidecar duplicates
+    * (pre-fix history) collapse via the distinct. */
   private def collectDvMasks(spark: SparkSession, path: String,
       dved: Seq[FileEntry]): Map[String, Array[Long]] =
     dved.groupBy(_.dv.get._1).toSeq.sortBy(_._1)
@@ -4340,8 +4398,7 @@ object VersionedTable {
         // REQUESTED entries mask — collecting the whole sidecar first
         // would let an unrequested tenant blow the driver
         val names = es.map(_.name)
-        val base = spark.read.parquet(s"$path/$sidecar")
-          .select("file", "pos")
+        val base = readSidecar(spark, path, sidecar)
         val mine =
           if (names.size <= 1000) base.where(col("file").isin(names: _*))
           else {
@@ -4366,19 +4423,27 @@ object VersionedTable {
   private val dvMaskCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]]]()
 
-  /** The broadcast-mask filter Column over a physical scan: TRUE for
-    * rows whose `(_metadata.file_path, _metadata.row_index)` is not
-    * deleted. */
-  private def dvSurvivesCol(spark: SparkSession, path: String,
-      dved: Seq[FileEntry]): Column = {
+  /** `dved`'s broadcast mask, from [[dvMaskCache]] (collected and
+    * broadcast on a miss). */
+  private def dvMaskBroadcast(spark: SparkSession, path: String,
+      dved: Seq[FileEntry])
+      : org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]] = {
     val key = spark.sparkContext.applicationId + "@" +
       spark.sparkContext.startTime + "|" + path + "|" +
       dved.groupBy(_.dv.get._1).toSeq.sortBy(_._1).map { case (sc, es) =>
         sc + ":" + es.map(_.name).sorted.mkString(",")
       }.mkString(";")
     if (dvMaskCache.size > 64) dvMaskCache.clear()
-    val bc = dvMaskCache.computeIfAbsent(key, _ =>
+    dvMaskCache.computeIfAbsent(key, _ =>
       spark.sparkContext.broadcast(collectDvMasks(spark, path, dved)))
+  }
+
+  /** The broadcast-mask filter Column over a physical scan: TRUE for
+    * rows whose `(_metadata.file_path, _metadata.row_index)` is not
+    * deleted. */
+  private def dvSurvivesCol(spark: SparkSession, path: String,
+      dved: Seq[FileEntry]): Column = {
+    val bc = dvMaskBroadcast(spark, path, dved)
     val B = org.apache.spark.sql.graftbridge.Bridge
     B.column(graft.functions.DvSurvives(
       B.expression(col("_metadata.file_path")),

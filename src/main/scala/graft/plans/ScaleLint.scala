@@ -43,9 +43,14 @@ object ScaleLint extends Rule[LogicalPlan] {
   }
   def clear(): Unit = buf.clear()
 
-  /** Runtime attachment (public API; survives session reuse). */
+  /** Runtime attachment (public API; survives session reuse). A no-op
+    * on a session built with `graft.GraftExtensions`, which already runs
+    * the lint in AQE's runtime optimizer: a second copy would lint every
+    * query twice, at two placements. */
   def attach(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
+    if (!spark.conf.getOption("spark.sql.extensions").exists(
+          _.split(",").map(_.trim).contains("graft.GraftExtensions")) &&
+        !spark.experimental.extraOptimizations.contains(this))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ this
 

@@ -26,6 +26,18 @@ object Bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
 
+  /** Drop the blocks a `localCheckpoint` pinned; a frame that is not a
+    * checkpoint is left alone. `SparkContext.unpersistRDD` is
+    * private[spark]: unlike `RDD.unpersist` it does not warn that a
+    * local checkpoint cannot be recomputed, which is the intent here. */
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+      case _ =>
+    }
+
   /** Unload every state-store provider a stopped streaming query left
     * in the JVM-wide registry (StateStore.unloadAll is private[sql]).
     * Bench calls this between measurements so stale in-memory state

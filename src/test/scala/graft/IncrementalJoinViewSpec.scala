@@ -175,6 +175,31 @@ class IncrementalJoinViewSpec extends AnyFunSuite {
     assert(viewSet(v) == expected(l, r))
   }
 
+  test("sync releases every checkpoint it pins: 20 syncs, no growth") {
+    val d = tmpDir()
+    val (l, r, v) = (new java.io.File(d, "l").getAbsolutePath,
+      new java.io.File(d, "r").getAbsolutePath,
+      new java.io.File(d, "v").getAbsolutePath)
+    VersionedTable.commit(left(Seq((1L, 10L, "a"))), l, overwrite = true)
+    VersionedTable.commit(right(Seq((10L, "alice"), (20L, "bob"))), r,
+      overwrite = true)
+    val on = Seq("o_cust" -> "c_id")
+    IncrementalJoinView.sync(spark, v, l, r, on, Seq("o_id"), Seq("c_id"))
+    val start = spark.sparkContext.getPersistentRDDs.size
+    (1 to 20).foreach { i =>
+      // left-only, right-only and both-sides windows in turn
+      if (i % 3 != 2) VersionedTable.commit(
+        left(Seq((100L + i, 10L + 10L * (i % 2), s"t$i"))), l,
+        overwrite = false)
+      if (i % 3 != 1) VersionedTable.mergeInto(spark, r,
+        right(Seq((20L, s"bob$i"))), Seq("c_id"))
+      IncrementalJoinView.sync(spark, v, l, r, on, Seq("o_id"), Seq("c_id"))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == start,
+      spark.sparkContext.getPersistentRDDs.values.map(_.toDebugString.take(300)))
+    assert(viewSet(v) == expected(l, r))
+  }
+
   test("randomized differential: any verb mix equals the full recompute") {
     val rnd = new scala.util.Random(0x60 + 11)
     val d = tmpDir()

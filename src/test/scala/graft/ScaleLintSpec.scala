@@ -102,6 +102,12 @@ class ScaleLintSpec extends AnyFunSuite
     assert(viaMixed.exists(_.kind == "unclustered-partitioned-write"), viaMixed)
   }
 
+  test("attach adds no second copy on a GraftExtensions session") {
+    // the preset already runs the lint in AQE's runtime optimizer
+    assert(!spark.experimental.extraOptimizations.contains(ScaleLint),
+      spark.experimental.extraOptimizations)
+  }
+
   test("the engine's own ranking operators stay lint-clean") {
     val df = (1 to 1000).map(i => (i.toLong, s"r$i")).toDF("v", "s")
     val fs = lint {
