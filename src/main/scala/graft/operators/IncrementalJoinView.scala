@@ -121,6 +121,9 @@ object IncrementalJoinView {
         // independent reads of different tables — overlap them
         // (guide-§2.6 back-fill; actions are only sequential because
         // the driver calls them sequentially).
+        // Both are awaited even when one fails, so no job outlives the
+        // call and a side that did materialize is released before the
+        // failure surfaces.
         val (dl, dr) =
           if (lt > lv && rt > rv) {
             import scala.concurrent.{Await, Future}
@@ -128,7 +131,14 @@ object IncrementalJoinView {
             import scala.concurrent.ExecutionContext.Implicits.global
             val fl = Future(dl0.localCheckpoint())
             val fr = Future(dr0.localCheckpoint())
-            (Await.result(fl, Duration.Inf), Await.result(fr, Duration.Inf))
+            val sides = Seq(fl, fr).map(f => Await.ready(f, Duration.Inf)
+              .value.get)
+            sides.collectFirst { case scala.util.Failure(e) => e }.foreach {
+              e =>
+                sides.foreach(_.foreach(Bridge.releaseCheckpoint))
+                throw e
+            }
+            (sides(0).get, sides(1).get)
           }
           else (if (lt > lv) dl0.localCheckpoint() else dl0,
                 if (rt > rv) dr0.localCheckpoint() else dr0)

@@ -8,7 +8,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.WriteHarvest
+import org.apache.spark.sql.graftbridge.{Bridge, WriteHarvest}
 import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType, StructField, StructType}
 
 /** Versioned parquet table with a commit log and time-travel reads —
@@ -565,6 +565,165 @@ object VersionedTable {
     attempt(v0, Seq.empty, Seq.empty, maxRetries)
   }
 
+  /** One attempt's base in [[commitRewrite]]: the latest visible
+    * version `v`, its header, and the commit slot `v2` taken from the
+    * SAME listing (see [[latestVisibleIn]]). */
+  private[graft] final class WriteBase(val spark: SparkSession,
+      val path: String, val fs: FileSystem, val root: Path, val v: Int,
+      val v2: Int, val header: ManifestHeader) {
+    lazy val entries: Seq[FileEntry] = readEntries(spark, path, v)
+    def schemaJson: String = header.schemaJson
+    private[VersionedTable] val pinned =
+      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    /** `df.localCheckpoint()` for this attempt only: the core releases
+      * it when the attempt ends — committed, lost or thrown. */
+    def pin(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint()
+      pinned += c
+      c
+    }
+  }
+
+  /** What one attempt commits on top of its base: the entries it
+    * keeps (carried by reference, or re-masked by [[applyDvPositions]]),
+    * the DV sidecars it published, and the frame it stages as new files
+    * (already shaped to its output-file count). Restore and column DDL
+    * record their own schema and stats columns; every other verb
+    * inherits the base's. */
+  private[graft] final case class Change(keep: Seq[FileEntry],
+      sidecars: Seq[String] = Seq.empty, stage: Option[DataFrame] = None,
+      schemaJson: Option[String] = None,
+      statsCols: Option[Seq[String]] = None)
+
+  /** THE write core of every versioned-table rewrite — delete, update,
+    * merge, replaceWhere, restore, column DDL and the OPTIMIZE family.
+    * One attempt:
+    *   1. list the log once; a `txnId` that already landed returns its
+    *      version (replay no-op);
+    *   2. base = the latest DECIDED version of that listing (an
+    *      undecided multi-table pending refuses — the lost-update
+    *      guard), slot = the listing's last + 1;
+    *   3. `change(base)` is the verb proper — discovery and validation
+    *      against the base; None means nothing to do and returns the
+    *      base untouched;
+    *   4. STAGE + PUBLISH its frame under the slot, then COMMIT the
+    *      manifest (kept entries ++ staged ones). A won commit
+    *      refreshes the txn checkpoint — except a multi-table pending,
+    *      which the checkpoint indexes once its txn decides.
+    *
+    * A LOST race deletes everything the attempt published (data files
+    * and sidecars) and, in the retrying mode, re-runs the whole attempt
+    * against the winner's version: unlike a blind append, a rewrite's
+    * kept set depends on data the winner may have changed, so
+    * re-running discovery is the only serializable retry. After
+    * `maxRetries` losses it gives up loudly ("`verb` at `path` lost the
+    * manifest race"). `advisory` (maintenance) makes ONE attempt: a
+    * loss returns the base version — packing is never worth a retry
+    * loop against live commits. Every checkpoint the attempt
+    * [[WriteBase.pin]]ned is released when the attempt ends, however it
+    * ends. `onBeforeManifestCommit` is the spec seam between PUBLISH
+    * and COMMIT, as in [[commitImpl]]. */
+  private[graft] def commitRewrite(spark: SparkSession, path: String,
+      mode: String, verb: String, txnId: Option[String] = None,
+      maxRetries: Int = 5, pendingTxn: Option[String] = None,
+      advisory: Boolean = false,
+      onBeforeManifestCommit: () => Unit = () => ())(
+      change: WriteBase => Option[Change]): Int = {
+    val root = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
+    var triesLeft = maxRetries
+    while (true) {
+      val nums = listVersionNumbers(fs, root)
+      txnId.foreach { t =>
+        findTxn(fs, root, nums, t).foreach(w => return w)
+      }
+      val v = latestVisibleIn(fs, root, nums, forWrite = true)
+        .getOrElse(
+          throw new IllegalStateException(s"no committed versions at $path"))
+      // slot from the SAME listing as the base (latestVisibleIn doc):
+      // holes between them are decided-aborted and can never revive
+      val b = new WriteBase(spark, path, fs, root, v,
+        math.max(v, nums.lastOption.getOrElse(-1)) + 1,
+        readHeader(fs, root, v))
+      val won =
+        try change(b) match {
+          case None => return v
+          case Some(c) =>
+            val cols = c.statsCols.getOrElse(
+              resolveStatsCols(Some(b.header), Seq.empty))
+            val staged = c.stage.map(stageAndPublish(_, fs, root, b.v2,
+              cols, Some(b.schemaJson)))
+            val fresh = staged.map(entriesOf(_, spark, fs, conf, root,
+              Some(b.schemaJson))).getOrElse(Seq.empty)
+            onBeforeManifestCommit()
+            val ok = tryWriteManifest(fs, root, b.v2, mode, txnId, cols,
+              c.schemaJson.getOrElse(b.schemaJson), c.keep ++ fresh,
+              pendingTxn = pendingTxn)
+            if (ok) {
+              if (pendingTxn.isEmpty) maybeCheckpoint(fs, root, b.v2)
+            } else // vacuum-class debris, swept eagerly
+              (c.sidecars ++ staged.toSeq.flatMap(_.names))
+                .foreach(n => fs.delete(new Path(root, n), false))
+            ok
+        } finally b.pinned.foreach(Bridge.releaseCheckpoint)
+      if (won) return b.v2
+      if (advisory) return v
+      triesLeft -= 1
+      if (triesLeft < 0) throw new IllegalStateException(
+        s"$verb at $path lost the manifest race $maxRetries times — " +
+          "giving up")
+    }
+    -1 // unreachable
+  }
+
+  /** What a DML attempt's discovery found against its base. */
+  private[graft] sealed trait Found { def isEmpty: Boolean }
+  /** Deletion vectors: the pinned hit rows, counted per file — the
+    * counts, the sidecar and any post-image read the same pinned set,
+    * so they can't diverge. */
+  private[graft] final case class DvHits(rows: DataFrame, fileC: String,
+      posC: String, perFile: Map[String, Long]) extends Found {
+    def isEmpty: Boolean = perFile.isEmpty
+  }
+  /** Copy-on-write: the files holding a hit, and the rest, carried. */
+  private[graft] final case class CowFiles(rewrite: Seq[FileEntry],
+      carried: Seq[FileEntry]) extends Found {
+    def isEmpty: Boolean = rewrite.isEmpty
+  }
+
+  /** One discovery pass over `hits` — a masked probe of the base
+    * carrying its (file, pos) identity columns: DV pins the hits and
+    * counts them per file, COW lists the files they touch. */
+  private[graft] def discover(b: WriteBase, deletionVectors: Boolean,
+      hits: DataFrame, fileC: String, posC: String): Found =
+    if (!deletionVectors) touchedSplit(b, hits, fileC)
+    else {
+      val rows = b.pin(hits)
+      DvHits(rows, fileC, posC, rows.groupBy(col(fileC)).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+    }
+
+  private def touchedSplit(b: WriteBase, hits: DataFrame,
+      fileC: String): CowFiles = {
+    val touched = hits.select(col(fileC)).distinct()
+      .collect().map(_.getString(0)).toSet
+    val (rewrite, carried) = b.entries.partition(e => touched(e.name))
+    CowFiles(rewrite, carried)
+  }
+
+  /** The entries a DML commit keeps and the sidecars it published: DV
+    * masks the hits in one sidecar (every file stays, re-pointed, or
+    * drops when fully dead); COW keeps the untouched files. */
+  private[graft] def kept(b: WriteBase,
+      f: Found): (Seq[FileEntry], Seq[String]) = f match {
+    case DvHits(rows, fileC, posC, perFile) =>
+      applyDvPositions(b.spark, b.fs, b.root, b.path, b.entries,
+        rows.select(col(fileC).as("file"), col(posC).as("pos")),
+        perFile, b.v2)
+    case CowFiles(_, carried) => (carried, Seq.empty)
+  }
+
   /** Row-level DELETE as a NEW VERSION (the [[TargetedDelete]]
     * semantics lifted onto the commit log): rewrite ONLY the files
     * that contain a matching row, carry every untouched file forward
@@ -580,11 +739,7 @@ object VersionedTable {
     * parquet footer stats and bloom filters prune it the same way they
     * prune any read. Returns the new version, or the CURRENT version
     * untouched when nothing matches (a no-op delete commits nothing).
-    *
-    * On a manifest-race loss the whole delete restarts (bounded):
-    * unlike a blind append, its carried set and rewrites depend on
-    * data a concurrent winner may have changed, so re-running
-    * discovery is the only serializable retry.
+    * A lost manifest race re-runs discovery ([[commitRewrite]]).
     *
     * `deletionVectors = true` commits the delete as DV SIDECARS
     * instead of rewriting: every touched file carries forward BY NAME
@@ -606,82 +761,30 @@ object VersionedTable {
   def deleteWhere(spark: SparkSession, path: String, predicate: Column,
       txnId: Option[String] = None, maxRetries: Int = 5,
       pendingTxn: Option[String] = None,
-      deletionVectors: Boolean = false): Int = {
-    val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
-    var triesLeft = maxRetries
-    while (true) {
-      val nums = listVersionNumbers(fs, root)
-      txnId.foreach { t =>
-        findTxn(fs, root, nums, t).foreach(v => return v)
-      }
-      val v = latestVisibleIn(fs, root, nums, forWrite = true)
-        .getOrElse(
-          throw new IllegalStateException(s"no committed versions at $path"))
-      val entries = readEntries(spark, path, v)
-      if (entries.isEmpty) return v
-      val header = readHeader(fs, root, v)
-      // discovery reads MASKED with (file, pos) identity: a row an
-      // earlier vector already deleted can be neither touched nor
-      // re-deleted
-      val (probe, fileC, posC) =
-        maskedReadWithPos(spark, header.schemaJson, path, entries)
-      val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-      val cols = resolveStatsCols(Some(header), Seq.empty)
-      val published: Seq[String] =
-        if (deletionVectors) {
-          // one scan finds the hit positions; localCheckpoint pins the
-          // delta-sized hit set so the count-aggregate and the sidecar
-          // write don't re-scan the table (and can't diverge)
-          val hits = probe.where(predicate)
-            .select(col(fileC).as("file"), col(posC).as("pos"))
-            .localCheckpoint()
-          val perFile = hits.groupBy("file").count().collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          if (perFile.isEmpty) return v
-          val (newEntries, side) = applyDvPositions(spark, fs, root,
-            path, entries, hits, perFile, v2)
-          if (tryWriteManifest(fs, root, v2, "delete", txnId, cols,
-              header.schemaJson, newEntries, pendingTxn = pendingTxn)) {
-            if (pendingTxn.isEmpty) maybeCheckpoint(fs, root, v2)
-            return v2
-          }
-          side
-        } else {
-          val touched = probe.where(predicate)
-            .select(col(fileC)).distinct()
-            .collect().map(_.getString(0)).toSet
-          if (touched.isEmpty) return v
-          val (rewrite, carried) = entries.partition(e => touched(e.name))
-          val survivors =
-            maskedRead(spark, header.schemaJson, path, rewrite)
-              .where(!coalesce(predicate, lit(false)))
-          // slot from the SAME listing as the base (latestVisibleIn
-          // doc): holes between them are decided-aborted, never revive
-          val st = stageAndPublish(survivors, fs, root, v2, cols,
-            Some(header.schemaJson))
-          val pub = st.names
-          val newEntries = entriesOf(st, spark, fs, conf, root,
-            Some(header.schemaJson))
-          if (tryWriteManifest(fs, root, v2, "delete", txnId, cols,
-              header.schemaJson, carried ++ newEntries,
-              pendingTxn = pendingTxn)) {
-            if (pendingTxn.isEmpty) maybeCheckpoint(fs, root, v2)
-            return v2
-          }
-          pub
+      deletionVectors: Boolean = false): Int =
+    commitRewrite(spark, path, "delete", "versioned delete", txnId,
+        maxRetries, pendingTxn) { b =>
+      if (b.entries.isEmpty) None
+      else {
+        // discovery reads MASKED with (file, pos) identity: a row an
+        // earlier vector already deleted can be neither touched nor
+        // re-deleted
+        val (probe, fileC, posC) =
+          maskedReadWithPos(spark, b.schemaJson, path, b.entries)
+        val found = discover(b, deletionVectors,
+          probe.where(predicate).select(col(fileC), col(posC)), fileC, posC)
+        if (found.isEmpty) None
+        else {
+          val (keep, side) = kept(b, found)
+          Some(Change(keep, side, found match {
+            case CowFiles(rewrite, _) => Some(
+              maskedRead(spark, b.schemaJson, path, rewrite)
+                .where(!coalesce(predicate, lit(false))))
+            case _ => None // DV: the sidecar is the whole write
+          }))
         }
-      // lost the race: drop our writes (vacuum-class debris swept
-      // eagerly) and re-run discovery against the winner's version
-      published.foreach(n => fs.delete(new Path(root, n), false))
-      triesLeft -= 1
-      if (triesLeft < 0) throw new IllegalStateException(
-        s"versioned delete at $path lost the manifest race " +
-          s"$maxRetries times — giving up")
+      }
     }
-    -1 // unreachable
-  }
 
   /** Row-level UPDATE ... SET ... WHERE as a versioned commit — the
     * everyday mutation between [[deleteWhere]] (remove matching rows)
@@ -693,9 +796,10 @@ object VersionedTable {
     * a match are rewritten (one discovery scan, footer-pruned like any
     * read); everything else carries into the new version BY REFERENCE.
     * The prior version stays time-travelable; `txnId` replays no-op;
-    * a lost manifest race restarts discovery (the serializable retry —
-    * the touched set depends on data a concurrent winner may have
-    * changed).
+    * a lost manifest race re-runs discovery ([[commitRewrite]]).
+    * `deletionVectors = true` masks the pre-images and APPENDS the
+    * post-images instead of rewriting the touched files: an
+    * off-cluster UPDATE writes O(updated rows), never O(touched bytes).
     *
     * Contract: `set` keys must be existing table columns and each
     * expression must keep its column's recorded TYPE (an UPDATE that
@@ -714,144 +818,105 @@ object VersionedTable {
       pendingTxn: Option[String] = None,
       deletionVectors: Boolean = false): Int = {
     require(set.nonEmpty, "updateWhere: empty SET clause")
-    val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
-    var triesLeft = maxRetries
-    while (true) {
-      val nums = listVersionNumbers(fs, root)
-      txnId.foreach { t =>
-        findTxn(fs, root, nums, t).foreach(v => return v)
-      }
-      val v = latestVisibleIn(fs, root, nums, forWrite = true)
-        .getOrElse(
-          throw new IllegalStateException(s"no committed versions at $path"))
-      val entries = readEntries(spark, path, v)
-      if (entries.isEmpty) return v
-      val header = readHeader(fs, root, v)
-      val tableSchema = decodeSchema(header.schemaJson)
-      val tableCols = tableSchema.fieldNames.toSeq
-      val missing = set.keys.filterNot(tableCols.contains)
-      require(missing.isEmpty,
-        s"updateWhere: SET targets non-existent column(s) " +
-          s"${missing.mkString(",")} — schema evolution goes through " +
-          "commit(), not UPDATE")
-      // masked discovery + masked rewrite base: a DV-deleted row can
-      // neither touch a file nor be resurrected by the rewrite
-      val (probe, probeFileC, probePosC) =
-        maskedReadWithPos(spark, header.schemaJson, path, entries)
-      if (deletionVectors) {
-        // DV update = mask the pre-images, APPEND the post-images: an
-        // off-cluster UPDATE writes O(updated rows), never O(touched
-        // bytes). One matched-row checkpoint feeds the position count,
-        // the sidecar, and the post-image — they can't diverge.
-        val hits = probe.where(predicate).localCheckpoint()
-        val perFile = hits.groupBy(col(probeFileC)).count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (perFile.isEmpty) return v
-        // post-image in ONE select over the PRE-image (every hit row
-        // satisfies the predicate, so SET applies unconditionally)
-        val post = hits.select(tableCols.map(c =>
-          set.get(c).fold(col(c))(e => e.as(c))): _*)
-        val got = post.schema.fields.map(f => f.name -> f.dataType).toMap
-        tableSchema.fields.filter(f => set.contains(f.name)).foreach { f =>
-          require(got(f.name) == f.dataType,
-            s"updateWhere: SET changes ${f.name}'s type " +
-              s"${f.dataType.simpleString} -> " +
-              s"${got(f.name).simpleString} — refuse (evolution goes " +
-              "through commit())")
+    commitRewrite(spark, path, "update", "versioned update", txnId,
+        maxRetries, pendingTxn) { b =>
+      if (b.entries.isEmpty) None
+      else {
+        val tableSchema = decodeSchema(b.schemaJson)
+        val tableCols = tableSchema.fieldNames.toSeq
+        val missing = set.keys.filterNot(tableCols.contains)
+        require(missing.isEmpty,
+          s"updateWhere: SET targets non-existent column(s) " +
+            s"${missing.mkString(",")} — schema evolution goes through " +
+            "commit(), not UPDATE")
+        // masked discovery + masked rewrite base: a DV-deleted row can
+        // neither touch a file nor be resurrected by the rewrite
+        val (probe, fileC, posC) =
+          maskedReadWithPos(spark, b.schemaJson, path, b.entries)
+        val found = discover(b, deletionVectors, probe.where(predicate),
+          fileC, posC)
+        if (found.isEmpty) None
+        else {
+          // (post-image, the rows the CHECK gate sees, output files)
+          val (post, checked, nOut) = found match {
+            case d: DvHits =>
+              // DV: the post-image of the pinned hits in ONE select over
+              // the PRE-image (every hit row satisfies the predicate, so
+              // SET applies unconditionally); it is APPENDED
+              val post = d.rows.select(tableCols.map(c =>
+                set.get(c).fold(col(c))(e => e.as(c))): _*)
+              (post, post, 1)
+            case CowFiles(rewrite, _) =>
+              val base = maskedRead(spark, b.schemaJson, path, rewrite)
+              // SET applies exactly where the predicate is TRUE (SQL
+              // UPDATE semantics — a NULL predicate leaves the row
+              // alone). ONE select computes every SET expression AND the
+              // touched flag against the PRE-IMAGE simultaneously: a
+              // chained withColumn would let `SET a=b+1, b=a+1` (or a
+              // predicate referencing a SET column) see another SET's
+              // post-image — torn updates.
+              val p = coalesce(predicate, lit(false))
+              // the flag column must not collide with a real table
+              // column of the same name (col() would be ambiguous and
+              // the whole update would fail loudly) — suffix until free
+              val touchedFlag = Iterator.from(0)
+                .map(i => if (i == 0) "__graft_preimage_touched"
+                          else s"__graft_preimage_touched_$i")
+                .find(n => !tableCols.contains(n)).get
+              val projected = base.select(
+                tableCols.map { c =>
+                  set.get(c).fold(col(c))(e => when(p, e).otherwise(col(c)))
+                    .as(c)
+                } :+ p.as(touchedFlag): _*)
+              // CHECK gate on the PRE-IMAGE touched flag: re-evaluating
+              // the predicate on the post-image would skip a row whose
+              // update moves it out of the predicate (SET price=price*10
+              // WHERE price<10 under CHECK price<=50), letting the
+              // violation commit unchecked.
+              (projected.select(tableCols.map(col): _*),
+                projected.where(col(touchedFlag))
+                  .select(tableCols.map(col): _*),
+                rewrite.size)
+          }
+          // type contract: the post-image keeps every SET column's type
+          val got = post.schema.fields.map(f => f.name -> f.dataType).toMap
+          tableSchema.fields.filter(f => set.contains(f.name)).foreach { f =>
+            require(got(f.name) == f.dataType,
+              s"updateWhere: SET changes ${f.name}'s type " +
+                s"${f.dataType.simpleString} -> " +
+                s"${got(f.name).simpleString} — refuse (evolution goes " +
+                "through commit())")
+          }
+          enforceConstraints(checked, constraintsOf(b.fs, b.root),
+            s"updateWhere post-image at $path")
+          val (keep, side) = kept(b, found)
+          Some(Change(keep, side, Some(clusterOut(post, clusterBy, nOut))))
         }
-        enforceConstraints(post, constraintsOf(fs, root),
-          s"updateWhere post-image at $path")
-        val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-        val cols = resolveStatsCols(Some(header), Seq.empty)
-        val (masked, side) = applyDvPositions(spark, fs, root, path,
-          entries,
-          hits.select(col(probeFileC).as("file"), col(probePosC).as("pos")),
-          perFile, v2)
-        val st = stageAndPublish(clusterOut(post, clusterBy, 1),
-          fs, root, v2, cols, Some(header.schemaJson))
-        val pub = st.names
-        val newEntries = entriesOf(st, spark, fs, conf, root,
-          Some(header.schemaJson))
-        if (tryWriteManifest(fs, root, v2, "update", txnId, cols,
-            header.schemaJson, masked ++ newEntries,
-            pendingTxn = pendingTxn)) {
-          if (pendingTxn.isEmpty) maybeCheckpoint(fs, root, v2)
-          return v2
-        }
-        (side ++ pub).foreach(n => fs.delete(new Path(root, n), false))
-        triesLeft -= 1
-        if (triesLeft < 0) throw new IllegalStateException(
-          s"versioned update at $path lost the manifest race " +
-            s"$maxRetries times — giving up")
-      } else {
-      val touched = probe.where(predicate)
-        .select(col(probeFileC)).distinct()
-        .collect().map(_.getString(0)).toSet
-      if (touched.isEmpty) return v
-      val (rewrite, carried) = entries.partition(e => touched(e.name))
-      val base = maskedRead(spark, header.schemaJson, path, rewrite)
-      // post-image: SET applies exactly where the predicate is TRUE
-      // (SQL UPDATE semantics — a NULL predicate leaves the row alone).
-      // ONE select computes every SET expression AND the touched flag
-      // against the PRE-IMAGE simultaneously: a chained withColumn
-      // would let `SET a=b+1, b=a+1` (or a predicate referencing a SET
-      // column) see another SET's post-image — torn updates.
-      val p = coalesce(predicate, lit(false))
-      // the flag column must not collide with a real table column of
-      // the same name (col() would be ambiguous and the whole update
-      // would fail loudly) — suffix until free
-      val touchedFlag = Iterator.from(0)
-        .map(i => if (i == 0) "__graft_preimage_touched"
-                  else s"__graft_preimage_touched_$i")
-        .find(n => !tableCols.contains(n)).get
-      val projected = base.select(
-        tableCols.map { c =>
-          set.get(c).fold(col(c))(e => when(p, e).otherwise(col(c))).as(c)
-        } :+ p.as(touchedFlag): _*)
-      val updated = projected.select(tableCols.map(col): _*)
-      // type contract: the post-image must keep every column's type
-      val got = updated.schema.fields.map(f => f.name -> f.dataType).toMap
-      tableSchema.fields.filter(f => set.contains(f.name)).foreach { f =>
-        require(got(f.name) == f.dataType,
-          s"updateWhere: SET changes ${f.name}'s type " +
-            s"${f.dataType.simpleString} -> " +
-            s"${got(f.name).simpleString} — refuse (evolution goes " +
-            "through commit())")
       }
-      // CHECK gate on the PRE-IMAGE touched flag: re-evaluating the
-      // predicate on the post-image would skip a row whose update moves
-      // it out of the predicate (SET price=price*10 WHERE price<10
-      // under CHECK price<=50), letting the violation commit unchecked.
-      enforceConstraints(
-        projected.where(col(touchedFlag)).select(tableCols.map(col): _*),
-        constraintsOf(fs, root), s"updateWhere post-image at $path")
-      // slot from the SAME listing as the base (latestVisibleIn doc):
-      // holes between them are decided-aborted and can never revive
-      val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-      val cols = resolveStatsCols(Some(header), Seq.empty)
-      val out = clusterOut(updated, clusterBy,
-        math.max(1, rewrite.size))
-      val st = stageAndPublish(out, fs, root, v2, cols,
-        Some(header.schemaJson))
-      val published = st.names
-      val newEntries = entriesOf(st, spark, fs, conf, root,
-        Some(header.schemaJson))
-      if (tryWriteManifest(fs, root, v2, "update", txnId, cols,
-          header.schemaJson, carried ++ newEntries,
-          pendingTxn = pendingTxn)) {
-        if (pendingTxn.isEmpty) maybeCheckpoint(fs, root, v2)
-        return v2
-      }
-      published.foreach(n => fs.delete(new Path(root, n), false))
-      triesLeft -= 1
-      if (triesLeft < 0) throw new IllegalStateException(
-        s"versioned update at $path lost the manifest race " +
-          s"$maxRetries times — giving up")
-      } // deletionVectors branch
     }
-    -1 // unreachable
+  }
+
+  /** Shape contract of an incoming frame (merge source, replaceWhere
+    * data): exactly the table's columns, and their TYPES modulo
+    * nullability, not just names — an insert-only batch bypasses the
+    * rewrite path, so a mismatched type would land physical files that
+    * contradict the manifest's recorded schema, bricking every later
+    * read. Refused here, like commit()'s resolveSchema. */
+  private def requireTableShape(who: String, noun: String, mid: String,
+      data: StructType, dataCols: Seq[String], table: StructType): Unit = {
+    require(dataCols.sorted.sameElements(table.fieldNames.sorted),
+      s"$who: $noun columns ${dataCols.sorted.mkString(",")} " +
+        s"!= table columns ${table.fieldNames.sorted.mkString(",")}")
+    val typeConflicts = table.flatMap(f =>
+      data.find(_.name == f.name)
+        .filter(sf => Bridge.asNullable(sf.dataType) !=
+          Bridge.asNullable(f.dataType))
+        .map(sf => s"${f.name}: ${f.dataType.simpleString} vs " +
+          s"${sf.dataType.simpleString}"))
+    require(typeConflicts.isEmpty,
+      s"$who: $noun column types differ from the table's " +
+        s"(${typeConflicts.mkString("; ")}) — schema evolution " +
+        s"composes via a prior commit, not $mid")
   }
 
   /** MERGE INTO (upsert) as a versioned commit — [[SnapshotMerge]]'s
@@ -909,7 +974,7 @@ object VersionedTable {
     val src = source.localCheckpoint()
     try mergeSnapshot(spark, path, src, keys, txnId, maxRetries,
       tombstoneCol, clusterBy, pendingTxn, deletionVectors)
-    finally org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoint(src)
+    finally Bridge.releaseCheckpoint(src)
   }
 
   /** [[mergeInto]] over its checkpointed source `src`. */
@@ -918,8 +983,7 @@ object VersionedTable {
       maxRetries: Int, tombstoneCol: Option[String], clusterBy: Seq[String],
       pendingTxn: Option[String], deletionVectors: Boolean): Int = {
     val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val nonNullKeys = keys.map(col(_).isNotNull).reduce(_ && _)
     // FUSED DELTA PROFILE — one bounded job where the unfused path ran
     // four (empty probe, uniqueness check, span aggregate, bloom-key
@@ -991,13 +1055,9 @@ object VersionedTable {
           else Some(RangePred(k, mn, mx))
         }
     }
-    var triesLeft = maxRetries
     var consChecked = false
-    while (true) {
-      val nums = listVersionNumbers(fs, root)
-      txnId.foreach { t =>
-        findTxn(fs, root, nums, t).foreach(v => return v)
-      }
+    commitRewrite(spark, path, "merge", "versioned merge", txnId,
+        maxRetries, pendingTxn) { b =>
       if (!consChecked) { // post-txn-probe: replays no-op, not refuse
         enforceConstraints(
           tombstoneCol.map(c => src.where(!coalesce(col(c), lit(false))))
@@ -1005,31 +1065,10 @@ object VersionedTable {
           constraintsOf(fs, root), s"mergeInto at $path")
         consChecked = true
       }
-      val v = latestVisibleIn(fs, root, nums, forWrite = true)
-        .getOrElse(
-          throw new IllegalStateException(s"no committed versions at $path"))
-      val header = readHeader(fs, root, v)
-      val entries = readEntries(spark, path, v)
-      val srcDataCols = src.columns.filterNot(tombstoneCol.contains)
-      val tableSchema = decodeSchema(header.schemaJson)
-      require(srcDataCols.sorted.sameElements(tableSchema.fieldNames.sorted),
-        s"mergeInto: source columns ${srcDataCols.sorted.mkString(",")} " +
-          s"!= table columns ${tableSchema.fieldNames.sorted.mkString(",")}")
-      // and TYPES, not just names: an insert-only batch bypasses the
-      // rewrite path, so a mismatched type would land physical files
-      // that contradict the manifest's recorded schema — bricking
-      // every later read. Refuse here, like commit()'s resolveSchema.
-      val typeConflicts = tableSchema.flatMap(f =>
-        src.schema.find(_.name == f.name)
-          .filter(sf => org.apache.spark.sql.graftbridge.Bridge
-            .asNullable(sf.dataType) != org.apache.spark.sql.graftbridge
-            .Bridge.asNullable(f.dataType))
-          .map(sf => s"${f.name}: ${f.dataType.simpleString} vs " +
-            s"${sf.dataType.simpleString}"))
-      require(typeConflicts.isEmpty,
-        s"mergeInto: source column types differ from the table's " +
-          s"(${typeConflicts.mkString("; ")}) — schema evolution " +
-          "composes via a prior commit, not mid-merge")
+      val entries = b.entries
+      val tableSchema = decodeSchema(b.schemaJson)
+      requireTableShape("mergeInto", "source", "mid-merge", src.schema,
+        src.columns.filterNot(tombstoneCol.contains).toSeq, tableSchema)
       // coarse manifest prune: a file can hold a match only if its span
       // overlaps the source's [min, max] on EVERY key column
       val candidates = pruneEntriesWhere(entries, preds)
@@ -1061,7 +1100,7 @@ object VersionedTable {
             case (cand, (kc, i)) =>
               if (cand.isEmpty) cand
               else bloomPrune(spark, path, cand,
-                physicalOf(Some(header.schemaJson)).getOrElse(kc, kc),
+                physicalOf(Some(b.schemaJson)).getOrElse(kc, kc),
                 g.map(_.get(i)).distinct.toSeq)
           }
         case _ => candidates
@@ -1071,90 +1110,34 @@ object VersionedTable {
       val upserts = tombstoneCol.map(c =>
         src.where(!coalesce(col(c), lit(false)))).getOrElse(src)
       val ordered = upserts.select(tableSchema.fieldNames.map(col).toSeq: _*)
-      // slot from the SAME listing as the base (latestVisibleIn doc):
-      // holes between them are decided-aborted and can never revive
-      val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-      val cols = resolveStatsCols(Some(header), Seq.empty)
-      if (deletionVectors) {
-        // DV merge = mask the matched pre-images, APPEND the upserts:
-        // a scattered CDC batch writes O(|batch|) bytes + one sidecar,
-        // never a rewrite of every touched file
-        val matchedPos =
-          if (probed.isEmpty) None
-          else {
-            val (kprobe, kFileC, kPosC) =
-              maskedReadWithPos(spark, header.schemaJson, path, probed)
-            Some(kprobe
-              .select(keys.map(col) :+ col(kFileC) :+ col(kPosC): _*)
-              .join(srcKeys, keys, "left_semi")
-              .select(col(kFileC).as("file"), col(kPosC).as("pos"))
-              .localCheckpoint())
-          }
-        val perFile = matchedPos.map(_.groupBy("file").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap)
-          .getOrElse(Map.empty[String, Long])
-        val (masked, side) =
-          if (perFile.isEmpty) (entries, Seq.empty[String])
-          else applyDvPositions(spark, fs, root, path, entries,
-            matchedPos.get, perFile, v2)
-        val st = stageAndPublish(clusterOut(ordered, clusterBy, 1),
-          fs, root, v2, cols, Some(header.schemaJson))
-        val pub = st.names
-        val newEntries = entriesOf(st, spark, fs, conf, root,
-          Some(header.schemaJson))
-        if (tryWriteManifest(fs, root, v2, "merge", txnId, cols,
-            header.schemaJson, masked ++ newEntries,
-            pendingTxn = pendingTxn)) {
-          if (pendingTxn.isEmpty) maybeCheckpoint(fs, root, v2)
-          return v2
-        }
-        (side ++ pub).foreach(n => fs.delete(new Path(root, n), false))
-        triesLeft -= 1
-        if (triesLeft < 0) throw new IllegalStateException(
-          s"versioned merge at $path lost the manifest race " +
-            s"$maxRetries times — giving up")
-      } else {
-      val touched =
-        if (probed.isEmpty) Set.empty[String]
+      val found =
+        if (probed.isEmpty) CowFiles(Seq.empty, entries)
         else {
           // masked probe: a key whose only rows are DV-deleted must
           // not drag its file into the rewrite
-          val (kprobe, kFileC, _) =
-            maskedReadWithPos(spark, header.schemaJson, path, probed)
-          kprobe.select(keys.map(col) :+ col(kFileC): _*)
-            .join(srcKeys, keys, "left_semi")
-            .select(kFileC).distinct()
-            .collect().map(_.getString(0)).toSet
+          val (kprobe, kFileC, kPosC) =
+            maskedReadWithPos(spark, b.schemaJson, path, probed)
+          discover(b, deletionVectors,
+            kprobe.select(keys.map(col) :+ col(kFileC) :+ col(kPosC): _*)
+              .join(srcKeys, keys, "left_semi")
+              .select(col(kFileC), col(kPosC)), kFileC, kPosC)
         }
-      val (rewrite, carried) = entries.partition(e => touched(e.name))
-      val newData =
-        if (rewrite.isEmpty) ordered
-        else maskedRead(spark, header.schemaJson, path, rewrite)
-          .join(srcKeys, keys, "left_anti")
-          .unionByName(ordered)
-      // opt-in: keep the rewrite clustered so CDC traffic does not
-      // widen spans between OPTIMIZE runs; the rewritten-file count is
-      // the layout-preserving output target (insert-only: one file)
-      val st = stageAndPublish(
-        clusterOut(newData, clusterBy, math.max(1, rewrite.size)),
-        fs, root, v2, cols, Some(header.schemaJson))
-      val published = st.names
-      val newEntries = entriesOf(st, spark, fs, conf, root,
-        Some(header.schemaJson))
-      if (tryWriteManifest(fs, root, v2, "merge", txnId, cols,
-          header.schemaJson, carried ++ newEntries,
-          pendingTxn = pendingTxn)) {
-        if (pendingTxn.isEmpty) maybeCheckpoint(fs, root, v2)
-        return v2
+      val (keep, side) = kept(b, found)
+      // DV masks the matched pre-images and APPENDS the upserts: a
+      // scattered CDC batch writes O(|batch|) bytes + one sidecar. COW
+      // rewrites each touched file minus its matched rows, plus the
+      // upserts; the rewritten-file count is the layout-preserving
+      // output target (insert-only: one file), and opt-in clustering
+      // keeps CDC traffic from widening spans between OPTIMIZE runs
+      val (out, nOut) = found match {
+        case CowFiles(rewrite, _) if rewrite.nonEmpty =>
+          (maskedRead(spark, b.schemaJson, path, rewrite)
+            .join(srcKeys, keys, "left_anti")
+            .unionByName(ordered), rewrite.size)
+        case _ => (ordered, 1)
       }
-      published.foreach(n => fs.delete(new Path(root, n), false))
-      triesLeft -= 1
-      if (triesLeft < 0) throw new IllegalStateException(
-        s"versioned merge at $path lost the manifest race " +
-          s"$maxRetries times — giving up")
-      } // deletionVectors branch
+      Some(Change(keep, side, Some(clusterOut(out, clusterBy, nOut))))
     }
-    -1 // unreachable
   }
 
   /** RESTORE the table to the content of an earlier `version`, as a
@@ -1179,39 +1162,21 @@ object VersionedTable {
     * skip) it and the change feed derives the exact row-level
     * undo-diff from the touched files. */
   def restoreTo(spark: SparkSession, path: String, version: Int,
-      txnId: Option[String] = None, maxRetries: Int = 5): Int = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    var triesLeft = maxRetries
-    while (true) {
-      val nums = listVersionNumbers(fs, root)
-      txnId.foreach { t =>
-        findTxn(fs, root, nums, t).foreach(w => return w)
+      txnId: Option[String] = None, maxRetries: Int = 5): Int =
+    commitRewrite(spark, path, "restore", "versioned restore", txnId,
+        maxRetries) { b =>
+      require(version <= b.v,
+        s"cannot restore $path to version $version: latest is ${b.v}")
+      if (version == b.v) None // already at that state
+      else {
+        // throws "never committed (or expired)" when the target is gone
+        val target = readHeader(b.fs, b.root, version)
+        requireVisible(b.fs, path, version, target) // no restore to a hole
+        Some(Change(readEntries(spark, path, version),
+          schemaJson = Some(target.schemaJson),
+          statsCols = Some(target.statsCols)))
       }
-      val latest = latestVisibleIn(fs, root, nums, forWrite = true)
-        .getOrElse(
-          throw new IllegalStateException(s"no committed versions at $path"))
-      require(version <= latest,
-        s"cannot restore $path to version $version: latest is $latest")
-      if (version == latest) return latest // already at that state
-      // throws "never committed (or expired)" when the target is gone
-      val target = readHeader(fs, root, version)
-      requireVisible(fs, path, version, target) // no restore to a hole
-      val entries = readEntries(spark, path, version)
-      // slot from the SAME listing as the base (latestVisibleIn doc)
-      val v2 = math.max(latest, nums.lastOption.getOrElse(-1)) + 1
-      if (tryWriteManifest(fs, root, v2, "restore", txnId,
-          target.statsCols, target.schemaJson, entries)) {
-        maybeCheckpoint(fs, root, v2)
-        return v2
-      }
-      triesLeft -= 1
-      if (triesLeft < 0) throw new IllegalStateException(
-        s"versioned restore at $path lost the manifest race " +
-          s"$maxRetries times — giving up")
     }
-    -1 // unreachable
-  }
 
   /** Deep CLONE of a committed version into a fresh table at
     * `dstPath` (Delta's `CREATE TABLE ... DEEP CLONE src VERSION AS OF
@@ -1461,27 +1426,20 @@ object VersionedTable {
     * latest schema, transform (schema, retired, statsCols, and an
     * entry-stats re-keyer), validate constraints still analyze, and
     * commit the SAME file entries under mode `alter` — zero data
-    * movement, optimistic slot retry like every other verb. */
+    * movement, retried on a lost race like every other verb. */
   private def alterColumns(spark: SparkSession, path: String,
       maxRetries: Int, what: String)(
       xform: (StructType, Seq[String], Seq[String]) => AlterState)
-      : Int = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    var triesLeft = maxRetries
-    while (true) {
-      val nums = listVersionNumbers(fs, root)
-      val v = latestVisibleIn(fs, root, nums, forWrite = true)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed versions at $path"))
-      val header = readHeader(fs, root, v)
-      val (st, retired) = decodeSchemaFull(header.schemaJson)
+      : Int =
+    commitRewrite(spark, path, "alter", s"column DDL ($what)",
+        maxRetries = maxRetries) { b =>
+      val (st, retired) = decodeSchemaFull(b.schemaJson)
       val (st2, retired2, cols2, rekey) = xform(st, retired,
-        header.statsCols)
+        b.header.statsCols)
       // CHECK constraints are SQL text over logical names: one that no
       // longer analyzes against the new shape would silently stop
       // guarding writes — refuse the DDL instead
-      constraintsOf(fs, root).foreach { case (n, e) =>
+      constraintsOf(b.fs, b.root).foreach { case (n, e) =>
         val probe = spark.createDataFrame(
           new java.util.ArrayList[Row](), st2)
         try probe.select(expr(e)).schema
@@ -1489,7 +1447,7 @@ object VersionedTable {
           s"$what at $path breaks CHECK constraint $n ($e) — drop or " +
             s"re-add the constraint first: ${ex.getMessage}", ex) }
       }
-      val entries = readEntries(spark, path, v)
+      val entries = b.entries
         .map(e => e.copy(stats = rekeyMap(rekey, e.stats),
           nulls = rekeyMap(rekey, e.nulls),
           sums = rekeyMap(rekey, e.sums),
@@ -1499,19 +1457,9 @@ object VersionedTable {
           // pruning the moment a column is renamed)
           dsets = rekeyMap(rekey, e.dsets),
           ndvs = rekeyMap(rekey, e.ndvs)))
-      val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-      if (tryWriteManifest(fs, root, v2, "alter", None, cols2,
-          encodeSchemaFull(st2, retired2), entries)) {
-        maybeCheckpoint(fs, root, v2)
-        return v2
-      }
-      triesLeft -= 1
-      if (triesLeft < 0) throw new IllegalStateException(
-        s"column DDL ($what) at $path lost the manifest race " +
-          s"$maxRetries times — giving up")
+      Some(Change(entries, schemaJson = Some(encodeSchemaFull(st2, retired2)),
+        statsCols = Some(cols2)))
     }
-    -1 // unreachable
-  }
 
   /** Predicate-scoped atomic OVERWRITE (Delta's `replaceWhere`): in
     * ONE commit, remove every row where `predicate` is TRUE and insert
@@ -1533,99 +1481,55 @@ object VersionedTable {
     * empty `data` is a pure scoped delete; a predicate touching
     * nothing with empty `data` returns the current version untouched.
     *
-    * On a manifest-race loss the whole operation restarts against the
-    * winner's version (bounded by `maxRetries`): like [[deleteWhere]],
-    * its touched-file set depends on data a concurrent winner may have
-    * changed, so re-running discovery is the only serializable retry.
-    * Commits as mode `replace` — non-append, with the change feed
-    * deriving the row-level diff from the touched files. */
+    * Like [[deleteWhere]], a lost manifest race re-runs discovery
+    * against the winner's version ([[commitRewrite]]). Commits as mode
+    * `replace` — non-append, with the change feed deriving the
+    * row-level diff from the touched files. */
   def replaceWhere(spark: SparkSession, path: String, predicate: Column,
       data: DataFrame, txnId: Option[String] = None,
       maxRetries: Int = 5, clusterBy: Seq[String] = Seq.empty): Int = {
-    val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
     // one stable snapshot: consumed by the constraint check, the
-    // rewrite, and possibly a retry
+    // rewrite, and possibly a retry; released once the replace has
+    // committed (or given up)
     val src = data.localCheckpoint()
-    require(src.where(!coalesce(predicate, lit(false))).isEmpty,
-      "replaceWhere: every replacement row must satisfy the predicate " +
-        "— a row outside the replaced scope would survive its own " +
-        "replay (not a replacement); widen the predicate or drop the row")
-    var triesLeft = maxRetries
-    var consChecked = false
-    while (true) {
-      val nums = listVersionNumbers(fs, root)
-      txnId.foreach { t =>
-        findTxn(fs, root, nums, t).foreach(w => return w)
-      }
-      if (!consChecked) { // post-txn-probe: replays no-op, not refuse
-        enforceConstraints(src, constraintsOf(fs, root),
-          s"replaceWhere at $path")
-        consChecked = true
-      }
-      val v = latestVisibleIn(fs, root, nums, forWrite = true)
-        .getOrElse(
-          throw new IllegalStateException(s"no committed versions at $path"))
-      val header = readHeader(fs, root, v)
-      val entries = readEntries(spark, path, v)
-      val tableSchema = decodeSchema(header.schemaJson)
-      require(src.columns.sorted
-          .sameElements(tableSchema.fieldNames.sorted),
-        s"replaceWhere: data columns ${src.columns.sorted.mkString(",")}" +
-          s" != table columns ${tableSchema.fieldNames.sorted.mkString(",")}")
-      val typeConflicts = tableSchema.flatMap(f =>
-        src.schema.find(_.name == f.name)
-          .filter(sf => org.apache.spark.sql.graftbridge.Bridge
-            .asNullable(sf.dataType) != org.apache.spark.sql.graftbridge
-            .Bridge.asNullable(f.dataType))
-          .map(sf => s"${f.name}: ${f.dataType.simpleString} vs " +
-            s"${sf.dataType.simpleString}"))
-      require(typeConflicts.isEmpty,
-        s"replaceWhere: data column types differ from the table's " +
-          s"(${typeConflicts.mkString("; ")}) — schema evolution " +
-          "composes via a prior commit, not mid-replace")
-      // discovery: one MASKED scan projecting only the predicate's
-      // columns (parquet footer stats + blooms prune it like any read)
-      val touched =
-        if (entries.isEmpty) Set.empty[String]
-        else {
-          val (probe, fileC, _) =
-            maskedReadWithPos(spark, header.schemaJson, path, entries)
-          probe.where(predicate)
-            .select(col(fileC)).distinct()
-            .collect().map(_.getString(0)).toSet
+    try {
+      require(src.where(!coalesce(predicate, lit(false))).isEmpty,
+        "replaceWhere: every replacement row must satisfy the predicate " +
+          "— a row outside the replaced scope would survive its own " +
+          "replay (not a replacement); widen the predicate or drop the row")
+      var consChecked = false
+      commitRewrite(spark, path, "replace", "versioned replaceWhere", txnId,
+          maxRetries) { b =>
+        if (!consChecked) { // post-txn-probe: replays no-op, not refuse
+          enforceConstraints(src, constraintsOf(b.fs, b.root),
+            s"replaceWhere at $path")
+          consChecked = true
         }
-      val (rewrite, carried) = entries.partition(e => touched(e.name))
-      val ordered = src.select(tableSchema.fieldNames.map(col).toSeq: _*)
-      if (touched.isEmpty && ordered.isEmpty) return v // scoped no-op
-      val survivors =
-        if (rewrite.isEmpty) ordered
-        else maskedRead(spark, header.schemaJson, path, rewrite)
-          .where(!coalesce(predicate, lit(false)))
-          .unionByName(ordered)
-      // slot from the SAME listing as the base (latestVisibleIn doc):
-      // holes between them are decided-aborted and can never revive
-      val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-      val cols = resolveStatsCols(Some(header), Seq.empty)
-      val st = stageAndPublish(
-        clusterOut(survivors, clusterBy, math.max(1, rewrite.size)),
-        fs, root, v2, cols, Some(header.schemaJson))
-      val published = st.names
-      val newEntries = entriesOf(st, spark, fs, conf, root,
-        Some(header.schemaJson))
-      if (tryWriteManifest(fs, root, v2, "replace", txnId, cols,
-          header.schemaJson, carried ++ newEntries)) {
-        maybeCheckpoint(fs, root, v2)
-        return v2
+        val tableSchema = decodeSchema(b.schemaJson)
+        requireTableShape("replaceWhere", "data", "mid-replace", src.schema,
+          src.columns.toSeq, tableSchema)
+        // discovery: one MASKED scan projecting only the predicate's
+        // columns (parquet footer stats + blooms prune it like any read)
+        val CowFiles(rewrite, carried) =
+          if (b.entries.isEmpty) CowFiles(Seq.empty, Seq.empty)
+          else {
+            val (probe, fileC, _) =
+              maskedReadWithPos(spark, b.schemaJson, path, b.entries)
+            touchedSplit(b, probe.where(predicate), fileC)
+          }
+        val ordered = src.select(tableSchema.fieldNames.map(col).toSeq: _*)
+        if (rewrite.isEmpty && ordered.isEmpty) None // scoped no-op
+        else {
+          val survivors =
+            if (rewrite.isEmpty) ordered
+            else maskedRead(spark, b.schemaJson, path, rewrite)
+              .where(!coalesce(predicate, lit(false)))
+              .unionByName(ordered)
+          Some(Change(carried, stage = Some(clusterOut(survivors, clusterBy,
+            math.max(1, rewrite.size)))))
+        }
       }
-      published.foreach(n => fs.delete(new Path(root, n), false))
-      triesLeft -= 1
-      if (triesLeft < 0) throw new IllegalStateException(
-        s"versioned replaceWhere at $path lost the manifest race " +
-          s"$maxRetries times — giving up")
-    }
-    -1 // unreachable
+    } finally Bridge.releaseCheckpoint(src)
   }
 
   /** Metadata-only COUNT(*) (Delta's metadata-only query path): the
@@ -1926,7 +1830,7 @@ object VersionedTable {
     requireVisible(fs, path, version, header)
     val keep = readEntries(spark, path, version)
       .filter(e => names.contains(e.name))
-    if (keep.isEmpty) read(spark, path, Some(version)).limit(0)
+    if (keep.isEmpty) emptyOf(spark, header.schemaJson)
     else maskedRead(spark, header.schemaJson, path, keep)
   }
 
@@ -2089,7 +1993,7 @@ object VersionedTable {
     val header = readHeader(fs, root, version)
     requireVisible(fs, path, version, header)
     val slice = readEntries(spark, path, version).slice(from, until)
-    if (slice.isEmpty) read(spark, path, Some(version)).limit(0)
+    if (slice.isEmpty) emptyOf(spark, header.schemaJson)
     else maskedRead(spark, header.schemaJson, path, slice)
   }
 
@@ -2143,7 +2047,9 @@ object VersionedTable {
     val keep = bloomPrune(spark, path, spanKeep,
       physicalOf(Some(header.schemaJson)).getOrElse(column, column), values)
     val pred = col(column).isin(values: _*)
-    if (keep.isEmpty) read(spark, path, Some(v)).where(pred).limit(0)
+    // empty shapes come from the recorded schema (no scan, no mask
+    // collect); `where` keeps a bad predicate failing analysis
+    if (keep.isEmpty) emptyOf(spark, header.schemaJson).where(pred)
     else maskedRead(spark, header.schemaJson, path, keep).where(pred)
   }
 
@@ -2190,9 +2096,8 @@ object VersionedTable {
         pruneEntriesJob(spark, path, v, preds).getOrElse(
           pruneEntriesWhere(readEntries(spark, path, v), preds))
       } else pruneEntriesWhere(readEntries(spark, path, v), preds)
-    if (header.nFiles == 0) read(spark, path, Some(v)).limit(0)
-    else if (keep.isEmpty)
-      read(spark, path, Some(v)).where(pred).limit(0)
+    if (header.nFiles == 0) emptyOf(spark, header.schemaJson)
+    else if (keep.isEmpty) emptyOf(spark, header.schemaJson).where(pred)
     else
       maskedRead(spark, header.schemaJson, path, keep).where(pred)
   }
@@ -2649,46 +2554,38 @@ object VersionedTable {
     * manifest re-harvests footer stats for the rewritten files, a
     * clustered compaction directly upgrades [[prunedRead]]'s file
     * skipping — the Delta OPTIMIZE ZORDER loop, commit-logged and
-    * rollback-able here. */
+    * rollback-able here.
+    *
+    * Commits as mode `optimize` (content-invisible: the change feed of
+    * a compaction is EMPTY, not a full-table delete+insert storm). Like
+    * every OPTIMIZE verb it is advisory ([[commitRewrite]]): a lost race
+    * returns the current version — compact again later — and never
+    * retries, which could replace a concurrent writer's commit with
+    * pre-compaction content. */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       clusterBy: Seq[String] = Seq.empty): Int = {
     require(targetFileBytes > 0, s"bad target: $targetFileBytes")
-    val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
-    val nums = listVersionNumbers(fs, root)
-    val v = latestVisibleIn(fs, root, nums, forWrite = true).getOrElse(
-      throw new IllegalStateException(s"no committed versions at $path"))
-    val header = readHeader(fs, root, v)
-    val bytes = files(spark, path, v)
-      .map(n => fs.getFileStatus(new Path(root, n)).getLen).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val base = read(spark, path, Some(v))
-    val clustered =
-      if (clusterBy.isEmpty) base.repartition(nOut)
-      else clusterOut(base, clusterBy, nOut)
-    // commit as mode `optimize` (content-invisible: the change feed of
-    // a compaction is EMPTY, not a full-table delete+insert storm) via
-    // the direct manifest path — a lost race is an advisory no-op like
-    // compactSmall/compactWhere, never a retry that could replace a
-    // concurrent writer's commit with pre-compaction content
-    val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-    val cols = resolveStatsCols(Some(header), Seq.empty)
-    val st = stageAndPublish(clustered, fs, root, v2, cols,
-      Some(header.schemaJson))
-    val published = st.names
-    val newEntries = entriesOf(st, spark, fs, conf, root,
-      Some(header.schemaJson))
-    if (tryWriteManifest(fs, root, v2, "optimize", None, cols,
-        header.schemaJson, newEntries)) {
-      maybeCheckpoint(fs, root, v2)
-      v2
-    } else {
-      published.foreach(n => fs.delete(new Path(root, n), false))
-      v // advisory: someone committed meanwhile — compact again later
+    commitRewrite(spark, path, "optimize", "compact",
+        advisory = true) { b =>
+      val bytes = files(spark, path, b.v)
+        .map(n => b.fs.getFileStatus(new Path(b.root, n)).getLen).sum
+      Some(Change(Seq.empty, stage = Some(packOut(
+        read(spark, path, Some(b.v)), clusterBy,
+        filesFor(bytes, targetFileBytes)))))
     }
   }
+
+  /** The OPTIMIZE family's output shape: `nOut` files, clustered on
+    * `clusterBy` when given ([[clusterOut]]). */
+  private def packOut(df: DataFrame, clusterBy: Seq[String],
+      nOut: Int): DataFrame =
+    if (clusterBy.isEmpty) df.repartition(nOut)
+    else clusterOut(df, clusterBy, nOut)
+
+  /** Output files for `bytes` at ~`targetFileBytes` each (at least 1). */
+  private def filesFor(bytes: Long, targetFileBytes: Long): Int =
+    math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
 
   /** Incremental OPTIMIZE: rewrite ONLY the files smaller than
     * `smallFileBytes` into ~`targetFileBytes` outputs and carry every
@@ -2700,47 +2597,23 @@ object VersionedTable {
     * file diff is not row-level adds, so incremental readers refuse or
     * skip it per their policy). Returns the new version, or the
     * current one untouched when fewer than two small files exist
-    * (nothing worth packing). */
+    * (nothing worth packing) or a racing writer won the slot
+    * (advisory, as [[compact]]). */
   def compactSmall(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       smallFileBytes: Long = 32L * 1024 * 1024): Int = {
     require(targetFileBytes > 0 && smallFileBytes > 0,
       s"bad sizes: $targetFileBytes, $smallFileBytes")
-    val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
-    val nums = listVersionNumbers(fs, root)
-    val v = latestVisibleIn(fs, root, nums, forWrite = true).getOrElse(
-      throw new IllegalStateException(s"no committed versions at $path"))
-    val header = readHeader(fs, root, v)
-    val entries = readEntries(spark, path, v)
-    val sized = entries.map(e =>
-      e -> fs.getFileStatus(new Path(root, e.name)).getLen)
-    val (small, big) = sized.partition(_._2 < smallFileBytes)
-    if (small.size < 2) return v
-    val bytes = small.map(_._2).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    // masked: packing a DV-carrying small file MATERIALIZES its vector
-    val packed = maskedRead(spark, header.schemaJson, path,
-      small.map(_._1)).repartition(nOut)
-    // slot from the SAME listing as the base (latestVisibleIn doc)
-    val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-    val cols = resolveStatsCols(Some(header), Seq.empty)
-    val st = stageAndPublish(packed, fs, root, v2, cols,
-      Some(header.schemaJson))
-    val published = st.names
-    val newEntries = entriesOf(st, spark, fs, conf, root,
-      Some(header.schemaJson))
-    if (tryWriteManifest(fs, root, v2, "optimize", None, cols,
-        header.schemaJson, big.map(_._1) ++ newEntries)) {
-      maybeCheckpoint(fs, root, v2)
-      v2
-    } else {
-      // racing writer won v2: drop our rewrites and let the caller's
-      // next OPTIMIZE pass pick the debris up — packing is advisory,
-      // never worth a retry loop against live commits
-      published.foreach(n => fs.delete(new Path(root, n), false))
-      v
+    commitRewrite(spark, path, "optimize", "compactSmall",
+        advisory = true) { b =>
+      val sized = b.entries.map(e =>
+        e -> b.fs.getFileStatus(new Path(b.root, e.name)).getLen)
+      val (small, big) = sized.partition(_._2 < smallFileBytes)
+      if (small.size < 2) None
+      else Some(Change(big.map(_._1), stage = Some(packOut(
+        // masked: packing a DV-carrying small file MATERIALIZES its vector
+        maskedRead(spark, b.schemaJson, path, small.map(_._1)), Seq.empty,
+        filesFor(small.map(_._2).sum, targetFileBytes)))))
     }
   }
 
@@ -2758,8 +2631,7 @@ object VersionedTable {
     * select. Commits as mode `optimize` (non-append; incremental
     * readers refuse or skip per policy). Returns the current version
     * untouched when fewer than two files are selected; a lost manifest
-    * race is an advisory no-op like [[compactSmall]] — never a retry
-    * loop against live commits. */
+    * race is an advisory no-op like [[compactSmall]]. */
   def compactWhere(spark: SparkSession, path: String,
       preds: Seq[PrunePred],
       targetFileBytes: Long = 128L * 1024 * 1024,
@@ -2767,41 +2639,20 @@ object VersionedTable {
     require(preds.nonEmpty, "compactWhere: no predicates — use " +
       "compact() for the whole-table rewrite")
     require(targetFileBytes > 0, s"bad target: $targetFileBytes")
-    val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
-    val nums = listVersionNumbers(fs, root)
-    val v = latestVisibleIn(fs, root, nums, forWrite = true).getOrElse(
-      throw new IllegalStateException(s"no committed versions at $path"))
-    val header = readHeader(fs, root, v)
-    val entries = readEntries(spark, path, v)
-    val selected = pruneEntriesWhere(entries, preds)
-    if (selected.size < 2) return v
-    val selNames = selected.map(_.name).toSet
-    val carried = entries.filterNot(e => selNames(e.name))
-    val bytes = selected
-      .map(e => fs.getFileStatus(new Path(root, e.name)).getLen).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    // masked: a scoped compaction materializes the span's vectors too
-    val base = maskedRead(spark, header.schemaJson, path, selected)
-    val clustered =
-      if (clusterBy.isEmpty) base.repartition(nOut)
-      else clusterOut(base, clusterBy, nOut)
-    // slot from the SAME listing as the base (latestVisibleIn doc)
-    val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-    val cols = resolveStatsCols(Some(header), Seq.empty)
-    val st = stageAndPublish(clustered, fs, root, v2, cols,
-      Some(header.schemaJson))
-    val published = st.names
-    val newEntries = entriesOf(st, spark, fs, conf, root,
-      Some(header.schemaJson))
-    if (tryWriteManifest(fs, root, v2, "optimize", None, cols,
-        header.schemaJson, carried ++ newEntries)) {
-      maybeCheckpoint(fs, root, v2)
-      v2
-    } else {
-      published.foreach(n => fs.delete(new Path(root, n), false))
-      v
+    commitRewrite(spark, path, "optimize", "compactWhere",
+        advisory = true) { b =>
+      val selected = pruneEntriesWhere(b.entries, preds)
+      if (selected.size < 2) None
+      else {
+        val selNames = selected.map(_.name).toSet
+        val bytes = selected
+          .map(e => b.fs.getFileStatus(new Path(b.root, e.name)).getLen).sum
+        Some(Change(b.entries.filterNot(e => selNames(e.name)),
+          stage = Some(packOut(
+            // masked: a scoped compaction materializes the span's vectors
+            maskedRead(spark, b.schemaJson, path, selected), clusterBy,
+            filesFor(bytes, targetFileBytes)))))
+      }
     }
   }
 
@@ -2952,44 +2803,28 @@ object VersionedTable {
     require(maxMaskedFraction > 0 && maxMaskedFraction <= 1,
       s"maxMaskedFraction must be in (0, 1]: $maxMaskedFraction")
     require(targetFileBytes > 0, s"bad target: $targetFileBytes")
-    val root = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
-    val nums = listVersionNumbers(fs, root)
-    val v = latestVisibleIn(fs, root, nums, forWrite = true).getOrElse(
-      throw new IllegalStateException(s"no committed versions at $path"))
-    val header = readHeader(fs, root, v)
-    val entries = readEntries(spark, path, v)
-    val (decayed, carried) = entries.partition(e =>
-      e.dv.exists(d => e.nRows > 0 &&
-        d._2.toDouble / e.nRows > maxMaskedFraction))
-    if (decayed.isEmpty) return (0, None)
-    // manifest sizes first — one metadata RPC per file only for
-    // entries predating the size field
-    val bytes = decayed.map(e =>
-      if (e.size >= 0) e.size
-      else fs.getFileStatus(new Path(root, e.name)).getLen).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val base = maskedRead(spark, header.schemaJson, path, decayed)
-    val packed =
-      if (clusterBy.isEmpty) base.repartition(nOut)
-      else clusterOut(base, clusterBy, nOut)
-    // slot from the SAME listing as the base (latestVisibleIn doc)
-    val v2 = math.max(v, nums.lastOption.getOrElse(-1)) + 1
-    val cols = resolveStatsCols(Some(header), Seq.empty)
-    val st = stageAndPublish(packed, fs, root, v2, cols,
-      Some(header.schemaJson))
-    val published = st.names
-    val newEntries = entriesOf(st, spark, fs, conf, root,
-      Some(header.schemaJson))
-    if (tryWriteManifest(fs, root, v2, "optimize", None, cols,
-        header.schemaJson, carried ++ newEntries)) {
-      maybeCheckpoint(fs, root, v2)
-      (decayed.size, Some(v2))
-    } else {
-      published.foreach(n => fs.delete(new Path(root, n), false))
-      (decayed.size, None)
+    var base = -1
+    var nDecayed = 0
+    val v2 = commitRewrite(spark, path, "optimize", "materializeDvAbove",
+        advisory = true) { b =>
+      base = b.v
+      val (decayed, carried) = b.entries.partition(e =>
+        e.dv.exists(d => e.nRows > 0 &&
+          d._2.toDouble / e.nRows > maxMaskedFraction))
+      nDecayed = decayed.size
+      if (decayed.isEmpty) None
+      else {
+        // manifest sizes first — one metadata RPC per file only for
+        // entries predating the size field
+        val bytes = decayed.map(e =>
+          if (e.size >= 0) e.size
+          else b.fs.getFileStatus(new Path(b.root, e.name)).getLen).sum
+        Some(Change(carried, stage = Some(packOut(
+          maskedRead(spark, b.schemaJson, path, decayed), clusterBy,
+          filesFor(bytes, targetFileBytes)))))
+      }
     }
+    (nDecayed, Some(v2).filter(_ != base))
   }
 
   /** CLUSTERING-DECAY metric of a stats column, computed from the
@@ -3128,9 +2963,9 @@ object VersionedTable {
         "re-baseline from a full read")
     val before = files(spark, path, fromVersion).toSet
     val added = files(spark, path, to).filterNot(before)
-    if (added.isEmpty) read(spark, path, Some(to)).limit(0)
-    else schemaRead(spark, readHeader(fs, root, to).schemaJson,
-      added.map(n => s"$path/$n"))
+    val schemaJson = readHeader(fs, root, to).schemaJson
+    if (added.isEmpty) emptyOf(spark, schemaJson)
+    else schemaRead(spark, schemaJson, added.map(n => s"$path/$n"))
   }
 
   /** [[readAppendsSince]] that SKIPS non-append commits instead of
@@ -3173,9 +3008,9 @@ object VersionedTable {
       prev = cur
     }
     val names = added.result()
-    if (names.isEmpty) read(spark, path, Some(to)).limit(0)
-    else schemaRead(spark, readHeader(fs, root, to).schemaJson,
-      names.map(n => s"$path/$n"))
+    val schemaJson = readHeader(fs, root, to).schemaJson
+    if (names.isEmpty) emptyOf(spark, schemaJson)
+    else schemaRead(spark, schemaJson, names.map(n => s"$path/$n"))
   }
 
   /** ROW-LEVEL CHANGE FEED for one commit, DERIVED from the manifest
@@ -4498,7 +4333,7 @@ object VersionedTable {
     * exactly the coordinates the read-time mask uses, so the two sides
     * can never disagree on what a position means, and a row already
     * masked by an earlier vector can never be "discovered" again. */
-  private def maskedReadWithPos(spark: SparkSession,
+  private[graft] def maskedReadWithPos(spark: SparkSession,
       schemaJson: String, path: String, entries: Seq[FileEntry])
       : (DataFrame, String, String) = {
     val base0 = physicalScan(spark, schemaJson,
@@ -4559,20 +4394,24 @@ object VersionedTable {
       if (prior.isEmpty) Map.empty
       else allPos.groupBy("file").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val side = stageAndPublish(allPos.coalesce(1), fs, root, v2).names
-    val sidecar = side match {
-      case Seq(one) => one
-      case more => throw new IllegalStateException(
-        s"DV sidecar must be one file, got $more")
-    }
+    val totals = entries.flatMap(e => perFile.get(e.name).map(n =>
+      e.name -> exactTotals.getOrElse(e.name,
+        e.dv.map(_._2).getOrElse(0L) + n))).toMap
+    // a sidecar only fully-dead (dropped) files would point at is never
+    // written: no entry could reference it, so it would be debris
+    val side =
+      if (entries.forall(e => totals.get(e.name).forall(_ >= e.nRows)))
+        Seq.empty
+      else stageAndPublish(allPos.coalesce(1), fs, root, v2).names
     val out = entries.flatMap { e =>
-      perFile.get(e.name) match {
+      totals.get(e.name) match {
         case None => Some(e) // untouched: carried verbatim
-        case Some(n) =>
-          val total = exactTotals.getOrElse(e.name,
-            e.dv.map(_._2).getOrElse(0L) + n)
-          if (total >= e.nRows) None // fully dead
-          else Some(e.copy(dv = Some((sidecar, total))))
+        case Some(total) if total >= e.nRows => None // fully dead
+        case Some(total) => side match {
+          case Seq(sidecar) => Some(e.copy(dv = Some((sidecar, total))))
+          case more => throw new IllegalStateException(
+            s"DV sidecar must be one file, got $more")
+        }
       }
     }
     (out, side)

@@ -59,9 +59,7 @@ import graft.sources.VtTable
   *   - column-mapped versions decline named-column folds (logical
   *     names would misalign against physical stats keys), collated
   *     strings and timestamps decline predicate classification
-  *     (byte-order / physical-unit hazards), and a post-pushdown
-  *     scan folds only when its pushed-filter state is provably
-  *     consistent with the matched shape.
+  *     (byte-order / physical-unit hazards).
   *
   * Registered BEFORE [[VtMaskedScanRewrite]] so a DV'd version's
   * whole-table count folds from metadata instead of planning the

@@ -200,6 +200,37 @@ class IncrementalJoinViewSpec extends AnyFunSuite {
     assert(viewSet(v) == expected(l, r))
   }
 
+  test("a failed delta fails sync with no job running and nothing pinned") {
+    val d = tmpDir()
+    val (l, r, v) = (new java.io.File(d, "l").getAbsolutePath,
+      new java.io.File(d, "r").getAbsolutePath,
+      new java.io.File(d, "v").getAbsolutePath)
+    VersionedTable.commit(
+      left((1L to 40L).map(i => (i, 10L * (i % 3), s"t$i"))), l,
+      overwrite = true)
+    VersionedTable.commit(right(Seq((0L, "zed"), (10L, "alice"),
+      (20L, "bob"))), r, overwrite = true)
+    val on = Seq("o_cust" -> "c_id")
+    IncrementalJoinView.sync(spark, v, l, r, on, Seq("o_id"), Seq("c_id"))
+    // both sides move by a copy-on-write rewrite; the left rewrite's
+    // only output file then goes missing, so its delta job fails
+    val lv = VersionedTable.updateWhere(spark, l, col("o_id") === 1L,
+      Map("o_tag" -> lit("u")))
+    VersionedTable.mergeInto(spark, r, right(Seq((20L, "bobby"))),
+      Seq("c_id"))
+    val written = VersionedTable.files(spark, l, lv)
+      .filter(_.startsWith(f"v$lv%05d-"))
+    assert(written.size == 1, written)
+    assert(new java.io.File(l, written.head).delete())
+    val start = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception](IncrementalJoinView.sync(spark, v, l, r, on,
+      Seq("o_id"), Seq("c_id")))
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size == start,
+      spark.sparkContext.getPersistentRDDs.values
+        .map(_.toDebugString.take(300)))
+  }
+
   test("randomized differential: any verb mix equals the full recompute") {
     val rnd = new scala.util.Random(0x60 + 11)
     val d = tmpDir()

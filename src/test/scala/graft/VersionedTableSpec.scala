@@ -1882,6 +1882,9 @@ class VersionedTableSpec extends AnyFunSuite {
     val e1 = VersionedTable.readEntries(spark, t, v1)
     assert(e1.size < nFiles0 || e1.exists(_.dv.nonEmpty))
     assert(VersionedTable.read(spark, t).count() == 200)
+    // a vector only dropped files would point at is never written, so
+    // the delete leaves no sidecar for vacuum to sweep
+    assert(VersionedTable.vacuumUnreferenced(spark, t, 0L).isEmpty)
     // sprinkle a second, off-cluster DV
     VersionedTable.deleteWhere(spark, t, col("id") % 10 === 7L,
       deletionVectors = true)
