@@ -185,7 +185,7 @@ class IncrementalJoinViewSpec extends AnyFunSuite {
       overwrite = true)
     val on = Seq("o_cust" -> "c_id")
     IncrementalJoinView.sync(spark, v, l, r, on, Seq("o_id"), Seq("c_id"))
-    val start = spark.sparkContext.getPersistentRDDs.size
+    val start = SparkFixture.pinnedIds
     (1 to 20).foreach { i =>
       // left-only, right-only and both-sides windows in turn
       if (i % 3 != 2) VersionedTable.commit(
@@ -195,8 +195,8 @@ class IncrementalJoinViewSpec extends AnyFunSuite {
         right(Seq((20L, s"bob$i"))), Seq("c_id"))
       IncrementalJoinView.sync(spark, v, l, r, on, Seq("o_id"), Seq("c_id"))
     }
-    assert(spark.sparkContext.getPersistentRDDs.size == start,
-      spark.sparkContext.getPersistentRDDs.values.map(_.toDebugString.take(300)))
+    assert(SparkFixture.pinnedSince(start).isEmpty,
+      SparkFixture.pinnedSince(start))
     assert(viewSet(v) == expected(l, r))
   }
 
@@ -222,13 +222,12 @@ class IncrementalJoinViewSpec extends AnyFunSuite {
       .filter(_.startsWith(f"v$lv%05d-"))
     assert(written.size == 1, written)
     assert(new java.io.File(l, written.head).delete())
-    val start = spark.sparkContext.getPersistentRDDs.size
+    val start = SparkFixture.pinnedIds
     intercept[Exception](IncrementalJoinView.sync(spark, v, l, r, on,
       Seq("o_id"), Seq("c_id")))
     assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
-    assert(spark.sparkContext.getPersistentRDDs.size == start,
-      spark.sparkContext.getPersistentRDDs.values
-        .map(_.toDebugString.take(300)))
+    assert(SparkFixture.pinnedSince(start).isEmpty,
+      SparkFixture.pinnedSince(start))
   }
 
   test("randomized differential: any verb mix equals the full recompute") {

@@ -21,7 +21,11 @@ class WriteCoreSpec extends AnyFunSuite {
     new java.io.File(d, "t").getAbsolutePath
   }
 
-  private def pinned: Int = spark.sparkContext.getPersistentRDDs.size
+  private def pinned: Set[Int] = SparkFixture.pinnedIds
+  private def leftPinned(start: Set[Int]): Unit = {
+    val left = SparkFixture.pinnedSince(start)
+    assert(left.isEmpty, left)
+  }
 
   private def rowsOf(t: String): Seq[(Long, Long)] =
     VersionedTable.read(spark, t).as[(Long, Long)].collect().toSeq.sorted
@@ -70,7 +74,7 @@ class WriteCoreSpec extends AnyFunSuite {
     assert(rowsOf(t) == want.sorted)
     // the lost attempt's sidecar and post-image file were deleted
     assert(VersionedTable.vacuumUnreferenced(spark, t, 0L).isEmpty)
-    assert(pinned == start, spark.sparkContext.getPersistentRDDs)
+    leftPinned(start)
   }
 
   test("maxRetries + 1 losses give up with the verb's text, no debris") {
@@ -88,7 +92,7 @@ class WriteCoreSpec extends AnyFunSuite {
     assert(VersionedTable.versions(spark, t).map(_.mode) ==
       "overwrite" +: Seq.fill(3)("append"))
     assert(VersionedTable.vacuumUnreferenced(spark, t, 0L).isEmpty)
-    assert(pinned == start, spark.sparkContext.getPersistentRDDs)
+    leftPinned(start)
   }
 
   test("advisory: one loss returns the current version, no debris") {
@@ -125,8 +129,7 @@ class WriteCoreSpec extends AnyFunSuite {
       VersionedTable.replaceWhere(spark, t, col("id").between(lo, lo + 9L),
         (lo to lo + 9L).map(i => (i, 0L)).toDF("id", "x"))
     }
-    assert(pinned == start, spark.sparkContext.getPersistentRDDs.values
-      .map(_.toDebugString.take(300)))
+    leftPinned(start)
     val want = (0L until 2000L).filter(_ >= 50L).map { i =>
       if (i >= 100L && i < 150L) (i, i + 1L)
       else if (i >= 200L && i < 250L) (i, -1L)
