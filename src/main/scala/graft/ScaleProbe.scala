@@ -1496,8 +1496,8 @@ object ScaleProbe {
       println(f"[probe] vtplan: checkpointEntries (once per version): " +
         f"${(System.nanoTime() - tc0) / 1e9}%.3f s")
       val jobKept = timeMin3("vtplan: pruneEntriesJob (Spark job)")(
-        VersionedTable.pruneEntriesJob(spark, t, 0,
-          Seq(VersionedTable.RangePred("id", 5000000L, 5100000L))).get)
+        VersionedTable.pruneEntriesJob(spark, t, 0, Seq(VersionedTable
+          .ExactRange.between("id", 5000000L, 5100000L))).get)
       require(jobKept.toSet == kept.toSet,
         "job prune must equal driver prune")
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
+import graft.sources.VtPushdown
+
 /** Incremental maintenance of a MATERIALIZED EQUI-JOIN — the missing
   * half of the engine's IVM story ([[IncrementalAgg]] maintains
   * rollups; this maintains `L ⋈ R` itself), driven by the row-level
@@ -210,11 +212,12 @@ object IncrementalJoinView {
     val aggs = on.flatMap { case (dc, _) =>
       Seq(min(col(dc)).as(s"__mn_$dc"), max(col(dc)).as(s"__mx_$dc")) }
     lazy val bounds = d.agg(aggs.head, aggs.tail: _*).collect()(0)
+    // collected bounds are external values (java.sql.Date/Timestamp…):
+    // the span-domain conversion is what lets DATE/TIMESTAMP keys prune
     lazy val preds = on.flatMap { case (dc, sc) =>
-      val (mn, mx) = (bounds.get(bounds.fieldIndex(s"__mn_$dc")),
-        bounds.get(bounds.fieldIndex(s"__mx_$dc")))
-      if (mn == null || mx == null) None
-      else Some(VersionedTable.RangePred(sc, mn, mx))
+      VtPushdown.rangeOfExternal(sc,
+        bounds.get(bounds.fieldIndex(s"__mn_$dc")),
+        bounds.get(bounds.fieldIndex(s"__mx_$dc")), d.schema(dc).dataType)
     }
     val snap =
       if (inKeys.nonEmpty)
@@ -227,7 +230,7 @@ object IncrementalJoinView {
       // joins nothing) — plan the snapshot's SHAPE, not its files
       else if (d.where(on.map { case (dc, _) =>
           col(dc).isNotNull }.reduce(_ || _)).isEmpty)
-        VersionedTable.read(spark, snapPath, Some(snapVersion)).limit(0)
+        VersionedTable.emptyAt(spark, snapPath, snapVersion)
       else VersionedTable.read(spark, snapPath, Some(snapVersion))
     val c = on.map { case (dc, sc) => col(dc) === col(sc) }
       .reduce(_ && _)

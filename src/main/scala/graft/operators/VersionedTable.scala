@@ -8,8 +8,11 @@ import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.graftbridge.{Bridge, WriteHarvest}
-import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DateType, LongType, MapType, StringType, StructField, StructType, TimestampNTZType}
+
+import graft.sources.VtPushdown
 
 /** Versioned parquet table with a commit log and time-travel reads —
   * the manifest/transaction layer [[TargetedDelete]]'s scaladoc defers
@@ -372,42 +375,6 @@ object VersionedTable {
     def sumOf(col: String): Option[Option[java.math.BigDecimal]] =
       if (nRows == 0) Some(None) // no rows: Σ over the empty set
       else sums.get(col)
-  }
-
-  /** Manifest-side pruning predicates for [[prunedReadWhere]]: a
-    * conjunction of range, one-sided-bound, IN-list, and not-null
-    * tests, each decidable from the per-file spans alone. */
-  sealed trait PrunePred { def column: String }
-  /** `column BETWEEN lo AND hi` (inclusive). */
-  final case class RangePred(column: String, lo: Any, hi: Any)
-    extends PrunePred
-  /** `column IN (values…)` — a file survives when at least one value
-    * falls inside its span. */
-  final case class InPred(column: String, values: Seq[Any])
-    extends PrunePred
-  /** `column >= lo` — the open-above half of a range; also the sound
-    * file-level test for a strict `>` (a superset keep, with the exact
-    * comparison re-applied by the caller's residual filter). */
-  final case class GePred(column: String, lo: Any) extends PrunePred
-  /** `column <= hi` — the open-below half; likewise covers `<`. */
-  final case class LePred(column: String, hi: Any) extends PrunePred
-  /** `column IS NOT NULL` — drops only files whose recorded span says
-    * the column is entirely null. Spark conjoins an `IsNotNull` with
-    * every pushed comparison, so this is what lets the relation path
-    * skip all-null files before any value test runs. */
-  final case class NotNullPred(column: String) extends PrunePred
-  /** `column IS NULL` — drops files whose recorded null count proves
-    * the column null-free (the "find the broken rows" query shape:
-    * most files of a healthy table carry zero nulls and never open). */
-  final case class IsNullPred(column: String) extends PrunePred
-  /** A DISJUNCTION of conjunctions (`a OR b [OR …]`, each side itself
-    * a pruning conjunction): a file survives when ANY alternative
-    * might match it. Everyday shape (`year = 1995 OR year = 1997`)
-    * that a conjunct-only walk had to keep un-pruned. `alts` must be
-    * non-empty and each alternative non-empty — an untranslatable
-    * side makes the whole disjunction un-prunable at the caller. */
-  final case class OrPred(alts: Seq[Seq[PrunePred]]) extends PrunePred {
-    override def column: String = "" // spans multiple columns
   }
 
   /** Commit `df` as the next version. `overwrite=true` makes the new
@@ -1012,31 +979,23 @@ object VersionedTable {
     // directly; oversized delta: fused into the bounds aggregate below.
     profile.foreach(g => require(g.forall(_.getLong(keys.length) == 1L),
       s"mergeInto: source keys ${keys.mkString(",")} are not unique"))
-    // coarse-prune span bounds per key column. Complete profile: a
-    // driver-side reduce with the SAME comparator the manifest prune
-    // applies ([[cmp]]), so the pruning verdict is unchanged — an
-    // unorderable value type drops its pred, which only keeps MORE
-    // candidates (the exact probe decides; the unfused path was
-    // equally conservative because [[mightMatchLeaf]] keeps files on
-    // any incomparable pair). Oversized delta: ONE aggregate job
-    // answers uniqueness and bounds together.
-    val preds: Seq[RangePred] = profile match {
+    // coarse-prune span bounds per key column, in the span domain
+    // ([[VtPushdown.spanOfExternal]] — collected DATE/TIMESTAMP keys
+    // are `java.sql` values a span never compares with). Complete
+    // profile: a driver-side [[hull]] with the comparator the manifest
+    // prune applies; a key type with no span domain or an incomparable
+    // pair drops its pred, which only keeps MORE candidates (the exact
+    // probe decides). Oversized delta: ONE aggregate job answers
+    // uniqueness and bounds together.
+    val preds: Seq[ExactPred] = profile match {
       case Some(g) if g.isEmpty => Seq.empty
       case Some(g) =>
         keys.zipWithIndex.flatMap { case (k, i) =>
-          var lo = g(0).get(i)
-          var hi = lo
-          var ok = true
-          g.iterator.drop(1).foreach { r =>
-            val x = r.get(i)
-            (cmp(x, lo), cmp(x, hi)) match {
-              case (Some(cl), Some(ch)) =>
-                if (cl < 0) lo = x
-                if (ch > 0) hi = x
-              case _ => ok = false
-            }
-          }
-          if (ok) Some(RangePred(k, lo, hi)) else None
+          val dt = src.schema(k).dataType
+          val vs = g.toSeq.map(r => VtPushdown.spanOfExternal(r.get(i), dt))
+          if (vs.contains(None)) None
+          else hull(vs.flatten.map(x => (x, x))).flatten
+            .map { case (lo, hi) => ExactRange.between(k, lo, hi) }
         }
       case None =>
         val aggs = max(col(cntAlias)).as("__graft_mrg_mxc") +:
@@ -1048,12 +1007,9 @@ object VersionedTable {
         require(row.isNullAt(row.fieldIndex("__graft_mrg_mxc")) ||
             row.getLong(row.fieldIndex("__graft_mrg_mxc")) == 1L,
           s"mergeInto: source keys ${keys.mkString(",")} are not unique")
-        keys.flatMap { k =>
-          val (mn, mx) = (row.get(row.fieldIndex(s"__mn_$k")),
-            row.get(row.fieldIndex(s"__mx_$k")))
-          if (mn == null || mx == null) None
-          else Some(RangePred(k, mn, mx))
-        }
+        keys.flatMap(k => VtPushdown.rangeOfExternal(k,
+          row.get(row.fieldIndex(s"__mn_$k")),
+          row.get(row.fieldIndex(s"__mx_$k")), src.schema(k).dataType))
     }
     var consChecked = false
     commitRewrite(spark, path, "merge", "versioned merge", txnId,
@@ -1608,17 +1564,24 @@ object VersionedTable {
       return None
     if (entries.exists(e => e.nRows != 0 && !e.stats.contains(column)))
       return None
+    hull(entries.flatMap(_.stats.get(column)).flatten)
+  }
+
+  /** The `[min, max]` hull of `spans` (`Some(None)` when empty). The
+    * reduce PICKS the answer, so its order must be SQL's exactly
+    * (byte-order strings — see [[cmpExact]]): None when a pair is not
+    * provably ordered (folds rescan, pruning keeps). */
+  private def hull(
+      spans: Iterable[(Any, Any)]): Option[Option[(Any, Any)]] = {
     var acc: Option[(Any, Any)] = None
-    entries.flatMap(_.stats.get(column)).flatten.foreach { s =>
+    spans.foreach { s =>
       acc = acc match {
         case None => Some(s)
         case Some((lo, hi)) =>
-          // the cross-file reduce PICKS the answer, so its order must
-          // be SQL's exactly (byte-order strings — see cmpExact)
           (cmpExact(s._1, lo), cmpExact(s._2, hi)) match {
             case (Some(cl), Some(ch)) =>
               Some((if (cl < 0) s._1 else lo, if (ch > 0) s._2 else hi))
-            case _ => return None // order not provably SQL's: rescan
+            case _ => return None
           }
       }
     }
@@ -1627,11 +1590,6 @@ object VersionedTable {
 
   // ---- predicate-bounded metadata counts -----------------------------
 
-  /** EXACT file-level predicate shapes for [[countWhereParts]] — what
-    * a conjunct of a SQL WHERE translates to when every part of it is
-    * decidable from per-file spans + null counts. Unlike [[PrunePred]]
-    * (conservative supersets, re-filtered by the scan), these drive
-    * metadata ANSWERS, so bounds keep their strictness. */
   /** A TIMESTAMP span value, normalized to MICROSECONDS at footer
     * harvest using the chunk's parquet unit annotation. A DISTINCT
     * type (and manifest tag `T`), never a bare Long: spans harvested
@@ -1658,12 +1616,21 @@ object VersionedTable {
     else Some(p.substring(0, p.length - 1) + (c + 1).toChar)
   }
 
+  /** THE file-predicate algebra: one conjunct of a file-level
+    * predicate, its values in the manifest's span domain
+    * ([[graft.sources.VtPushdown.span]] converts to it), decided per
+    * file by the one classifier [[classifyEntry]]. */
   sealed trait ExactPred { def column: String }
   /** `lo/hi = (bound, inclusive)`; either side open. Equality is
     * `(v,true)..(v,true)`. Null-rejecting, like every comparison. */
   final case class ExactRange(column: String,
       lo: Option[(Any, Boolean)], hi: Option[(Any, Boolean)])
     extends ExactPred
+  object ExactRange {
+    /** `column BETWEEN lo AND hi` (inclusive). */
+    def between(column: String, lo: Any, hi: Any): ExactRange =
+      ExactRange(column, Some((lo, true)), Some((hi, true)))
+  }
   /** `column IN (values)` — empty values = provably no row. */
   final case class ExactIn(column: String, values: Seq[Any])
     extends ExactPred
@@ -1690,12 +1657,19 @@ object VersionedTable {
   }
 
   /** Classify one file against one predicate: `Some(true)` = EVERY
-    * live row matches, `Some(false)` = NO row matches, `None` =
-    * undecidable (the file must be scanned). Exactness notes: spans
-    * never include NaN (parquet omits stats on NaN-bearing chunks),
-    * string orders are exact byte orders ([[cmpExact]]), and
-    * all-in demands a recorded ZERO null count (comparisons are
-    * null-rejecting; a null row would be wrongly counted). */
+    * live row matches (all-in), `Some(false)` = NO live row matches
+    * (all-out), `None` = undecidable. The one three-valued contract
+    * every consumer reads: PRUNING ([[pruneEntriesWhere]],
+    * [[pruneEntriesJob]], the pruned reads, scoped compaction, merge's
+    * coarse prune, join-key file pruning) keeps a file unless some
+    * conjunct classifies it all-out; FOLDS ([[countWhereParts]])
+    * answer from all-in files, skip all-out ones and scan the rest.
+    * Exactness notes: bounds keep their strictness, spans never
+    * include NaN (parquet omits stats on NaN-bearing chunks), string
+    * orders are exact byte orders ([[cmpExact]]), all-in demands a
+    * recorded ZERO null count (comparisons are null-rejecting; a null
+    * row would be wrongly counted), and the recorded DISTINCT VALUE SET
+    * refines all-out for ranges and IN-lists ([[dsetExcludes]]). */
   private def classifyEntry(e: FileEntry, p: ExactPred): Option[Boolean] = {
     if (e.nRows == 0) return Some(false) // no rows: vacuously out
     p match { // a provably-empty predicate needs no stats at all
@@ -1725,18 +1699,13 @@ object VersionedTable {
           else None)
       case _ => ()
     }
-    val span = e.stats.get(p.column)
     val noNulls = e.nulls.get(p.column).contains(0L)
-    span match {
+    val verdict = e.stats.get(p.column) match {
       case None => None // stats never collected for the column
       case Some(None) => Some(false) // entirely null: nothing matches
       case Some(Some((mn, mx))) => p match {
         case ExactRange(_, lo, hi) =>
-          val outLow = lo.exists { case (v, incl) =>
-            cmpExact(mx, v).exists(c => c < 0 || (c == 0 && !incl)) }
-          val outHigh = hi.exists { case (v, incl) =>
-            cmpExact(mn, v).exists(c => c > 0 || (c == 0 && !incl)) }
-          if (outLow || outHigh) Some(false)
+          if (below(mx, lo) || above(mn, hi)) Some(false)
           else {
             val inLow = lo.forall { case (v, incl) =>
               cmpExact(mn, v).exists(c => c > 0 || (c == 0 && incl)) }
@@ -1745,10 +1714,7 @@ object VersionedTable {
             if (noNulls && inLow && inHigh) Some(true) else None
           }
         case ExactIn(_, vs) => // vs nonEmpty: the early guard above
-          val allOut = vs.forall(v =>
-            cmpExact(v, mn).exists(_ < 0) ||
-              cmpExact(v, mx).exists(_ > 0))
-          if (allOut) Some(false)
+          if (vs.forall(outside(_, mn, mx))) Some(false)
           else if (noNulls && cmpExact(mn, mx).contains(0) &&
               vs.exists(v => cmpExact(v, mn).contains(0)))
             Some(true)
@@ -1762,16 +1728,47 @@ object VersionedTable {
           if (cmpExact(mn, mx).contains(0) &&
               vs.exists(v => cmpExact(v, mn).contains(0)))
             Some(false)
-          else if (noNulls && vs.forall(v =>
-              cmpExact(v, mn).exists(_ < 0) ||
-                cmpExact(v, mx).exists(_ > 0)))
-            Some(true)
+          else if (noNulls && vs.forall(outside(_, mn, mx))) Some(true)
           else None
         case _: ExactOr | _: ExactIsNull =>
           None // unreachable: dispatched above
       }
     }
+    if (!verdict.contains(false) && dsetExcludes(e, p)) Some(false)
+    else verdict
   }
+
+  /** `v` provably lies outside the span `[mn, mx]` / fails the lower
+    * bound `lo` / fails the upper bound `hi` (an incomparable pair
+    * proves nothing). */
+  private def outside(v: Any, mn: Any, mx: Any): Boolean =
+    cmpExact(v, mn).exists(_ < 0) || cmpExact(v, mx).exists(_ > 0)
+  private def below(v: Any, lo: Option[(Any, Boolean)]): Boolean =
+    lo.exists { case (b, incl) =>
+      cmpExact(v, b).exists(c => c < 0 || (c == 0 && !incl)) }
+  private def above(v: Any, hi: Option[(Any, Boolean)]): Boolean =
+    hi.exists { case (b, incl) =>
+      cmpExact(v, b).exists(c => c > 0 || (c == 0 && !incl)) }
+
+  /** The recorded DISTINCT VALUE SET excludes every value the
+    * predicate accepts — all-out even when the span covers them: the
+    * sparse-keys-inside-a-wide-span shape (CDC upserts, merge
+    * discovery). Sound regardless of deletion vectors, for pruning and
+    * folds alike: the set is the PHYSICAL value list, a superset of
+    * the live one, so "physically absent" implies "no live row
+    * matches". An incomparable pair proves nothing. Ranges and
+    * IN-lists only; IN compares pairwise exactly (hash equality would
+    * mis-prune ±0.0 doubles and scale-mismatched decimals) and is
+    * COST-BOUNDED: a huge IN-list × set product falls back to the span
+    * verdict rather than tax planning quadratically per file. */
+  private def dsetExcludes(e: FileEntry, p: ExactPred): Boolean =
+    e.dsets.get(p.column).exists { vals => p match {
+      case ExactRange(_, lo, hi) =>
+        vals.forall(v => below(v, lo) || above(v, hi))
+      case ExactIn(_, vs) if vs.size.toLong * vals.size <= 4096 =>
+        vs.forall(x => vals.forall(v => cmpExact(v, x).exists(_ != 0)))
+      case _ => false
+    }}
 
   /** Exact NON-NULL live-row count of one file's `col`, from the
     * manifest's per-column null counts — what `count(col)` folds
@@ -2015,7 +2012,8 @@ object VersionedTable {
     * are conservatively kept. */
   def prunedRead(spark: SparkSession, path: String, column: String,
       lo: Any, hi: Any, asOfVersion: Option[Int] = None): DataFrame =
-    prunedReadWhere(spark, path, Seq(RangePred(column, lo, hi)), asOfVersion)
+    prunedReadWhere(spark, path, Seq(ExactRange.between(column, lo, hi)),
+      asOfVersion)
 
   /** MEMBERSHIP-pruned read for a BOUNDED key list — the
     * merge-discovery metadata path exposed as a read: manifest
@@ -2040,8 +2038,14 @@ object VersionedTable {
     // an explicit version can name a pending multi-table manifest —
     // gate it like read() does (latestVisible already filtered these)
     asOfVersion.foreach(_ => requireVisible(fs, path, v, header))
-    val entries = readEntries(spark, path, v)
-    val spanKeep = pruneEntriesWhere(entries, Seq(InPred(column, values)))
+    // spans compare in the span domain: convert each key by the
+    // column's recorded type (a value it cannot convert is kept raw —
+    // incomparable with a span, so its files stay)
+    val dt = decodeSchema(header.schemaJson).find(_.name == column)
+      .map(_.dataType)
+    val spanKeep = pruneEntriesWhere(readEntries(spark, path, v),
+      Seq(ExactIn(column, values.map(x =>
+        dt.flatMap(VtPushdown.spanOfExternal(x, _)).getOrElse(x)))))
     // manifest spans are keyed LOGICAL; footer blooms live under the
     // PHYSICAL chunk name (column mapping)
     val keep = bloomPrune(spark, path, spanKeep,
@@ -2053,17 +2057,16 @@ object VersionedTable {
     else maskedRead(spark, header.schemaJson, path, keep).where(pred)
   }
 
-  /** [[prunedRead]] generalized to a CONJUNCTION of range and IN-list
-    * predicates: a file is opened only when EVERY predicate might
-    * match its spans, so a two-column conjunction opens no more files
-    * than either column alone (and usually strictly fewer — the
-    * Iceberg/Delta data-skipping composition). The exact predicates
-    * are re-applied to the survivors, keeping the plan
-    * result-invisible. */
+  /** [[prunedRead]] generalized to a CONJUNCTION of file predicates:
+    * a file is opened only when no predicate classifies it all-out, so
+    * a two-column conjunction opens no more files than either column
+    * alone (and usually strictly fewer — the Iceberg/Delta
+    * data-skipping composition). The exact predicates are re-applied
+    * to the survivors, keeping the plan result-invisible. */
   def prunedReadWhere(spark: SparkSession, path: String,
-      preds: Seq[PrunePred], asOfVersion: Option[Int] = None): DataFrame = {
+      preds: Seq[ExactPred], asOfVersion: Option[Int] = None): DataFrame = {
     require(preds.nonEmpty, "prunedReadWhere: no predicates")
-    preds.collect { case InPred(c, vs) if vs.isEmpty => c } match {
+    preds.collect { case ExactIn(c, vs) if vs.isEmpty => c } match {
       case Seq() => ()
       case cs => throw new IllegalArgumentException(
         s"prunedReadWhere: empty IN-list on ${cs.mkString(",")}")
@@ -2073,23 +2076,13 @@ object VersionedTable {
     val v = asOfVersion.orElse(latestVisible(fs, root, forWrite = false))
       .getOrElse(
         throw new IllegalStateException(s"no committed versions at $path"))
-    def toColumn(p: PrunePred): Column = p match {
-      case RangePred(c, lo, hi) =>
-        col(c).isNotNull && col(c) >= lit(lo) && col(c) <= lit(hi)
-      case InPred(c, vs) => col(c).isin(vs: _*)
-      case GePred(c, lo) => col(c).isNotNull && col(c) >= lit(lo)
-      case LePred(c, hi) => col(c).isNotNull && col(c) <= lit(hi)
-      case NotNullPred(c) => col(c).isNotNull
-      case IsNullPred(c) => col(c).isNull
-      case OrPred(alts) =>
-        alts.map(_.map(toColumn).reduce(_ && _)).reduce(_ || _)
-    }
-    val pred = preds.map(toColumn).reduce(_ && _)
     // beyond driver-parse scale the header (a seven-line read) routes
     // planning through the parquet entry checkpoint: pruning runs as a
     // Spark job and only the SURVIVING entries ever reach the driver
     val header = readHeader(fs, root, v)
     asOfVersion.foreach(_ => requireVisible(fs, path, v, header))
+    val pred = preds.map(residual(decodeSchema(header.schemaJson), _))
+      .reduce(_ && _)
     val keep =
       if (header.nFiles >= entryCheckpointThreshold) {
         checkpointEntries(spark, path, v): Unit // once per version
@@ -2102,20 +2095,53 @@ object VersionedTable {
       maskedRead(spark, header.schemaJson, path, keep).where(pred)
   }
 
+  /** The row filter a file predicate stands for, over a table of
+    * `schema`: span-domain values turn back into literals of the
+    * column's type (epoch days → DATE, [[TsMicros]] → TIMESTAMP). */
+  private def residual(schema: StructType, p: ExactPred): Column = {
+    def lit1(c: String, v: Any): Column =
+      (v, schema.find(_.name == c).map(_.dataType)) match {
+        case (TsMicros(us), Some(TimestampNTZType)) =>
+          lit(DateTimeUtils.microsToLocalDateTime(us))
+        case (TsMicros(us), _) => lit(DateTimeUtils.microsToInstant(us))
+        case (d: Long, Some(DateType)) =>
+          lit(java.time.LocalDate.ofEpochDay(d))
+        case _ => lit(v)
+      }
+    p match {
+      case ExactRange(c, lo, hi) =>
+        (Seq(col(c).isNotNull) ++
+          lo.map { case (v, incl) =>
+            if (incl) col(c) >= lit1(c, v) else col(c) > lit1(c, v) } ++
+          hi.map { case (v, incl) =>
+            if (incl) col(c) <= lit1(c, v) else col(c) < lit1(c, v) }
+        ).reduce(_ && _)
+      case ExactIn(c, vs) => col(c).isin(vs.map(lit1(c, _)): _*)
+      case ExactNotIn(c, vs) =>
+        col(c).isNotNull && !col(c).isin(vs.map(lit1(c, _)): _*)
+      case ExactNotNull(c) => col(c).isNotNull
+      case ExactIsNull(c) => col(c).isNull
+      case ExactOr(alts) => alts.map(_.map(residual(schema, _))
+        .reduceOption(_ && _).getOrElse(lit(true))).reduce(_ || _)
+    }
+  }
+
   /** The manifest-side pruning decision of [[prunedRead]], exposed for
     * specs and for callers composing their own reads: the entries of
     * `entries` a range predicate `[lo, hi]` on `column` might match. */
   def pruneEntries(entries: Seq[FileEntry], column: String,
       lo: Any, hi: Any): Seq[FileEntry] =
-    pruneEntriesWhere(entries, Seq(RangePred(column, lo, hi)))
+    pruneEntriesWhere(entries, Seq(ExactRange.between(column, lo, hi)))
 
-  /** Conjunctive manifest-side pruning: the entries EVERY predicate
-    * might match. Incomparable or uncollected spans keep the file
-    * (conservative); an all-null column provably fails any range or
-    * IN test. */
+  /** Conjunctive manifest-side pruning: the entries no predicate
+    * classifies all-out ([[classifyEntry]]). Incomparable or
+    * uncollected spans keep the file. */
   def pruneEntriesWhere(entries: Seq[FileEntry],
-      preds: Seq[PrunePred]): Seq[FileEntry] =
-    entries.filter(e => preds.forall(p => mightMatch(e, p)))
+      preds: Seq[ExactPred]): Seq[FileEntry] =
+    entries.filter(keeps(_, preds))
+
+  private def keeps(e: FileEntry, preds: Seq[ExactPred]): Boolean =
+    !preds.exists(classifyEntry(e, _).contains(false))
 
   // ---- parquet entry checkpoint (planning beyond driver scale) -------
 
@@ -2212,29 +2238,32 @@ object VersionedTable {
   }
 
   /** Manifest pruning AS A SPARK JOB over the entry checkpoint: the
-    * distributed equivalent of [[pruneEntriesWhere]] — same
-    * conservative `mightMatch` per entry, evaluated where the
+    * distributed equivalent of [[pruneEntriesWhere]] — the same
+    * [[classifyEntry]] verdict per entry, evaluated where the
     * checkpoint rows live, collecting only the SURVIVORS to the
     * driver (planning cost O(matching files), not O(table files)).
     * None when no completed checkpoint exists for `version` (callers
     * fall back to the driver-side parse). */
   def pruneEntriesJob(spark: SparkSession, path: String, version: Int,
-      preds: Seq[PrunePred]): Option[Seq[FileEntry]] = {
+      preds: Seq[ExactPred]): Option[Seq[FileEntry]] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val dest = entryCkptDir(root, version)
     if (!fs.exists(new Path(dest, "_SUCCESS"))) return None
     val ps = preds // serializable case classes; captured by the udf
-    val keepUdf = udf { (stats: Map[String, Seq[String]],
-        dsets: Map[String, Seq[String]]) =>
-      val e = FileEntry("", 0L, decodeCkptStats(stats),
+    // the row count and null counts ride along: classification reads
+    // a zero-row file as all-out and IS NULL decides on null counts
+    val keepUdf = udf { (nRows: Long, stats: Map[String, Seq[String]],
+        nulls: Map[String, Long], dsets: Map[String, Seq[String]]) =>
+      keeps(FileEntry("", nRows, decodeCkptStats(stats),
+        nulls = if (nulls == null) Map.empty else nulls,
         dsets = if (dsets == null) Map.empty
           else dsets.map { case (c, vs) =>
-            c -> vs.iterator.map(decode).toSet })
-      ps.forall(p => mightMatch(e, p))
+            c -> vs.iterator.map(decode).toSet }), ps)
     }
     val survivors = spark.read.schema(ckptSchema).parquet(dest.toString)
-      .where(keepUdf(col("stats"), col("dsets")))
+      .where(keepUdf(col("n_rows"), col("stats"), col("nulls"),
+        col("dsets")))
       .collect()
       .map { r =>
         FileEntry(r.getString(0), r.getLong(1),
@@ -2272,62 +2301,6 @@ object VersionedTable {
         case _ => c -> None
       }
     }
-
-  private def mightMatch(e: FileEntry, p: PrunePred): Boolean = p match {
-    // a file survives an OR when any alternative (a conjunction)
-    // might match it — evaluated BEFORE the span lookup, since the
-    // disjunction has no single anchor column
-    case OrPred(alts) => alts.exists(_.forall(mightMatch(e, _)))
-    // null counts decide, not spans (an all-null span means MATCH
-    // here, the opposite of every value test below)
-    case IsNullPred(c) => !e.nulls.get(c).contains(0L)
-    case _ => mightMatchLeaf(e, p)
-  }
-
-  private def mightMatchLeaf(e: FileEntry, p: PrunePred): Boolean = {
-    val spanKeep = e.stats.get(p.column) match {
-      case None => true // stats never collected: cannot prune
-      case Some(None) => false // all-null column: no value test matches
-      case Some(Some((mn, mx))) => p match {
-        case RangePred(_, lo, hi) =>
-          // conservative on any comparison we cannot make
-          cmp(mx, lo).forall(_ >= 0) && cmp(mn, hi).forall(_ <= 0)
-        case InPred(_, vs) =>
-          vs.exists(v =>
-            cmp(v, mn).forall(_ >= 0) && cmp(v, mx).forall(_ <= 0))
-        case GePred(_, lo) => cmp(mx, lo).forall(_ >= 0)
-        case LePred(_, hi) => cmp(mn, hi).forall(_ <= 0)
-        case NotNullPred(_) => true // a span exists: non-null values do
-        case _: OrPred | _: IsNullPred =>
-          true // unreachable: dispatched in mightMatch
-      }
-    }
-    // the recorded DISTINCT VALUE SET refines the span: a file whose
-    // set excludes every probe value prunes even when its span covers
-    // them — the sparse-keys-inside-a-wide-span shape (CDC upserts,
-    // merge discovery). Sound regardless of deletion vectors: the set
-    // is the PHYSICAL value list, a superset of the live one, so
-    // "physically absent" implies "no live row matches". Conservative
-    // on any incomparable pair. Value tests only — null tests are the
-    // dispatcher's.
-    spanKeep && (e.dsets.get(p.column) match {
-      case None => true
-      case Some(vals) => p match {
-        case RangePred(_, lo, hi) => vals.exists(v =>
-          cmp(v, lo).forall(_ >= 0) && cmp(v, hi).forall(_ <= 0))
-        // exact-compare pairwise (hash equality would mis-prune ±0.0
-        // doubles and scale-mismatched decimals); COST-BOUNDED: a
-        // huge IN-list × set product falls back to the span verdict
-        // rather than tax planning quadratically per file
-        case InPred(_, vs) if vs.size.toLong * vals.size <= 4096 =>
-          vs.exists(x => vals.exists(v =>
-            cmp(v, x).forall(_ == 0))) // incomparable pair: keep
-        case GePred(_, lo) => vals.exists(v => cmp(v, lo).forall(_ >= 0))
-        case LePred(_, hi) => vals.exists(v => cmp(v, hi).forall(_ <= 0))
-        case _ => true
-      }
-    })
-  }
 
   /** Membership prune via parquet FOOTER BLOOM FILTERS (written for
     * every indexed column by [[stageAndPublish]]): keep only the
@@ -2633,7 +2606,7 @@ object VersionedTable {
     * untouched when fewer than two files are selected; a lost manifest
     * race is an advisory no-op like [[compactSmall]]. */
   def compactWhere(spark: SparkSession, path: String,
-      preds: Seq[PrunePred],
+      preds: Seq[ExactPred],
       targetFileBytes: Long = 128L * 1024 * 1024,
       clusterBy: Seq[String] = Seq.empty): Int = {
     require(preds.nonEmpty, "compactWhere: no predicates — use " +
@@ -4110,6 +4083,15 @@ object VersionedTable {
   private def emptyOf(spark: SparkSession, schemaJson: String): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[Row](),
       decodeSchema(schemaJson))
+
+  /** [[read]]'s shape at `version` with no rows, from the recorded
+    * schema: no scan, and no deletion-vector mask collect. */
+  private[graft] def emptyAt(spark: SparkSession, path: String,
+      version: Int): DataFrame = {
+    val root = new Path(path)
+    emptyOf(spark, readHeader(root.getFileSystem(
+      spark.sessionState.newHadoopConf()), root, version).schemaJson)
+  }
 
   /** Parquet scan of `paths` in the schema's LOGICAL shape. */
   private def schemaRead(spark: SparkSession, schemaJson: String,

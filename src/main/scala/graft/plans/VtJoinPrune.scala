@@ -12,8 +12,8 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 import graft.operators.VersionedTable
-import graft.operators.VersionedTable.{InPred, PrunePred, RangePred}
-import graft.sources.VtTable
+import graft.operators.VersionedTable.{ExactIn, ExactPred, ExactRange}
+import graft.sources.{VtPushdown, VtTable}
 
 /** JOIN-KEY DYNAMIC FILE PRUNING for versioned catalog tables — the
   * manifest-layer analog of Spark's dynamic partition pruning, the
@@ -181,32 +181,12 @@ object VtJoinPrune extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  /** Catalyst value → the manifest span domain ([[VersionedTable]]
-    * normalization): what [[InPred]]/[[RangePred]] compare against. */
-  private def toMeta(v: Any, dt: DataType): Option[Any] = (v, dt) match {
-    case (null, _) => None // null keys never equi-match
-    case (b: Byte, _) => Some(b.toLong)
-    case (s: Short, _) => Some(s.toLong)
-    case (i: Int, DateType) => Some(i.toLong)
-    case (i: Int, _) => Some(i.toLong)
-    case (l: Long, TimestampType) => Some(VersionedTable.TsMicros(l))
-    case (l: Long, TimestampNTZType) => Some(VersionedTable.TsMicros(l))
-    case (l: Long, _) => Some(l)
-    case (f: Float, _) => Some(f.toDouble)
-    case (d: Double, _) => Some(d)
-    case (u: org.apache.spark.unsafe.types.UTF8String, _) =>
-      Some(u.toString)
-    case (d: org.apache.spark.sql.types.Decimal, _) =>
-      Some(d.toJavaBigDecimal)
-    case _ => None
-  }
-
   /** Execute the build side (one tiny driver job — it is broadcast-
     * class by stats) and derive the probe-file predicate: the exact
     * distinct key set under the cap, else the key min/max range. */
   private def prunePred(build: LogicalPlan,
       buildKey: AttributeReference,
-      probeKey: AttributeReference): Option[PrunePred] = {
+      probeKey: AttributeReference): Option[ExactPred] = {
     val spark = SparkSession.active
     val cap = spark.conf.get("spark.graft.dfp.inSetCap", "1000").toInt
     inFlight.set(true)
@@ -219,11 +199,12 @@ object VtJoinPrune extends Rule[LogicalPlan] {
       val rows = Bridge.ofRows(spark, distinctPlan)
         .queryExecution.executedPlan.executeCollect()
       if (rows.length <= cap) {
+        // null keys never equi-match: they drop out of the set
         val vals = rows.toSeq.flatMap(r =>
-          toMeta(r.get(0, buildKey.dataType), buildKey.dataType))
-        // an empty build side: the join output is empty; InPred(empty)
+          VtPushdown.span(r.get(0, buildKey.dataType), buildKey.dataType))
+        // an empty build side: the join output is empty; ExactIn(empty)
         // prunes every file and the subset read returns zero rows
-        Some(InPred(probeKey.name, vals))
+        Some(ExactIn(probeKey.name, vals))
       } else {
         import org.apache.spark.sql.catalyst.expressions.aggregate.{
           AggregateExpression, Complete, Max, Min}
@@ -235,9 +216,9 @@ object VtJoinPrune extends Rule[LogicalPlan] {
           Aggregate(Nil, Seq(mn, mx), build))
           .queryExecution.executedPlan.executeCollect().head
         for {
-          lo <- toMeta(r.get(0, buildKey.dataType), buildKey.dataType)
-          hi <- toMeta(r.get(1, buildKey.dataType), buildKey.dataType)
-        } yield RangePred(probeKey.name, lo, hi)
+          lo <- VtPushdown.span(r.get(0, buildKey.dataType), buildKey.dataType)
+          hi <- VtPushdown.span(r.get(1, buildKey.dataType), buildKey.dataType)
+        } yield ExactRange.between(probeKey.name, lo, hi)
       }
     } catch {
       case scala.util.control.NonFatal(_) => None

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Attribute, AttributeReference, Cast, Coalesce, Divide, EqualTo, EvalMode, ExprId, Expression, GreaterThan, GreaterThanOrEqual, If, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Not, Or, StartsWith}
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Attribute, AttributeReference, Cast, Coalesce, Divide, EqualTo, EvalMode, ExprId, Expression, If, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, HyperLogLogPlusPlus, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecificInternalRow}
 import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
@@ -14,8 +14,7 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, De
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.VersionedTable
-import graft.operators.VersionedTable.{ExactIn, ExactIsNull, ExactNotIn, ExactNotNull, ExactOr, ExactPred, ExactRange}
-import graft.sources.VtTable
+import graft.sources.{VtPushdown, VtTable}
 
 /** METADATA-ONLY AGGREGATES over versioned catalog tables: a whole-
   * table `SELECT count(*)` (and `min`/`max` of a stats-indexed
@@ -43,7 +42,8 @@ import graft.sources.VtTable
   *     it — any join/expression in between blocks the rewrite (a
   *     Project never changes row counts);
   *   - a WHERE folds when EVERY conjunct translates to exact
-  *     file-level predicates — ranges, IN, IS NOT NULL, and
+  *     file-level predicates ([[graft.sources.VtPushdown]]'s exact
+  *     path) — ranges, IN, IS NOT NULL, and
   *     DISJUNCTIONS of those ([[VersionedTable.ExactOr]]: a file is
   *     all-in when some OR-alternative provably covers its every
   *     row) — all-in files answer from metadata, all-out contribute
@@ -500,7 +500,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       .map(r => r -> (try new HyperLogLogPlusPlusHelper(r).numWords
         catch { case scala.util.control.NonFatal(_) => return None }))
       .toMap
-    val preds = toExactPreds(cond, relIds).getOrElse(return None)
+    val preds = VtPushdown.toExactPreds(cond, relIds).getOrElse(return None)
     val spark = SparkSession.active
     val entries =
       try {
@@ -975,7 +975,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         .map(r => r -> (try new HyperLogLogPlusPlusHelper(r)
           catch { case scala.util.control.NonFatal(_) => return None }))
         .toMap
-    val preds = toExactPreds(cond, relIds).getOrElse(return None)
+    val preds = VtPushdown.toExactPreds(cond, relIds).getOrElse(return None)
     val spark = SparkSession.active
     val entries =
       try {
@@ -1561,151 +1561,6 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           Complete, isDistinct = false), o.name)(exprId = o.exprId)
     }
     Some(Aggregate(uG, outs, union))
-  }
-
-  /** Translate a WHERE into exact file-level predicates — EVERY
-    * conjunct must translate, or the fold declines (a dropped
-    * conjunct would over-count; this is the opposite posture from
-    * [[graft.sources.VtPushdown]]'s conservative pruning). */
-  private[plans] def toExactPreds(cond: Expression,
-      relIds: Set[ExprId]): Option[Seq[ExactPred]] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    def isTs(a: AttributeReference): Boolean = a.dataType match {
-      case _: org.apache.spark.sql.types.TimestampType => true
-      case _: org.apache.spark.sql.types.TimestampNTZType => true
-      case _ => false
-    }
-    // timestamp literals wrap in the manifest's unit-normalized
-    // micros domain ([[VersionedTable.TsMicros]]); spans harvested
-    // before unit tagging stay raw Longs, compare as incomparable,
-    // and conservatively decline — never a unit-mixed misclassify
-    def v(a: AttributeReference, l: Literal): Any = l.value match {
-      case u: UTF8String => u.toString
-      case other: java.lang.Long if isTs(a) =>
-        VersionedTable.TsMicros(other)
-      case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-      case other => other
-    }
-    def ok(a: AttributeReference): Boolean =
-      relIds.contains(a.exprId) && (a.dataType match {
-        // non-default collations (Spark 4 StringType(collationId))
-        // compare under ICU rules — e.g. UTF8_LCASE `= 'abc'` must
-        // match 'ABC' — while span classification compares unsigned
-        // bytes; only UTF8_BINARY's order IS byte order, so collated
-        // columns decline to the plain scan
-        case s: org.apache.spark.sql.types.StringType =>
-          s == org.apache.spark.sql.types.StringType
-        case _ => true
-      })
-    val out = conjuncts(cond).map {
-      // OR keeps its tree shape (no DNF expansion): each disjunct
-      // translates as its own conjunction, and classification runs
-      // per-alternative — `year = 1995 OR year = 1997`, the everyday
-      // shape a conjunct-only walk sent to a full scan. EVERY
-      // disjunct must translate or the whole WHERE declines (a
-      // dropped disjunct would under-count; a widened one over-count)
-      case o: Or =>
-        def disjuncts(x: Expression): Seq[Expression] = x match {
-          case Or(l, r) => disjuncts(l) ++ disjuncts(r)
-          case y => Seq(y)
-        }
-        val alts = disjuncts(o).map(d => toExactPreds(d, relIds))
-        if (alts.exists(_.isEmpty)) None
-        else Some(Seq(ExactOr(alts.map(_.get))))
-      case Literal(true, BooleanType) => Some(Nil)
-      case Literal(false, BooleanType) | Literal(null, _) =>
-        Some(Seq(ExactIn("", Seq.empty))) // provably empty everywhere
-      case EqualTo(a: AttributeReference, l: Literal) if ok(a) =>
-        if (l.value == null) Some(Seq(ExactIn(a.name, Seq.empty)))
-        else Some(Seq(ExactRange(a.name,
-          Some((v(a, l), true)), Some((v(a, l), true)))))
-      case EqualTo(l: Literal, a: AttributeReference) if ok(a) =>
-        if (l.value == null) Some(Seq(ExactIn(a.name, Seq.empty)))
-        else Some(Seq(ExactRange(a.name,
-          Some((v(a, l), true)), Some((v(a, l), true)))))
-      case GreaterThan(a: AttributeReference, l: Literal)
-          if ok(a) && l.value != null =>
-        Some(Seq(ExactRange(a.name, Some((v(a, l), false)), None)))
-      case GreaterThan(l: Literal, a: AttributeReference)
-          if ok(a) && l.value != null =>
-        Some(Seq(ExactRange(a.name, None, Some((v(a, l), false)))))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal)
-          if ok(a) && l.value != null =>
-        Some(Seq(ExactRange(a.name, Some((v(a, l), true)), None)))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference)
-          if ok(a) && l.value != null =>
-        Some(Seq(ExactRange(a.name, None, Some((v(a, l), true)))))
-      case LessThan(a: AttributeReference, l: Literal)
-          if ok(a) && l.value != null =>
-        Some(Seq(ExactRange(a.name, None, Some((v(a, l), false)))))
-      case LessThan(l: Literal, a: AttributeReference)
-          if ok(a) && l.value != null =>
-        Some(Seq(ExactRange(a.name, Some((v(a, l), false)), None)))
-      case LessThanOrEqual(a: AttributeReference, l: Literal)
-          if ok(a) && l.value != null =>
-        Some(Seq(ExactRange(a.name, None, Some((v(a, l), true)))))
-      case LessThanOrEqual(l: Literal, a: AttributeReference)
-          if ok(a) && l.value != null =>
-        Some(Seq(ExactRange(a.name, Some((v(a, l), true)), None)))
-      case In(a: AttributeReference, vs) if ok(a) &&
-          vs.forall(_.isInstanceOf[Literal]) =>
-        Some(Seq(ExactIn(a.name, vs.collect {
-          case l: Literal if l.value != null => v(a, l) })))
-      case InSet(a: AttributeReference, vs) if ok(a) =>
-        Some(Seq(ExactIn(a.name, vs.toSeq.filter(_ != null).map {
-          case u: UTF8String => u.toString
-          case other: java.lang.Long if isTs(a) =>
-            VersionedTable.TsMicros(other)
-          case d: org.apache.spark.sql.types.Decimal =>
-            d.toJavaBigDecimal
-          case other => other
-        })))
-      case IsNotNull(a: AttributeReference) if ok(a) =>
-        Some(Seq(ExactNotNull(a.name)))
-      case IsNull(a: AttributeReference) if ok(a) =>
-        Some(Seq(ExactIsNull(a.name)))
-      // LIKE 'prefix%' (optimizer-lowered to StartsWith): exactly the
-      // byte-order range [prefix, prefix-with-last-char+1) — decline
-      // when no safe upper bound exists (an open range would claim
-      // all-in for rows merely >= the prefix)
-      case StartsWith(a: AttributeReference, l: Literal)
-          if ok(a) && l.value != null =>
-        val prefix = l.value.toString
-        VersionedTable.prefixUpperBound(prefix).map(up =>
-          Seq(ExactRange(a.name,
-            Some((prefix, true)), Some((up, false)))))
-      // negations: != / NOT IN. A NULL member makes the predicate
-      // match nothing (NULL NOT IN is never true) — the provably-
-      // empty ExactIn, same as `= NULL`.
-      case Not(EqualTo(a: AttributeReference, l: Literal)) if ok(a) =>
-        if (l.value == null) Some(Seq(ExactIn(a.name, Seq.empty)))
-        else Some(Seq(ExactNotIn(a.name, Seq(v(a, l)))))
-      case Not(EqualTo(l: Literal, a: AttributeReference)) if ok(a) =>
-        if (l.value == null) Some(Seq(ExactIn(a.name, Seq.empty)))
-        else Some(Seq(ExactNotIn(a.name, Seq(v(a, l)))))
-      case Not(In(a: AttributeReference, vs)) if ok(a) &&
-          vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        val vals = vs.map(_.asInstanceOf[Literal])
-        if (vals.exists(_.value == null))
-          Some(Seq(ExactIn(a.name, Seq.empty)))
-        else Some(Seq(ExactNotIn(a.name, vals.map(v(a, _)))))
-      case Not(InSet(a: AttributeReference, vs)) if ok(a) && vs.nonEmpty =>
-        if (vs.exists(_ == null)) Some(Seq(ExactIn(a.name, Seq.empty)))
-        else Some(Seq(ExactNotIn(a.name, vs.toSeq.map {
-          case u: UTF8String => u.toString
-          case other: java.lang.Long if isTs(a) =>
-            VersionedTable.TsMicros(other)
-          case d: org.apache.spark.sql.types.Decimal =>
-            d.toJavaBigDecimal
-          case other => other
-        })))
-      case _ => None
-    }
-    if (out.exists(_.isEmpty)) None
-    else Some(out.flatMap(_.get))
   }
 
   /** 2^53 — the largest double-exact integer magnitude: the bound of

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.VersionedTable
-import graft.sources.VtTable
+import graft.sources.{VtPushdown, VtTable}
 
 /** TOP-K FILE SKIPPING for `ORDER BY col [DESC] LIMIT k` over a
   * versioned catalog table: manifest spans ORDER the files, so only
@@ -127,7 +127,7 @@ object VtTopKRewrite extends Rule[LogicalPlan] {
       case None => (entries, entries.map(_.name).toSet)
       case Some(c) =>
         val relIds = relOut.map(_.exprId).toSet
-        val preds = VtMetadataAgg.toExactPreds(c, relIds)
+        val preds = VtPushdown.toExactPreds(c, relIds)
           .getOrElse(return None)
         val (_, allIn, boundaryNames) =
           VersionedTable.countWhereParts(entries, preds)

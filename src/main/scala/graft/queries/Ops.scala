@@ -1474,7 +1474,7 @@ object Ops {
       t, overwrite = true, statsCols = Seq("l_orderkey"))
     val mx = li.agg(max(col("l_orderkey"))).collect()(0)
     if (!mx.isNullAt(0)) {
-      val pred = Seq(VersionedTable.RangePred("l_orderkey",
+      val pred = Seq(VersionedTable.ExactRange.between("l_orderkey",
         0L, mx.getLong(0) / 4))
       val pre = VersionedTable.files(s, t, 0)
       val sel = VersionedTable.pruneEntriesWhere(
@@ -1834,7 +1834,7 @@ object Ops {
   // result-invisible.
   val opVtPrunedMulti: Q = (s, d) => {
     import graft.operators.VersionedTable
-    import VersionedTable.{InPred, RangePred}
+    import VersionedTable.{ExactIn, ExactRange}
     val dir = Sources.fixtureDir(s, "graft_vtpm_")
     Sources.registerCleanup(dir)
     val t = new java.io.File(dir, "li").getAbsolutePath
@@ -1846,12 +1846,12 @@ object Ops {
       clusterBy = Seq("l_orderkey", "l_quantity"))
     val entries = VersionedTable.readEntries(s, t, cv)
     val pa = VersionedTable.pruneEntriesWhere(entries,
-      Seq(RangePred("l_orderkey", 1000L, 5000L)))
+      Seq(ExactRange.between("l_orderkey", 1000L, 5000L)))
     val pb = VersionedTable.pruneEntriesWhere(entries,
-      Seq(RangePred("l_quantity", 1.0, 10.0)))
+      Seq(ExactRange.between("l_quantity", 1.0, 10.0)))
     val both = VersionedTable.pruneEntriesWhere(entries,
-      Seq(RangePred("l_orderkey", 1000L, 5000L),
-        RangePred("l_quantity", 1.0, 10.0)))
+      Seq(ExactRange.between("l_orderkey", 1000L, 5000L),
+        ExactRange.between("l_quantity", 1.0, 10.0)))
     require(both.size <= pa.size && both.size <= pb.size,
       "a conjunction can never open more files than one conjunct")
     require(entries.size < 8 ||
@@ -1859,9 +1859,9 @@ object Ops {
       s"z-clustered 2-col conjunction must out-prune both single " +
         s"prunes: ${pa.size}/${pb.size}/${both.size} of ${entries.size}")
     VersionedTable.prunedReadWhere(s, t, Seq(
-      RangePred("l_orderkey", 1000L, 5000L),
-      RangePred("l_quantity", 1.0, 10.0),
-      InPred("l_linenumber", Seq(1L, 3L, 5L))))
+      ExactRange.between("l_orderkey", 1000L, 5000L),
+      ExactRange.between("l_quantity", 1.0, 10.0),
+      ExactIn("l_linenumber", Seq(1L, 3L, 5L))))
   }
 
   // Incremental aggregate maintenance: a (priority × month) revenue

@@ -3,13 +3,14 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or, StartsWith}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BinaryComparison, EqualNullSafe, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThanOrEqual, Literal, Not, Or, StartsWith}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.VersionedTable
-import graft.operators.VersionedTable.{FileEntry, GePred, InPred, IsNullPred, LePred, NotNullPred, OrPred, PrunePred, RangePred}
+import graft.operators.VersionedTable.{ExactIn, ExactIsNull, ExactNotIn, ExactNotNull, ExactOr, ExactPred, ExactRange, FileEntry}
 
 /** Manifest-backed [[FileIndex]] for one committed version of a
   * [[VersionedTable]] — the piece that makes
@@ -76,7 +77,7 @@ final class VtFileIndex(spark: SparkSession, tablePath: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val preds = dataFilters.flatMap(VtPushdown.toPrunePreds)
+    val preds = VtPushdown.toRelationPreds(dataFilters)
     val keep =
       if (preds.isEmpty) entries
       else VersionedTable.pruneEntriesWhere(entries, preds)
@@ -98,102 +99,175 @@ final class VtFileIndex(spark: SparkSession, tablePath: String,
   override def toString: String = s"VtFileIndex[$tablePath@v$version]"
 }
 
-/** Catalyst-filter → manifest-predicate translation for the relation
-  * path. Strictly CONSERVATIVE: anything not translatable is simply
-  * not pruned on (Spark re-applies the exact filter above the scan,
-  * so pruning can only ever drop files that provably contain no
-  * matching row). Strict bounds translate to their inclusive
-  * file-level supersets; null-valued literals translate to nothing
-  * (their comparisons match no row, and the residual filter erases
-  * them). */
+/** The one translator from Catalyst filters to file predicates (the
+  * [[ExactPred]] algebra that [[VersionedTable.classifyEntry]]
+  * decides), and the one conversion of a value into the manifest's
+  * span domain ([[span]]). Two entry points share them:
+  *
+  *  - the EXACT path ([[toExactPreds]] — metadata folds and top-k
+  *    skipping): EVERY conjunct must translate, or the caller declines
+  *    (a dropped conjunct would over-count a fold);
+  *  - the RELATION path ([[toRelationPreds]] — [[VtFileIndex]]'s
+  *    pushed data filters): each conjunct translates on its own and
+  *    one that does not is dropped (Spark re-applies the exact filter
+  *    above the scan, so dropping only keeps more files).
+  *
+  * A translated predicate is exact either way — strict bounds stay
+  * strict, a comparison with a NULL literal is provably empty — so the
+  * same predicates prune files (kept unless some conjunct classifies
+  * the file all-out) and answer folds. */
 object VtPushdown {
 
-  def toPrunePreds(e: Expression): Seq[PrunePred] = e match {
-    case And(l, r) => toPrunePreds(l) ++ toPrunePreds(r)
-    // each OR side prunes as its own conjunction; a side that
-    // translates to nothing means "might match anything", which
-    // makes the whole disjunction un-prunable (returning just the
-    // other side would wrongly narrow the keep-set)
-    case Or(l, r) =>
-      val (lp, rp) = (toPrunePreds(l), toPrunePreds(r))
-      if (lp.isEmpty || rp.isEmpty) Seq.empty
-      else Seq(OrPred(Seq(lp, rp)))
-    case EqualTo(a: AttributeReference, l: Literal) => eq(a, l)
-    case EqualTo(l: Literal, a: AttributeReference) => eq(a, l)
-    case EqualNullSafe(a: AttributeReference, l: Literal)
-        if l.value != null => eq(a, l)
-    case EqualNullSafe(l: Literal, a: AttributeReference)
-        if l.value != null => eq(a, l)
-    case GreaterThan(a: AttributeReference, l: Literal) => ge(a, l)
-    case GreaterThanOrEqual(a: AttributeReference, l: Literal) => ge(a, l)
-    case LessThan(l: Literal, a: AttributeReference) => ge(a, l)
-    case LessThanOrEqual(l: Literal, a: AttributeReference) => ge(a, l)
-    case LessThan(a: AttributeReference, l: Literal) => le(a, l)
-    case LessThanOrEqual(a: AttributeReference, l: Literal) => le(a, l)
-    case GreaterThan(l: Literal, a: AttributeReference) => le(a, l)
-    case GreaterThanOrEqual(l: Literal, a: AttributeReference) => le(a, l)
-    case In(a: AttributeReference, vs)
-        if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-      inList(a, vs.map(_.asInstanceOf[Literal].value))
-    case InSet(a: AttributeReference, vs) if vs.nonEmpty =>
-      inList(a, vs.toSeq)
-    case IsNotNull(a: AttributeReference) => Seq(NotNullPred(a.name))
-    case IsNull(a: AttributeReference) => Seq(IsNullPred(a.name))
-    // LIKE 'prefix%': the byte-order prefix range (inclusive-upper
-    // superset — pruning only needs might-match)
-    case StartsWith(a: AttributeReference, l: Literal)
-        if l.value != null =>
-      span(l.value, a.dataType).toSeq.flatMap { pv =>
-        val prefix = pv.toString
-        GePred(a.name, prefix) +:
-          VersionedTable.prefixUpperBound(prefix)
-            .map(LePred(a.name, _)).toSeq
+  def toExactPreds(cond: Expression,
+      relIds: Set[ExprId]): Option[Seq[ExactPred]] =
+    translate(cond, a => relIds.contains(a.exprId), lenient = false)
+
+  def toRelationPreds(dataFilters: Seq[Expression]): Seq[ExactPred] =
+    dataFilters.flatMap(translate(_, _ => true, lenient = true).get)
+
+  /** `lenient` drops untranslatable conjuncts (always `Some`); strict
+    * translation is `None` as soon as one conjunct does not translate. */
+  private def translate(cond: Expression,
+      inRel: AttributeReference => Boolean,
+      lenient: Boolean): Option[Seq[ExactPred]] = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case x => Seq(x)
+    }
+    // non-default collations (Spark 4 StringType(collationId)) compare
+    // under ICU rules — e.g. UTF8_LCASE `= 'abc'` must match 'ABC' —
+    // while classification compares unsigned bytes; only UTF8_BINARY's
+    // order IS byte order, so collated columns never translate
+    def ok(a: AttributeReference): Boolean =
+      inRel(a) && (a.dataType match {
+        case s: StringType => s == StringType
+        case _ => true
+      })
+    def spans(a: AttributeReference, vs: Seq[Any]): Option[Seq[Any]] = {
+      val out = vs.map(span(_, a.dataType))
+      if (out.contains(None)) None else Some(out.flatten)
+    }
+    // a comparison with a NULL literal matches no row: provably empty
+    def empty(a: AttributeReference) = Some(Seq(ExactIn(a.name, Nil)))
+    // `a OP v` (`flipped`: the literal was on the left, `v OP a`)
+    def compare(op: BinaryComparison, a: AttributeReference, l: Literal,
+        flipped: Boolean): Option[Seq[ExactPred]] =
+      if (!ok(a)) None
+      else if (l.value == null) op match {
+        case _: EqualNullSafe => None // `a <=> NULL` is IS NULL
+        case _ => empty(a)
+      } else span(l.value, a.dataType).map { v =>
+        val point = Some((v, true))
+        val side = Some((v, op.isInstanceOf[GreaterThanOrEqual] ||
+          op.isInstanceOf[LessThanOrEqual]))
+        val lower = op.isInstanceOf[GreaterThan] ||
+          op.isInstanceOf[GreaterThanOrEqual]
+        Seq(op match {
+          case _: EqualTo | _: EqualNullSafe =>
+            ExactRange(a.name, point, point)
+          case _ if lower != flipped => ExactRange(a.name, side, None)
+          case _ => ExactRange(a.name, None, side)
+        })
       }
-    case _ => Seq.empty
-  }
-
-  private def eq(a: AttributeReference, l: Literal): Seq[PrunePred] =
-    span(l.value, a.dataType).map(v => RangePred(a.name, v, v)).toSeq
-
-  private def ge(a: AttributeReference, l: Literal): Seq[PrunePred] =
-    span(l.value, a.dataType).map(v => GePred(a.name, v)).toSeq
-
-  private def le(a: AttributeReference, l: Literal): Seq[PrunePred] =
-    span(l.value, a.dataType).map(v => LePred(a.name, v)).toSeq
-
-  private def inList(a: AttributeReference,
-      vs: Seq[Any]): Seq[PrunePred] = {
-    val spans = vs.map(span(_, a.dataType))
-    // one untranslatable (or null) member makes the whole IN
-    // un-prunable — dropping just that member would narrow the test
-    if (spans.exists(_.isEmpty)) Seq.empty
-    else Seq(InPred(a.name, spans.map(_.get)))
-  }
-
-  /** Internal literal value → the manifest's normalized span domain
-    * (Long / Double / String — dates as epoch days, timestamps as
-    * epoch micros, matching the footer harvest in
-    * [[VersionedTable]]). None = not span-comparable (decimals,
-    * booleans, binaries, nulls) — the conservative non-translation. */
-  private[sources] def span(v: Any, dt: DataType): Option[Any] =
-    if (v == null) None
-    else dt match {
-      case StringType => Some(v.asInstanceOf[UTF8String].toString)
-      case ByteType | ShortType | IntegerType | LongType =>
-        Some(v.asInstanceOf[Number].longValue)
-      case FloatType | DoubleType =>
-        Some(v.asInstanceOf[Number].doubleValue)
-      case DateType => Some(v.asInstanceOf[Number].longValue)
-      case TimestampType | TimestampNTZType =>
-        // distinct wrapper, matching the manifest's unit-normalized
-        // micros spans; legacy raw-Long spans compare as incomparable
-        // (conservative keep) instead of mixing units
-        Some(VersionedTable.TsMicros(v.asInstanceOf[Number].longValue))
-      case _: DecimalType =>
-        // manifests record decimal spans as BigDecimal at the
-        // column's fixed scale (r17, `C` tag — feature `taggedSpans`)
-        Some(v.asInstanceOf[org.apache.spark.sql.types.Decimal]
-          .toJavaBigDecimal)
+    def in(a: AttributeReference, vs: Seq[Any]): Option[Seq[ExactPred]] =
+      if (!ok(a)) None // NULL members never match: drop them
+      else spans(a, vs.filter(_ != null)).map(s => Seq(ExactIn(a.name, s)))
+    def notIn(a: AttributeReference,
+        vs: Seq[Any]): Option[Seq[ExactPred]] =
+      if (!ok(a)) None // a NULL member makes NOT IN match nothing
+      else if (vs.contains(null)) empty(a)
+      else spans(a, vs).map(s => Seq(ExactNotIn(a.name, s)))
+    def literals(vs: Seq[Expression]): Option[Seq[Any]] =
+      if (vs.forall(_.isInstanceOf[Literal]))
+        Some(vs.map(_.asInstanceOf[Literal].value))
+      else None
+    val parts = conjuncts(cond).map {
+      // OR keeps its tree shape (no DNF expansion): each disjunct
+      // translates as its own conjunction and classification runs per
+      // alternative. A disjunct that does not translate (or, leniently,
+      // translates to nothing) might match anything, so the whole OR
+      // does not translate — dropping just that side would narrow it
+      case o: Or =>
+        def disjuncts(x: Expression): Seq[Expression] = x match {
+          case Or(l, r) => disjuncts(l) ++ disjuncts(r)
+          case y => Seq(y)
+        }
+        val alts = disjuncts(o).map(translate(_, inRel, lenient))
+        if (alts.exists(a => a.isEmpty || (lenient && a.get.isEmpty))) None
+        else Some(Seq(ExactOr(alts.map(_.get))))
+      case Literal(true, BooleanType) => Some(Nil)
+      case Literal(false, BooleanType) | Literal(null, _) =>
+        Some(Seq(ExactIn("", Nil))) // provably empty everywhere
+      case op: BinaryComparison => (op.left, op.right) match {
+        case (a: AttributeReference, l: Literal) =>
+          compare(op, a, l, flipped = false)
+        case (l: Literal, a: AttributeReference) =>
+          compare(op, a, l, flipped = true)
+        case _ => None
+      }
+      case In(a: AttributeReference, vs) => literals(vs).flatMap(in(a, _))
+      case InSet(a: AttributeReference, vs) => in(a, vs.toSeq)
+      case IsNotNull(a: AttributeReference) if ok(a) =>
+        Some(Seq(ExactNotNull(a.name)))
+      case IsNull(a: AttributeReference) if ok(a) =>
+        Some(Seq(ExactIsNull(a.name)))
+      // LIKE 'prefix%' (optimizer-lowered to StartsWith): exactly the
+      // byte-order range [prefix, prefix-with-last-char+1) — none when
+      // no safe upper bound exists (an open range would claim all-in
+      // for rows merely >= the prefix)
+      case StartsWith(a: AttributeReference, l: Literal) if ok(a) =>
+        span(l.value, a.dataType).collect { case p: String => p }
+          .flatMap(p => VersionedTable.prefixUpperBound(p).map(up =>
+            Seq(ExactRange(a.name, Some((p, true)), Some((up, false))))))
+      // negations: != / NOT IN
+      case Not(EqualTo(a: AttributeReference, l: Literal)) =>
+        notIn(a, Seq(l.value))
+      case Not(EqualTo(l: Literal, a: AttributeReference)) =>
+        notIn(a, Seq(l.value))
+      case Not(In(a: AttributeReference, vs)) if vs.nonEmpty =>
+        literals(vs).flatMap(notIn(a, _))
+      case Not(InSet(a: AttributeReference, vs)) if vs.nonEmpty =>
+        notIn(a, vs.toSeq)
       case _ => None
     }
+    if (!lenient && parts.contains(None)) None
+    else Some(parts.flatten.flatten)
+  }
+
+  /** A Catalyst (internal) value → the manifest's span domain for a
+    * column of type `dt`, matching the footer harvest in
+    * [[VersionedTable]]: Long for integrals and dates (epoch days),
+    * Double for floats (widened exactly), String for UTF8_BINARY
+    * strings, [[VersionedTable.TsMicros]] for timestamps (legacy
+    * raw-Long spans then compare as incomparable instead of mixing
+    * units), BigDecimal for decimals (recorded at the column's scale).
+    * None = not span-comparable (null, booleans, binaries, collated
+    * strings, a value not of `dt`'s internal type) — callers decline
+    * or keep files. */
+  def span(v: Any, dt: DataType): Option[Any] = (v, dt) match {
+    case (u: UTF8String, StringType) => Some(u.toString)
+    case (n @ (_: Byte | _: Short | _: Int | _: Long),
+        ByteType | ShortType | IntegerType | LongType | DateType) =>
+      Some(n.asInstanceOf[Number].longValue)
+    case (n @ (_: Float | _: Double), FloatType | DoubleType) =>
+      Some(n.asInstanceOf[Number].doubleValue)
+    case (us: Long, TimestampType | TimestampNTZType) =>
+      Some(VersionedTable.TsMicros(us))
+    case (d: Decimal, _: DecimalType) => Some(d.toJavaBigDecimal)
+    case _ => None
+  }
+
+  /** [[span]] of an external (`Row`-side) value — `java.sql.Date`,
+    * `Timestamp`, `Instant`, `String`, `BigDecimal` — converted to its
+    * Catalyst form first. */
+  def spanOfExternal(v: Any, dt: DataType): Option[Any] =
+    span(CatalystTypeConverters.convertToCatalyst(v), dt)
+
+  /** `column BETWEEN lo AND hi` from external bounds of type `dt`
+    * (collected min/max); None when either bound is null or not
+    * span-comparable — the caller then keeps every file. */
+  def rangeOfExternal(column: String, lo: Any, hi: Any,
+      dt: DataType): Option[ExactPred] =
+    for (l <- spanOfExternal(lo, dt); h <- spanOfExternal(hi, dt))
+      yield ExactRange(column, Some((l, true)), Some((h, true)))
 }

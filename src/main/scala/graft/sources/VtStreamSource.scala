@@ -549,10 +549,11 @@ private final class VtSource(spark: SparkSession, path: String,
       case _ =>
         val fromV = from.map(_._1)
         if (fromV.exists(_ >= endV))
-          // replay alignment edge: nothing new in (from, endV]
-          (if (readChangeFeed)
-            VersionedTable.readChangesRange(spark, path, endV, Some(endV))
-          else VersionedTable.read(spark, path, Some(endV))).limit(0)
+          // replay alignment edge: nothing new in (from, endV]; the
+          // empty snapshot shape comes from the recorded schema
+          if (readChangeFeed) VersionedTable.readChangesRange(spark, path,
+            endV, Some(endV)).limit(0)
+          else VersionedTable.emptyAt(spark, path, endV)
         else if (readChangeFeed && snapshotFilesPerTrigger.isDefined &&
             from.isEmpty)
           // composed snapshot+CDF whose snapshot fit one window: the

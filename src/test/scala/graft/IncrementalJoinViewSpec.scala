@@ -230,6 +230,42 @@ class IncrementalJoinViewSpec extends AnyFunSuite {
       SparkFixture.pinnedSince(start))
   }
 
+  test("a compaction-only right side plans the left's empty shape") {
+    // lane 2 joins L@old with an EMPTY right delta: its snapshot side is
+    // the recorded schema, not a read of a DV'd version (which collects
+    // the version's masks just to be limited to zero rows)
+    val d = tmpDir()
+    val (l, r, v) = (new java.io.File(d, "l").getAbsolutePath,
+      new java.io.File(d, "r").getAbsolutePath,
+      new java.io.File(d, "v").getAbsolutePath)
+    VersionedTable.commit(left((0L until 40L).map(i =>
+      (i, (i % 4 + 1) * 10L, s"t$i"))).repartitionByRange(2, col("o_id")),
+      l, overwrite = true, statsCols = Seq("o_cust"))
+    VersionedTable.commit(right((1L to 4L).map(i => (i * 10L, s"n$i")))
+      .repartition(2), r, overwrite = true, statsCols = Seq("c_id"))
+    val on = Seq("o_cust" -> "c_id")
+    IncrementalJoinView.sync(spark, v, l, r, on, Seq("o_id"),
+      Seq("c_id")): Unit
+    // two DV deletes on the left, each touching one of its two files
+    // and each synced: the version now masks both files at once
+    Seq(col("o_id") < 20L, col("o_id") >= 20L).foreach { half =>
+      VersionedTable.deleteWhere(spark, l, half && col("o_id") % 5 === 0,
+        deletionVectors = true): Unit
+      IncrementalJoinView.sync(spark, v, l, r, on, Seq("o_id"),
+        Seq("c_id")): Unit
+    }
+    VersionedTable.compact(spark, r, targetFileBytes = 1L << 30): Unit
+    val jobs = org.apache.spark.graftspec.JobCounter.jobsIn(
+        spark.sparkContext) {
+      IncrementalJoinView.sync(spark, v, l, r, on, Seq("o_id"),
+        Seq("c_id")): Unit
+    }
+    // the empty delta's key probe, bounds and emptiness check; a read
+    // of the DV'd snapshot would add one mask collect per sidecar (2)
+    assert(jobs == 3, s"sync ran $jobs jobs")
+    assert(viewSet(v) == expected(l, r))
+  }
+
   test("randomized differential: any verb mix equals the full recompute") {
     val rnd = new scala.util.Random(0x60 + 11)
     val d = tmpDir()

@@ -43,8 +43,8 @@ class PlanSpec extends AnyFunSuite {
     // manifest pruning composes WITH parquet pushdown, not instead of
     // it: the re-applied exact predicates must reach the survivor scan
     val p = plan(VersionedTable.prunedReadWhere(spark, t, Seq(
-      VersionedTable.RangePred("id", 10L, 50L),
-      VersionedTable.InPred("k", Seq(1L, 3L)))))
+      VersionedTable.ExactRange.between("id", 10L, 50L),
+      VersionedTable.ExactIn("k", Seq(1L, 3L)))))
     assert(p.contains("PushedFilters:"), p)
     assert(p.contains("GreaterThanOrEqual(id,10)") &&
       p.contains("LessThanOrEqual(id,50)"), p)

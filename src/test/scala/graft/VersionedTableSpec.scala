@@ -606,7 +606,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // first call creates it, second observes it
     assert(VersionedTable.checkpointEntries(spark, t, 0))
     assert(!VersionedTable.checkpointEntries(spark, t, 0))
-    val preds = Seq(VersionedTable.RangePred("id", 50L, 120L))
+    val preds = Seq(VersionedTable.ExactRange.between("id", 50L, 120L))
     val driver = VersionedTable.pruneEntriesWhere(
       VersionedTable.readEntries(spark, t, 0), preds)
     val job = VersionedTable.pruneEntriesJob(spark, t, 0, preds)
@@ -795,7 +795,7 @@ class VersionedTableSpec extends AnyFunSuite {
       t, overwrite = true, statsCols = Seq("id"))
     val pre = VersionedTable.files(spark, t, 0)
     assert(pre.size == 8)
-    val pred = Seq(VersionedTable.RangePred("id", 0L, 19L))
+    val pred = Seq(VersionedTable.ExactRange.between("id", 0L, 19L))
     val sel = VersionedTable.pruneEntriesWhere(
       VersionedTable.readEntries(spark, t, 0), pred)
     assert(sel.size >= 2 && sel.size < 8,
@@ -821,7 +821,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(kept.size < post.size, "the packed span must stay prunable")
     // a span selecting < 2 files is a no-op; empty predicates refuse
     assert(VersionedTable.compactWhere(spark, t,
-      Seq(VersionedTable.RangePred("id", 5000L, 6000L))) == 1)
+      Seq(VersionedTable.ExactRange.between("id", 5000L, 6000L))) == 1)
     intercept[IllegalArgumentException](
       VersionedTable.compactWhere(spark, t, Seq.empty))
   }
@@ -1058,30 +1058,31 @@ class VersionedTableSpec extends AnyFunSuite {
       t, overwrite = true, statsCols = Seq("id", "id2"))
     val entries = VersionedTable.readEntries(spark, t, 0)
     assert(entries.size == 4)
-    import VersionedTable.{InPred, RangePred}
+    import VersionedTable.{ExactIn, ExactRange}
     // IN-list: values in one file's span keep only that file
     val inKeep = VersionedTable.pruneEntriesWhere(entries,
-      Seq(InPred("id", Seq(120L, 130L))))
+      Seq(ExactIn("id", Seq(120L, 130L))))
     assert(inKeep.size == 1, s"IN-list must prune: ${inKeep.size}/4")
     // conjunction: each pred alone keeps >= what both together keep
     val a = VersionedTable.pruneEntriesWhere(entries,
-      Seq(RangePred("id", 0L, 399L)))
+      Seq(ExactRange.between("id", 0L, 399L)))
     val b = VersionedTable.pruneEntriesWhere(entries,
-      Seq(RangePred("id2", 1000L, 2000L))) // empty span on id2
+      Seq(ExactRange.between("id2", 1000L, 2000L))) // empty span on id2
     val both = VersionedTable.pruneEntriesWhere(entries,
-      Seq(RangePred("id", 0L, 399L), RangePred("id2", 1000L, 2000L)))
+      Seq(ExactRange.between("id", 0L, 399L),
+        ExactRange.between("id2", 1000L, 2000L)))
     assert(a.size == 4 && b.isEmpty && both.isEmpty,
       "conjunction is the intersection of the single-column keeps")
     // result-invisible: pruned multi-pred read equals the plain filter
     val got = VersionedTable.prunedReadWhere(spark, t,
-      Seq(RangePred("id", 100L, 199L), InPred("id2", Seq(5L, 7L))))
+      Seq(ExactRange.between("id", 100L, 199L), ExactIn("id2", Seq(5L, 7L))))
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     val want = (100 until 200).filter(i => i % 100 == 5 || i % 100 == 7)
       .map(_.toLong)
     assert(got == want)
     // empty IN-list refuses (ambiguous SQL semantics — be loud)
     intercept[IllegalArgumentException](VersionedTable.prunedReadWhere(
-      spark, t, Seq(InPred("id", Seq.empty))))
+      spark, t, Seq(ExactIn("id", Seq.empty))))
   }
 
   test("readChanges derives the row-level feed from manifest diffs") {
@@ -1299,7 +1300,7 @@ class VersionedTableSpec extends AnyFunSuite {
 
   test("randomized pruning equivalence and bloom soundness (seeded)") {
     import spark.implicits._
-    import VersionedTable.{InPred, RangePred}
+    import VersionedTable.{ExactIn, ExactRange}
     val rnd = new scala.util.Random(99)
     (0 until 3).foreach { round =>
       val t = tmpTable()
@@ -1324,22 +1325,22 @@ class VersionedTableSpec extends AnyFunSuite {
       (0 until 6).foreach { _ =>
         // random conjunction of ranges and IN-lists, in- and out-of-
         // domain; pruning must be invisible vs the plain filter
-        val preds = Seq.newBuilder[VersionedTable.PrunePred]
+        val preds = Seq.newBuilder[VersionedTable.ExactPred]
         if (rnd.nextBoolean()) {
           val lo = rnd.nextInt(1200) - 100
-          preds += RangePred("id", lo.toLong,
+          preds += ExactRange.between("id", lo.toLong,
             (lo + rnd.nextInt(300)).toLong)
         }
         if (rnd.nextBoolean())
-          preds += InPred("k",
+          preds += ExactIn("k",
             Seq.fill(1 + rnd.nextInt(4))(rnd.nextInt(120).toLong))
-        preds += InPred("s",
+        preds += ExactIn("s",
           Seq.fill(1 + rnd.nextInt(3))(s"s${rnd.nextInt(16)}"))
         val ps = preds.result()
         val exact = ps.map {
-          case RangePred(c, lo, hi) =>
+          case ExactRange(c, Some((lo, _)), Some((hi, _))) =>
             col(c).isNotNull && col(c) >= lit(lo) && col(c) <= lit(hi)
-          case InPred(c, vs) => col(c).isin(vs: _*)
+          case ExactIn(c, vs) => col(c).isin(vs: _*)
         }.reduce(_ && _)
         def key(r: org.apache.spark.sql.Row) =
           (r.getLong(0), r.getLong(1), r.getString(2))

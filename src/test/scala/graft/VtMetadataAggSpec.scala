@@ -188,87 +188,10 @@ class VtMetadataAggSpec extends AnyFunSuite {
   test("differential: folded counts equal scan counts on hostile data") {
     val t = tmpTable("diff")
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    // hostile mix: nulls in every column, NaN/±0.0 doubles, non-ASCII
-    // strings — everything the exact-or-scan contract must survive
-    val rnd = new scala.util.Random(42)
-    val rows = (0L until 300L).map { i =>
-      val id = if (i % 13 == 0) null else java.lang.Long.valueOf(i)
-      val d = i % 17 match {
-        case 0 => null
-        case 1 => java.lang.Double.valueOf(Double.NaN)
-        case 2 => java.lang.Double.valueOf(-0.0)
-        case _ => java.lang.Double.valueOf(i / 7.0)
-      }
-      val s = i % 11 match {
-        case 0 => null
-        case 1 => s"z�${i}" // non-ASCII: exact order must refuse
-        case _ => f"k$i%03d"
-      }
-      val dt = if (i % 19 == 0) null
-        else java.sql.Date.valueOf(java.time.LocalDate
-          .of(1995, 1, 1).plusDays((i * 37 % 1400).toInt).toString)
-      val ts = if (i % 23 == 0) null
-        else java.sql.Timestamp.valueOf(java.time.LocalDateTime
-          .of(1995, 1, 1, 0, 0).plusHours(i * 13 % 20000))
-      val dec = if (i % 5 == 4) null
-        else new java.math.BigDecimal(i).movePointLeft(1).setScale(2)
-      Row(id, d, s, dt, ts, dec)
-    }
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("d", DoubleType), StructField("s", StringType),
-      StructField("dt", DateType), StructField("ts", TimestampType),
-      StructField("dec", DecimalType(10, 2))))
-    VersionedTable.commit(
-      spark.createDataFrame(new java.util.ArrayList[Row](rows.asJava),
-        schema).repartitionByRange(3, col("id"))
-        .sortWithinPartitions(col("id")),
-      t, overwrite = true,
-      statsCols = Seq("id", "d", "s", "dt", "ts", "dec"))
-    VersionedTable.deleteWhere(spark, t, col("id") % 29 === 0,
-      deletionVectors = true)
+    import VtMetadataAggSpec.{hostilePreds => preds, hostileRows => rows,
+      hostileSchema => schema}
+    VtMetadataAggSpec.commitHostile(spark, t)
     val trusted = VersionedTable.read(spark, t) // never sees the rule
-    val preds = Seq(
-      "id >= 100", "id < 50", "id = 26", "id >= 0 AND id < 300",
-      "id IN (1, 2, 250, 999)", "id IS NOT NULL",
-      "d >= 10.0", "d < 20.0", "d = 3.0", "d IS NOT NULL",
-      "s >= 'k100'", "s < 'k200'", "s = 'k150'", "s IS NOT NULL",
-      "s >= 'z'", "s >= 'z\u99ac150'", "s = 'z\u99ac155'",
-      "id >= 50 AND d < 30.0 AND s IS NOT NULL",
-      // disjunctions: whole-file, straddling, nested, cross-column,
-      // and with untranslatable / provably-empty sides
-      "id < 50 OR id >= 250", "id = 26 OR id = 261",
-      "id < 20 OR (d >= 10.0 AND d < 20.0)",
-      "(id < 50 AND s IS NOT NULL) OR s = 'k150'",
-      "d = 3.0 OR s >= 'z'", "id < 10 OR FALSE", "id < 10 OR TRUE",
-      "id IN (1, 2) OR id IN (298, 299)",
-      // IS NULL / negations / dates
-      "id IS NULL", "s IS NULL", "dt IS NULL",
-      "d IS NULL OR d >= 20.0", "id IS NULL OR id >= 290",
-      "id != 100", "id <> 26", "s != 'k150'",
-      "id NOT IN (1, 2, 250)", "id NOT IN (1, NULL)",
-      "dt >= DATE '1996-01-01'", "dt = DATE '1995-03-17'",
-      "dt >= DATE '1995-06-01' AND dt < DATE '1997-06-01'",
-      "dt IS NOT NULL AND id != 7",
-      "ts >= TIMESTAMP '1996-01-01 00:00:00'", "ts IS NULL",
-      "ts < TIMESTAMP '1995-06-01 12:00:00' " +
-        "OR ts >= TIMESTAMP '1996-09-01 00:00:00'",
-      "ts = TIMESTAMP '1995-01-01 13:00:00'",
-      "ts != TIMESTAMP '1995-01-02 05:00:00'",
-      "s LIKE 'k1%'", "s LIKE 'z%'", "s LIKE 'k%' OR id < 5",
-      "s LIKE 'k_5%'",
-      // DECIMAL spans (r17, `C` tag): ranges, equality, nulls,
-      // negations, cross-column ORs
-      "dec >= 10.00", "dec < 5.00", "dec = 7.70", "dec IS NULL",
-      "dec IS NOT NULL", "dec NOT IN (1.10, 2.20)",
-      "dec >= 3.30 AND dec < 25.00", "id < 50 OR dec >= 25.00"
-    ) ++ (0 until 20).map { _ =>
-      val lo = rnd.nextInt(300); val hi = lo + rnd.nextInt(100)
-      s"id >= $lo AND id < $hi"
-    } ++ (0 until 10).map { _ =>
-      val lo = rnd.nextInt(300); val hi = lo + rnd.nextInt(60)
-      s"id < $lo OR id >= $hi"
-    }
     val aggList = Seq("count(*) AS n", "count(id) AS nid",
       "count(s) AS ns", "count(dt) AS ndt", "count(ts) AS nts",
       "min(id) AS lo", "max(id) AS hi", "min(s) AS smn",
@@ -291,6 +214,46 @@ class VtMetadataAggSpec extends AnyFunSuite {
         .selectExpr(aggList: _*).collect()(0).toSeq
       assert(folded == scanned,
         s"pred [$p]: folded $folded != scanned $scanned")
+      // span pruning is result-invisible: SELECT * through the graft
+      // relation (pruned clean files + masked DV'd ones) returns the
+      // trusted scan's row multiset
+      def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rowsOf(spark.sql(s"SELECT * FROM graft.`$t` WHERE $p")) ==
+        rowsOf(trusted.where(p)), s"pred [$p]: pruned scan rows differ")
+    }
+    // per-file verdicts against the live rows, from ONE scan grouped by
+    // source file: an all-out file holds no matching live row, an
+    // all-in file holds nothing else
+    val v = VersionedTable.latestVersion(spark, t).get
+    val entries = VersionedTable.readEntries(spark, t, v)
+    val root = new org.apache.hadoop.fs.Path(t)
+    val (live, fileC, _) = VersionedTable.maskedReadWithPos(spark,
+      VersionedTable.readHeader(root.getFileSystem(
+        spark.sessionState.newHadoopConf()), root, v).schemaJson,
+      t, entries)
+    val perFile = live.groupBy(col(fileC)).agg(count(lit(1)),
+      preds.map(p => sum(when(expr(p), 1L).otherwise(0L))): _*)
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), preds.indices.map(j => r.getLong(j + 2))))
+      .toMap
+    assert(perFile.keySet.subsetOf(entries.map(_.name).toSet), perFile.keySet)
+    preds.zipWithIndex.foreach { case (p, j) =>
+      val (c, ids) = VtMetadataAggSpec.optimizedCondition(spark, schema, p)
+      graft.sources.VtPushdown.toExactPreds(c, ids).foreach { exact =>
+        val (_, allIn, boundary) =
+          VersionedTable.countWhereParts(entries, exact)
+        entries.foreach { e =>
+          val (n, hit) = perFile.get(e.name).map { case (n, hs) =>
+            (n, hs(j)) }.getOrElse((0L, 0L))
+          if (allIn.exists(_.name == e.name))
+            assert(hit == n, s"pred [$p]: all-in ${e.name} has " +
+              s"${n - hit} non-matching live rows")
+          else if (!boundary.contains(e.name))
+            assert(hit == 0L, s"pred [$p]: all-out ${e.name} has " +
+              s"$hit matching live rows")
+        }
+      }
     }
     // whole-table hybrid on the DV'd version (no WHERE): the interior
     // masks fold, the extremum-touching files rescan \u2014 exact either way
@@ -1197,5 +1160,122 @@ class VtMetadataAggSpec extends AnyFunSuite {
     if (VersionedTable.readEntries(spark, t2, 0).size >= 3)
       assert(w.inputFiles.length < 3,
         "interior files must still fold under the safety proof")
+  }
+}
+
+/** The hostile table and predicate list of the folded-count
+  * differential, shared with [[FilePredicateSpec]]. */
+object VtMetadataAggSpec {
+  import org.apache.spark.sql.{Row, SparkSession}
+  import org.apache.spark.sql.types._
+
+  // hostile mix: nulls in every column, NaN/±0.0 doubles, non-ASCII
+  // strings — everything the exact-or-scan contract must survive
+  val hostileRows: Seq[Row] = (0L until 300L).map { i =>
+    val id = if (i % 13 == 0) null else java.lang.Long.valueOf(i)
+    val d = i % 17 match {
+      case 0 => null
+      case 1 => java.lang.Double.valueOf(Double.NaN)
+      case 2 => java.lang.Double.valueOf(-0.0)
+      case _ => java.lang.Double.valueOf(i / 7.0)
+    }
+    val s = i % 11 match {
+      case 0 => null
+      case 1 => s"z�${i}" // non-ASCII: exact order must refuse
+      case _ => f"k$i%03d"
+    }
+    val dt = if (i % 19 == 0) null
+      else java.sql.Date.valueOf(java.time.LocalDate
+        .of(1995, 1, 1).plusDays((i * 37 % 1400).toInt).toString)
+    val ts = if (i % 23 == 0) null
+      else java.sql.Timestamp.valueOf(java.time.LocalDateTime
+        .of(1995, 1, 1, 0, 0).plusHours(i * 13 % 20000))
+    val dec = if (i % 5 == 4) null
+      else new java.math.BigDecimal(i).movePointLeft(1).setScale(2)
+    Row(id, d, s, dt, ts, dec)
+  }
+
+  val hostileSchema: StructType = StructType(Seq(
+    StructField("id", LongType),
+    StructField("d", DoubleType), StructField("s", StringType),
+    StructField("dt", DateType), StructField("ts", TimestampType),
+    StructField("dec", DecimalType(10, 2))))
+
+  /** Commit the hostile rows at `t` in three id-clustered files, then
+    * DV-delete every id divisible by 29 (version 1). */
+  def commitHostile(spark: SparkSession, t: String): Unit = {
+    VersionedTable.commit(
+      spark.createDataFrame(
+        new java.util.ArrayList[Row](hostileRows.asJava), hostileSchema)
+        .repartitionByRange(3, col("id"))
+        .sortWithinPartitions(col("id")),
+      t, overwrite = true,
+      statsCols = Seq("id", "d", "s", "dt", "ts", "dec"))
+    VersionedTable.deleteWhere(spark, t, col("id") % 29 === 0,
+      deletionVectors = true): Unit
+  }
+
+  val hostilePreds: Seq[String] = {
+    val rnd = new scala.util.Random(42)
+    Seq(
+      "id >= 100", "id < 50", "id = 26", "id >= 0 AND id < 300",
+      "id IN (1, 2, 250, 999)", "id IS NOT NULL",
+      "d >= 10.0", "d < 20.0", "d = 3.0", "d IS NOT NULL",
+      "s >= 'k100'", "s < 'k200'", "s = 'k150'", "s IS NOT NULL",
+      "s >= 'z'", "s >= 'z\u99ac150'", "s = 'z\u99ac155'",
+      "id >= 50 AND d < 30.0 AND s IS NOT NULL",
+      // disjunctions: whole-file, straddling, nested, cross-column,
+      // and with untranslatable / provably-empty sides
+      "id < 50 OR id >= 250", "id = 26 OR id = 261",
+      "id < 20 OR (d >= 10.0 AND d < 20.0)",
+      "(id < 50 AND s IS NOT NULL) OR s = 'k150'",
+      "d = 3.0 OR s >= 'z'", "id < 10 OR FALSE", "id < 10 OR TRUE",
+      "id IN (1, 2) OR id IN (298, 299)",
+      // IS NULL / negations / dates
+      "id IS NULL", "s IS NULL", "dt IS NULL",
+      "d IS NULL OR d >= 20.0", "id IS NULL OR id >= 290",
+      "id != 100", "id <> 26", "s != 'k150'",
+      "id NOT IN (1, 2, 250)", "id NOT IN (1, NULL)",
+      "dt >= DATE '1996-01-01'", "dt = DATE '1995-03-17'",
+      "dt >= DATE '1995-06-01' AND dt < DATE '1997-06-01'",
+      "dt IS NOT NULL AND id != 7",
+      "ts >= TIMESTAMP '1996-01-01 00:00:00'", "ts IS NULL",
+      "ts < TIMESTAMP '1995-06-01 12:00:00' " +
+        "OR ts >= TIMESTAMP '1996-09-01 00:00:00'",
+      "ts = TIMESTAMP '1995-01-01 13:00:00'",
+      "ts != TIMESTAMP '1995-01-02 05:00:00'",
+      "s LIKE 'k1%'", "s LIKE 'z%'", "s LIKE 'k%' OR id < 5",
+      "s LIKE 'k_5%'",
+      // DECIMAL spans (r17, `C` tag): ranges, equality, nulls,
+      // negations, cross-column ORs
+      "dec >= 10.00", "dec < 5.00", "dec = 7.70", "dec IS NULL",
+      "dec IS NOT NULL", "dec NOT IN (1.10, 2.20)",
+      "dec >= 3.30 AND dec < 25.00", "id < 50 OR dec >= 25.00"
+    ) ++ (0 until 20).map { _ =>
+      val lo = rnd.nextInt(300); val hi = lo + rnd.nextInt(100)
+      s"id >= $lo AND id < $hi"
+    } ++ (0 until 10).map { _ =>
+      val lo = rnd.nextInt(300); val hi = lo + rnd.nextInt(60)
+      s"id < $lo OR id >= $hi"
+    }
+  }
+
+  /** `p` as the optimizer leaves it over an unscanned relation of
+    * `schema` (literals folded, LIKE lowered), with that relation's
+    * attribute ids: the condition a planner rule sees. A filter the
+    * optimizer removed is TRUE; an emptied relation FALSE. */
+  def optimizedCondition(spark: SparkSession, schema: StructType,
+      p: String): (org.apache.spark.sql.catalyst.expressions.Expression,
+        Set[org.apache.spark.sql.catalyst.expressions.ExprId]) = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val rel = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      schema)
+    val ids = rel.queryExecution.analyzed.output.map(_.exprId).toSet
+    rel.where(p).queryExecution.optimizedPlan match {
+      case Filter(c, _) => (c, ids)
+      case _: LocalRelation => (Literal(false), ids)
+      case _ => (Literal(true), ids)
+    }
   }
 }

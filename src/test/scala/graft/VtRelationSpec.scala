@@ -194,18 +194,18 @@ class VtRelationSpec extends AnyFunSuite {
       val df = Seq((1L, "a", BigDecimal(1))).toDF("id", "s", "d")
       df.where(c).queryExecution.analyzed.collect {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          VtPushdown.toPrunePreds(f.condition)
+          VtPushdown.toRelationPreds(Seq(f.condition))
       }.flatten
     }
     // decimals are not span-comparable -> no value pred (the implied
     // IsNotNull conjunct may still translate; that one is always sound)
     assert(!preds(col("d") === lit(BigDecimal(3)))
-      .exists(_.isInstanceOf[VersionedTable.RangePred]))
+      .exists(_.isInstanceOf[VersionedTable.ExactRange]))
     // a resolved equality on a long DOES translate
     assert(preds(col("id") === 7L)
-      .contains(VersionedTable.RangePred("id", 7L, 7L)))
+      .contains(VersionedTable.ExactRange.between("id", 7L, 7L)))
     // strings translate through UTF8String
     assert(preds(col("s") >= "m")
-      .contains(VersionedTable.GePred("s", "m")))
+      .contains(VersionedTable.ExactRange("s", Some(("m", true)), None)))
   }
 }

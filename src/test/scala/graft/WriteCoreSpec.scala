@@ -156,7 +156,7 @@ class WriteCoreSpec extends AnyFunSuite {
         VersionedTable.readEntrySubset(spark, t, 1, Set("nope.parquet")),
         VersionedTable.readFileSlice(spark, t, 1, 2, 2),
         VersionedTable.prunedReadWhere(spark, t,
-          Seq(VersionedTable.RangePred("id", 5000L, 6000L))),
+          Seq(VersionedTable.ExactRange.between("id", 5000L, 6000L))),
         VersionedTable.prunedReadIn(spark, t, "id", Seq(9000L)))
       shapes.foreach(_.schema)
     }
@@ -169,7 +169,7 @@ class WriteCoreSpec extends AnyFunSuite {
     // the filtered shapes still analyze their predicate
     intercept[org.apache.spark.sql.AnalysisException](
       VersionedTable.prunedReadWhere(spark, t,
-        Seq(VersionedTable.RangePred("nope", 5000L, 6000L))).schema)
+        Seq(VersionedTable.ExactRange.between("nope", 5000L, 6000L))).schema)
   }
 
   test("the commit protocol is written once: verbs reach manifests, " +

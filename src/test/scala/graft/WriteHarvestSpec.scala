@@ -202,15 +202,16 @@ class WriteHarvestSpec extends AnyFunSuite {
     // its recorded value set excludes it
     val entries = VersionedTable.readEntries(spark, path, 1)
     assert(entries.size == 2)
-    def kept(p: VersionedTable.PrunePred*): Seq[String] =
+    def kept(p: VersionedTable.ExactPred*): Seq[String] =
       VersionedTable.pruneEntriesWhere(entries, p.toSeq).map(_.name)
-    assert(kept(VersionedTable.InPred("k", Seq(500L))).size == 1,
+    assert(kept(VersionedTable.ExactIn("k", Seq(500L))).size == 1,
       "the value set must prune the wide-span file")
-    assert(kept(VersionedTable.RangePred("k", 2L, 400L)).isEmpty,
+    assert(kept(VersionedTable.ExactRange.between("k", 2L, 400L)).isEmpty,
       "a range inside the value gap must prune everything")
-    assert(kept(VersionedTable.GePred("k", 600L)).size == 1,
+    assert(kept(VersionedTable.ExactRange("k", Some((600L, true)), None))
+      .size == 1,
       "one-sided bounds consult the set too")
-    assert(kept(VersionedTable.InPred("k", Seq(1L, 500L))).size == 2,
+    assert(kept(VersionedTable.ExactIn("k", Seq(1L, 500L))).size == 2,
       "present values keep their files")
     // end-to-end: answers stay exact through the pruned SQL scan
     val q = spark.sql(s"SELECT k FROM graft.`$path` WHERE k = 500")
