@@ -200,14 +200,15 @@ object IncrementalJoinView {
     val d = delta
       .withColumnRenamed("_change_type", "_ct")
       .withColumnRenamed("_commit_version", "_cv")
-    // single-column key: try the bounded distinct-key probe first
+    // single-column key: try the bounded distinct-key probe first; a
+    // complete probe (within the cap) may be empty
     val inKeys: Option[Seq[Any]] =
       if (on.size != 1) None
       else {
         val dc = on.head._1
         val ks = d.select(col(dc)).where(col(dc).isNotNull).distinct()
           .limit(MaxInProbeKeys + 1).collect().map(_.get(0)).toSeq
-        if (ks.nonEmpty && ks.size <= MaxInProbeKeys) Some(ks) else None
+        if (ks.size <= MaxInProbeKeys) Some(ks) else None
       }
     val aggs = on.flatMap { case (dc, _) =>
       Seq(min(col(dc)).as(s"__mn_$dc"), max(col(dc)).as(s"__mx_$dc")) }
@@ -220,17 +221,19 @@ object IncrementalJoinView {
         bounds.get(bounds.fieldIndex(s"__mx_$dc")), d.schema(dc).dataType)
     }
     val snap =
-      if (inKeys.nonEmpty)
+      if (inKeys.exists(_.nonEmpty))
         VersionedTable.prunedReadIn(spark, snapPath, on.head._2,
           inKeys.get, Some(snapVersion))
+      // no non-null key (a complete probe found none, or every bound
+      // is null): the delta is empty or all-null-keyed, which joins
+      // nothing — plan the snapshot's SHAPE, not its files, with no
+      // further job
+      else if (inKeys.nonEmpty ||
+          (0 until bounds.length).forall(bounds.isNullAt))
+        VersionedTable.emptyAt(spark, snapPath, snapVersion)
       else if (preds.nonEmpty)
         VersionedTable.prunedReadWhere(spark, snapPath, preds,
           Some(snapVersion))
-      // no key bounds: the delta is empty (or all-null-keyed, which
-      // joins nothing) — plan the snapshot's SHAPE, not its files
-      else if (d.where(on.map { case (dc, _) =>
-          col(dc).isNotNull }.reduce(_ || _)).isEmpty)
-        VersionedTable.emptyAt(spark, snapPath, snapVersion)
       else VersionedTable.read(spark, snapPath, Some(snapVersion))
     val c = on.map { case (dc, sc) => col(dc) === col(sc) }
       .reduce(_ && _)

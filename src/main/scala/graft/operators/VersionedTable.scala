@@ -1505,7 +1505,7 @@ object VersionedTable {
   }
 
   /** [[countRows]] from pre-read entries (one manifest read can serve
-    * several metadata answers — [[graft.plans.VtMetadataAgg]]). */
+    * several metadata answers). */
   private[graft] def countRowsOf(entries: Seq[FileEntry]): Long =
     entries.map(_.liveRows).sum
 
@@ -1538,7 +1538,15 @@ object VersionedTable {
     // min/max of uncommitted data must not leak through metadata either
     asOfVersion.foreach(_ =>
       requireVisible(fs, path, v, readHeader(fs, root, v)))
-    statsSpanOf(readEntries(spark, path, v), column)
+    val entries = readEntries(spark, path, v)
+    // every file that MIGHT hold a row must carry collected stats; a
+    // deletion vector makes the recorded span merely CONSERVATIVE (the
+    // masked rows may have held the extrema) — exactness demands a
+    // rescan, so answer "don't know", never a stale bound
+    if (entries.exists(e => e.dv.exists(_._2 > 0)) ||
+        entries.exists(e => e.nRows != 0 && !e.stats.contains(column)))
+      None
+    else hull(entries.flatMap(_.stats.get(column)).flatten)
   }
 
   /** [[cmp]] IS SQL's exact order for every comparable pair: numerics
@@ -1552,26 +1560,11 @@ object VersionedTable {
     * metadata ANSWERS may use the same comparator pruning does. */
   private def cmpExact(a: Any, b: Any): Option[Int] = cmp(a, b)
 
-  /** [[statsSpan]] from pre-read entries (shared manifest read —
-    * [[graft.plans.VtMetadataAgg]]). */
-  private[graft] def statsSpanOf(entries: Seq[FileEntry],
-      column: String): Option[Option[(Any, Any)]] = {
-    // every file that MIGHT hold a row must carry collected stats; a
-    // deletion vector makes the recorded span merely CONSERVATIVE (the
-    // masked rows may have held the extrema) — exactness demands a
-    // rescan, so answer "don't know", never a stale bound
-    if (entries.exists(e => e.dv.exists(_._2 > 0)))
-      return None
-    if (entries.exists(e => e.nRows != 0 && !e.stats.contains(column)))
-      return None
-    hull(entries.flatMap(_.stats.get(column)).flatten)
-  }
-
   /** The `[min, max]` hull of `spans` (`Some(None)` when empty). The
     * reduce PICKS the answer, so its order must be SQL's exactly
     * (byte-order strings — see [[cmpExact]]): None when a pair is not
     * provably ordered (folds rescan, pruning keeps). */
-  private def hull(
+  private[graft] def hull(
       spans: Iterable[(Any, Any)]): Option[Option[(Any, Any)]] = {
     var acc: Option[(Any, Any)] = None
     spans.foreach { s =>
@@ -2354,7 +2347,10 @@ object VersionedTable {
           !schema.getType(Seq(column): _*).isPrimitive)
         return true
       val prim = schema.getType(Seq(column): _*).asPrimitiveType
-        .getPrimitiveTypeName
+      // LEGACY-rebased datetimes are written as different physical
+      // values than the in-memory ones (harvestSpecs declines them too)
+      val legacyDt = reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .containsKey("org.apache.spark.legacyDateTime")
       reader.getFooter.getBlocks.asScala.exists { block =>
         block.getColumns.asScala.find(_.getPath.toDotString == column) match {
           case None => true // column absent in this block: keep
@@ -2364,7 +2360,7 @@ object VersionedTable {
             catch { case _: java.io.IOException => null }
             if (bf == null) true // no bloom written: cannot prune
             else values.exists { v =>
-              bloomHash(bf, prim, v) match {
+              bloomHash(bf, prim, legacyDt, v) match {
                 case Some(h) => bf.findHash(h)
                 case None => true // untestable type: keep
               }
@@ -2376,10 +2372,36 @@ object VersionedTable {
 
   /** Hash a caller value with the bloom's own hasher, coerced to the
     * column's parquet physical type (the writer hashed physical
-    * values). None = type we cannot coerce soundly — conservative. */
+    * values). A DATE or TIMESTAMP value coerces by the chunk's logical
+    * annotation: DATE to INT32 epoch days, TIMESTAMP MICROS/MILLIS to
+    * INT64 in that unit. None = type we cannot coerce soundly (INT96,
+    * a LEGACY-rebased write, a mismatched annotation) — conservative. */
   private def bloomHash(
       bf: org.apache.parquet.column.values.bloomfilter.BloomFilter,
-      prim: PrimitiveTypeName, v: Any): Option[Long] = (prim, v) match {
+      prim: org.apache.parquet.schema.PrimitiveType, legacyDt: Boolean,
+      v: Any): Option[Long] = (prim.getPrimitiveTypeName, v) match {
+    case (_, _: java.sql.Date | _: java.time.LocalDate |
+        _: java.sql.Timestamp | _: java.time.Instant |
+        _: java.time.LocalDateTime) =>
+      if (legacyDt) None
+      else (prim.getLogicalTypeAnnotation,
+          org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .convertToCatalyst(v)) match {
+        case (_: LogicalTypeAnnotation.DateLogicalTypeAnnotation,
+            days: Int) => Some(bf.hash(days))
+        case (ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation,
+            micros: Long)
+            if ts.isAdjustedToUTC !=
+              v.isInstanceOf[java.time.LocalDateTime] =>
+          ts.getUnit match {
+            case LogicalTypeAnnotation.TimeUnit.MICROS =>
+              Some(bf.hash(micros))
+            case LogicalTypeAnnotation.TimeUnit.MILLIS =>
+              Some(bf.hash(Math.floorDiv(micros, 1000L)))
+            case _ => None
+          }
+        case _ => None
+      }
     case (PrimitiveTypeName.INT64, n: Number) => Some(bf.hash(n.longValue))
     case (PrimitiveTypeName.INT32, n: Number) => Some(bf.hash(n.intValue))
     case (PrimitiveTypeName.DOUBLE, n: Number) =>
@@ -2906,6 +2928,35 @@ object VersionedTable {
     * "your watermark aged out, re-baseline" signal, not a crash. */
   def readAppendsSince(spark: SparkSession, path: String,
       fromVersion: Int, toVersion: Option[Int] = None): DataFrame = {
+    val w = changeWindow(spark, path, fromVersion, toVersion)
+    val nonAppend = w.versions.filterNot(_._2.mode == "append")
+    require(nonAppend.isEmpty,
+      s"readAppendsSince($fromVersion, ${w.to}) at $path crosses " +
+        s"non-append commits ${nonAppend.map(v => s"v${v._1}:${v._2.mode}")
+          .mkString(",")} — the file diff is not row-level adds; " +
+        "re-baseline from a full read")
+    val before = files(spark, path, fromVersion).toSet
+    val added = files(spark, path, w.to).filterNot(before)
+    val schemaJson = w.schemaJson
+    if (added.isEmpty) emptyOf(spark, schemaJson)
+    else schemaRead(spark, schemaJson, added.map(n => s"$path/$n"))
+  }
+
+  /** The window `(fromVersion, to]` of an incremental read, `to` being
+    * `toVersion` or the latest visible version: its VISIBLE versions
+    * with their headers. The one resolution [[readAppendsSince]],
+    * [[readAppendsSkippingChanges]] and [[readChangesRange]] share: an
+    * explicit `to` may target a pending version, so it is gated;
+    * aborted holes inside the window are skipped (they never
+    * happened); a `fromVersion` that [[expire]] already dropped raises
+    * [[VersionExpiredException]]. */
+  private final case class ChangeWindow(fs: FileSystem, root: Path,
+      to: Int, versions: Seq[(Int, ManifestHeader)]) {
+    def schemaJson: String = readHeader(fs, root, to).schemaJson
+  }
+
+  private def changeWindow(spark: SparkSession, path: String,
+      fromVersion: Int, toVersion: Option[Int]): ChangeWindow = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val live = listVersionNumbers(fs, root)
@@ -2921,24 +2972,11 @@ object VersionedTable {
           s"(oldest live version is ${live.head}) — the incremental " +
           "window is gone; re-baseline from a full read of the current " +
           "version")
-    // an explicit `to` may target a pending version: gate it; aborted
-    // holes inside the window are skipped (they never happened)
     toVersion.foreach(t => requireVisible(fs, path, t,
       readHeader(fs, root, t)))
-    val window = live.filter(v => v > fromVersion && v <= to)
+    ChangeWindow(fs, root, to, live.filter(v => v > fromVersion && v <= to)
       .map(v => (v, readHeader(fs, root, v)))
-      .filter { case (_, h) => isVisible(fs, h) }
-    val nonAppend = window.filterNot(_._2.mode == "append")
-    require(nonAppend.isEmpty,
-      s"readAppendsSince($fromVersion, $to) at $path crosses " +
-        s"non-append commits ${nonAppend.map(v => s"v${v._1}:${v._2.mode}")
-          .mkString(",")} — the file diff is not row-level adds; " +
-        "re-baseline from a full read")
-    val before = files(spark, path, fromVersion).toSet
-    val added = files(spark, path, to).filterNot(before)
-    val schemaJson = readHeader(fs, root, to).schemaJson
-    if (added.isEmpty) emptyOf(spark, schemaJson)
-    else schemaRead(spark, schemaJson, added.map(n => s"$path/$n"))
+      .filter { case (_, h) => isVisible(fs, h) })
   }
 
   /** [[readAppendsSince]] that SKIPS non-append commits instead of
@@ -2953,35 +2991,17 @@ object VersionedTable {
     * strict variant. */
   def readAppendsSkippingChanges(spark: SparkSession, path: String,
       fromVersion: Int, toVersion: Option[Int] = None): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = listVersionNumbers(fs, root)
-    val to = toVersion.orElse(latestVisible(fs, root, forWrite = false))
-      .getOrElse(
-        throw new IllegalStateException(s"no committed versions at $path"))
-    require(to >= fromVersion,
-      s"toVersion $to precedes fromVersion $fromVersion")
-    if (!live.contains(fromVersion) && live.nonEmpty &&
-        fromVersion < live.head && fromVersion >= 0)
-      throw new VersionExpiredException(
-        s"version $fromVersion at $path has been expired from the log " +
-          s"(oldest live version is ${live.head}) — re-baseline from a " +
-          "full read of the current version")
-    toVersion.foreach(t => requireVisible(fs, path, t,
-      readHeader(fs, root, t)))
-    val window = live.filter(v => v > fromVersion && v <= to)
-      .map(v => (v, readHeader(fs, root, v)))
-      .filter { case (_, h) => isVisible(fs, h) }
+    val w = changeWindow(spark, path, fromVersion, toVersion)
     var prev = files(spark, path, fromVersion).toSet
     val added = Seq.newBuilder[String]
-    window.foreach { case (v, h) =>
+    w.versions.foreach { case (v, h) =>
       val cur = files(spark, path, v).toSet
       if (h.mode == "append")
         added ++= (cur -- prev)
       prev = cur
     }
     val names = added.result()
-    val schemaJson = readHeader(fs, root, to).schemaJson
+    val schemaJson = w.schemaJson
     if (names.isEmpty) emptyOf(spark, schemaJson)
     else schemaRead(spark, schemaJson, names.map(n => s"$path/$n"))
   }
@@ -3154,34 +3174,18 @@ object VersionedTable {
     * my watermark"), one manifest-diff per commit, unioned. */
   def readChangesRange(spark: SparkSession, path: String,
       fromVersion: Int, toVersion: Option[Int] = None): DataFrame = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = listVersionNumbers(fs, root)
-    val to = toVersion.orElse(latestVisible(fs, root, forWrite = false))
-      .getOrElse(
-        throw new IllegalStateException(s"no committed versions at $path"))
-    require(to >= fromVersion,
-      s"toVersion $to precedes fromVersion $fromVersion")
-    if (!live.contains(fromVersion) && live.nonEmpty &&
-        fromVersion < live.head && fromVersion >= 0)
-      throw new VersionExpiredException(
-        s"version $fromVersion at $path has been expired — the change " +
-          "window is gone; re-baseline from a full read")
-    toVersion.foreach(t => requireVisible(fs, path, t,
-      readHeader(fs, root, t)))
-    val window = live.filter(v => v > fromVersion && v <= to)
-      .filter(v => isVisible(fs, readHeader(fs, root, v)))
+    val w = changeWindow(spark, path, fromVersion, toVersion)
     // schema evolution inside the window is legal: align per-version
     // feeds by name, null-filling columns the older versions lack
-    window.map(v => readChanges(spark, path, v))
+    w.versions.map { case (v, _) => readChanges(spark, path, v) }
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse {
         // empty window: an up-to-date poller must get a schema-shaped
         // empty feed, never a probe of `to`'s (possibly expired)
         // predecessor
-        emptyOf(spark, readHeader(fs, root, to).schemaJson)
+        emptyOf(spark, w.schemaJson)
           .withColumn("_change_type", lit(""))
-          .withColumn("_commit_version", lit(to))
+          .withColumn("_commit_version", lit(w.to))
       }
   }
 

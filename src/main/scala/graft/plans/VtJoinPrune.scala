@@ -92,26 +92,13 @@ object VtJoinPrune extends Rule[LogicalPlan] {
       }.headOption.getOrElse(return None)
       val (probeKey, buildKey) = pair
       prunePred(build, buildKey, probeKey).flatMap { pred =>
-        val spark = SparkSession.active
-        val entries =
-          try {
-            VersionedTable.requireVisibleVersion(spark, t.vtPath,
-              t.vtVersion)
-            VersionedTable.readEntries(spark, t.vtPath, t.vtVersion)
-          } catch {
-            case scala.util.control.NonFatal(_) => return None
-          }
+        val entries = VtFiles.entriesOf(t).getOrElse(return None)
         if (entries.size < 2) return None
         val kept = VersionedTable
           .pruneEntriesWhere(entries, Seq(pred)).map(_.name).toSet
         if (kept.size >= entries.size) return None
-        val slice = Bridge.logicalPlan(VersionedTable.readEntrySubset(
-          spark, t.vtPath, t.vtVersion, kept))
-        val byName = slice.output.map(x => x.name -> x).toMap
-        if (!relOut.forall(x => byName.contains(x.name))) return None
-        val remap = Project(relOut.map(x =>
-          Alias(byName(x.name), x.name)(exprId = x.exprId)), slice)
-        Some(j.transformUp { case n if n eq relNode => remap })
+        VtFiles.sliceOf(t, kept, relOut).map(remap =>
+          j.transformUp { case n if n eq relNode => remap })
       }
     }
     val viaLeft =

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Attribute, AttributeReference, Cast, Coalesce, Divide, EqualTo, EvalMode, ExprId, Expression, If, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, HyperLogLogPlusPlus, Max, Min, Sum}
@@ -9,7 +8,6 @@ import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,9 +24,15 @@ import graft.sources.{VtPushdown, VtTable}
   * harvested spans are exact by construction, so this is never an
   * approximation.
   *
+  * ONE FOLD PATH per aggregate form: a whole-table aggregate is the
+  * WHERE fold under a vacuous WHERE (every file all-in), so it folds
+  * to a [[LocalRelation]] exactly when metadata answers every file,
+  * and otherwise scans only the files metadata cannot answer. The
+  * grouped fold shares the same aggregate-shape recognizer.
+  *
   * STRICTLY EXACT-OR-UNTOUCHED:
-  *   - only a no-grouping [[Aggregate]] whose every output is a
-  *     non-distinct, unfiltered `count(1)`/`count(*)`, `count(col)`
+  *   - only an [[Aggregate]] whose every output is a non-distinct,
+  *     unfiltered `count(1)`/`count(*)`, `count(col)`
   *     (= Σ per file rows − nulls, from the manifest's null counts),
   *     a `min`/`max` of a plain relation column, a LEGACY-mode
   *     `sum(col)` of an integral/decimal stats column (= Σ of the
@@ -50,6 +54,8 @@ import graft.sources.{VtPushdown, VtTable}
   *     nothing, and only undecidable BOUNDARY files scan (masked,
   *     original predicate re-applied, partials combined via
   *     Add/Least/Greatest);
+  *   - a zero-row file never demotes, whatever stats it lacks: it
+  *     adds nothing to any shape;
   *   - DELETION VECTORS: counts stay exact everywhere (live rows =
   *     physical − masked; count(col) additionally needs a zero null
   *     count under a DV). min/max use the same hybrid — only DV'd
@@ -68,71 +74,27 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformWithSubqueries {
-      case agg @ Aggregate(Nil, aggExprs, _, _) if aggExprs.nonEmpty =>
-        val direct = foldNoGroup(agg)
-        if (direct ne agg) direct
-        else splitWrapped(agg).map { case (outer, inner) =>
-          val f = foldNoGroup(inner)
-          if (f ne inner) Project(outer, f) else agg
-        }.getOrElse(agg)
-      // GROUPED metadata counts: GROUP BY one or more plain columns
-      // over a table whose files are (mostly) single-valued in them —
-      // the daily-partitioned `GROUP BY day[, priority]` shape (and
-      // `SELECT DISTINCT g…`, which is the same plan with key-only
-      // outputs). Whole-file-keyed files contribute their group's
-      // partials from the manifest; undecided files scan and union in.
+      // ungrouped, or GROUPED metadata counts: GROUP BY one or more
+      // plain columns over a table whose files are (mostly)
+      // single-valued in them — the daily-partitioned `GROUP BY
+      // day[, priority]` shape (and `SELECT DISTINCT g…`, which is the
+      // same plan with key-only outputs). Whole-file-keyed files
+      // contribute their group's partials from the manifest; undecided
+      // files scan and union in.
       case agg @ Aggregate(groups, aggExprs, _, _)
-          if groups.nonEmpty && aggExprs.nonEmpty &&
+          if aggExprs.nonEmpty &&
             groups.forall(_.isInstanceOf[AttributeReference]) =>
-        val direct = foldOneGroup(agg)
+        val fold = if (groups.isEmpty) foldCountWhere _ else foldGrouped _
+        def folded(a: Aggregate): LogicalPlan = foldInput(a.child)
+          .flatMap { case (cond, t, relOut) => fold(a, cond, t, relOut) }
+          .getOrElse(a)
+        val direct = folded(agg)
         if (direct ne agg) direct
         else splitWrapped(agg).map { case (outer, inner) =>
-          val f = foldOneGroup(inner)
+          val f = folded(inner)
           if (f ne inner) Project(outer, f) else agg
         }.getOrElse(agg)
     }
-
-  private def foldNoGroup(agg: Aggregate): LogicalPlan = {
-    val aggExprs = agg.aggregateExpressions
-    stripToVt(agg.child) match {
-      case Some((t, relOut)) =>
-        foldAll(aggExprs, t, relOut) match {
-          case Some(rows) => LocalRelation(agg.output, rows)
-          case None =>
-            // pure-metadata fold declined (a DV could hide a
-            // min/max extremum, a null count is missing, a file
-            // predates row counts): try the HYBRID under a
-            // vacuous WHERE — fold what metadata proves, scan
-            // only the files it cannot decide
-            foldCountWhere(agg, aggExprs,
-              Literal(true, BooleanType), t, relOut)
-              .getOrElse(agg)
-        }
-      case None => stripToFilteredVt(agg.child) match {
-        case Some((cond, t, relOut)) =>
-          foldCountWhere(agg, aggExprs, cond, t, relOut)
-            .getOrElse(agg)
-        case None => agg
-      }
-    }
-  }
-
-  private def foldOneGroup(agg: Aggregate): LogicalPlan = {
-    val gs = agg.groupingExpressions
-      .map(_.asInstanceOf[AttributeReference])
-    val aggExprs = agg.aggregateExpressions
-    stripToVt(agg.child) match {
-      case Some((t, relOut)) =>
-        foldGrouped(agg, gs, aggExprs,
-          Literal(true, BooleanType), t, relOut).getOrElse(agg)
-      case None => stripToFilteredVt(agg.child) match {
-        case Some((cond, t, relOut)) =>
-          foldGrouped(agg, gs, aggExprs, cond, t, relOut)
-            .getOrElse(agg)
-        case None => agg
-      }
-    }
-  }
 
   /** `SELECT cast(sum(x) AS double), …` — CollapseProject merges
     * scalar WRAPPERS into the aggregate list, hiding the plain shapes
@@ -192,183 +154,28 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     Some((outer, inner))
   }
 
-  /** The relation beneath row-count-preserving wrappers, when it is a
-    * versioned catalog table — plus the RELATION's own output
-    * attributes, so min/max folds can anchor their column by exprId
-    * (a surviving Project may alias an arbitrary expression under a
-    * stats column's NAME; folding by name alone would answer the
-    * wrong column's span). The injected rule runs before V2 scan
-    * pushdown, so the relation is still a [[DataSourceV2Relation]]
-    * carrying every row. */
-  private def stripToVt(p: LogicalPlan)
-      : Option[(VtTable, Seq[Attribute])] = p match {
-    case Project(_, c) => stripToVt(c)
-    case SubqueryAlias(_, c) => stripToVt(c)
+  /** The versioned relation beneath row-count-preserving wrappers and
+    * at most one [[Filter]], with that Filter's condition — a vacuous
+    * TRUE when there is none, so a whole-table aggregate is the WHERE
+    * fold with every file all-in. After PushDownPredicates the Filter
+    * sits on the relation, so nothing row-changing hides below it.
+    * The RELATION's own output attributes come along, so folds anchor
+    * their columns by exprId (a surviving Project may alias an
+    * arbitrary expression under a stats column's NAME; folding by name
+    * alone would answer the wrong column's span). The injected rule
+    * runs before V2 scan pushdown, so the relation is still a
+    * [[DataSourceV2Relation]] carrying every row. */
+  private def foldInput(p: LogicalPlan, cond: Option[Expression] = None)
+      : Option[(Expression, VtTable, Seq[Attribute])] = p match {
+    case Project(_, c) => foldInput(c, cond)
+    case SubqueryAlias(_, c) => foldInput(c, cond)
+    case Filter(c, child) if cond.isEmpty => foldInput(child, Some(c))
     case r: DataSourceV2Relation => r.table match {
-      case t: VtTable => Some((t, r.output))
+      case t: VtTable =>
+        Some((cond.getOrElse(Literal(true, BooleanType)), t, r.output))
       case _ => None
     }
     case _ => None
-  }
-
-  /** Fold every aggregate expression from the manifest, or None if
-    * ANY of them is not provably answerable from metadata. The match
-    * runs FIRST (pure, no I/O); the manifest is read once only when
-    * every expression has a foldable shape. */
-  private def foldAll(aggExprs: Seq[NamedExpression], t: VtTable,
-      relOut: Seq[Attribute]): Option[Seq[InternalRow]] = {
-    val relIds = relOut.map(_.exprId).toSet
-    sealed trait Fold
-    case object CountAll extends Fold
-    final case class CountCol(a: AttributeReference) extends Fold
-    final case class Span(a: AttributeReference, lo: Boolean) extends Fold
-    final case class SumCol(spec: SumSpec) extends Fold
-    final case class AvgCol(a: AttributeReference) extends Fold
-    final case class DistinctCol(a: AttributeReference) extends Fold
-    final case class NdvCol(a: AttributeReference, rsd: Double)
-      extends Fold
-    val shapes: Seq[Option[Fold]] = aggExprs.map {
-      // count(*) / count(<non-null literal>) — count(NULL) is 0 by
-      // SQL null semantics, never the row count; leave it to the scan
-      case Alias(AggregateExpression(
-          Count(Seq(Literal(v, _))), Complete, false, None, _), _)
-          if v != null =>
-        Some(CountAll)
-      // count(col) = Σ per file (rows − nulls), from the manifest's
-      // per-column null counts — the most common profiling aggregate
-      // after count(*), answered with zero data files opened
-      case Alias(AggregateExpression(
-          Count(Seq(a: AttributeReference)), Complete, false, None, _), _)
-          if relIds.contains(a.exprId) =>
-        Some(CountCol(a))
-      case Alias(AggregateExpression(
-          Min(a: AttributeReference), Complete, false, None, _), _)
-          if spanType(a) && relIds.contains(a.exprId) =>
-        Some(Span(a, lo = true))
-      case Alias(AggregateExpression(
-          Max(a: AttributeReference), Complete, false, None, _), _)
-          if spanType(a) && relIds.contains(a.exprId) =>
-        Some(Span(a, lo = false))
-      // avg(col) = Σ / count(col), under the double-exactness gate
-      // (double accumulation never throws, so ANSI == LEGACY here)
-      case Alias(ae @ AggregateExpression(
-          Average(a: AttributeReference, mode), Complete, false, None,
-          _), _)
-          if foldableSumMode(mode) && avgType(a) &&
-            ae.dataType == DoubleType && relIds.contains(a.exprId) =>
-        Some(AvgCol(a))
-      // count(DISTINCT col): every file single-valued (or all-null)
-      // in col → the distinct set reads straight off the manifest
-      case Alias(AggregateExpression(
-          Count(Seq(a: AttributeReference)), Complete, true, None, _), _)
-          if spanType(a) && relIds.contains(a.exprId) =>
-        Some(DistinctCol(a))
-      // approx_count_distinct(col): merge the write-time per-file
-      // HLL++ register words — BIT-IDENTICAL to the scan's buffer
-      // (register max is an order-free idempotent join and the
-      // write tracker hashed with the same function), so folding an
-      // "approximate" aggregate is still exact-or-untouched
-      case Alias(AggregateExpression(
-          hll @ HyperLogLogPlusPlus(a: AttributeReference, _, _, _),
-          Complete, false, None, _), _)
-          if relIds.contains(a.exprId) =>
-        Some(NdvCol(a, hll.relativeSD))
-      // sum(col) = Σ of the manifest's per-file exact sums (ANSI
-      // folds only under the no-partial-overflow proofs)
-      case e if sumSpecOf(e, relIds).isDefined =>
-        Some(SumCol(sumSpecOf(e, relIds).get))
-      case _ => None
-    }
-    if (shapes.exists(_.isEmpty)) return None
-    if (shapes.exists {
-        case Some(_: Span) | Some(_: CountCol) | Some(_: SumCol)
-           | Some(_: AvgCol) | Some(_: DistinctCol) | Some(_: NdvCol) =>
-          t.vtHasMapping
-        case _ => false
-      }) return None // mapped names would misalign against stats keys
-    // ONE manifest read (segment-cached) answers every expression
-    val entries =
-      try {
-        VersionedTable.requireVisibleVersion(SparkSession.active,
-          t.vtPath, t.vtVersion)
-        VersionedTable.readEntries(SparkSession.active, t.vtPath,
-          t.vtVersion)
-      } catch { case scala.util.control.NonFatal(_) => return None }
-    lazy val count: Long = VersionedTable.countRowsOf(entries)
-    val spanCache = scala.collection.mutable.Map
-      .empty[String, Option[Option[(Any, Any)]]]
-    def span(col: String): Option[Option[(Any, Any)]] =
-      spanCache.getOrElseUpdate(col,
-        VersionedTable.statsSpanOf(entries, col))
-    lazy val anyDv = entries.exists(_.dv.exists(_._2 > 0))
-    // exact whole-table Σ from the per-file sums; None = not provable
-    // (a DV'd file's recorded sum is the PHYSICAL file's, a missing
-    // per-file sum is unknowable) — the hybrid fallback then scans
-    // only the undecidable files
-    def totalSum(col: String)
-        : Option[(java.math.BigDecimal, Boolean)] =
-      if (anyDv) None
-      else {
-        val parts = entries.map(_.sumOf(col))
-        if (parts.exists(_.isEmpty)) None
-        else {
-          var acc = java.math.BigDecimal.ZERO
-          var has = false
-          parts.flatten.foreach {
-            case Some(s) => acc = acc.add(s); has = true
-            case None => ()
-          }
-          Some((acc, has))
-        }
-      }
-    // avg = exact Σ / non-null count, provably equal to Spark's
-    // double-accumulated scan result only when n·max|span| < 2^53
-    // (then every per-row cast, partial and merge is exact in IEEE
-    // double, so ANY summation order lands on the same value and the
-    // single final division is shared)
-    def avgValue(a: AttributeReference): Option[Any] = {
-      if (anyDv) return None
-      val nn = entries.map(VersionedTable.nonNullRowsOf(_, a.name))
-      if (nn.exists(_.isEmpty)) return None
-      val n = nn.map(_.get).sum
-      if (n == 0L) return Some(null)
-      val (lo, hi) = span(a.name) match {
-        case Some(Some((l: Long, h: Long))) => (l, h)
-        case _ => return None
-      }
-      val m = java.math.BigDecimal.valueOf(lo).abs
-        .max(java.math.BigDecimal.valueOf(hi).abs)
-      if (java.math.BigDecimal.valueOf(n).multiply(m)
-          .compareTo(TwoP53) >= 0) return None
-      totalSum(a.name).map { case (sigma, has) =>
-        if (!has) null else (sigma.doubleValue / n.toDouble: Any)
-      }
-    }
-    val values = shapes.map {
-      case Some(CountAll) => Some(count: Any)
-      case Some(CountCol(a)) =>
-        val parts = entries.map(VersionedTable.nonNullRowsOf(_, a.name))
-        if (parts.exists(_.isEmpty)) None
-        else Some(parts.map(_.get).sum: Any)
-      case Some(Span(a, isLo)) =>
-        span(a.name) match {
-          case None => None // span not provable: decline
-          case Some(None) => Some(null: Any) // all-null: SQL null
-          case Some(Some(s)) =>
-            toCatalystSpan(if (isLo) s._1 else s._2, a)
-        }
-      case Some(SumCol(spec)) =>
-        totalSum(spec.a.name).flatMap { case (sigma, has) =>
-          sumValueOf(spec, sigma, has, sumLongProof(spec, entries)) }
-      case Some(AvgCol(a)) => avgValue(a)
-      case Some(DistinctCol(a)) =>
-        distinctCountOf(entries, a).map(n => n: Any)
-      case Some(NdvCol(a, rsd)) =>
-        ndvMerged(entries, a.name, rsd).map(n => n: Any)
-      case None => None // unreachable: shape gate above
-    }
-    if (values.exists(_.isEmpty)) None
-    else Some(Seq(InternalRow.fromSeq(values.map(_.get))))
   }
 
   /** Merge the per-file HLL++ register words of `es` (per-register
@@ -397,18 +204,75 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     VersionedTable.ndvHelperFor(rsd)
       .flatMap(h => VersionedTable.ndvMergedWords(es, col, h))
 
-  /** [[stripToVt]] through exactly one [[Filter]] — the
-    * `count(*) WHERE <pred>` shape. Projects may sit above the
-    * Filter; after PushDownPredicates the Filter sits on the
-    * relation, so nothing row-changing hides below it. */
-  private def stripToFilteredVt(p: LogicalPlan)
-      : Option[(Expression, VtTable, Seq[Attribute])] = p match {
-    case Project(_, c) => stripToFilteredVt(c)
-    case SubqueryAlias(_, c) => stripToFilteredVt(c)
-    case Filter(cond, c) =>
-      stripToVt(c).map { case (t, out) => (cond, t, out) }
-    case _ => None
-  }
+  /** One aggregate output as the folds see it: a grouping key (grouped
+    * fold only) or a foldable aggregate of a relation column. */
+  private sealed trait Shape
+  private final case class GroupKey(a: AttributeReference) extends Shape
+  private case object CountAll extends Shape
+  private final case class CountCol(a: AttributeReference) extends Shape
+  private final case class Span(a: AttributeReference, lo: Boolean)
+    extends Shape
+  private final case class SumCol(spec: SumSpec) extends Shape
+  private final case class AvgCol(a: AttributeReference) extends Shape
+  private final case class DistinctCol(a: AttributeReference)
+    extends Shape
+  private final case class NdvCol(a: AttributeReference, rsd: Double)
+    extends Shape
+
+  /** The shape of every output of `agg`, or None when any output is
+    * not foldable. Pure (no I/O): the folds read the manifest only
+    * after every output matched. `keys` are the grouping columns'
+    * exprIds (empty for an ungrouped aggregate); a grouped aggregate
+    * declines `count(DISTINCT)`. Column-mapping gates stay with the
+    * callers. */
+  private def shapesOf(agg: Aggregate, relIds: Set[ExprId],
+      keys: Set[ExprId]): Option[Seq[Shape]] =
+    Some(agg.aggregateExpressions.map {
+      case a: AttributeReference if keys(a.exprId) => GroupKey(a)
+      case Alias(a: AttributeReference, _) if keys(a.exprId) => GroupKey(a)
+      // count(*) / count(<non-null literal>) — count(NULL) is 0 by
+      // SQL null semantics, never the row count; leave it to the scan
+      case Alias(AggregateExpression(
+          Count(Seq(Literal(v, _))), Complete, false, None, _), _)
+          if v != null => CountAll
+      // count(col) = Σ per file (rows − nulls), from the manifest's
+      // per-column null counts — the most common profiling aggregate
+      // after count(*), answered with zero data files opened
+      case Alias(AggregateExpression(
+          Count(Seq(a: AttributeReference)), Complete, false, None, _), _)
+          if relIds(a.exprId) => CountCol(a)
+      case Alias(AggregateExpression(
+          Min(a: AttributeReference), Complete, false, None, _), _)
+          if spanType(a) && relIds(a.exprId) => Span(a, lo = true)
+      case Alias(AggregateExpression(
+          Max(a: AttributeReference), Complete, false, None, _), _)
+          if spanType(a) && relIds(a.exprId) => Span(a, lo = false)
+      // avg(col) = Σ / count(col), under the double-exactness gate
+      // (double accumulation never throws, so ANSI == LEGACY here)
+      case Alias(ae @ AggregateExpression(
+          Average(a: AttributeReference, mode), Complete, false, None,
+          _), _)
+          if foldableSumMode(mode) && avgType(a) &&
+            ae.dataType == DoubleType && relIds(a.exprId) => AvgCol(a)
+      // count(DISTINCT col): every file single-valued (or all-null)
+      // in col → the distinct set reads straight off the manifest
+      case Alias(AggregateExpression(
+          Count(Seq(a: AttributeReference)), Complete, true, None, _), _)
+          if keys.isEmpty && spanType(a) && relIds(a.exprId) =>
+        DistinctCol(a)
+      // approx_count_distinct(col): merge the write-time per-file
+      // HLL++ register words — BIT-IDENTICAL to the scan's buffer
+      // (register max is an order-free idempotent join and the
+      // write tracker hashed with the same function), so folding an
+      // "approximate" aggregate is still exact-or-untouched
+      case Alias(AggregateExpression(
+          hll @ HyperLogLogPlusPlus(a: AttributeReference, _, _, _),
+          Complete, false, None, _), _)
+          if relIds(a.exprId) => NdvCol(a, hll.relativeSD)
+      // sum(col) = Σ of the manifest's per-file exact sums (ANSI
+      // folds only under the no-partial-overflow proofs)
+      case e => SumCol(sumSpecOf(e, relIds).getOrElse(return None))
+    })
 
   /** `count(*)` / `min` / `max` `WHERE <conjuncts>` from metadata + a
     * BOUNDARY-ONLY scan: files every conjunct provably matches in
@@ -423,76 +287,30 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     * instead of the whole overlap. For span shapes an all-in file
     * that carries a deletion vector (a masked row could have held the
     * extremum) or no recorded span demotes to the boundary scan.
+    * A whole-table aggregate arrives here with a vacuous TRUE `cond`
+    * and folds to a [[LocalRelation]] when no file demotes.
     * Declines (plan untouched) unless every aggregate is a plain
     * count/min/max, every conjunct translates exactly, and metadata
     * actually decided at least one file. */
-  private def foldCountWhere(agg: Aggregate,
-      aggExprs: Seq[NamedExpression], cond: Expression, t: VtTable,
-      relOut: Seq[Attribute]): Option[LogicalPlan] = {
+  private def foldCountWhere(agg: Aggregate, cond: Expression,
+      t: VtTable, relOut: Seq[Attribute]): Option[LogicalPlan] = {
     val relIds = relOut.map(_.exprId).toSet
-    sealed trait Shape
-    case object CountAll extends Shape
-    final case class CountColAgg(a: AttributeReference) extends Shape
-    final case class SpanAgg(a: AttributeReference, lo: Boolean)
-      extends Shape
-    final case class SumColAgg(spec: SumSpec) extends Shape
-    final case class AvgColAgg(a: AttributeReference) extends Shape
-    final case class DistinctColAgg(a: AttributeReference)
-      extends Shape
-    final case class NdvColAgg(a: AttributeReference, rsd: Double)
-      extends Shape
-    val shapes: Seq[Shape] = aggExprs.map {
-      case Alias(AggregateExpression(
-          Count(Seq(Literal(v, _))), Complete, false, None, _), _)
-          if v != null => CountAll
-      case Alias(AggregateExpression(
-          Count(Seq(a: AttributeReference)), Complete, false, None, _), _)
-          if relIds.contains(a.exprId) && !t.vtHasMapping =>
-        CountColAgg(a)
-      case Alias(AggregateExpression(
-          Min(a: AttributeReference), Complete, false, None, _), _)
-          if spanType(a) && relIds.contains(a.exprId) &&
-            !t.vtHasMapping =>
-        SpanAgg(a, lo = true)
-      case Alias(AggregateExpression(
-          Max(a: AttributeReference), Complete, false, None, _), _)
-          if spanType(a) && relIds.contains(a.exprId) &&
-            !t.vtHasMapping =>
-        SpanAgg(a, lo = false)
-      case Alias(ae @ AggregateExpression(
-          Average(a: AttributeReference, mode), Complete, false, None,
-          _), _)
-          if foldableSumMode(mode) && avgType(a) &&
-            ae.dataType == DoubleType && relIds.contains(a.exprId) &&
-            !t.vtHasMapping =>
-        AvgColAgg(a)
-      case Alias(AggregateExpression(
-          Count(Seq(a: AttributeReference)), Complete, true, None, _), _)
-          if spanType(a) && relIds.contains(a.exprId) &&
-            !t.vtHasMapping =>
-        DistinctColAgg(a)
-      case Alias(AggregateExpression(
-          hll @ HyperLogLogPlusPlus(a: AttributeReference, _, _, _),
-          Complete, false, None, _), _)
-          if relIds.contains(a.exprId) && !t.vtHasMapping =>
-        NdvColAgg(a, hll.relativeSD)
-      case e if !t.vtHasMapping && sumSpecOf(e, relIds).isDefined =>
-        SumColAgg(sumSpecOf(e, relIds).get)
-      case _ => return None
-    }
-    val spanCols = shapes.collect { case SpanAgg(a, _) => a.name }.distinct
-    val countColAttrs = shapes.collect { case CountColAgg(a) => a }
+    val shapes = shapesOf(agg, relIds, Set.empty).getOrElse(return None)
+    // mapped names would misalign against stats keys
+    if (t.vtHasMapping && shapes.exists(_ != CountAll)) return None
+    val spanCols = shapes.collect { case Span(a, _) => a.name }.distinct
+    val countColAttrs = shapes.collect { case CountCol(a) => a }
       .distinctBy(_.name)
     val countCols = countColAttrs.map(_.name)
-    val sumSlots = shapes.collect { case SumColAgg(sp) => sp }
+    val sumSlots = shapes.collect { case SumCol(sp) => sp }
       .distinctBy(_.a.name)
     val sumCols = sumSlots.map(_.a.name)
-    val avgAttrs = shapes.collect { case AvgColAgg(a) => a }
+    val avgAttrs = shapes.collect { case AvgCol(a) => a }
       .distinctBy(_.name)
     val avgCols = avgAttrs.map(_.name)
-    val distinctAttrs = shapes.collect { case DistinctColAgg(a) => a }
+    val distinctAttrs = shapes.collect { case DistinctCol(a) => a }
       .distinctBy(_.name)
-    val ndvSlots = shapes.collect { case NdvColAgg(a, r) => (a, r) }
+    val ndvSlots = shapes.collect { case NdvCol(a, r) => (a, r) }
       .distinctBy(p => (p._1.name, p._2))
     // the query-rsd register layout each sketch must match; an
     // unconstructible helper (hostile rsd) declines the fold
@@ -501,16 +319,11 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         catch { case scala.util.control.NonFatal(_) => return None }))
       .toMap
     val preds = VtPushdown.toExactPreds(cond, relIds).getOrElse(return None)
-    val spark = SparkSession.active
-    val entries =
-      try {
-        VersionedTable.requireVisibleVersion(spark, t.vtPath, t.vtVersion)
-        VersionedTable.readEntries(spark, t.vtPath, t.vtVersion)
-      } catch { case scala.util.control.NonFatal(_) => return None }
+    val entries = VtFiles.entriesOf(t).getOrElse(return None)
     val (_, allIn0, boundary0) =
       VersionedTable.countWhereParts(entries, preds)
-    // DEMOTE an all-in file to the boundary scan when its metadata
-    // cannot answer a requested shape:
+    // DEMOTE an all-in file with rows to the boundary scan when its
+    // metadata cannot answer a requested shape:
     //  (a) a span col's stats were never collected (all-null is fine
     //      — contributes nothing to min/max), or a count col's
     //      non-null rows are unprovable (no recorded null count, or
@@ -523,7 +336,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     //      files, not every masked one.
     def dvOf(e: graft.operators.VersionedTable.FileEntry): Boolean =
       e.dv.exists(_._2 > 0)
-    val missing = allIn0.filter(e =>
+    val missing = allIn0.filter(e => e.nRows != 0L && (
       spanCols.exists(c => !e.stats.contains(c)) ||
         countCols.exists(c =>
           VersionedTable.nonNullRowsOf(e, c).isEmpty) ||
@@ -540,12 +353,12 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         // count(DISTINCT c): a file that is not provably single-
         // valued demotes (and the pure-only gate below then declines)
         distinctAttrs.exists(a => distinctCountOf(Seq(e), a).isEmpty) ||
-        // approx_count_distinct: a file with rows must carry a DV-free
-        // sketch at the query's register layout (the fold merges only
+        // approx_count_distinct: a file must carry a DV-free sketch at
+        // the query's register layout (the fold merges only
         // whole-file registers; anything else rescans)
-        (ndvSlots.nonEmpty && e.nRows != 0L && (dvOf(e) ||
+        (ndvSlots.nonEmpty && (dvOf(e) ||
           ndvSlots.exists { case (a, r) =>
-            !e.ndvOf(a.name).exists(_.size == ndvWords(r)) })))
+            !e.ndvOf(a.name).exists(_.size == ndvWords(r)) }))))
     val missingSet = missing.iterator.map(_.name).toSet
     val dvDemote =
       if (spanCols.isEmpty) Seq.empty
@@ -555,24 +368,9 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         // clean-file baseline extrema; an incomparable reduce leaves
         // no baseline (conservative — and the metaSpan reduce below
         // will decline the whole fold on the same pair anyway)
-        val base: Map[String, Option[(Any, Any)]] = spanCols.map { c =>
-          var acc: Option[(Any, Any)] = None
-          var bad = false
-          clean.flatMap(_.stats.get(c)).flatten.foreach { s =>
-            acc = acc match {
-              case None => Some(s)
-              case prev @ Some((lo, hi)) =>
-                (VersionedTable.cmpMeta(s._1, lo),
-                  VersionedTable.cmpMeta(s._2, hi)) match {
-                  case (Some(cl), Some(ch)) =>
-                    Some((if (cl < 0) s._1 else lo,
-                      if (ch > 0) s._2 else hi))
-                  case _ => bad = true; prev
-                }
-            }
-          }
-          c -> (if (bad) None else acc)
-        }.toMap
+        val base: Map[String, Option[(Any, Any)]] = spanCols.map(c =>
+          c -> VersionedTable.hull(clean.flatMap(_.stats.get(c)).flatten)
+            .flatten).toMap
         allIn0.filter(e => dvOf(e) && !missingSet.contains(e.name) &&
           spanCols.exists { c =>
             e.stats.get(c).flatten match {
@@ -597,20 +395,19 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       (countCols ++ avgCols).distinct.map { c =>
         c -> allIn.map(e => VersionedTable.nonNullRowsOf(e, c).get).sum
       }.toMap
-    // exact Σ over the all-in files (`.get`s safe: unprovable files
-    // demoted above); `has` = any non-null value contributed, the
-    // SQL-null discriminator
+    // exact Σ over the all-in files (unprovable files demoted above;
+    // a zero-row file adds nothing); `has` = any non-null value
+    // contributed, the SQL-null discriminator
     val metaSumVal: Map[String, (java.math.BigDecimal, Boolean)] =
       (sumCols ++ avgCols).distinct.map { c =>
         var acc = java.math.BigDecimal.ZERO
         var has = false
-        allIn.foreach(e => e.sumOf(c).get match {
-          case Some(s) => acc = acc.add(s); has = true
-          case None => ()
+        allIn.foreach(_.sumOf(c).flatten.foreach { s =>
+          acc = acc.add(s); has = true
         })
         c -> ((acc, has))
       }.toMap
-    val boundary = boundary0 ++ demote.map(_.name)
+    val boundary = (boundary0 ++ demote.map(_.name)).toSet
     if (boundary.size >= entries.size && entries.nonEmpty)
       return None // metadata decided nothing: the plain scan is better
     // count(DISTINCT g) decomposes over the boundary — as a SET
@@ -620,13 +417,12 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     // would need a second, differently-keyed union aggregation).
     if (distinctAttrs.nonEmpty && boundary.nonEmpty) {
       shapes match {
-        case Seq(DistinctColAgg(a)) =>
-          return distinctHybrid(agg, a, allIn, boundary.toSet, cond,
-            t, relOut)
+        case Seq(DistinctCol(a)) =>
+          return distinctHybrid(agg, a, allIn, boundary, cond, t, relOut)
         case _ => return None
       }
     }
-    val entryByName = entries.iterator.map(e => e.name -> e).toMap
+    val bEntries = entries.filter(e => boundary(e.name))
     // avg DOES decompose over the boundary: Σ and n are both
     // additive, and under the 2^53 double-exactness proof — checked
     // here over EVERY file the scan could touch (all-in AND
@@ -636,36 +432,13 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     // (metaN + boundaryN) reproduces it bit-for-bit. Anything
     // unprovable (missing span, unknown rows, a span too wide)
     // declines the whole fold.
-    val avgHybridProof: Map[String, Boolean] =
-      (if (boundary.isEmpty) Seq.empty else avgCols).map { c =>
-      def bound(): Boolean = {
-        var m = java.math.BigDecimal.ZERO
-        var n = metaNonNull(c)
-        allIn.foreach(e => e.stats.get(c).flatten.foreach {
-          case (lo: Long, hi: Long) =>
-            val x = java.math.BigDecimal.valueOf(lo).abs
-              .max(java.math.BigDecimal.valueOf(hi).abs)
-            if (x.compareTo(m) > 0) m = x
-          case _ => return false
-        })
-        boundary.toSeq.flatMap(entryByName.get).foreach { e =>
-          n += e.nRows // every physical row may be a non-null match
-          e.stats.get(c) match {
-            case Some(Some((lo: Long, hi: Long))) =>
-              val x = java.math.BigDecimal.valueOf(lo).abs
-                .max(java.math.BigDecimal.valueOf(hi).abs)
-              if (x.compareTo(m) > 0) m = x
-            case Some(None) => () // all-null: contributes nothing
-            case _ => return false
-          }
-        }
-        java.math.BigDecimal.valueOf(n).multiply(m)
-          .compareTo(TwoP53) < 0
-      }
-      c -> bound()
-    }.toMap
-    if (avgAttrs.nonEmpty && boundary.nonEmpty &&
-        avgCols.exists(c => !avgHybridProof(c))) return None
+    if (bEntries.nonEmpty && avgCols.exists { c =>
+        // every physical boundary row may be a non-null match
+        val n = metaNonNull(c) + bEntries.map(_.nRows).sum
+        bEntries.exists(!_.stats.contains(c)) ||
+          !maxAbs((allIn ++ bEntries).flatMap(_.stats.get(c).flatten))
+            .exists(avgExact(n, _))
+      }) return None
     // approx_count_distinct DOES decompose over the boundary — not
     // through the expression layer (the partials are register
     // buffers, not values) but through [[SeededHll]]: the all-in
@@ -686,49 +459,26 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     // boundary alike — the un-folded alternative aggregates exactly
     // those matching rows, and must neither throw where it would nor
     // answer where it would throw)
-    lazy val proofEntries = allIn ++ boundary.flatMap(entryByName.get)
     val sumProofCache = scala.collection.mutable.Map.empty[String, Boolean]
     def longProof(sp: SumSpec): Boolean =
       sumProofCache.getOrElseUpdate(sp.a.name,
-        sumLongProof(sp, proofEntries))
+        sumLongProof(sp, allIn ++ bEntries))
     // the avg exactness gate: n·max|span| over the all-in files must
     // stay under 2^53, else IEEE rounding could diverge from exact Σ/n
     def avgMeta(a: AttributeReference): Option[Any] = {
       val n = metaNonNull(a.name)
       if (n == 0L) return Some(null)
-      var m = java.math.BigDecimal.ZERO
-      allIn.foreach(e => e.stats.get(a.name).flatten.foreach {
-        case (lo: Long, hi: Long) =>
-          val c = java.math.BigDecimal.valueOf(lo).abs
-            .max(java.math.BigDecimal.valueOf(hi).abs)
-          if (c.compareTo(m) > 0) m = c
-        case _ => return None
-      })
-      if (java.math.BigDecimal.valueOf(n).multiply(m)
-          .compareTo(TwoP53) >= 0) return None
+      if (!maxAbs(allIn.flatMap(_.stats.get(a.name).flatten))
+          .exists(avgExact(n, _))) return None
       val (sigma, has) = metaSumVal(a.name)
       Some(if (!has) null else (sigma.doubleValue / n.toDouble: Any))
     }
     // per-span-column extrema over the all-in files (byte-order/SQL
     // exact — incomparable pairs decline the whole fold)
     val metaSpan: Map[String, Option[(Any, Any)]] =
-      spanCols.map { c =>
-        var acc: Option[(Any, Any)] = None
-        allIn.flatMap(_.stats.get(c)).flatten.foreach { s =>
-          acc = acc match {
-            case None => Some(s)
-            case Some((lo, hi)) =>
-              (VersionedTable.cmpMeta(s._1, lo),
-                VersionedTable.cmpMeta(s._2, hi)) match {
-                case (Some(cl), Some(ch)) =>
-                  Some((if (cl < 0) s._1 else lo,
-                    if (ch > 0) s._2 else hi))
-                case _ => return None
-              }
-          }
-        }
-        c -> acc
-      }.toMap
+      spanCols.map(c => c -> VersionedTable.hull(
+        allIn.flatMap(_.stats.get(c)).flatten).getOrElse(return None))
+        .toMap
     // None = DECLINE the whole fold (a legacy-unit or sign-ambiguous
     // recorded extremum — see toCatalystSpan); a missing span is the
     // legitimate SQL-null answer (no non-null rows among all-in files)
@@ -743,29 +493,24 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       return Some(LocalRelation(agg.output,
         Seq(InternalRow.fromSeq(shapes.map {
           case CountAll => metaSum: Any
-          case CountColAgg(a) => metaNonNull(a.name): Any
-          case SpanAgg(a, lo) =>
+          case CountCol(a) => metaNonNull(a.name): Any
+          case Span(a, lo) =>
             metaLit(a, lo).getOrElse(return None).value
-          case SumColAgg(sp) =>
+          case SumCol(sp) =>
             val (sigma, has) = metaSumVal(sp.a.name)
             sumValueOf(sp, sigma, has, longProof(sp))
               .getOrElse(return None)
-          case AvgColAgg(a) => avgMeta(a).getOrElse(return None)
-          case DistinctColAgg(a) =>
+          case AvgCol(a) => avgMeta(a).getOrElse(return None)
+          case DistinctCol(a) =>
             (distinctCountOf(allIn, a).getOrElse(return None)): Any
-          case NdvColAgg(a, r) =>
+          case NdvCol(a, r) =>
             (ndvMerged(allIn, a.name, r).getOrElse(return None)): Any
+          case GroupKey(_) => return None // unreachable: ungrouped
         }))))
     // boundary files: one masked/aliased subset scan, original
     // predicate re-applied, partial aggregates combined with the
     // metadata side
-    val slice = Bridge.logicalPlan(
-      VersionedTable.readEntrySubset(spark, t.vtPath, t.vtVersion,
-        boundary.toSet))
-    val byName = slice.output.map(a => a.name -> a).toMap
-    if (!relOut.forall(a => byName.contains(a.name))) return None
-    val remap = Project(relOut.map(a =>
-      Alias(byName(a.name), a.name)(exprId = a.exprId)), slice)
+    val remap = VtFiles.sliceOf(t, boundary, relOut).getOrElse(return None)
     val cnt = Alias(AggregateExpression(
       Count(Seq(Literal(1))), Complete, isDistinct = false),
       "graft_boundary_count")()
@@ -775,7 +520,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         s"graft_boundary_cnt_${a.name}")()
     }.toMap
     val spanAggs: Map[(String, Boolean), Alias] =
-      shapes.collect { case SpanAgg(a, lo) => (a, lo) }.distinct.map {
+      shapes.collect { case Span(a, lo) => (a, lo) }.distinct.map {
         case (a, lo) =>
           (a.name, lo) -> Alias(AggregateExpression(
             if (lo) Min(a) else Max(a), Complete, isDistinct = false),
@@ -801,7 +546,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           s"graft_boundary_ndv_${a.name}")()
     }.toMap
     // avg partials: exact boundary Σ (long — no overflow under the
-    // avgHybridProof bound) and matching-row count, combined with the
+    // avg proof above) and matching-row count, combined with the
     // exact metadata halves in the outer projection
     val avgSumB: Map[String, Alias] = avgAttrs.map { a =>
       a.name -> Alias(AggregateExpression(Sum(a), Complete,
@@ -820,10 +565,10 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       case (CountAll, o) =>
         Alias(Add(cnt.toAttribute, Literal(metaSum)), o.name)(
           exprId = o.exprId)
-      case (CountColAgg(a), o) =>
+      case (CountCol(a), o) =>
         Alias(Add(cntColAggs(a.name).toAttribute,
           Literal(metaNonNull(a.name))), o.name)(exprId = o.exprId)
-      case (SpanAgg(a, lo), o) =>
+      case (Span(a, lo), o) =>
         // Least/Greatest skip nulls, matching min/max combination
         val parts = Seq(spanAggs((a.name, lo)).toAttribute,
           metaLit(a, lo).getOrElse(return None))
@@ -831,14 +576,13 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
             .Least(parts)
           else org.apache.spark.sql.catalyst.expressions
             .Greatest(parts), o.name)(exprId = o.exprId)
-      case (SumColAgg(sp), o) =>
+      case (SumCol(sp), o) =>
         // wide decimals: the boundary SUBTOTAL must provably fit the
         // widened (38, s) partial (see [[decimalBoundarySafe]]) — a
         // nulled-by-overflow partial under the Coalesce below would
         // silently count as zero
         decimalInPrec(sp).foreach { p =>
-          if (!decimalBoundarySafe(
-              boundary.toSeq.flatMap(entryByName.get), p)) return None
+          if (!decimalBoundarySafe(bEntries, p)) return None
         }
         val (sigma, has) = metaSumVal(sp.a.name)
         val b = sumAggsB(sp.a.name).toAttribute
@@ -853,13 +597,13 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         // the final conversion applies the ONE overflow check the
         // scan's own buffer would (LEGACY → NULL, ANSI → throw)
         Alias(sumFinalExpr(sp, combined), o.name)(exprId = o.exprId)
-      case (NdvColAgg(a, r), o) =>
+      case (NdvCol(a, r), o) =>
         // the seeded aggregate already carries the metadata half
         Alias(ndvAggsB((a.name, r)).toAttribute, o.name)(
           exprId = o.exprId)
-      case (AvgColAgg(a), o) =>
+      case (AvgCol(a), o) =>
         // (metaΣ + boundaryΣ) / (metaN + boundaryN), exact in IEEE
-        // double under avgHybridProof — the same value the scan's
+        // double under the avg proof — the same value the scan's
         // double-accumulated buffer lands on in any order
         val (sigma, _) = metaSumVal(a.name)
         val metaS =
@@ -874,8 +618,8 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           Literal(null, DoubleType),
           Divide(Cast(sTot, DoubleType), Cast(n, DoubleType))),
           o.name)(exprId = o.exprId)
-      case (DistinctColAgg(_), _) =>
-        return None // unreachable: declined above when boundary
+      case (DistinctCol(_) | GroupKey(_), _) =>
+        return None // unreachable: declined above / ungrouped
     }
     Some(Project(outs, inner))
   }
@@ -902,73 +646,31 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     * grouping column is a plain span-typed relation attribute, every
     * output is a group key or a foldable aggregate, every conjunct
     * translates, and metadata decided at least one file. */
-  private def foldGrouped(agg: Aggregate, gs: Seq[AttributeReference],
-      aggExprs: Seq[NamedExpression], cond: Expression, t: VtTable,
+  private def foldGrouped(agg: Aggregate, cond: Expression, t: VtTable,
       relOut: Seq[Attribute]): Option[LogicalPlan] = {
     val relIds = relOut.map(_.exprId).toSet
+    val gs = agg.groupingExpressions.map(_.asInstanceOf[AttributeReference])
     if (gs.isEmpty || t.vtHasMapping ||
         gs.exists(g => !relIds.contains(g.exprId) || !spanType(g)) ||
         gs.map(_.exprId).distinct.size != gs.size)
       return None
     val gIdx: Map[ExprId, Int] =
       gs.map(_.exprId).zipWithIndex.toMap
-    sealed trait Shape
-    final case class GKey(a: AttributeReference) extends Shape
-    case object CountAll extends Shape
-    final case class CountColAgg(a: AttributeReference) extends Shape
-    final case class SpanGAgg(a: AttributeReference, lo: Boolean)
-      extends Shape
-    final case class SumGAgg(spec: SumSpec) extends Shape
-    final case class AvgGAgg(a: AttributeReference) extends Shape
-    final case class NdvGAgg(a: AttributeReference, rsd: Double)
-      extends Shape
-    val shapes: Seq[Shape] = aggExprs.map {
-      case a: AttributeReference if gIdx.contains(a.exprId) => GKey(a)
-      case Alias(a: AttributeReference, _)
-          if gIdx.contains(a.exprId) => GKey(a)
-      case Alias(AggregateExpression(
-          Count(Seq(Literal(v, _))), Complete, false, None, _), _)
-          if v != null => CountAll
-      case Alias(AggregateExpression(
-          Count(Seq(a: AttributeReference)), Complete, false, None, _), _)
-          if relIds.contains(a.exprId) => CountColAgg(a)
-      case Alias(AggregateExpression(
-          Min(a: AttributeReference), Complete, false, None, _), _)
-          if spanType(a) && relIds.contains(a.exprId) =>
-        SpanGAgg(a, lo = true)
-      case Alias(AggregateExpression(
-          Max(a: AttributeReference), Complete, false, None, _), _)
-          if spanType(a) && relIds.contains(a.exprId) =>
-        SpanGAgg(a, lo = false)
-      case Alias(ae @ AggregateExpression(
-          Average(a: AttributeReference, mode), Complete, false, None,
-          _), _)
-          if foldableSumMode(mode) && avgType(a) &&
-            ae.dataType == DoubleType && relIds.contains(a.exprId) =>
-        AvgGAgg(a)
-      // per-group approx_count_distinct: whole-file-keyed files merge
-      // their register words into their group's buffer — the per-day
-      // distinct-users profile answered from the manifest
-      case Alias(AggregateExpression(
-          hll @ HyperLogLogPlusPlus(a: AttributeReference, _, _, _),
-          Complete, false, None, _), _)
-          if relIds.contains(a.exprId) =>
-        NdvGAgg(a, hll.relativeSD)
-      case e if sumSpecOf(e, relIds).isDefined =>
-        SumGAgg(sumSpecOf(e, relIds).get)
-      case _ => return None
-    }
-    val countCols = shapes.collect { case CountColAgg(a) => a }
+    val shapes = shapesOf(agg, relIds, gIdx.keySet).getOrElse(return None)
+    val countCols = shapes.collect { case CountCol(a) => a }
       .distinctBy(_.name)
-    val spanSlots = shapes.collect { case SpanGAgg(a, lo) => (a, lo) }
+    val spanSlots = shapes.collect { case Span(a, lo) => (a, lo) }
       .distinctBy(p => (p._1.name, p._2))
     val spanColAttrs = spanSlots.map(_._1).distinctBy(_.name)
-    val sumGSlots = shapes.collect { case SumGAgg(sp) => sp }
+    val sumGSlots = shapes.collect { case SumCol(sp) => sp }
       .distinctBy(_.a.name)
     val sumGAttrs = sumGSlots.map(_.a)
-    val avgGAttrs = shapes.collect { case AvgGAgg(a) => a }
+    val avgGAttrs = shapes.collect { case AvgCol(a) => a }
       .distinctBy(_.name)
-    val ndvGSlots = shapes.collect { case NdvGAgg(a, r) => (a, r) }
+    // per-group approx_count_distinct: whole-file-keyed files merge
+    // their register words into their group's buffer — the per-day
+    // distinct-users profile answered from the manifest
+    val ndvGSlots = shapes.collect { case NdvCol(a, r) => (a, r) }
       .distinctBy(p => (p._1.name, p._2))
     val ndvGHelpers: Map[Double, HyperLogLogPlusPlusHelper] =
       ndvGSlots.map(_._2).distinct
@@ -976,12 +678,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           catch { case scala.util.control.NonFatal(_) => return None }))
         .toMap
     val preds = VtPushdown.toExactPreds(cond, relIds).getOrElse(return None)
-    val spark = SparkSession.active
-    val entries =
-      try {
-        VersionedTable.requireVisibleVersion(spark, t.vtPath, t.vtVersion)
-        VersionedTable.readEntries(spark, t.vtPath, t.vtVersion)
-      } catch { case scala.util.control.NonFatal(_) => return None }
+    val entries = VtFiles.entriesOf(t).getOrElse(return None)
     val (_, allIn0, boundary0) =
       VersionedTable.countWhereParts(entries, preds)
     // group keys come from raw manifest span values — normalize
@@ -1114,10 +811,9 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         avgGAttrs.foreach { a =>
           if (ok) VersionedTable.nonNullRowsOf(e, a.name) match {
             case Some(n) if n > 0 =>
-              (e.sumOf(a.name), e.stats.get(a.name).flatten) match {
-                case (Some(Some(sig)), Some((lo: Long, hi: Long))) =>
-                  val mab = java.math.BigDecimal.valueOf(lo).abs
-                    .max(java.math.BigDecimal.valueOf(hi).abs)
+              (e.sumOf(a.name), e.stats.get(a.name).flatten
+                  .flatMap(sp => maxAbs(Seq(sp)))) match {
+                case (Some(Some(sig)), Some(mab)) =>
                   out += ((k, a.name, (sig, n, mab)))
                 case _ => ok = false
               }
@@ -1226,7 +922,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           // null's occurrence), and only when no count/span/sum/avg
           // output needs per-key row counts the set cannot supply.
           val distinctOnly = gs.size == 1 &&
-            shapes.forall(_.isInstanceOf[GKey])
+            shapes.forall(_.isInstanceOf[GroupKey])
           val viaDset = distinctOnly && !e.dv.exists(_._2 > 0) &&
             e.dsets.contains(gs.head.name) &&
             e.nulls.contains(gs.head.name)
@@ -1244,9 +940,10 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       }
     }
     val demotedSet = demoted.result().toSet
-    val boundary = boundary0 ++ demotedSet
+    val boundary = (boundary0 ++ demotedSet).toSet
     if (boundary.size >= entries.size && entries.nonEmpty)
       return None // metadata decided nothing: the plain scan is better
+    val bEntries = entries.filter(e => boundary(e.name))
     // grouped approx_count_distinct decomposes over the boundary
     // through the union itself: each group's metadata registers ride
     // a BINARY union column, the boundary scan accumulates per-group
@@ -1260,33 +957,18 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     // boundary span (a boundary row may land in any group). Anything
     // unprovable declines the whole fold.
     val avgGHybridOk: Boolean =
-      avgGAttrs.isEmpty || boundary.isEmpty || {
-        var bRows = 0L
-        var bMax = java.math.BigDecimal.ZERO
-        var ok = true
-        val ebn = entries.iterator.map(e => e.name -> e).toMap
-        boundary.toSeq.flatMap(ebn.get).foreach { e =>
-          bRows += e.nRows
-          avgGAttrs.foreach { a =>
-            e.stats.get(a.name) match {
-              case Some(Some((lo: Long, hi: Long))) =>
-                val x = java.math.BigDecimal.valueOf(lo).abs
-                  .max(java.math.BigDecimal.valueOf(hi).abs)
-                if (x.compareTo(bMax) > 0) bMax = x
-              case Some(None) => () // all-null: contributes nothing
-              case _ => ok = false
-            }
-          }
-        }
+      avgGAttrs.isEmpty || bEntries.isEmpty || {
         val metaN = metaAvgG.valuesIterator.map(_._2)
           .foldLeft(0L)(math.max)
         val metaM = metaAvgG.valuesIterator.map(_._3)
           .foldLeft(java.math.BigDecimal.ZERO)((x, y) => x.max(y))
-        ok && java.math.BigDecimal.valueOf(metaN + bRows)
-          .multiply(metaM.max(bMax)).compareTo(TwoP53) < 0
+        avgGAttrs.forall(a => bEntries.forall(_.stats.contains(a.name))) &&
+          maxAbs(bEntries.flatMap(e =>
+            avgGAttrs.flatMap(a => e.stats.get(a.name).flatten)))
+            .exists(bMax => avgExact(metaN + bEntries.map(_.nRows).sum,
+              metaM.max(bMax)))
       }
-    if (avgGAttrs.nonEmpty && boundary.nonEmpty && !avgGHybridOk)
-      return None
+    if (!avgGHybridOk) return None
     // a fully-masked point file contributes 0 to its group: a real
     // scan would emit NO group for it, so zero-count keys must not
     // materialize rows (span shapes cannot leak here — DV'd files
@@ -1333,10 +1015,8 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       metaSumG.getOrElse((k, c), (java.math.BigDecimal.ZERO, false))
     // ANSI integral proof over every file the scan could aggregate
     // (all-in + boundary) — coarser than per-group, always sound
-    val gEntryByName = entries.iterator.map(e => e.name -> e).toMap
     lazy val gProofEntries =
-      allIn0.filterNot(e => demotedSet.contains(e.name)) ++
-        boundary.flatMap(gEntryByName.get)
+      allIn0.filterNot(e => demotedSet.contains(e.name)) ++ bEntries
     val gProofCache = scala.collection.mutable.Map.empty[String, Boolean]
     def gLongProof(sp: SumSpec): Boolean =
       gProofCache.getOrElseUpdate(sp.a.name,
@@ -1344,16 +1024,16 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     if (boundary.isEmpty) {
       val rows = liveKeys.map { k =>
         InternalRow.fromSeq(shapes.map {
-          case GKey(a) => keyValue(k, a)
+          case GroupKey(a) => keyValue(k, a)
           case CountAll => metaCount(k): Any
-          case CountColAgg(a) =>
+          case CountCol(a) =>
             metaColCount.getOrElse((k, a.name), 0L): Any
-          case SpanGAgg(a, lo) => spanValue(k, a, lo)
-          case SumGAgg(sp) =>
+          case Span(a, lo) => spanValue(k, a, lo)
+          case SumCol(sp) =>
             val (acc, has) = sumAcc(k, sp.a.name)
             sumValueOf(sp, acc, has, gLongProof(sp))
               .getOrElse(return None)
-          case AvgGAgg(a) =>
+          case AvgCol(a) =>
             metaAvgG.get((k, a.name)) match {
               case None => null // group has no non-null rows: SQL null
               case Some((sig, n, mab)) =>
@@ -1361,11 +1041,10 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
                 // gate avgMeta applies whole-table): the scan's
                 // double-accumulated average is provably exact too,
                 // so exact Σ/n reproduces it bit-for-bit
-                if (java.math.BigDecimal.valueOf(n).multiply(mab)
-                    .compareTo(TwoP53) >= 0) return None
+                if (!avgExact(n, mab)) return None
                 (sig.doubleValue / n.toDouble): Any
             }
-          case NdvGAgg(a, r) =>
+          case NdvCol(a, r) =>
             // a live key with no merged buffer means every
             // contributing file was all-null in `a` before the words
             // existed — unreachable in practice (all-zero words are
@@ -1375,6 +1054,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
               case Some(buf) => ndvGHelpers(r).query(buf, 0)
               case None => 0L
             }): Any
+          case DistinctCol(_) => return None // unreachable: grouped
         })
       }
       return Some(LocalRelation(agg.output, rows))
@@ -1386,8 +1066,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     // silently vanish from a total the scan still answers
     sumGSlots.foreach { sp =>
       decimalInPrec(sp).foreach { p =>
-        if (!decimalBoundarySafe(
-            boundary.toSeq.flatMap(gEntryByName.get), p)) return None
+        if (!decimalBoundarySafe(bEntries, p)) return None
       }
     }
     // metadata-side Σ PARTIALS for the union combine: integral groups
@@ -1469,13 +1148,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         })
     }
     val local = LocalRelation(localAttrs, localRows)
-    val slice = Bridge.logicalPlan(
-      VersionedTable.readEntrySubset(spark, t.vtPath, t.vtVersion,
-        boundary.toSet))
-    val byName = slice.output.map(a => a.name -> a).toMap
-    if (!relOut.forall(a => byName.contains(a.name))) return None
-    val remap = Project(relOut.map(a =>
-      Alias(byName(a.name), a.name)(exprId = a.exprId)), slice)
+    val remap = VtFiles.sliceOf(t, boundary, relOut).getOrElse(return None)
     val bPartials = (Alias(AggregateExpression(
       Count(Seq(Literal(1))), Complete, isDistinct = false), "p0")() +:
       countCols.zipWithIndex.map { case (a, i) =>
@@ -1516,19 +1189,19 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           .aggregate.Sum(uP(i)), Complete, isDistinct = false),
         Literal(0L)))
     val outs = shapes.zip(agg.output).map {
-      case (GKey(a), o) =>
+      case (GroupKey(a), o) =>
         Alias(uG(gIdx(a.exprId)), o.name)(exprId = o.exprId)
       case (CountAll, o) => Alias(summed(0), o.name)(exprId = o.exprId)
-      case (CountColAgg(a), o) =>
+      case (CountCol(a), o) =>
         Alias(summed(1 + countCols.indexWhere(_.name == a.name)),
           o.name)(exprId = o.exprId)
-      case (SpanGAgg(a, lo), o) =>
+      case (Span(a, lo), o) =>
         val slot = nPartials + spanSlots.indexWhere(p =>
           p._1.name == a.name && p._2 == lo)
         Alias(AggregateExpression(
           if (lo) Min(uP(slot)) else Max(uP(slot)),
           Complete, isDistinct = false), o.name)(exprId = o.exprId)
-      case (SumGAgg(sp), o) =>
+      case (SumCol(sp), o) =>
         val slot = nPartials + spanSlots.size +
           sumGSlots.indexWhere(_.a.name == sp.a.name)
         val aggE = AggregateExpression(Sum(uP(slot)), Complete,
@@ -1537,7 +1210,7 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
         // conversion (Cast / identity) applies the one
         // overflow check the scan's own buffer would
         Alias(sumFinalExpr(sp, aggE), o.name)(exprId = o.exprId)
-      case (AvgGAgg(a), o) =>
+      case (AvgCol(a), o) =>
         // per-group (metaΣ + boundaryΣ) / (metaN + boundaryN) —
         // exact in IEEE double under avgGHybridOk, the same value
         // the scan's double buffer lands on in any order
@@ -1552,13 +1225,14 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
           Literal(null, DoubleType),
           Divide(Cast(sTot, DoubleType), Cast(nTot, DoubleType))),
           o.name)(exprId = o.exprId)
-      case (NdvGAgg(a, r), o) =>
+      case (NdvCol(a, r), o) =>
         val i = ndvGSlots.indexWhere(p =>
           p._1.name == a.name && p._2 == r)
         val slot = nPartials + spanSlots.size + sumGSlots.size +
           2 * avgGAttrs.size + i
         Alias(AggregateExpression(HllUnionEstimate(uP(slot), r),
           Complete, isDistinct = false), o.name)(exprId = o.exprId)
+      case (DistinctCol(_), _) => return None // unreachable: grouped
     }
     Some(Aggregate(uG, outs, union))
   }
@@ -1568,6 +1242,26 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
     * and merge stays integral and below it ⇒ Spark's double-
     * accumulated average equals exact-Σ/n in any execution order). */
   private val TwoP53 = java.math.BigDecimal.valueOf(9007199254740992L)
+
+  /** The `avg()` exactness proof: `n` integral values of magnitude at
+    * most `m` keep every partial sum below [[TwoP53]]. */
+  private def avgExact(n: Long, m: java.math.BigDecimal): Boolean =
+    java.math.BigDecimal.valueOf(n).multiply(m).compareTo(TwoP53) < 0
+
+  /** max |v| over integral `spans` (zero when there are none), or None
+    * when a span is not integral — the magnitude bound of the avg and
+    * ANSI sum proofs. */
+  private def maxAbs(spans: Iterable[(Any, Any)])
+      : Option[java.math.BigDecimal] = {
+    var m = java.math.BigDecimal.ZERO
+    spans.foreach {
+      case (lo: Long, hi: Long) =>
+        m = m.max(java.math.BigDecimal.valueOf(lo).abs)
+          .max(java.math.BigDecimal.valueOf(hi).abs)
+      case _ => return None
+    }
+    Some(m)
+  }
   private val Ten38BD = new java.math.BigDecimal(
     java.math.BigInteger.TEN.pow(38))
 
@@ -1640,12 +1334,11 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       if (e.nRows == 0) true
       else e.stats.get(col) match {
         case Some(None) => true // provably all-null
-        case Some(Some((lo: Long, hi: Long))) =>
-          val m = java.math.BigDecimal.valueOf(lo).abs
-            .max(java.math.BigDecimal.valueOf(hi).abs)
+        case Some(Some(sp)) => maxAbs(Seq(sp)).exists { m =>
           acc = acc.add(
             java.math.BigDecimal.valueOf(e.nRows).multiply(m))
           acc.compareTo(TwoP63) < 0
+        }
         case _ => false
       }
     }
@@ -1800,15 +1493,8 @@ object VtMetadataAgg extends Rule[LogicalPlan] {
       allIn: Seq[graft.operators.VersionedTable.FileEntry],
       boundary: Set[String], cond: Expression, t: VtTable,
       relOut: Seq[Attribute]): Option[LogicalPlan] = {
-    val spark = SparkSession.active
     val metaVals = distinctValuesOf(allIn, a).getOrElse(return None)
-    val slice = Bridge.logicalPlan(
-      VersionedTable.readEntrySubset(spark, t.vtPath, t.vtVersion,
-        boundary))
-    val byName = slice.output.map(x => x.name -> x).toMap
-    if (!relOut.forall(x => byName.contains(x.name))) return None
-    val remap = Project(relOut.map(x =>
-      Alias(byName(x.name), x.name)(exprId = x.exprId)), slice)
+    val remap = VtFiles.sliceOf(t, boundary, relOut).getOrElse(return None)
     val bDistinct = Aggregate(Seq(a), Seq(a), Filter(cond, remap))
     val localAttr =
       AttributeReference("graft_dv", a.dataType, nullable = true)()

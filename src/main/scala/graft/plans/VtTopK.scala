@@ -1,14 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending,
+import org.apache.spark.sql.catalyst.expressions.{Ascending,
   AttributeReference, Descending, IntegerLiteral, NullsFirst, NullsLast,
   SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit,
   LocalLimit, LogicalPlan, Project, Sort, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.VersionedTable
 import graft.sources.{VtPushdown, VtTable}
@@ -111,12 +110,7 @@ object VtTopKRewrite extends Rule[LogicalPlan] {
     val (relNode, t, relOut, cond) =
       vtUnder(sort.child).getOrElse(return None)
     if (!relOut.exists(_.exprId == a.exprId)) return None
-    val spark = SparkSession.active
-    val entries =
-      try {
-        VersionedTable.requireVisibleVersion(spark, t.vtPath, t.vtVersion)
-        VersionedTable.readEntries(spark, t.vtPath, t.vtVersion)
-      } catch { case scala.util.control.NonFatal(_) => return None }
+    val entries = VtFiles.entriesOf(t).getOrElse(return None)
     if (entries.isEmpty) return None
     // a WHERE folds into the guarantee only when EVERY conjunct
     // translates to exact file-level predicates: all-out files prune
@@ -140,13 +134,8 @@ object VtTopKRewrite extends Rule[LogicalPlan] {
     val keep = keepSet(candidates, guaranteeFrom, a.name, desc, k)
       .getOrElse(return None)
     if (keep.size >= entries.size) return None // nothing provable
-    val slice = Bridge.logicalPlan(
-      VersionedTable.readEntrySubset(spark, t.vtPath, t.vtVersion, keep))
-    val byName = slice.output.map(x => x.name -> x).toMap
-    if (!relOut.forall(x => byName.contains(x.name))) return None
-    val remap = Project(relOut.map(x =>
-      Alias(byName(x.name), x.name)(exprId = x.exprId)), slice)
-    Some(orig.transformUp { case n if n eq relNode => remap })
+    VtFiles.sliceOf(t, keep, relOut).map(remap =>
+      orig.transformUp { case n if n eq relNode => remap })
   }
 
   /** The provably-sufficient file subset for the top-k among

@@ -153,4 +153,27 @@ class FilePredicateSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().sorted.toSeq
     assert(got == Seq((1L, 10L), (2L, 390L), (3L, 250L)))
   }
+
+  test("a scattered-key TIMESTAMP merge probes the footer blooms") {
+    val t = tmpTable()
+    // minute i lives in file i % 4: every file spans the whole range,
+    // so only the key column's bloom can keep a file closed
+    VersionedTable.commit((0 until 400).map(i => (tsAt(i), i.toLong, i % 4))
+      .toDF("ts", "v", "f").repartitionByRange(4, col("f"))
+      .drop("f"), t, overwrite = true, statsCols = Seq("ts"))
+    assert(VersionedTable.readEntries(spark, t, 0).size == 4)
+    // ten keys, all in the file of minutes 1, 5, 9, ...
+    val keys = (0 until 10).map(j => 4 * j + 1)
+    val src = keys.map(i => (tsAt(i), -i.toLong)).toDF("ts", "v")
+    val read = rowsRead {
+      VersionedTable.mergeInto(spark, t, src, Seq("ts")): Unit
+    }
+    // ~100 rows a file: under 300 rows read, some file never opened
+    assert(read < 300L, s"merge read $read rows of a 400-row table")
+    val got = VersionedTable.read(spark, t).as[(java.sql.Timestamp, Long)]
+      .collect().map { case (ts, v) => (ts.getTime, v) }.sorted.toSeq
+    val want = (0 until 400).map(i =>
+      (tsAt(i).getTime, if (keys.contains(i)) -i.toLong else i.toLong))
+    assert(got == want)
+  }
 }
